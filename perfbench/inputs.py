@@ -8,6 +8,7 @@ so the benchmark's output checks are independent of the code under test.
 import hashlib
 import os
 import shutil
+import time
 from types import SimpleNamespace
 from decimal import Decimal
 
@@ -24,6 +25,7 @@ CORPUS_EXACT_DUP_SHARE = 0.03
 CORPUS_NEAR_DUP_SHARE = 0.03
 CORPUS_CONTAMINATED_SHARE = 0.02
 CORPUS_VECTOR_DUP_SHARE = 0.02
+CORPUS_TOPK = 5              # graft's top-k per query
 LAYOUT_FILES = 8
 
 
@@ -34,6 +36,10 @@ def sizes(toy=False):
     return SimpleNamespace(
         etl_days=8,  # one day lands per pass; more than a run uses
         etl_records_per_day=1000 if toy else 5000,
+        # day 0 is the warm-up batch: it runs every call a measured batch
+        # runs, and as the calls' cost is mostly fixed, a smaller day
+        # shortens set-up without leaving code cold
+        etl_warmup_records=1000,
         etl_users=2000,
         lake_orders=int(1500000 * sf), lake_lineitems=int(6000000 * sf),
         lake_customers=int(150000 * sf), lake_suppliers=int(10000 * sf),
@@ -137,17 +143,18 @@ def gen_etl(seed, root, sz):
     an embedded JSON string (`props`) and a PII field (`email`). Day d's
     expectations are cumulative over days 0..d, the lake after d lands."""
     _fresh(root)
+    oracle_s = 0.0
     rng = _rng(seed, 1)
     types = np.array(["click", "view", "purchase", "signup", "error"])
     countries = np.array(["de", "fr", "us", "br", "jp", "in"])
-    n = sz.etl_records_per_day
-    step = 86400 // n
     base = 1704067200  # 2024-01-01
     latest = {}
     days = []
-    events_total = purchases_total = 0
+    events_total = purchases_total = first_eid = 0
     value_sum = Decimal(0)
     for d in range(sz.etl_days):
+        n = sz.etl_warmup_records if d == 0 else sz.etl_records_per_day
+        step = 86400 // n
         uid = rng.integers(0, sz.etl_users, n)
         etype = types[rng.integers(0, len(types), n)]
         cents = rng.integers(0, 50000, n)
@@ -161,7 +168,7 @@ def gen_etl(seed, root, sz):
         lines = []
         n_purch = n_ev = 0
         for i in range(n):
-            eid = d * n + i
+            eid = first_eid + i
             ts = base + d * 86400 + i * step
             u = int(uid[i])
             value = Decimal(int(cents[i])).scaleb(-2)
@@ -184,21 +191,24 @@ def gen_etl(seed, root, sz):
             value_sum += value
             if latest.get(u, (-1,))[0] < ts:
                 latest[u] = (ts, eid)
+        first_eid += n
         events_total += n_ev
         purchases_total += n_purch
         path = os.path.join(root, f"day-{d}.jsonl")
         with open(path, "w") as f:
             f.write("\n".join(lines) + "\n")
+        t0 = time.time()
+        snapshot_sha = _sha(f"{u}:{ts}:{e}" for u, (ts, e) in latest.items())
+        oracle_s += time.time() - t0
         days.append({
             "path": os.path.abspath(path), "day": f"2024-01-{d + 1:02d}",
             "records": n, "purchases": n_purch, "events": n_ev,
             "quarantined": n - n_purch - n_ev,
             "events_total": events_total, "purchases_total": purchases_total,
             "events_value_sum": str(value_sum), "snapshot_keys": len(latest),
-            "snapshot_sha256": _sha(f"{u}:{ts}:{e}" for u, (ts, e) in latest.items())})
-    total = dir_bytes(root)
-    return {"days": days, "input_rows": sz.etl_days * n, "input_bytes": total,
-            "day_bytes": total // sz.etl_days}
+            "snapshot_sha256": snapshot_sha, "bytes_total": dir_bytes(root)})
+    return {"days": days, "input_rows": first_eid, "input_bytes": dir_bytes(root),
+            "oracle_s": oracle_s}
 
 
 # ---------------------------------------------------------------- lake
@@ -301,6 +311,7 @@ def gen_lake(seed, root, oracles, sz):
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)]}),
         f"{root}/events.parquet")
 
+    t0 = time.time()
     import duckdb
     con = duckdb.connect()
     con.execute("SET threads TO 4")
@@ -331,9 +342,10 @@ def gen_lake(seed, root, oracles, sz):
         lookups.append({"name": f"where_{i}", "orderkey_lo": lo,
                         "orderkey_hi": lo + no // 8, "partkeys": parts, "sha256": sha})
     con.close()
+    oracle_s = time.time() - t0
     return {"queries": queries, "lookups": lookups,
             "input_rows": 5 + 25 + nc + ns + npart + no + nl + ne,
-            "input_bytes": dir_bytes(root)}
+            "input_bytes": dir_bytes(root), "oracle_s": oracle_s}
 
 
 # ---------------------------------------------------------------- corpus
@@ -410,17 +422,30 @@ def gen_corpus(seed, root, sz):
     qsrc = rng.choice(nv, sz.corpus_queries, replace=False)
     qv = vecs[qsrc] + 0.2 * rng.normal(size=(sz.corpus_queries, dim)).astype(np.float32)
     qv = (qv / np.linalg.norm(qv, axis=1, keepdims=True)).astype(np.float32)
+    qids = 10 ** 9 + np.arange(sz.corpus_queries)
     _write(pa.table({
-        "query_id": pa.array(10 ** 9 + np.arange(sz.corpus_queries), pa.int64()),
+        "query_id": pa.array(qids, pa.int64()),
         "embedding": pa.array(list(qv), emb_type)}), f"{root}/queries.parquet")
+    t0 = time.time()
+    # exact top-k by cosine (the vectors are unit length), ties to the
+    # smaller id, as graft's exact tier orders them
+    sims = qv.astype(np.float64) @ vecs.astype(np.float64).T
+    order = np.lexsort((np.broadcast_to(np.arange(nv), sims.shape), -sims), axis=1)
+    exact_topk = [[int(q), [int(x) for x in row[:CORPUS_TOPK]]]
+                  for q, row in zip(qids, order)]
+    oracle_s = time.time() - t0
     return {"docs": nd, "benchmark_ids": int(bench.sum()),
             "exact_dup_ids": exact, "near_dup_ids": near, "contaminated_ids": cont,
             "vector_dup_pairs": [[j, i] for i, j in zip(vdup, vsrc)],
-            "queries": sz.corpus_queries,
-            "input_rows": nd + nv + sz.corpus_queries, "input_bytes": dir_bytes(root)}
+            "queries": sz.corpus_queries, "k": CORPUS_TOPK, "exact_topk": exact_topk,
+            "input_rows": nd + nv + sz.corpus_queries, "input_bytes": dir_bytes(root),
+            "oracle_s": oracle_s}
 
 
 def generate(workload, seed, root, oracles, toy=False):
+    """Write one workload's inputs under `root` and return its expected
+    values; `oracle_s` in them is the time spent computing those values
+    (DuckDB, digests, exact search), which set-up time leaves out."""
     sz = sizes(toy)
     if workload == "etl_landing":
         return gen_etl(seed, root, sz)

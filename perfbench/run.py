@@ -135,17 +135,21 @@ def build(root):
             sys.stderr.write(r.stderr[-4000:])
             fail("could not read graft's oracle SQL")
         oracles = json.loads(r.stdout)
-        # best effort: without the archive a run only starts slower
+        # every run maps this archive (-Xshare:on), so a build without it fails
         runs = [prepare(oracles, w, seed=0, toy=True) for w in metrics.WORKLOADS]
         args = []
         for run_dir, margs, _, _ in runs:
             args += (["--next"] if args else []) + margs + ["--seconds", "0", "--trace", "0"]
         tmp = runs[0][1][runs[0][1].index("--work") + 1] + "/tmp"
-        java(cp, "perfbench.Train", args,
-             [f"-Djava.io.tmpdir={tmp}", f"-XX:ArchiveClassesAtExit={ARCHIVE}"],
-             os.path.join(BUILD_DIR, "train.log"), timeout=400)
+        train_log = os.path.join(BUILD_DIR, "train.log")
+        rc = java(cp, "perfbench.Train", args,
+                  [f"-Djava.io.tmpdir={tmp}", f"-XX:ArchiveClassesAtExit={ARCHIVE}"],
+                  train_log, timeout=400)
         for run_dir, _, _, _ in runs:
             shutil.rmtree(run_dir, ignore_errors=True)
+        if rc != 0 or not os.path.exists(ARCHIVE):
+            sys.stderr.write(open(train_log).read()[-4000:])
+            fail("recording the class-data archive failed")
         with open(oracle_file, "w") as f:
             json.dump(oracles, f)
         with open(cp_file, "w") as f:
@@ -204,9 +208,10 @@ def launch(cp, oracles, workload, seed, seconds, trace, toy=False):
     t_start = time.time()
     run_dir, args, gen_s, expected = prepare(oracles, workload, seed, toy)
     work = args[args.index("--work") + 1]
-    jvm_opts = [f"-Djava.io.tmpdir={work}/tmp"]
-    if os.path.exists(ARCHIVE):
-        jvm_opts += [f"-XX:SharedArchiveFile={ARCHIVE}", "-Xlog:cds=off"]
+    # -Xshare:on: a missing or mismatched archive stops the JVM instead of
+    # silently starting it without
+    jvm_opts = [f"-Djava.io.tmpdir={work}/tmp", f"-XX:SharedArchiveFile={ARCHIVE}",
+                "-Xshare:on"]
     log = os.path.join(run_dir, "jvm.log")
     rc = java(cp, "perfbench.Main",
               args + ["--seconds", str(seconds), "--trace", str(trace)],
@@ -216,7 +221,6 @@ def launch(cp, oracles, workload, seed, seconds, trace, toy=False):
     if rc == 0 and os.path.exists(out_file):
         res = json.load(open(out_file))
         res["meta"]["cores"] = int(args[args.index("--cores") + 1])
-        res["meta"]["class_data_archive"] = os.path.exists(ARCHIVE)
         spans = res["meta"].get("spans_file")
         if spans:
             keep = os.path.join(BUILD_DIR, "spans")
@@ -227,6 +231,17 @@ def launch(cp, oracles, workload, seed, seconds, trace, toy=False):
         sys.stderr.write(open(log).read()[-4000:])
     shutil.rmtree(run_dir, ignore_errors=True)
     return gen_s, expected, res
+
+
+def cpu_times():
+    """(steal, total) CPU time of the host's CPUs so far, from /proc/stat;
+    steal is time the hypervisor gave this machine's CPUs to others."""
+    try:
+        with open("/proc/stat") as f:
+            v = [int(x) for x in f.readline().split()[1:]]
+        return v[7], sum(v)
+    except (OSError, IndexError, ValueError):
+        return 0, 0
 
 
 def git_commit(root):
@@ -254,6 +269,7 @@ def main():
             and os.path.isdir(os.path.join(root, "src", "main", "scala", "graft"))):
         fail("run from the root of a graft checkout (build.sbt and src/main/scala/graft)")
     load_start = os.getloadavg()
+    cpu_start = cpu_times()
     cp, oracles, stamp = build(root)
     toy = os.environ.get("PERFBENCH_SCALE") == "toy"
     gen_s, expected, res = launch(cp, oracles, args.workload, args.seed,
@@ -267,16 +283,19 @@ def main():
         values = {k: res["per_layer"].get(k, 0.0) for k in specs}
     else:
         specs = metrics.END_TO_END
-        values = dict(e2e, setup_s=gen_s + e2e["session_s"] + e2e["layout_s"]
-                      + e2e["warmup_s"])
+        values = dict(e2e, setup_s=gen_s - expected["oracle_s"] + e2e["session_s"]
+                      + e2e["layout_s"] + e2e["warmup_s"])
     meta = dict(res["meta"])
+    cpu_end = cpu_times()
     meta.update({
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "nproc": os.cpu_count(), "heap": f"{HEAP_START}-{HEAP} serial",
         "load_start": load_start, "load_end": os.getloadavg(),
+        "cpu_steal_share": (cpu_end[0] - cpu_start[0]) / max(1, cpu_end[1] - cpu_start[1]),
         "git_commit": git_commit(root), "source_sha256": stamp,
         "input_rows": expected["input_rows"], "input_bytes": expected["input_bytes"],
-        "gen_s": gen_s, "session_s": e2e["session_s"], "layout_s": e2e["layout_s"],
+        "inputs_s": gen_s - expected["oracle_s"], "oracle_s": expected["oracle_s"],
+        "session_s": e2e["session_s"], "layout_s": e2e["layout_s"],
         "warmup_s": e2e["warmup_s"], "passes": e2e["passes"],
         "call_samples": e2e["call_samples"], "call_p90_s": e2e["call_p90_s"],
     })

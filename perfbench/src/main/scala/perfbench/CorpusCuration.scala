@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 /** The training-data funnel over a seeded corpus: curation (quality gate,
   * exact and near dedup, decontamination, packing), tf-idf, semantic
   * dedup over the embeddings, and IVF-PQ retrieval for a query batch scored
-  * against exact search.
+  * against the generator's exact search.
   */
 object CorpusCuration extends Workload {
 
@@ -58,17 +58,17 @@ object CorpusCuration extends Workload {
       Similarity.ivfpqTopkForQueries(spark, dir, queries)
         .select("query_id", "neighbor_id").collect()
     }
-    val exact = ctx.span("similarity", "bruteforceTopkForQueries") {
-      Similarity.bruteforceTopkForQueries(spark, dir, queries)
-        .select("query_id", "neighbor_id").collect()
-    }
-    val truth = exact.map(r => (r.getLong(0), r.getLong(1))).toSet
-    // k is the library's top-k: the exact tier returns k rows per query
-    val perQuery = exact.groupBy(_.getLong(0)).values.map(_.length).toSet
-    ctx.check("similarity", "exact_topk",
-      perQuery.size == 1 && exact.map(_.getLong(0)).toSet.size ==
-        ctx.expected.get("queries").asLong,
-      s"exact search returned row counts $perQuery per query")
+    // exact top-k per query, computed by the generator
+    val truth = ctx.expected.get("exact_topk").elements().asScala.flatMap { q =>
+      val qid = q.get(0).asLong
+      q.get(1).elements().asScala.map(n => (qid, n.asLong))
+    }.toSet
+    val k = ctx.expected.get("k").asInt
+    val perQuery = ann.groupBy(_.getLong(0)).values.map(_.length)
+    ctx.check("similarity", "ann_topk_shape",
+      ann.map(_.getLong(0)).toSet.size == ctx.expected.get("queries").asLong &&
+        perQuery.forall(_ <= k),
+      s"ANN returned row counts ${perQuery.toSet} per query for ${perQuery.size} queries")
     val recall = ann.count(r => truth((r.getLong(0), r.getLong(1)))).toDouble /
       math.max(1, truth.size)
     ctx.gauge("similarity.recall_at_k", recall)

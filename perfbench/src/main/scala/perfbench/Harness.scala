@@ -21,6 +21,9 @@ final class Ctx(val spark: SparkSession, val seed: Long, val input: String,
   private val stack = ArrayBuffer[Int]()
   val spans = ArrayBuffer[Span]()
   var traced = false
+  // set when a check of the current pass fails; the pass is then left out
+  // of run_s and its call samples
+  var passFailed = false
   var attempted = 0L
   var failed = 0L
   val failedOps = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
@@ -71,7 +74,8 @@ final class Ctx(val spark: SparkSession, val seed: Long, val input: String,
   }
 
   /** One output check; a failed check counts as a failed operation of the
-    * layer whose output it inspects.
+    * layer whose output it inspects, marks that layer's latest call of the
+    * pass failed (so it is no latency sample) and fails the pass.
     */
   def check(layer: String, name: String, ok: Boolean, detail: => String): Unit = {
     attempted += 1
@@ -79,18 +83,28 @@ final class Ctx(val spark: SparkSession, val seed: Long, val input: String,
       failed += 1
       failedOps(layer) += 1
       failures += s"check $layer.$name failed: $detail"
+      passFailed = true
+      spans.findLast(_.layer == layer).foreach(_.failed = true)
     }
   }
 
-  def resetSpans(): Unit = { spans.clear(); stack.clear() }
+  def resetSpans(): Unit = { spans.clear(); stack.clear(); passFailed = false }
 }
 
-/** A workload: one-time layout in setup, then repeated passes. */
+/** A workload: one-time layout in setup, then repeated passes, then a
+  * finishing step that runs once after them.
+  */
 trait Workload {
   /** Source items one pass pushes through (records, queries, documents). */
   def items(ctx: Ctx): Long
   def setup(ctx: Ctx): Unit = ()
   def pass(ctx: Ctx, index: Int): Unit
+  /** Work that follows the passes (the nightly part of a landing loop);
+    * `lastPass` is the index of the last pass before it.
+    */
+  def finish(ctx: Ctx, lastPass: Int): Unit = ()
+  /** Measured passes a run makes at least, whatever `--seconds` says. */
+  def minPasses: Int = 1
   /** Passes the inputs allow, warm-up included. */
   def maxPasses(ctx: Ctx): Int = Int.MaxValue
 }

@@ -17,10 +17,14 @@ import scala.util.control.NonFatal
   * perfbench.Main --workload W --seed N --seconds S --trace 0|1 --cores C
   *   --input DIR --work DIR --expected FILE --out FILE
   * }}}
-  * Set-up is session start, layout and one warm-up pass. Measured passes
-  * then repeat until `--seconds` have passed. With `--trace 1` the passes
-  * alternate untraced and traced, so the tracing overhead is measured in
-  * the same process; the per-layer costs come from the traced passes.
+  * Set-up is session start, layout and one warm-up pass plus the
+  * workload's finishing step. Measured passes then repeat until `--seconds`
+  * have passed and the workload's minimum is met, and the finishing step
+  * runs once more; `run_s` is the median measured pass plus that step.
+  * With `--trace 1` the passes alternate untraced and traced (U T U ...,
+  * at least three), so the tracing overhead is measured in the same
+  * process; the per-layer costs come from the traced passes and the traced
+  * finishing step.
   */
 object Main {
 
@@ -54,12 +58,12 @@ object Main {
     val tracer = new Tracer
     val runId = f"${opts("workload")}-s${opts("seed")}-${System.currentTimeMillis()}%d"
 
-    def runPass(i: Int, traced: Boolean): PassResult = {
+    def runPass(i: Int, traced: Boolean, name: String = "pass")(body: => Unit): PassResult = {
       ctx.resetSpans()
       ctx.traced = traced
       val sc = spark.sparkContext
       if (traced) sc.addSparkListener(tracer)
-      val ok = try { ctx.span("client", s"pass-$i")(workload.pass(ctx, i)); true }
+      val ok = try { ctx.span("client", s"$name-$i")(body); !ctx.passFailed }
         catch { case NonFatal(_) => false }
       sc.clearJobGroup()
       val spans = ctx.spans.toList
@@ -82,26 +86,35 @@ object Main {
     val t0 = System.nanoTime()
     workload.setup(ctx)
     val layoutS = (System.nanoTime() - t0) / 1e9
-    val warm = runPass(0, traced = false)
+    val warm = Seq(runPass(0, traced = false)(workload.pass(ctx, 0)),
+      runPass(0, traced = false, "finish")(workload.finish(ctx, 0)))
     val passes = ArrayBuffer[PassResult]()
     val m0 = System.nanoTime()
-    // `--seconds 0` stops after the warm-up (the build's class-data run)
-    val minPasses = if (seconds <= 0) 0 else if (trace) 2 else 1
-    while (passes.size + 1 < workload.maxPasses(ctx) &&
-        ((System.nanoTime() - m0) / 1e9 < seconds || passes.size < minPasses))
-      passes += runPass(passes.size + 1, traced = trace && passes.size % 2 == 1)
+    // `--seconds 0` stops after the warm-up (the build's class-data run).
+    // Traced runs alternate untraced and traced passes and end on an
+    // untraced one, so every traced pass sits between two untraced ones.
+    val minPasses = if (seconds <= 0) 0 else if (trace) 3 else workload.minPasses
+    def more = (System.nanoTime() - m0) / 1e9 < seconds || passes.size < minPasses ||
+      (trace && passes.size % 2 == 0 && passes.nonEmpty)
+    while (passes.size + 1 < workload.maxPasses(ctx) && more) {
+      val i = passes.size + 1
+      passes += runPass(i, traced = trace && i % 2 == 0)(workload.pass(ctx, i))
+    }
+    val finish = if (seconds <= 0) None
+      else Some(runPass(passes.size, traced = trace, "finish")(workload.finish(ctx, passes.size)))
 
     val timed = passes.filter(p => p.ok && !p.traced)
-    val runS = median(timed.map(_.wallS))
-    val calls = timed.flatMap(_.calls)
+    val finishTimed = finish.filter(f => f.ok && !f.traced)
+    val runS = median(timed.map(_.wallS)) + finishTimed.map(_.wallS).sum
+    val calls = timed.flatMap(_.calls) ++ finishTimed.toSeq.flatMap(_.calls)
     val out = new ObjectMapper().createObjectNode()
-    out.put("correct", ctx.failed == 0 && passes.forall(_.ok) && warm.ok)
+    out.put("correct", ctx.failed == 0 && (warm ++ passes ++ finish).forall(_.ok))
     out.put("attempted", ctx.attempted)
     out.put("failed", ctx.failed)
     val e2e = out.putObject("end_to_end")
     e2e.put("session_s", sessionS)
     e2e.put("layout_s", layoutS)
-    e2e.put("warmup_s", warm.wallS)
+    e2e.put("warmup_s", warm.map(_.wallS).sum)
     e2e.put("run_s", runS)
     e2e.put("items_per_s", if (runS > 0) workload.items(ctx) / runS else 0.0)
     e2e.put("call_p50_s", quantile(calls, 0.5))
@@ -111,9 +124,12 @@ object Main {
     e2e.put("peak_rss_mb", peakRssMb())
     val layer = out.putObject("per_layer")
     val tracedPasses = passes.filter(_.traced)
+    val tracedFinish = finish.filter(_.traced)
+    def cost(p: PassResult, l: String, m: String) =
+      p.layers.getOrElse(l, Map.empty).getOrElse(m, 0.0)
     for (l <- Layers.all; m <- LayerMetrics) {
-      val vs = tracedPasses.map(_.layers.getOrElse(l, Map.empty).getOrElse(m, 0.0))
-      layer.put(s"$l.$m", if (m == "failed_ops") ctx.failedOps(l).toDouble else median(vs))
+      val v = median(tracedPasses.map(cost(_, l, m))) + tracedFinish.map(cost(_, l, m)).sum
+      layer.put(s"$l.$m", if (m == "failed_ops") ctx.failedOps(l).toDouble else v)
     }
     ctx.gauges.foreach { case (k, vs) => layer.put(k, median(vs.toSeq)) }
     // rows the ANN call read (scans and shuffles) per result row it returned
@@ -122,11 +138,11 @@ object Main {
       layer.put("similarity.rows_scored_per_result", median(tracedPasses.map(p =>
         p.recordsByCall.getOrElse(CorpusCuration.AnnCall, 0.0))) / median(rs.toSeq))
     }
-    if (tracedPasses.nonEmpty) {
-      val untraced = passes.filterNot(_.traced)
-      layer.put("trace.overhead_s",
-        median(tracedPasses.map(_.wallS)) - median(untraced.map(_.wallS)))
-    }
+    // a traced pass minus the mean of its untraced neighbours, which
+    // cancels drift that is linear over the three (JIT, a growing lake)
+    val overheads = passes.indices.filter(k => passes(k).traced && k + 1 < passes.size)
+      .map(k => passes(k).wallS - (passes(k - 1).wallS + passes(k + 1).wallS) / 2)
+    if (overheads.nonEmpty) layer.put("trace.overhead_s", median(overheads))
     layer.put("failed_ops_ratio", ctx.failed.toDouble / math.max(1L, ctx.attempted))
     val meta = out.putObject("meta")
     meta.put("run_id", runId)
@@ -135,11 +151,14 @@ object Main {
     meta.put("jdk", System.getProperty("java.version"))
     meta.put("heap_max_mb", Runtime.getRuntime.maxMemory / (1024 * 1024))
     meta.put("items_per_pass", workload.items(ctx))
+    val passS = meta.putArray("pass_s")
+    passes.foreach(p => passS.add(p.wallS))
+    finish.foreach(f => meta.put("finish_s", f.wallS))
     val fails = meta.putArray("failures")
     ctx.failures.take(50).foreach(f => fails.add(f))
     if (trace) {
       val path = s"$work/spans-$runId.jsonl"
-      writeSpans(path, runId, tracedPasses.toSeq)
+      writeSpans(path, runId, (tracedPasses ++ tracedFinish).toSeq)
       meta.put("spans_file", path)
     }
     Files.write(Paths.get(opts("out")), out.toString.getBytes("UTF-8"))
