@@ -636,25 +636,24 @@ object ScaleProbe {
       val inBatch = col("user_id") % 29 === 0
       val (hist, batch) = (docsAll.filter(!inBatch), docsAll.filter(inBatch))
       val t0 = System.nanoTime()
-      val dState = graft.etl.JsonEtl
-        .distinctStateWindowed(hist, retainDays = 14)
+      import graft.etl.StateKind.{Audience, Distinct, Windowed}
+      val dKind = Windowed(Distinct(), retainDays = 14)
+      val dState = dKind.state(hist)
       val dRows = dState.count()
       println(f"windowed_distinct_build(hist): " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s ($dRows state rows)")
       val t1 = System.nanoTime()
-      graft.etl.JsonEtl.distinctUpsertWindowed(dState, batch,
-        retainDays = 14).count()
+      dKind.fold(dState, batch).count()
       println(f"windowed_distinct_fold(batch=1/29): " +
         f"${(System.nanoTime() - t1) / 1e9}%.1f s")
       val t2 = System.nanoTime()
-      val aState = graft.etl.JsonEtl
-        .audienceStateWindowed(hist, retainDays = 14)
+      val aKind = Windowed(Audience(), retainDays = 14)
+      val aState = aKind.state(hist)
       val aRows = aState.count()
       println(f"windowed_audience_build(hist): " +
         f"${(System.nanoTime() - t2) / 1e9}%.1f s ($aRows state rows)")
       val t3b = System.nanoTime()
-      graft.etl.JsonEtl.audienceUpsertWindowed(aState, batch,
-        retainDays = 14).count()
+      aKind.fold(aState, batch).count()
       println(f"windowed_audience_fold(batch=1/29): " +
         f"${(System.nanoTime() - t3b) / 1e9}%.1f s")
     }
@@ -677,24 +676,24 @@ object ScaleProbe {
       graft.etl.JsonEtl.sampleUpsert(sState, batch, k = 64).count()
       println(f"sample_fold(batch=1/29): ${(System.nanoTime() - t1) / 1e9}%.1f s")
       val t2 = System.nanoTime()
-      val qState = graft.etl.JsonEtl.quantileStateWindowed(
-        hist.withColumn("value", col("user_id").cast("double")),
-        valueCol = "value", retainDays = 14)
+      import graft.etl.StateKind.{Freq, Quantile, Windowed}
+      val qKind = Windowed(Quantile(valueCol = "value"), retainDays = 14)
+      val qState = qKind.state(
+        hist.withColumn("value", col("user_id").cast("double")))
       println(f"windowed_quantile_build(hist): " +
         f"${(System.nanoTime() - t2) / 1e9}%.1f s (${qState.count()} rows)")
       val t3 = System.nanoTime()
-      graft.etl.JsonEtl.quantileUpsertWindowed(qState,
-        batch.withColumn("value", col("user_id").cast("double")),
-        valueCol = "value", retainDays = 14).count()
+      qKind.fold(qState,
+        batch.withColumn("value", col("user_id").cast("double"))).count()
       println(f"windowed_quantile_fold(batch=1/29): " +
         f"${(System.nanoTime() - t3) / 1e9}%.1f s")
       val t4 = System.nanoTime()
-      val fState = graft.etl.JsonEtl.freqStateWindowed(hist, retainDays = 14)
+      val fKind = Windowed(Freq(), retainDays = 14)
+      val fState = fKind.state(hist)
       println(f"windowed_freq_build(hist): " +
         f"${(System.nanoTime() - t4) / 1e9}%.1f s (${fState.count()} rows)")
       val t5 = System.nanoTime()
-      graft.etl.JsonEtl.freqUpsertWindowed(fState, batch,
-        retainDays = 14).count()
+      fKind.fold(fState, batch).count()
       println(f"windowed_freq_fold(batch=1/29): " +
         f"${(System.nanoTime() - t5) / 1e9}%.1f s")
     }

@@ -1,8 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DecimalType, DoubleType,
+  LongType, StringType, StructField, StructType}
 import graft.Tables
 
 /** ETL surface (SURVEY §2.B) — the pyetl-equivalent pipeline re-expressed as
@@ -407,10 +408,10 @@ object JsonEtl {
 
   /** The N-column state COMBINE: re-aggregate state rows by `keys` with
     * the additive fold (counts/sums/sumsqs add, mins/maxes fold) —
-    * [[aggUpsertN]]'s merge step, also reused by [[aggWindowView]] to
-    * collapse the day dimension at read time.
+    * [[aggUpsertN]]'s merge step, also the windowed view's
+    * collapse of the day dimension at read time.
     */
-  private def combineStatesN(states: DataFrame, keys: Seq[String],
+  private[etl] def combineStatesN(states: DataFrame, keys: Seq[String],
       valueCols: Seq[String]): DataFrame = {
     val stats = valueCols.flatMap { c => Seq(
       sum(col(s"sum_$c")).cast(DecimalType(28, 2)).as(s"sum_$c"),
@@ -438,38 +439,15 @@ object JsonEtl {
         .withColumn(s"stddev_$c", sqrt(col(s"var_$c")))
     }
 
-  // ------------------------------------- windowed (expiring) additive state
-  /** Day-windowed additive state — [[aggStateN]] keyed by
-    * (keys..., dayCol) with RETENTION: the grow-only states answer
-    * all-of-history questions, but a rolling dashboard wants "the last
-    * 30 days" with state that does not grow past retention × keys ×
-    * days. Retention is EVENT-TIME, derived from the state's own max
-    * day (never the wall clock — re-running yesterday's fold
-    * reproduces yesterday's state bit for bit).
-    *
-    * Correctness of expiry under cascaded folds: horizons only ADVANCE
-    * (the max day is monotone under append-only feeds), so a day
-    * dropped at fold k satisfies day ≤ horizonₖ ≤ horizonₙ for every
-    * later fold n — late data for an already-expired day may create a
-    * partial row mid-fold, but the fold's own expiry filter drops it
-    * again, and fold ≡ recompute-over-the-retained-window holds EXACTLY
-    * (spec-pinned, including a batch entirely older than the horizon
-    * folding as a no-op). Late data INSIDE the horizon folds correctly
-    * — its (key, day) state row is still present.
-    */
-  def aggStateWindowed(events: DataFrame, keys: Seq[String],
-      valueCols: Seq[String], dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(aggStateN(events, keys :+ dayCol, valueCols),
-      dayCol, retainDays)
-
-  /** Drop state rows older than (max day − retainDays) from an ALREADY
+  // ------------------------------------- windowed (expiring) states
+  /** Drop state rows at or below (max day − retainDays) from an ALREADY
     * MATERIALIZED state (a parquet read, a checkpointed fold output) —
-    * the read-time form: the horizon agg and the filter each rescan the
-    * state, which is fine exactly because a materialized state is
-    * key-count-sized blocks, not a pending computation.
+    * the read-time form of [[StateKind.Windowed]]'s expiry: the horizon
+    * agg and the filter each rescan the state, which is fine exactly
+    * because a materialized state is key-count-sized blocks, not a
+    * pending computation.
     */
-  private def expireDays(state: DataFrame, dayCol: String,
+  private[etl] def expireDays(state: DataFrame, dayCol: String,
       retainDays: Int): DataFrame = {
     val mx = state.agg(max(col(dayCol))).head()
     if (mx.isNullAt(0)) state
@@ -492,39 +470,18 @@ object JsonEtl {
       retainDays: Int): DataFrame =
     expireDays(merged.localCheckpoint(), dayCol, retainDays)
 
-  /** Fold a raw batch into an [[aggStateWindowed]]: the [[aggUpsertN]]
-    * combine on (keys..., day) followed by the expiry filter — one
-    * batch-sized shuffle + a state-sized merge (materialized once, see
-    * [[expireFold]]), history never rescanned, state size bounded by
-    * keys × retainDays forever.
-    */
-  def aggUpsertWindowed(state: DataFrame, batch: DataFrame,
-      keys: Seq[String], valueCols: Seq[String], dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(aggUpsertN(state, batch, keys :+ dayCol, valueCols),
-      dayCol, retainDays)
+  /** The gate entries' day bucket: floor epoch-days of the event time. */
+  private def withDay(events: DataFrame): DataFrame =
+    events.withColumn("day",
+      floor(tsSec(col("ts")) / lit(86400L)).cast(LongType))
 
-  /** Rolling read-time view: collapse the day dimension over the last
-    * `lastNDays` (≤ retention) and serve the derived stats — "7-day avg
-    * and stddev per segment" from a state the folds keep bounded. The
-    * window end is the state's own max day (event time).
-    */
-  def aggWindowView(state: DataFrame, keys: Seq[String],
-      valueCols: Seq[String], dayCol: String = "day",
-      lastNDays: Int = 7): DataFrame =
-    aggDerivedN(
-      combineStatesN(expireDays(state, dayCol, lastNDays), keys, valueCols),
-      valueCols)
+  /** The gate entries' four interleaved batches: `c` mod 4. */
+  private def mod4(df: DataFrame, c: String): Seq[DataFrame] =
+    (0L to 3L).map(i => df.filter(col(c) % 4 === i))
 
-  /** Durable, replay-safe [[aggUpsertWindowed]] — the shared fence. */
-  def aggUpsertWindowedAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, keys: Seq[String], valueCols: Seq[String],
-      dayCol: String = "day", retainDays: Int = 30): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "agg_windowed",
-      "keys" -> keys.mkString(","), "value_cols" -> valueCols.mkString(","),
-      "day_col" -> dayCol, "retain_days" -> retainDays.toString))(
-      aggStateWindowed(batch, keys, valueCols, dayCol, retainDays),
-      st => aggUpsertWindowed(st, batch, keys, valueCols, dayCol, retainDays))
+  /** Fold batches in order: the first builds, the rest fold in. */
+  private def foldAll(kind: StateKind, batches: Seq[DataFrame]): DataFrame =
+    batches.tail.foldLeft(kind.state(batches.head))(kind.fold)
 
   /** Gate form: per-event-type rolling 7-day value summary served from a
     * 14-day-retention state folded in four event_id-mod slices (the
@@ -534,20 +491,11 @@ object JsonEtl {
     * in both engines; decimals cast to DOUBLE at the boundary.
     */
   def rollingAggregate(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-      .withColumn("day", floor(tsSec(col("ts")) / lit(86400L)).cast(LongType))
-    val keys = Seq("event_type")
-    val vals = Seq("value")
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    val folded = slices.tail.foldLeft(
-      aggStateWindowed(slices.head, keys, vals, retainDays = 14))(
-      (st, b) => aggUpsertWindowed(st, b, keys, vals, retainDays = 14))
-    val out = aggWindowView(folded, keys, vals, lastNDays = 7)
-    out.select(out.columns.toSeq.map { c =>
-        if (c.startsWith("sum_") || c.startsWith("sumsq_"))
-          col(c).cast("double").as(c)
-        else col(c)
-      }: _*)
+    val kind = StateKind.Windowed(
+      StateKind.AggN(Seq("event_type"), Seq("value")), retainDays = 14)
+    sumsAsDouble(kind.view(
+      foldAll(kind, mod4(withDay(Tables(s, dir).events), "event_id")),
+      lastNDays = 7))
       .orderBy(col("event_type"))
   }
 
@@ -618,22 +566,6 @@ object JsonEtl {
           .as("ewma")): _*)
   }
 
-  /** Durable, replay-safe [[ewmaUpsert]] — [[aggUpsertAt]]'s watermark
-    * fence and atomic swap ([[durableFold]]), applied to the ordered
-    * fold. The fence handles REPLAYS; the order contract above handles
-    * sequencing between distinct batches.
-    */
-  def ewmaUpsertAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long,
-      keys: Seq[String] = Seq("user_id"),
-      orderCol: String = "event_id", valueCol: String = "value",
-      alpha: Double = 0.5): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "ewma",
-      "keys" -> keys.mkString(","), "order_col" -> orderCol,
-      "value_col" -> valueCol, "alpha" -> alpha.toString))(
-      ewmaState(batch, keys, orderCol, valueCol, alpha),
-      st => ewmaUpsert(st, batch, keys, orderCol, valueCol, alpha))
-
   /** Gate form: events fold in as four CONTIGUOUS event_id ranges (the
     * ordered "daily loads" the contract requires — the additive gate's
     * mod-4 slices would be out-of-order here by construction); the final
@@ -650,74 +582,71 @@ object JsonEtl {
       e.filter(col("event_id") > cuts(0) && col("event_id") <= cuts(1)),
       e.filter(col("event_id") > cuts(1) && col("event_id") <= cuts(2)),
       e.filter(col("event_id") > cuts(2)))
-    slices.tail.foldLeft(ewmaState(slices.head))((st, b) => ewmaUpsert(st, b))
-      .orderBy(col("user_id"))
+    foldAll(StateKind.Ewma(), slices).orderBy(col("user_id"))
   }
 
-  // ------------------------------------------ durable incremental aggregate
-  private def aggWatermarkPath(path: String) = s"$path/_fold_watermark"
-  private def stateMetaPath(path: String) = s"$path/_state_meta"
-
-  /** The stamped fold parameters of a durable state — `_state_meta`, a
-    * `_`-prefixed sorted `key=value` file INSIDE the state dir (invisible
-    * to parquet readers, swaps atomically WITH the state it describes,
-    * like the watermark). Empty when the state predates the protocol or
-    * doesn't exist. The protocol exists because a durable state is only
-    * as good as the parameters every fold agrees on: a fold that passes
-    * lgK=10 into a lgK=12 theta state, or α=0.3 into an α=0.5 EWMA,
-    * produces NO error — just silently degraded estimates no later read
-    * can detect. So [[durableFold]] stamps (kind + every
-    * estimate-shaping parameter) on the first fold and REQUIRES a match
-    * on every later fold; read-time views that need a geometry parameter
-    * ([[audienceOverlapAt]]) read it from the stamp instead of trusting
-    * a caller. The same failure class the embedding index's `_geometry`
-    * file closed, applied to the durable-state family.
+  // ------------------------------------------ durable incremental state
+  /** A `_`-prefixed small file inside a state dir (invisible to parquet
+    * readers, swapped atomically WITH the state it describes); None when
+    * absent.
     */
-  def stateMeta(s: SparkSession, path: String): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(stateMetaPath(path))
+  private def readSmall(s: SparkSession, file: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
+    if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
-      txt.linesIterator.filter(_.contains("=")).map { l =>
+    }
+  }
+
+  /** The stamped fold parameters of a durable state — `_state_meta`, a
+    * sorted `key=value` file inside the state dir. Empty when the state
+    * predates the protocol or doesn't exist. The protocol exists because
+    * a durable state is only as good as the parameters every fold agrees
+    * on: a fold that passes lgK=10 into a lgK=12 theta state, or α=0.3
+    * into an α=0.5 EWMA, produces NO error — just silently degraded
+    * estimates no later read can detect. So [[foldAt]] stamps
+    * [[StateKind.stamp]] (kind + every estimate-shaping parameter) on the
+    * first fold and REQUIRES a match on every later fold; read-time views
+    * that need a geometry parameter ([[audienceOverlapAt]]) read it from
+    * the stamp instead of trusting a caller. The same failure class the
+    * embedding index's `_geometry` file closed, applied to the
+    * durable-state family.
+    */
+  def stateMeta(s: SparkSession, path: String): Map[String, String] =
+    readSmall(s, s"$path/_state_meta").fold(Map.empty[String, String]) {
+      _.linesIterator.filter(_.contains("=")).map { l =>
         val i = l.indexOf('=')
         l.substring(0, i) -> l.substring(i + 1)
       }.toMap
     }
-  }
 
   /** The state table's own fold watermark: the highest batch id already
-    * folded in, read from a `_`-prefixed file INSIDE the state dir (so
-    * parquet readers never see it, and it swaps atomically WITH the state
-    * it describes). −1 when the state doesn't exist yet.
+    * folded in (`_fold_watermark` inside the state dir). −1 when the
+    * state doesn't exist yet.
     */
-  def aggFoldWatermark(s: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(aggWatermarkPath(path))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.trim.toLong
-    }
-  }
+  def aggFoldWatermark(s: SparkSession, path: String): Long =
+    readSmall(s, s"$path/_fold_watermark").fold(-1L)(_.trim.toLong)
 
-  /** Durable, replay-safe [[aggUpsert]] — the discipline the fold needs
-    * that the ingest sinks don't: their index rows are content-derived
-    * (a replayed append duplicates rows that compaction dedups), but an
-    * aggregate fold is NOT idempotent — folding the same batch twice
-    * DOUBLE-COUNTS, and no later pass can tell the inflation from real
-    * data. So the state carries its own fold watermark, and state + new
-    * watermark swap atomically in one [[graft.ops.Layout.rewriteInPlace]]
-    * (the watermark is a `_` file inside the state dir — there is no
-    * window where one is visible without the other). Replays of
-    * already-folded ids (`batchId` ≤ watermark) are no-ops; a crash
-    * between the swap's two renames parks the old generation at
-    * `<path>.old`, which the next call restores before folding — the
-    * state is never lost and never a mixed generation.
+  /** Durable, replay-safe fold of `batch` into the `kind` state at `path`
+    * — the one fence every kind shares, and the discipline the fold needs
+    * that the ingest sinks don't: their index rows are content-derived (a
+    * replayed append duplicates rows that compaction dedups), but a state
+    * fold is NOT idempotent — folding the same batch twice DOUBLE-COUNTS,
+    * and no later pass can tell the inflation from real data. So the
+    * state carries its own fold watermark, and state + new watermark +
+    * [[stateMeta]] stamp swap atomically in one
+    * [[graft.ops.Layout.writeStaged]] (the watermark is a `_` file inside
+    * the state dir — there is no window where one is visible without the
+    * other). Replays of already-folded ids (`batchId` ≤ watermark) are
+    * no-ops and build no plan; a crash between the swap's two renames
+    * parks the old generation at `<path>.old`, which the next call
+    * restores before folding — the state is never lost and never a mixed
+    * generation. An existing stamp must match `kind.stamp` exactly, or
+    * the fold raises before any plan is built; a pre-meta state adopts
+    * this fold's stamp.
     *
     * THE FENCE ASSUMES ONE MONOTONE ID LINEAGE (a streaming
     * checkpoint's batch ids, or a scheduler's increasing day ids): an
@@ -730,36 +659,11 @@ object JsonEtl {
     * the marker protocol; (2) out-of-order backfill must not reuse a
     * lower id — fold the late data under a fresh id above the
     * watermark (ids are opaque; only their order matters). The
-    * FRAME-level [[aggUpsert]] has no fence and composes in any order.
+    * frame-level [[StateKind.fold]] has no fence and composes in any
+    * order the kind's algebra allows.
     */
-  def aggUpsertAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long,
-      keys: Seq[String] = Seq("user_id", "event_type"),
-      valueCol: String = "value"): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "agg",
-      "keys" -> keys.mkString(","), "value_col" -> valueCol))(
-      aggState(batch, keys, valueCol),
-      st => aggUpsert(st, batch, keys, valueCol))
-
-  /** [[aggUpsertAt]] for the N-column [[aggStateN]] — identical watermark
-    * fence, staged swap and crash recovery; only the state algebra
-    * differs, so the durability argument is stated once above.
-    */
-  def aggUpsertAtN(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, keys: Seq[String], valueCols: Seq[String]): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "agg_n",
-      "keys" -> keys.mkString(","), "value_cols" -> valueCols.mkString(",")))(
-      aggStateN(batch, keys, valueCols),
-      st => aggUpsertN(st, batch, keys, valueCols))
-
-  /** The shared durable-fold machinery behind [[aggUpsertAt]] and
-    * [[aggUpsertAtN]]: restore a parked generation, skip replayed ids,
-    * swap state + watermark atomically. `freshState` is by-name — a
-    * replayed batch never builds a plan.
-    */
-  private def durableFold(s: SparkSession, path: String, batchId: Long,
-      meta: Seq[(String, String)] = Nil)(
-      freshState: => DataFrame, foldInto: DataFrame => DataFrame): Unit = {
+  def foldAt(s: SparkSession, path: String, batch: DataFrame,
+      batchId: Long, kind: StateKind): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(path + ".old")
@@ -769,13 +673,8 @@ object JsonEtl {
       require(fs.rename(old, p), s"durableFold: restore $old -> $path failed")
     if (batchId <= aggFoldWatermark(s, path)) return // replayed, already in
     val fresh = !fs.exists(p)
-    // the self-describing-state fence ([[stateMeta]]): an existing stamp
-    // must match this fold's declared parameters EXACTLY — a mismatch is
-    // the silent-degradation bug, raised here on the driver before any
-    // plan is built. A stamped state folded by a pre-meta caller (empty
-    // `meta`) passes — the caller declares nothing to check; a pre-meta
-    // STATE adopts this fold's stamp (the upgrade path).
-    if (!fresh && meta.nonEmpty) {
+    val meta = kind.stamp
+    if (!fresh) {
       val stamped = stateMeta(s, path)
       if (stamped.nonEmpty) {
         val declared = meta.toMap
@@ -791,26 +690,31 @@ object JsonEtl {
             "fold with the stamped parameters or rebuild at a fresh path)")
       }
     }
-    def stamp(dir: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(
-        s"$dir/_fold_watermark"), true)
-      out.write(batchId.toString.getBytes("UTF-8")); out.close()
-      if (meta.nonEmpty) {
-        val m = fs.create(new org.apache.hadoop.fs.Path(
-          s"$dir/_state_meta"), true)
-        m.write(meta.toMap.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"$k=$v" }.mkString("\n").getBytes("UTF-8"))
-        m.close()
-      }
+    def write(file: String, txt: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(file), true)
+      out.write(txt.getBytes("UTF-8")); out.close()
     }
     graft.ops.Layout.writeStaged(s, path) { staging =>
       val folded =
-        if (fresh) freshState
-        else foldInto(s.read.parquet(path))
+        if (fresh) kind.state(batch)
+        else kind.fold(s.read.parquet(path), batch)
       folded.write.parquet(staging)
-      stamp(staging)
+      write(s"$staging/_fold_watermark", batchId.toString)
+      write(s"$staging/_state_meta", meta.toMap.toSeq.sortBy(_._1)
+        .map { case (k, v) => s"$k=$v" }.mkString("\n"))
     }
   }
+
+  /** [[foldAt]] for the N-column additive state. */
+  def aggUpsertAtN(s: SparkSession, path: String, batch: DataFrame,
+      batchId: Long, keys: Seq[String], valueCols: Seq[String]): Unit =
+    foldAt(s, path, batch, batchId, StateKind.AggN(keys, valueCols))
+
+  /** [[foldAt]] for the KLL quantile state. */
+  def quantileUpsertAt(s: SparkSession, path: String, batch: DataFrame,
+      batchId: Long, key: String = "event_type",
+      valueCol: String = "value", k: Int = 200): Unit =
+    foldAt(s, path, batch, batchId, StateKind.Quantile(key, valueCol, k))
 
   /** Gate form: the events table folds in as four sequential batches
     * (event_id mod 4 — stand-ins for four daily loads) and the folded
@@ -822,13 +726,10 @@ object JsonEtl {
     * already bit-exact in decimal, so one cast at the boundary loses
     * nothing and keeps the comparison representation-independent).
     */
-  def incrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    slices.tail.foldLeft(aggState(slices.head))((st, b) => aggUpsert(st, b))
+  def incrementalAgg(s: SparkSession, dir: String): DataFrame =
+    foldAll(StateKind.Agg(), mod4(Tables(s, dir).events, "event_id"))
       .withColumn("sum_value", col("sum_value").cast("double"))
       .orderBy(col("user_id"), col("event_type"))
-  }
 
   /** Gate form of the GENERIC state: two metrics (quantity, extended
     * price) per (returnflag, linestatus), folded in four l_orderkey-mod
@@ -840,20 +741,22 @@ object JsonEtl {
     * Decimals cast to DOUBLE at the boundary per the §5 convention.
     */
   def incrementalAggStats(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables(s, dir).lineitem
-    val keys = Seq("l_returnflag", "l_linestatus")
-    val vals = Seq("l_quantity", "l_extendedprice")
-    val slices = (0L to 3L).map(i => li.filter(col("l_orderkey") % 4 === i))
-    val folded = slices.tail.foldLeft(aggStateN(slices.head, keys, vals))(
-      (st, b) => aggUpsertN(st, b, keys, vals))
-    val out = aggDerivedN(folded, vals)
-    out.select(out.columns.toSeq.map { c =>
-        if (c.startsWith("sum_") || c.startsWith("sumsq_"))
-          col(c).cast("double").as(c)
-        else col(c)
-      }: _*)
+    val kind = StateKind.AggN(Seq("l_returnflag", "l_linestatus"),
+      Seq("l_quantity", "l_extendedprice"))
+    sumsAsDouble(kind.view(
+      foldAll(kind, mod4(Tables(s, dir).lineitem, "l_orderkey"))))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
+
+  /** The gate projection of additive stats: decimal sums and sums of
+    * squares cast to DOUBLE at the boundary (§5 output convention).
+    */
+  private def sumsAsDouble(out: DataFrame): DataFrame =
+    out.select(out.columns.toSeq.map { c =>
+      if (c.startsWith("sum_") || c.startsWith("sumsq_"))
+        col(c).cast("double").as(c)
+      else col(c)
+    }: _*)
 
   // --------------------------------------------- incremental join view
   /** A materialized inner equi-join maintained incrementally — the state
@@ -915,17 +818,8 @@ object JsonEtl {
   private def joinProtocolPath(root: String) = s"$root/_join_protocol"
 
   /** The stamped protocol, None for a pre-protocol state. */
-  def joinProtocol(s: SparkSession, root: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(joinProtocolPath(root))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(txt.trim)
-    }
-  }
+  def joinProtocol(s: SparkSession, root: String): Option[String] =
+    readSmall(s, joinProtocolPath(root)).map(_.trim)
 
   private def stampJoinProtocol(s: SparkSession, root: String,
       protocol: String): Unit = joinProtocol(s, root) match {
@@ -949,13 +843,13 @@ object JsonEtl {
     * rows, never rewrites them), so durability uses the streaming sinks'
     * exactly-once protocol ([[graft.streaming.Streams.commitBatch]]: per
     * dir, staged write → batch-prefixed file REPLACE → one marker for the
-    * whole multi-dir commit) instead of [[aggUpsertAt]]'s whole-state
+    * whole multi-dir commit) instead of [[foldAt]]'s whole-state
     * swap — folding a batch writes THE BATCH'S rows, not the history, so
     * a year-old 100 TB view costs the same per night as a day-old one.
     * Replayed ids are no-ops (marker check); a crash mid-write leaves
     * un-markered files that the replay REPLACES by batch prefix. The
     * marker lives at `root` — one lineage for the three dirs, same
-    * monotone-id contract as [[aggUpsertAt]].
+    * monotone-id contract as [[foldAt]].
     */
   def joinUpsertAt(s: SparkSession, root: String, dLeft: DataFrame,
       dRight: DataFrame, batchId: Long, keys: Seq[String],
@@ -1075,34 +969,26 @@ object JsonEtl {
     * (map-side combined), then union sketches per key — one batch-sized
     * shuffle + one key-partitioned state merge, history never rescanned.
     * Sketch union is associative and commutative (it represents set
-    * union), so batches fold in any order; duplicate ROWS are absorbed
-    * by construction — only a duplicate BATCH id inflates nothing, which
-    * is why this is the one incremental state whose durable form could
-    * even tolerate replays (it still fences them, one discipline repo-wide).
+    * union), so batches fold in any order and duplicate ROWS are absorbed
+    * by construction.
     */
   def distinctUpsert(state: DataFrame, batch: DataFrame,
       keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
       lgK: Int = 12): DataFrame =
-    state.unionByName(distinctState(batch, keys, valueCol, lgK))
-      .groupBy(keys.map(col): _*)
+    unionHll(state.unionByName(distinctState(batch, keys, valueCol, lgK)),
+      keys)
+
+  /** HLL sketch rows unioned per key — the fold's merge, and the windowed
+    * view's day collapse.
+    */
+  private[etl] def unionHll(frames: DataFrame, keys: Seq[String]): DataFrame =
+    frames.groupBy(keys.map(col): _*)
       .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
 
   /** Read-time estimate view over a [[distinctState]]. */
   def distinctEstimate(state: DataFrame): DataFrame =
     state.withColumn("distinct_est", hll_sketch_estimate(col("sketch")))
       .drop("sketch")
-
-  /** Durable, replay-safe [[distinctUpsert]] — [[aggUpsertAt]]'s watermark
-    * fence and atomic swap, applied to the sketch merge.
-    */
-  def distinctUpsertAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, keys: Seq[String] = Seq("event_type"),
-      valueCol: String = "user_id", lgK: Int = 12): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "distinct",
-      "keys" -> keys.mkString(","), "value_col" -> valueCol,
-      "lgk" -> lgK.toString))(
-      distinctState(batch, keys, valueCol, lgK),
-      st => distinctUpsert(st, batch, keys, valueCol, lgK))
 
   /** Gate form: distinct users per event_type, folded in four event_id-mod
     * slices, served through the estimate view. ORACLE-EXACT at the gate
@@ -1115,77 +1001,10 @@ object JsonEtl {
     * exact-regime-at-the-gate / bounded-regime-in-the-spec split as
     * the theta and Misra–Gries gates).
     */
-  def incrementalDistinct(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    distinctEstimate(
-      slices.tail.foldLeft(distinctState(slices.head))(
-        (st, b) => distinctUpsert(st, b)))
+  def incrementalDistinct(s: SparkSession, dir: String): DataFrame =
+    distinctEstimate(foldAll(StateKind.Distinct(),
+      mod4(Tables(s, dir).events, "event_id")))
       .orderBy(col("event_type"))
-  }
-
-  // ------------------------------ day-windowed (expiring) sketch states
-  /** Day-windowed distinct-count state — [[distinctState]] keyed by
-    * (keys..., dayCol) with [[aggStateWindowed]]'s monotone event-time
-    * expiry: "trailing-30-day distinct users per segment" becomes
-    * maintainable from state bounded by keys × retainDays few-KB
-    * sketches, where the grow-only [[distinctState]] can only answer
-    * all-of-history. Expiry correctness is the windowed-additive
-    * argument verbatim (horizons only advance under append-only feeds;
-    * a late batch for an expired day re-expires inside the fold; late
-    * data INSIDE the horizon folds into its (key, day) sketch — sketch
-    * union absorbs any arrival order), so fold ≡
-    * recompute-over-the-retained-window, spec-pinned. The day-dimension
-    * union happens at READ time ([[distinctWindowView]]) per the
-    * never-store-derived rule — the state keeps per-day sketches so ANY
-    * trailing window ≤ retention can be served.
-    */
-  def distinctStateWindowed(events: DataFrame,
-      keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
-      lgK: Int = 12, dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(distinctState(events, keys :+ dayCol, valueCol, lgK),
-      dayCol, retainDays)
-
-  /** Fold a raw batch into a [[distinctStateWindowed]] — per-(key, day)
-    * sketch union + the expiry filter: one batch-sized shuffle + a
-    * state-sized merge (materialized once, [[expireFold]]), history
-    * never rescanned, state bounded forever.
-    */
-  def distinctUpsertWindowed(state: DataFrame, batch: DataFrame,
-      keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
-      lgK: Int = 12, dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(distinctUpsert(state, batch, keys :+ dayCol, valueCol, lgK),
-      dayCol, retainDays)
-
-  /** Rolling read-time view: union the day sketches over the last
-    * `lastNDays` (≤ retention, measured from the state's own max day —
-    * event time) and serve the estimate per key. Sketch-union exactness
-    * is the coupon-regime argument: below capacity the union IS the
-    * exact distinct count of the window.
-    */
-  def distinctWindowView(state: DataFrame,
-      keys: Seq[String] = Seq("event_type"), dayCol: String = "day",
-      lastNDays: Int = 7): DataFrame =
-    distinctEstimate(expireDays(state, dayCol, lastNDays)
-      .groupBy(keys.map(col): _*)
-      .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch")))
-
-  /** Durable, replay-safe [[distinctUpsertWindowed]] — the shared fence,
-    * meta-stamped.
-    */
-  def distinctUpsertWindowedAt(s: SparkSession, path: String,
-      batch: DataFrame, batchId: Long,
-      keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
-      lgK: Int = 12, dayCol: String = "day", retainDays: Int = 30): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "distinct_windowed",
-      "keys" -> keys.mkString(","), "value_col" -> valueCol,
-      "lgk" -> lgK.toString, "day_col" -> dayCol,
-      "retain_days" -> retainDays.toString))(
-      distinctStateWindowed(batch, keys, valueCol, lgK, dayCol, retainDays),
-      st => distinctUpsertWindowed(st, batch, keys, valueCol, lgK, dayCol,
-        retainDays))
 
   /** Gate form: trailing-7-day distinct users per event type served from
     * a 14-day-retention windowed state folded in four event_id-mod
@@ -1196,102 +1015,10 @@ object JsonEtl {
     * DuckDB's windowed COUNT(DISTINCT).
     */
   def incrementalDistinctWindowed(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-      .withColumn("day", floor(tsSec(col("ts")) / lit(86400L)).cast(LongType))
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    distinctWindowView(
-      slices.tail.foldLeft(distinctStateWindowed(slices.head, retainDays = 14))(
-        (st, b) => distinctUpsertWindowed(st, b, retainDays = 14)))
+    val kind = StateKind.Windowed(StateKind.Distinct(), retainDays = 14)
+    kind.view(foldAll(kind, mod4(withDay(Tables(s, dir).events), "event_id")))
       .orderBy(col("event_type"))
   }
-
-  /** The composite (key, day) column the windowed THETA state threads
-    * through the single-key [[audiencePartials]]/[[mergeSketchFrames]]
-    * kernels: key and day joined on U+0001 (a control char no event-type
-    * or segment name carries — the contract is documented, not filtered,
-    * because filtering would silently drop rows). Day round-trips
-    * exactly (a long printed and re-cast).
-    */
-  private val WinSep = "\u0001"
-  private val WinKeyCol = "_win_key"
-  private def withWinKey(events: DataFrame, key: String,
-      dayCol: String): DataFrame =
-    // NULL key or day rows are DROPPED, matching the grow-only parents'
-    // isNotNull discipline -- without this, concat_ws silently skips the
-    // NULL side and the composite collapses to just the day string, which
-    // splitWinKey then re-reads as a bogus key equal to the day value
-    // (windowed and non-windowed states would diverge on NULL-key input)
-    events.filter(col(key).isNotNull && col(dayCol).isNotNull)
-      .withColumn(WinKeyCol, concat_ws(WinSep,
-        col(key).cast("string"), col(dayCol).cast("string")))
-  private def splitWinKey(state: DataFrame, key: String,
-      dayCol: String): DataFrame =
-    state.select(
-      substring_index(col(WinKeyCol), WinSep, 1).as(key),
-      substring_index(col(WinKeyCol), WinSep, -1).cast(LongType).as(dayCol),
-      col("sketch"))
-
-  /** Day-windowed AUDIENCE (theta set) state — [[audienceState]] keyed
-    * by (key, day) with the same monotone event-time expiry: the
-    * trailing-window audience questions ("users who did A and also B
-    * in the last 7 days") from bounded per-day set sketches. Same fold
-    * shape (batch partials + state merged in ONE exchange of few-KB
-    * sketches); the set algebra stays a READ-TIME view
-    * ([[audienceWindowView]]: union the day sketches per key, then the
-    * pair matrix).
-    */
-  def audienceStateWindowed(events: DataFrame, key: String = "event_type",
-      valueCol: String = "user_id", lgK: Int = 12, dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(splitWinKey(
-      mergeSketchFrames(audiencePartials(withWinKey(events, key, dayCol),
-        WinKeyCol, valueCol, lgK), WinKeyCol, SketchMerges.theta(lgK)),
-      key, dayCol), dayCol, retainDays)
-
-  /** Fold a raw batch into an [[audienceStateWindowed]] — per-(key, day)
-    * theta union, batch partials merged with the state in one shuffle.
-    */
-  def audienceUpsertWindowed(state: DataFrame, batch: DataFrame,
-      key: String = "event_type", valueCol: String = "user_id",
-      lgK: Int = 12, dayCol: String = "day",
-      retainDays: Int = 30): DataFrame = {
-    val stateKeyed = state
-      .withColumn(WinKeyCol, concat_ws(WinSep,
-        col(key).cast("string"), col(dayCol).cast("string")))
-      .select(col(WinKeyCol), col("sketch"))
-    expireFold(splitWinKey(
-      mergeSketchFrames(stateKeyed.unionByName(
-        audiencePartials(withWinKey(batch, key, dayCol), WinKeyCol,
-          valueCol, lgK)), WinKeyCol, SketchMerges.theta(lgK)),
-      key, dayCol), dayCol, retainDays)
-  }
-
-  /** Rolling read-time set-algebra view: union each key's day sketches
-    * over the last `lastNDays`, then serve [[audienceOverlap]]'s pair
-    * matrix. `lgK` must match the build geometry (the union-downsample
-    * warning there) — the durable path reads it from the stamp.
-    */
-  def audienceWindowView(state: DataFrame, key: String = "event_type",
-      dayCol: String = "day", lastNDays: Int = 7,
-      lgK: Int = 12): DataFrame =
-    audienceOverlap(
-      mergeSketchFrames(expireDays(state, dayCol, lastNDays)
-        .select(col(key), col("sketch")), key, SketchMerges.theta(lgK)),
-      lgK)
-
-  /** Durable, replay-safe [[audienceUpsertWindowed]] — the shared fence,
-    * meta-stamped.
-    */
-  def audienceUpsertWindowedAt(s: SparkSession, path: String,
-      batch: DataFrame, batchId: Long, key: String = "event_type",
-      valueCol: String = "user_id", lgK: Int = 12, dayCol: String = "day",
-      retainDays: Int = 30): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "audience_windowed",
-      "key" -> key, "value_col" -> valueCol, "lgk" -> lgK.toString,
-      "day_col" -> dayCol, "retain_days" -> retainDays.toString))(
-      audienceStateWindowed(batch, key, valueCol, lgK, dayCol, retainDays),
-      st => audienceUpsertWindowed(st, batch, key, valueCol, lgK, dayCol,
-        retainDays))
 
   /** Gate form: the trailing-7-day audience-overlap matrix from a
     * 14-day-retention windowed state folded in four event_id-mod
@@ -1300,12 +1027,8 @@ object JsonEtl {
     * day unions.
     */
   def audienceOverlapWindowed(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-      .withColumn("day", floor(tsSec(col("ts")) / lit(86400L)).cast(LongType))
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    audienceWindowView(
-      slices.tail.foldLeft(audienceStateWindowed(slices.head, retainDays = 14))(
-        (st, b) => audienceUpsertWindowed(st, b, retainDays = 14)))
+    val kind = StateKind.Windowed(StateKind.Audience(), retainDays = 14)
+    kind.view(foldAll(kind, mod4(withDay(Tables(s, dir).events), "event_id")))
       .orderBy(col("a"), col("b"))
   }
 
@@ -1315,15 +1038,32 @@ object JsonEtl {
     * not exactly mergeable — but the KLL sketch merges with a BOUNDED
     * rank-error guarantee, which is the strongest maintainable form a
     * rolling "p99 latency per segment" dashboard can have without
-    * keeping every value. State = (key, sketch BINARY, n_rows), built by
-    * [[graft.ops.Profile.valueSketches]] (the same artifact the
-    * profiling family saves — one sketch format repo-wide); quantile
-    * estimates are a read-time view ([[quantileEstimates]]), never
-    * stored, per the aggState non-additive rule.
+    * keeping every value. State = (key STRING, sketch BINARY, n_rows),
+    * the same artifact [[graft.ops.Profile.valueSketches]] saves — one
+    * sketch format repo-wide, ordered by key like it; n_rows is the
+    * sketch's exact item count. Quantile estimates are a read-time view
+    * ([[quantileEstimates]]), never stored, per the aggState
+    * non-additive rule.
     */
   def quantileState(events: DataFrame, key: String = "event_type",
       valueCol: String = "value", k: Int = 200): DataFrame =
-    graft.ops.Profile.valueSketches(events, key, valueCol, k)
+    quantileStateBy(events, key, Nil, valueCol, k)
+
+  /** Every sketch state stores its key as a string. */
+  private def stringKey(df: DataFrame, key: String): DataFrame =
+    df.withColumn(key, col(key).cast("string"))
+
+  /** [[quantileState]] grouped on `key` and then `days` (a windowed
+    * form's day column, kept as it is).
+    */
+  private[etl] def quantileStateBy(events: DataFrame, key: String,
+      days: Seq[String], valueCol: String, k: Int): DataFrame = {
+    val by = key +: days
+    mergeSketchFrames(sketchPartials(stringKey(events, key), by,
+        col(valueCol).cast("double"), SketchMerges.kll(k)),
+      by, SketchMerges.kll(k))
+      .orderBy(by.map(col): _*)
+  }
 
   /** Fold a raw batch into a [[quantileState]]: sketch the batch alone
     * (one mapPartitions scan + one few-KB-per-key partial shuffle), then
@@ -1337,35 +1077,14 @@ object JsonEtl {
   def quantileUpsert(state: DataFrame, batch: DataFrame,
       key: String = "event_type", valueCol: String = "value",
       k: Int = 200): DataFrame =
-    mergeKllFrames(state.unionByName(quantileState(batch, key, valueCol, k)),
-      key, k)
+    quantileUpsertBy(state, batch, key, Nil, valueCol, k)
 
-  /** The per-key KLL merge both the fold and the windowed read view pay:
-    * group (key, sketch, n_rows) rows by key, merge sketch bytes, add
-    * the exact row counts — the [[mergeSketchFrames]] shape with the
-    * KLL family's extra additive column.
-    */
-  private def mergeKllFrames(frames: DataFrame, key: String,
-      k: Int): DataFrame = {
-    import org.apache.datasketches.kll.KllDoublesSketch
-    import org.apache.datasketches.memory.Memory
-    val s2 = frames.sparkSession
-    import s2.implicits._
-    frames
-      .select(col(key).cast("string").as("g"), col("sketch"), col("n_rows"))
-      .as[(String, Array[Byte], Long)]
-      .groupByKey(_._1)
-      .mapGroups { (g, parts) =>
-        val merged = KllDoublesSketch.newHeapInstance(k)
-        var n = 0L
-        parts.foreach { p =>
-          merged.merge(KllDoublesSketch.heapify(Memory.wrap(p._2)))
-          n += p._3
-        }
-        (g, merged.toByteArray, n)
-      }
-      .toDF(key, "sketch", "n_rows")
-  }
+  /** [[quantileUpsert]] grouped on `key` and then `days`. */
+  private[etl] def quantileUpsertBy(state: DataFrame, batch: DataFrame,
+      key: String, days: Seq[String], valueCol: String, k: Int): DataFrame =
+    mergeSketchFrames(
+      state.unionByName(quantileStateBy(batch, key, days, valueCol, k)),
+      key +: days, SketchMerges.kll(k))
 
   /** Read-time quantile view over a [[quantileState]] — estimates for the
     * requested ranks per key, computed from sketch bytes distributed
@@ -1390,94 +1109,16 @@ object JsonEtl {
           col("quantiles").getItem(i).as(s"p${(q * 100).round}") }: _*)
   }
 
-  /** Durable, replay-safe [[quantileUpsert]] — [[aggUpsertAt]]'s watermark
-    * fence and atomic swap, applied to the sketch merge.
-    */
-  def quantileUpsertAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, key: String = "event_type",
-      valueCol: String = "value", k: Int = 200): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "quantile",
-      "key" -> key, "value_col" -> valueCol, "k" -> k.toString))(
-      quantileState(batch, key, valueCol, k),
-      st => quantileUpsert(st, batch, key, valueCol, k))
-
   /** Gate form: per-event-type value quantiles, folded in four event_id-mod
     * slices, served through the estimate view. Rows-only (KLL compaction
     * is randomized); the spec pins the folded estimates inside the
     * sketch's rank-error envelope vs exact order statistics and the
     * durable replay discipline.
     */
-  def incrementalQuantiles(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    quantileEstimates(
-      slices.tail.foldLeft(quantileState(slices.head))(
-        (st, b) => quantileUpsert(st, b)))
+  def incrementalQuantiles(s: SparkSession, dir: String): DataFrame =
+    quantileEstimates(foldAll(StateKind.Quantile(),
+      mod4(Tables(s, dir).events, "event_id")))
       .orderBy(col("event_type"))
-  }
-
-  /** Day-windowed EXPIRING quantile state — the fifth windowed member:
-    * per-(key, day) KLL sketches under the monotone event-time
-    * retention, day sketches KLL-merged per key at read time — the
-    * "trailing-7-day p99 latency per segment" ops dashboard from
-    * bounded state. Composite (key, day) threads the single-key KLL
-    * kernels via the [[WinSep]] contract; n_rows stays EXACT (additive
-    * longs) while the quantile estimates carry the KLL merge's bounded
-    * rank error (the spec envelope), so the family is rows-only like
-    * its grow-only parent.
-    */
-  def quantileStateWindowed(events: DataFrame, key: String = "event_type",
-      valueCol: String = "value", k: Int = 200, dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(splitWinKeyKll(
-      quantileState(withWinKey(events, key, dayCol), WinKeyCol, valueCol, k),
-      key, dayCol), dayCol, retainDays)
-
-  private def splitWinKeyKll(state: DataFrame, key: String,
-      dayCol: String): DataFrame =
-    state.select(
-      substring_index(col(WinKeyCol), WinSep, 1).as(key),
-      substring_index(col(WinKeyCol), WinSep, -1).cast(LongType).as(dayCol),
-      col("sketch"), col("n_rows"))
-
-  /** Fold a raw batch into a [[quantileStateWindowed]]. */
-  def quantileUpsertWindowed(state: DataFrame, batch: DataFrame,
-      key: String = "event_type", valueCol: String = "value",
-      k: Int = 200, dayCol: String = "day",
-      retainDays: Int = 30): DataFrame = {
-    val stateKeyed = state
-      .withColumn(WinKeyCol, concat_ws(WinSep,
-        col(key).cast("string"), col(dayCol).cast("string")))
-      .select(col(WinKeyCol), col("sketch"), col("n_rows"))
-    expireFold(splitWinKeyKll(
-      quantileUpsert(stateKeyed, withWinKey(batch, key, dayCol),
-        WinKeyCol, valueCol, k),
-      key, dayCol), dayCol, retainDays)
-  }
-
-  /** Rolling read-time quantile view: KLL-merge each key's day sketches
-    * over the last `lastNDays` and serve the requested ranks.
-    */
-  def quantileWindowView(state: DataFrame, key: String = "event_type",
-      dayCol: String = "day", lastNDays: Int = 7, k: Int = 200,
-      qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
-    quantileEstimates(mergeKllFrames(
-      expireDays(state, dayCol, lastNDays)
-        .select(col(key), col("sketch"), col("n_rows")), key, k), qs)
-
-  /** Durable, replay-safe [[quantileUpsertWindowed]] — the shared fence,
-    * meta-stamped.
-    */
-  def quantileUpsertWindowedAt(s: SparkSession, path: String,
-      batch: DataFrame, batchId: Long, key: String = "event_type",
-      valueCol: String = "value", k: Int = 200, dayCol: String = "day",
-      retainDays: Int = 30): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "quantile_windowed",
-      "key" -> key, "value_col" -> valueCol, "k" -> k.toString,
-      "day_col" -> dayCol, "retain_days" -> retainDays.toString))(
-      quantileStateWindowed(batch, key, valueCol, k, dayCol, retainDays),
-      st => quantileUpsertWindowed(st, batch, key, valueCol, k, dayCol,
-        retainDays))
 
   /** Gate form: trailing-7-day per-event-type quantiles from a
     * 14-day-retention windowed state folded in four event_id-mod
@@ -1486,47 +1127,34 @@ object JsonEtl {
     * rank-error envelope of the window's exact order statistics.
     */
   def incrementalQuantilesWindowed(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-      .withColumn("day", floor(tsSec(col("ts")) / lit(86400L)).cast(LongType))
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    quantileWindowView(
-      slices.tail.foldLeft(quantileStateWindowed(slices.head, retainDays = 14))(
-        (st, b) => quantileUpsertWindowed(st, b, retainDays = 14)))
+    val kind = StateKind.Windowed(StateKind.Quantile(), retainDays = 14)
+    kind.view(foldAll(kind, mod4(withDay(Tables(s, dir).events), "event_id")))
       .orderBy(col("event_type"))
   }
 
-  /** The one shuffle every byte-sketch algebra's fold pays: union a
-    * (key, sketch) frame by key with the family's byte-level merge. The
-    * exchange carries few-KB partials, never raw rows; the merge runs
-    * distributed, one group per key. Shared by the Theta and
-    * Misra–Gries folds (the KLL fold carries an extra exact n_rows
-    * column and keeps its own shape; the HLL fold merges through
-    * Spark's native `hll_union_agg`).
+  /** The one shuffle every byte-sketch algebra's fold pays: union
+    * (keys..., sketch) rows by key with the family's byte-level merge.
+    * The exchange carries few-KB partials, never raw rows; the merge runs
+    * distributed, one group per key, and emits the codec's columns (the
+    * sketch, plus n_rows for KLL). Shared by the Theta, KLL and
+    * Misra–Gries folds and their windowed views (the HLL fold merges
+    * through Spark's native `hll_union_agg`). Key columns keep their
+    * types.
     */
-  private[graft] def mergeSketchFrames(frames: DataFrame, key: String,
-      mergeBytes: Iterator[Array[Byte]] => Array[Byte]): DataFrame = {
-    val s2 = frames.sparkSession
-    import s2.implicits._
-    frames.select(col(key).cast("string").as("g"), col("sketch"))
-      .as[(String, Array[Byte])]
-      .groupByKey(_._1)
-      .mapGroups((g, parts) => (g, mergeBytes(parts.map(_._2))))
-      .toDF(key, "sketch")
+  private[graft] def mergeSketchFrames(frames: DataFrame, keys: Seq[String],
+      codec: SketchCodec[_]): DataFrame = {
+    val in = frames.select(keys.map(col) :+ col("sketch"): _*)
+    val n = keys.size
+    val keySchema = StructType(
+      in.schema.fields.take(n).map(_.copy(nullable = true)))
+    in.groupByKey((r: Row) => Row.fromSeq(r.toSeq.take(n)))(
+        Encoders.row(keySchema))
+      .mapGroups((g: Row, rows: Iterator[Row]) => Row.fromSeq(
+        g.toSeq ++ codec.merge(rows.map(_.getAs[Array[Byte]](n)))))(
+        Encoders.row(StructType(keySchema.fields ++ codec.fields)))
   }
 
   // --------------------------------------- incremental set-sketch (Theta)
-  /** Per-key SET state — the sixth incremental algebra, and the one the
-    * HLL family structurally cannot provide: DataSketches THETA sketches
-    * support set INTERSECTION and DIFFERENCE, not just union, so the
-    * classic audience questions ("users who did A and also B", "users
-    * who viewed but never bought") answer from few-KB mergeable state
-    * instead of a corpus-scale distinct-pair shuffle. State =
-    * (key, sketch BINARY); the fold is sketch union per key (batch-sized
-    * scan + state-sized merge — [[distinctState]]'s shape); the set
-    * algebra is a READ-TIME view ([[audienceOverlap]]), never stored.
-    * Built by one mapPartitions scan (the KLL seam — DataSketches theta
-    * has no Spark SQL aggregate) with partials merged DISTRIBUTED.
-    */
   /** The per-partition sketch maps' spill guard: when a partition sees
     * more DISTINCT keys than this, the map is flushed (its partials
     * emitted, the map cleared) before the next key is admitted — so task
@@ -1541,49 +1169,62 @@ object JsonEtl {
     */
   private[graft] val SketchPartialFlushKeys = 4096
 
-  /** Per-partition theta partials for a raw frame — unmerged (key,
-    * sketch) rows, possibly several per key when the
-    * [[SketchPartialFlushKeys]] spill guard fires. Both the state build
-    * and the fold merge these directly, so neither pays a second merge
-    * shuffle.
+  /** Per-partition sketch partials of a raw frame — unmerged (keys...,
+    * sketch) rows from one mapPartitions scan, possibly several per key
+    * when the [[SketchPartialFlushKeys]] spill guard fires. Rows with a
+    * NULL key or value are dropped. Both the state build and the fold
+    * merge these directly, so neither pays a second merge shuffle.
     */
-  private[graft] def audiencePartials(events: DataFrame, key: String,
-      valueCol: String, lgK: Int,
+  private[graft] def sketchPartials[S](events: DataFrame, keys: Seq[String],
+      value: Column, codec: SketchCodec[S],
       flushKeys: Int = SketchPartialFlushKeys): DataFrame = {
-    import org.apache.datasketches.theta.Sketches
-    val s2 = events.sparkSession
-    import s2.implicits._
-    events
-      .select(col(key).cast("string").as("g"),
-        col(valueCol).cast("string").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .as[(String, String)]
-      .mapPartitions { it =>
-        val sk = scala.collection.mutable.Map[
-          String, org.apache.datasketches.theta.UpdateSketch]()
-        def drain(): Iterator[(String, Array[Byte])] = {
-          val out = sk.iterator
-            .map { case (g, s) => (g, s.compact().toByteArray) }.toVector
+    val in = events.select(keys.map(col) :+ value.as("_v"): _*)
+    val n = keys.size
+    val out = StructType(in.schema.fields.take(n).map(_.copy(nullable = true))
+      :+ StructField("sketch", BinaryType))
+    in.filter((keys :+ "_v").map(col(_).isNotNull).reduce(_ && _))
+      .mapPartitions { (it: Iterator[Row]) =>
+        val sk = scala.collection.mutable.Map[Row, S]()
+        def drain(): Iterator[Row] = {
+          val done = sk.iterator
+            .map { case (g, s) => Row.fromSeq(g.toSeq :+ codec.bytes(s)) }
+            .toVector
           sk.clear()
-          out.iterator
+          done.iterator
         }
-        it.flatMap { case (g, v) =>
+        it.flatMap { r =>
+          val g = Row.fromSeq(r.toSeq.take(n))
           val flushed =
             if (sk.size >= flushKeys && !sk.contains(g)) drain()
             else Iterator.empty
-          sk.getOrElseUpdate(g,
-            Sketches.updateSketchBuilder().setLogNominalEntries(lgK).build())
-            .update(v)
+          codec.update(sk.getOrElseUpdate(g, codec.empty()), r.get(n))
           flushed
         } ++ drain()
-      }
-      .toDF(key, "sketch")
+      }(Encoders.row(out))
   }
 
+  /** Per-partition theta partials ([[sketchPartials]]). */
+  private[graft] def audiencePartials(events: DataFrame, keys: Seq[String],
+      valueCol: String, lgK: Int,
+      flushKeys: Int = SketchPartialFlushKeys): DataFrame =
+    sketchPartials(events, keys, col(valueCol).cast("string"),
+      SketchMerges.theta(lgK), flushKeys)
+
+  /** Per-key SET state — the sixth incremental algebra, and the one the
+    * HLL family structurally cannot provide: DataSketches THETA sketches
+    * support set INTERSECTION and DIFFERENCE, not just union, so the
+    * classic audience questions ("users who did A and also B", "users
+    * who viewed but never bought") answer from few-KB mergeable state
+    * instead of a corpus-scale distinct-pair shuffle. State =
+    * (key STRING, sketch BINARY); the fold is sketch union per key
+    * (batch-sized scan + state-sized merge — [[distinctState]]'s shape);
+    * the set algebra is a READ-TIME view ([[audienceOverlap]]), never
+    * stored. Built by one mapPartitions scan (DataSketches theta has no
+    * Spark SQL aggregate) with partials merged DISTRIBUTED.
+    */
   def audienceState(events: DataFrame, key: String = "event_type",
       valueCol: String = "user_id", lgK: Int = 12): DataFrame =
-    mergeSketchFrames(audiencePartials(events, key, valueCol, lgK),
-      key, SketchMerges.theta(lgK))
+    audienceUpsertBy(None, events, key, Nil, valueCol, lgK)
 
   /** Fold a raw batch into an [[audienceState]] — per-key sketch union
     * (set union: associative, commutative, duplicate-absorbing), same
@@ -1594,9 +1235,20 @@ object JsonEtl {
   def audienceUpsert(state: DataFrame, batch: DataFrame,
       key: String = "event_type", valueCol: String = "user_id",
       lgK: Int = 12): DataFrame =
-    mergeSketchFrames(
-      state.unionByName(audiencePartials(batch, key, valueCol, lgK)),
-      key, SketchMerges.theta(lgK))
+    audienceUpsertBy(Some(state), batch, key, Nil, valueCol, lgK)
+
+  /** [[audienceUpsert]] (or, without a state, [[audienceState]]) grouped
+    * on `key` and then `days` (a windowed form's day column, kept as it
+    * is).
+    */
+  private[etl] def audienceUpsertBy(state: Option[DataFrame],
+      batch: DataFrame, key: String, days: Seq[String], valueCol: String,
+      lgK: Int): DataFrame = {
+    val partials =
+      audiencePartials(stringKey(batch, key), key +: days, valueCol, lgK)
+    mergeSketchFrames(state.fold(partials)(_.unionByName(partials)),
+      key +: days, SketchMerges.theta(lgK))
+  }
 
   /** The read-time SET-ALGEBRA view over an [[audienceState]]: for every
     * UNORDERED key pair (one row per {A, B}, keyed a < b), estimated
@@ -1663,15 +1315,6 @@ object JsonEtl {
       meta.get("lgk").map(_.toInt).getOrElse(12))
   }
 
-  /** Durable, replay-safe [[audienceUpsert]] — the shared watermark fence. */
-  def audienceUpsertAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, key: String = "event_type",
-      valueCol: String = "user_id", lgK: Int = 12): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "audience",
-      "key" -> key, "value_col" -> valueCol, "lgk" -> lgK.toString))(
-      audienceState(batch, key, valueCol, lgK),
-      st => audienceUpsert(st, batch, key, valueCol, lgK))
-
   /** Gate form: the event-type audience-overlap matrix, state folded in
     * four event_id-mod slices. ORACLE-EXACT at the gate SF: below the
     * sketch's nominal capacity (lgK=12 → 4096 entries; the gate corpus
@@ -1684,16 +1327,19 @@ object JsonEtl {
     * estimates the SPEC envelope pins (the production regime; the gate
     * pins the algebra, the spec pins the estimator).
     */
-  def audienceOverlapQ(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    audienceOverlap(
-      slices.tail.foldLeft(audienceState(slices.head))(
-        (st, b) => audienceUpsert(st, b)))
+  def audienceOverlapQ(s: SparkSession, dir: String): DataFrame =
+    audienceOverlap(foldAll(StateKind.Audience(),
+      mod4(Tables(s, dir).events, "event_id")))
       .orderBy(col("a"), col("b"))
-  }
 
   // ------------------------------------ incremental frequent-items sketch
+  /** Per-partition Misra–Gries partials ([[sketchPartials]]). */
+  private[graft] def freqPartials(events: DataFrame, keys: Seq[String],
+      itemCol: String, maxMapSize: Int,
+      flushKeys: Int = SketchPartialFlushKeys): DataFrame =
+    sketchPartials(events, keys, col(itemCol).cast("string"),
+      SketchMerges.freq(maxMapSize), flushKeys)
+
   /** Per-key FREQUENT-ITEMS state — the seventh incremental algebra,
     * completing the classic mergeable-summary quartet (HLL distinct,
     * KLL quantile, Theta set, frequency): "top items per segment,
@@ -1704,52 +1350,13 @@ object JsonEtl {
     * below the purge threshold the counts are EXACT. Merge is the
     * counter-wise fold the algorithm defines, so fold(state, batch) ≡
     * sketch(history ∪ batch) within the bound — and exactly, below
-    * capacity. State = (key, sketch BINARY); top-k is a read-time view
-    * ([[freqTopItems]]). `maxMapSize` must be a power of 2 (validated
-    * at the API boundary, not inside a task).
+    * capacity. State = (key STRING, sketch BINARY); top-k is a read-time
+    * view ([[freqTopItems]]). `maxMapSize` must be a power of 2
+    * (validated on the driver, not inside a task).
     */
-  /** Per-partition Misra–Gries partials — [[audiencePartials]]' shape,
-    * including its [[SketchPartialFlushKeys]] spill guard.
-    */
-  private[graft] def freqPartials(events: DataFrame, key: String,
-      itemCol: String, maxMapSize: Int,
-      flushKeys: Int = SketchPartialFlushKeys): DataFrame = {
-    import org.apache.datasketches.frequencies.ItemsSketch
-    import org.apache.datasketches.common.ArrayOfStringsSerDe
-    require(maxMapSize >= 8 && Integer.bitCount(maxMapSize) == 1,
-      s"maxMapSize must be a power of 2 >= 8 (ItemsSketch's contract), " +
-        s"got $maxMapSize — fail here on the driver, not inside a task")
-    val s2 = events.sparkSession
-    import s2.implicits._
-    events
-      .select(col(key).cast("string").as("g"),
-        col(itemCol).cast("string").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .as[(String, String)]
-      .mapPartitions { it =>
-        val serde = new ArrayOfStringsSerDe()
-        val sk = scala.collection.mutable.Map[String, ItemsSketch[String]]()
-        def drain(): Iterator[(String, Array[Byte])] = {
-          val out = sk.iterator
-            .map { case (g, s) => (g, s.toByteArray(serde)) }.toVector
-          sk.clear()
-          out.iterator
-        }
-        it.flatMap { case (g, v) =>
-          val flushed =
-            if (sk.size >= flushKeys && !sk.contains(g)) drain()
-            else Iterator.empty
-          sk.getOrElseUpdate(g, new ItemsSketch[String](maxMapSize)).update(v)
-          flushed
-        } ++ drain()
-      }
-      .toDF(key, "sketch")
-  }
-
   def freqState(events: DataFrame, key: String = "event_type",
       itemCol: String = "user_id", maxMapSize: Int = 1024): DataFrame =
-    mergeSketchFrames(freqPartials(events, key, itemCol, maxMapSize),
-      key, SketchMerges.freq(maxMapSize))
+    freqUpsertBy(None, events, key, Nil, itemCol, maxMapSize)
 
   /** Fold a raw batch into a [[freqState]] — per-key Misra–Gries merge,
     * same shape as the other sketch folds (batch-sized scan +
@@ -1758,9 +1365,19 @@ object JsonEtl {
   def freqUpsert(state: DataFrame, batch: DataFrame,
       key: String = "event_type", itemCol: String = "user_id",
       maxMapSize: Int = 1024): DataFrame =
-    mergeSketchFrames(
-      state.unionByName(freqPartials(batch, key, itemCol, maxMapSize)),
-      key, SketchMerges.freq(maxMapSize))
+    freqUpsertBy(Some(state), batch, key, Nil, itemCol, maxMapSize)
+
+  /** [[freqUpsert]] (or, without a state, [[freqState]]) grouped on `key`
+    * and then `days` (a windowed form's day column, kept as it is).
+    */
+  private[etl] def freqUpsertBy(state: Option[DataFrame], batch: DataFrame,
+      key: String, days: Seq[String], itemCol: String,
+      maxMapSize: Int): DataFrame = {
+    val partials =
+      freqPartials(stringKey(batch, key), key +: days, itemCol, maxMapSize)
+    mergeSketchFrames(state.fold(partials)(_.unionByName(partials)),
+      key +: days, SketchMerges.freq(maxMapSize))
+  }
 
   /** Read-time top-k view over a [[freqState]]: per key, the k most
     * frequent items with estimate and lower/upper bounds (Misra–Gries
@@ -1789,16 +1406,6 @@ object JsonEtl {
       .toDF(key, "rank", "item", "est", "lb", "ub")
   }
 
-  /** Durable, replay-safe [[freqUpsert]] — the shared watermark fence. */
-  def freqUpsertAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, key: String = "event_type",
-      itemCol: String = "user_id", maxMapSize: Int = 1024): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "freq",
-      "key" -> key, "item_col" -> itemCol,
-      "max_map_size" -> maxMapSize.toString))(
-      freqState(batch, key, itemCol, maxMapSize),
-      st => freqUpsert(st, batch, key, itemCol, maxMapSize))
-
   /** Gate form: top-5 users per event type, state folded in four
     * event_id-mod slices. ORACLE-EXACT at the gate SF: below the purge
     * threshold (0.75·1024 = 768 counters ≫ the gate's 150 distinct
@@ -1808,12 +1415,24 @@ object JsonEtl {
     * in both engines). Above capacity the operator degrades to the
     * 3.5·N/maxMapSize-bounded estimates the spec pins.
     */
-  def trendingItems(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    freqTopItems(
-      slices.tail.foldLeft(freqState(slices.head))(
-        (st, b) => freqUpsert(st, b)))
+  def trendingItems(s: SparkSession, dir: String): DataFrame =
+    freqTopItems(foldAll(StateKind.Freq(),
+      mod4(Tables(s, dir).events, "event_id")))
+      .orderBy(col("event_type"), col("rank"))
+
+  /** Gate form: trailing-7-day top-5 users per event type from a
+    * 14-day-retention windowed state folded in four event_id-mod
+    * slices. ORACLE-EXACT at the gate SF: below the purge threshold
+    * every (type, day) counter is exact and the day merge adds exact
+    * counters, so the ranked view equals the oracle's windowed
+    * count-then-rank (ties broken by item string in both engines).
+    * Above capacity each day's error bound is 3.5·N_day/maxMapSize and
+    * the merged bound adds across the retained days (still no false
+    * negatives).
+    */
+  def trendingItemsWindowed(s: SparkSession, dir: String): DataFrame = {
+    val kind = StateKind.Windowed(StateKind.Freq(), retainDays = 14)
+    kind.view(foldAll(kind, mod4(withDay(Tables(s, dir).events), "event_id")))
       .orderBy(col("event_type"), col("rank"))
   }
 
@@ -1831,8 +1450,14 @@ object JsonEtl {
     * ≡ recompute BIT-exactly (spec-pinned), which also makes the gate
     * oracle-checkable — the one bounded-sample maintenance form with an
     * exactness story. A KMV distinct estimate rides free at read time
-    * ([[sampleDistinctEstimate]]). State = (keys..., h, value), ≤ k rows
-    * per key.
+    * ([[sampleDistinctEstimate]]). State = (keys..., rank, h, value), ≤ k
+    * rows per key.
+    *
+    * The windowed form stays EXACT too: a value in the window's bottom-k
+    * has fewer than k smaller hashes in the whole window, hence fewer
+    * than k on each day it appeared — so it IS in that day's stored
+    * bottom-k, and re-truncating the retained days ([[sampleMerge]])
+    * reconstructs the window's exact bottom-k.
     *
     * Scale shape: one map-side-combinable DISTINCT exchange of the
     * batch's (key, value) pairs + one per-key rank truncation (TopK
@@ -1844,38 +1469,42 @@ object JsonEtl {
   def sampleState(events: DataFrame, keys: Seq[String] = Seq("event_type"),
       valueCol: String = "user_id", k: Int = 64,
       seed: String = "bk0"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"bottom-k needs k >= 1, got $k")
-    val cand = events
+    bottomK(events
       .select(keys.map(col) :+ col(valueCol).cast("string").as("value"): _*)
       .filter(col("value").isNotNull)
       .distinct()
-      .withColumn("h", md5(concat_ws(":", lit(seed), col("value"))))
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("h"), col("value"))
-    cand.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(keys.map(col) ++ Seq(col("rank"), col("h"), col("value")): _*)
+      .withColumn("h", md5(concat_ws(":", lit(seed), col("value")))), keys, k)
   }
 
   /** Fold a raw batch into a [[sampleState]]: union the k-bounded state
-    * with the batch's own bottom-k candidates, dedup (the same value
-    * arriving again carries the identical hash — absorbed), re-truncate
-    * per key. Associative, commutative, duplicate-absorbing, and EXACT
-    * by the bottom-k set identity, so late/replayed/permuted batches
-    * fold to the identical state (spec-pinned bit-exactly).
+    * with the batch's own bottom-k candidates and re-truncate
+    * ([[sampleMerge]]). Associative, commutative, duplicate-absorbing,
+    * and EXACT by the bottom-k set identity, so late/replayed/permuted
+    * batches fold to the identical state (spec-pinned bit-exactly).
     */
   def sampleUpsert(state: DataFrame, batch: DataFrame,
       keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
-      k: Int = 64, seed: String = "bk0"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val merged = state.select(keys.map(col) ++ Seq(col("h"), col("value")): _*)
-      .unionByName(sampleState(batch, keys, valueCol, k, seed)
-        .select(keys.map(col) ++ Seq(col("h"), col("value")): _*))
-      .distinct()
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("h"), col("value"))
-    merged.withColumn("rank", row_number().over(w).cast(LongType))
+      k: Int = 64, seed: String = "bk0"): DataFrame =
+    sampleMerge(state.unionByName(sampleState(batch, keys, valueCol, k, seed)),
+      keys, k)
+
+  /** Sample rows re-truncated per key: dedup (keys, h, value) — the same
+    * value arriving again carries the identical hash — and keep each
+    * key's k smallest hashes.
+    */
+  private[etl] def sampleMerge(rows: DataFrame, keys: Seq[String],
+      k: Int): DataFrame =
+    bottomK(rows.select(keys.map(col) ++ Seq(col("h"), col("value")): _*)
+      .distinct(), keys, k)
+
+  /** Rank distinct (keys, h, value) rows by (h, value) per key and keep
+    * the first k.
+    */
+  private def bottomK(rows: DataFrame, keys: Seq[String], k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(col("h"), col("value"))
+    rows.withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= k)
       .select(keys.map(col) ++ Seq(col("rank"), col("h"), col("value")): _*)
   }
@@ -1899,94 +1528,15 @@ object JsonEtl {
           .otherwise(lit((k - 1).toDouble) / col("_uk")))
       .drop("_uk")
 
-  /** Durable, replay-safe [[sampleUpsert]] — the shared fence,
-    * meta-stamped (k and seed shape every later fold).
-    */
-  def sampleUpsertAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, keys: Seq[String] = Seq("event_type"),
-      valueCol: String = "user_id", k: Int = 64,
-      seed: String = "bk0"): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "sample",
-      "keys" -> keys.mkString(","), "value_col" -> valueCol,
-      "k" -> k.toString, "seed" -> seed))(
-      sampleState(batch, keys, valueCol, k, seed),
-      st => sampleUpsert(st, batch, keys, valueCol, k, seed))
-
   /** Gate form: a deterministic 8-user bottom-k sample per event type,
     * folded in four event_id-mod slices. ORACLE-EXACT by the set
     * identity + determinism: DuckDB recomputes the identical k smallest
     * md5 hashes over each key's distinct users — no estimator, no
     * regime argument, the fold IS the recompute.
     */
-  def incrementalSample(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    slices.tail.foldLeft(sampleState(slices.head, k = 8))(
-        (st, b) => sampleUpsert(st, b, k = 8))
+  def incrementalSample(s: SparkSession, dir: String): DataFrame =
+    foldAll(StateKind.Sample(k = 8), mod4(Tables(s, dir).events, "event_id"))
       .orderBy(col("event_type"), col("rank"))
-  }
-
-  /** Day-windowed EXPIRING bottom-k sample — a member of the windowed
-    * family (additive, distinct, audience, quantile, sample): per-(key,
-    * day) bottom-k under the monotone event-time retention, so
-    * "trailing-30-day example users per segment" stays maintainable
-    * from k × keys × retention rows. The day union stays EXACT: a value
-    * in the window's bottom-k has fewer than k smaller hashes in the
-    * whole window, hence fewer than k on each day it appeared — so it
-    * IS in that day's stored bottom-k, and the read-time re-truncation
-    * over the retained days ([[sampleWindowView]]) reconstructs the
-    * window's exact bottom-k. Same expiry-correctness argument as
-    * [[aggStateWindowed]]; same fold cost shape as [[sampleUpsert]].
-    */
-  def sampleStateWindowed(events: DataFrame,
-      keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
-      k: Int = 64, seed: String = "bk0", dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(sampleState(events, keys :+ dayCol, valueCol, k, seed),
-      dayCol, retainDays)
-
-  /** Fold a raw batch into a [[sampleStateWindowed]]. */
-  def sampleUpsertWindowed(state: DataFrame, batch: DataFrame,
-      keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
-      k: Int = 64, seed: String = "bk0", dayCol: String = "day",
-      retainDays: Int = 30): DataFrame =
-    expireFold(sampleUpsert(state, batch, keys :+ dayCol, valueCol, k, seed),
-      dayCol, retainDays)
-
-  /** Rolling read-time view: the EXACT bottom-k sample of the trailing
-    * `lastNDays` — distinct the retained day-samples' (key, h, value)
-    * rows and re-truncate per key (exactness by the windowed-member
-    * argument on [[sampleStateWindowed]]).
-    */
-  def sampleWindowView(state: DataFrame,
-      keys: Seq[String] = Seq("event_type"), dayCol: String = "day",
-      lastNDays: Int = 7, k: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val win = expireDays(state, dayCol, lastNDays)
-      .select(keys.map(col) ++ Seq(col("h"), col("value")): _*)
-      .distinct()
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("h"), col("value"))
-    win.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(keys.map(col) ++ Seq(col("rank"), col("h"), col("value")): _*)
-  }
-
-  /** Durable, replay-safe [[sampleUpsertWindowed]] — the shared fence,
-    * meta-stamped.
-    */
-  def sampleUpsertWindowedAt(s: SparkSession, path: String,
-      batch: DataFrame, batchId: Long,
-      keys: Seq[String] = Seq("event_type"), valueCol: String = "user_id",
-      k: Int = 64, seed: String = "bk0", dayCol: String = "day",
-      retainDays: Int = 30): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "sample_windowed",
-      "keys" -> keys.mkString(","), "value_col" -> valueCol,
-      "k" -> k.toString, "seed" -> seed, "day_col" -> dayCol,
-      "retain_days" -> retainDays.toString))(
-      sampleStateWindowed(batch, keys, valueCol, k, seed, dayCol, retainDays),
-      st => sampleUpsertWindowed(st, batch, keys, valueCol, k, seed, dayCol,
-        retainDays))
 
   /** Gate form: the trailing-7-day 8-user sample per event type from a
     * 14-day-retention windowed state folded in four event_id-mod
@@ -1994,95 +1544,9 @@ object JsonEtl {
     * window's exact bottom-k, which DuckDB recomputes directly.
     */
   def incrementalSampleWindowed(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-      .withColumn("day", floor(tsSec(col("ts")) / lit(86400L)).cast(LongType))
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    sampleWindowView(
-      slices.tail.foldLeft(
-        sampleStateWindowed(slices.head, k = 8, retainDays = 14))(
-        (st, b) => sampleUpsertWindowed(st, b, k = 8, retainDays = 14)),
-      lastNDays = 7, k = 8)
-      .orderBy(col("event_type"), col("rank"))
-  }
-
-  /** Day-windowed EXPIRING frequent-items state — the windowed matrix's
-    * last member: per-(key, day) Misra–Gries sketches under the
-    * monotone event-time retention, day sketches counter-merged per key
-    * at read time — "trending items over the trailing 7 days" from
-    * bounded state, where the grow-only [[freqState]] can only answer
-    * all-of-history. Below the purge threshold every per-day count is
-    * exact and the merge adds exact counters, so the gate stays
-    * ORACLE-EXACT by [[trendingItems]]'s argument applied per (key,
-    * day); above capacity each day's error bound is 3.5·N_day/maxMapSize
-    * and the merged bound adds across retained days (still NO false
-    * negatives — spec pins the exact regime, the grow-only spec pins
-    * the above-capacity behavior the merge inherits).
-    */
-  def freqStateWindowed(events: DataFrame, key: String = "event_type",
-      itemCol: String = "user_id", maxMapSize: Int = 1024,
-      dayCol: String = "day", retainDays: Int = 30): DataFrame =
-    expireFold(splitWinKey(
-      mergeSketchFrames(freqPartials(withWinKey(events, key, dayCol),
-        WinKeyCol, itemCol, maxMapSize), WinKeyCol,
-        SketchMerges.freq(maxMapSize)),
-      key, dayCol), dayCol, retainDays)
-
-  /** Fold a raw batch into a [[freqStateWindowed]]. */
-  def freqUpsertWindowed(state: DataFrame, batch: DataFrame,
-      key: String = "event_type", itemCol: String = "user_id",
-      maxMapSize: Int = 1024, dayCol: String = "day",
-      retainDays: Int = 30): DataFrame = {
-    val stateKeyed = state
-      .withColumn(WinKeyCol, concat_ws(WinSep,
-        col(key).cast("string"), col(dayCol).cast("string")))
-      .select(col(WinKeyCol), col("sketch"))
-    expireFold(splitWinKey(
-      mergeSketchFrames(stateKeyed.unionByName(
-        freqPartials(withWinKey(batch, key, dayCol), WinKeyCol, itemCol,
-          maxMapSize)), WinKeyCol, SketchMerges.freq(maxMapSize)),
-      key, dayCol), dayCol, retainDays)
-  }
-
-  /** Rolling read-time top-k view: counter-merge each key's day sketches
-    * over the last `lastNDays`, then [[freqTopItems]]'s deterministic
-    * ranking.
-    */
-  def freqWindowView(state: DataFrame, key: String = "event_type",
-      dayCol: String = "day", lastNDays: Int = 7, maxMapSize: Int = 1024,
-      k: Int = 5): DataFrame =
-    freqTopItems(mergeSketchFrames(
-      expireDays(state, dayCol, lastNDays).select(col(key), col("sketch")),
-      key, SketchMerges.freq(maxMapSize)), k)
-
-  /** Durable, replay-safe [[freqUpsertWindowed]] — the shared fence,
-    * meta-stamped.
-    */
-  def freqUpsertWindowedAt(s: SparkSession, path: String, batch: DataFrame,
-      batchId: Long, key: String = "event_type",
-      itemCol: String = "user_id", maxMapSize: Int = 1024,
-      dayCol: String = "day", retainDays: Int = 30): Unit =
-    durableFold(s, path, batchId, Seq("kind" -> "freq_windowed",
-      "key" -> key, "item_col" -> itemCol,
-      "max_map_size" -> maxMapSize.toString, "day_col" -> dayCol,
-      "retain_days" -> retainDays.toString))(
-      freqStateWindowed(batch, key, itemCol, maxMapSize, dayCol, retainDays),
-      st => freqUpsertWindowed(st, batch, key, itemCol, maxMapSize, dayCol,
-        retainDays))
-
-  /** Gate form: trailing-7-day top-5 users per event type from a
-    * 14-day-retention windowed state folded in four event_id-mod
-    * slices. ORACLE-EXACT at the gate SF: below the purge threshold
-    * every (type, day) counter is exact and the day merge adds exact
-    * counters, so the ranked view equals the oracle's windowed
-    * count-then-rank (ties broken by item string in both engines).
-    */
-  def trendingItemsWindowed(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
-      .withColumn("day", floor(tsSec(col("ts")) / lit(86400L)).cast(LongType))
-    val slices = (0L to 3L).map(i => e.filter(col("event_id") % 4 === i))
-    freqWindowView(
-      slices.tail.foldLeft(freqStateWindowed(slices.head, retainDays = 14))(
-        (st, b) => freqUpsertWindowed(st, b, retainDays = 14)))
+    val kind = StateKind.Windowed(StateKind.Sample(k = 8), retainDays = 14)
+    kind.view(foldAll(kind, mod4(withDay(Tables(s, dir).events), "event_id")),
+      lastNDays = 7)
       .orderBy(col("event_type"), col("rank"))
   }
 
@@ -2224,21 +1688,6 @@ object JsonEtl {
   }
 
   // ------------------------------------------- config-first state folds
-  /** The durable-state kinds [[foldConfig]] dispatches — the
-    * `_state_meta` kind vocabulary plus the materialized-join family
-    * (round 13): `join` routes [[joinUpsertAt]] (the document's input is
-    * the LEFT delta, the state block names the RIGHT delta via
-    * `right_input`), `join_left` routes [[joinUpsertLeftAt]] (right side
-    * seeded once at `path/right`). The join states have the trickiest
-    * crash-recovery protocol in the family — exactly where the
-    * stamp-fenced, all-blocks-prevalidated document discipline matters
-    * most.
-    */
-  private[graft] val FoldKinds: Set[String] = Set("agg", "agg_n",
-    "agg_windowed", "ewma", "distinct", "distinct_windowed", "quantile",
-    "quantile_windowed", "audience", "audience_windowed", "freq",
-    "freq_windowed", "sample", "sample_windowed", "join", "join_left")
-
   /** Config-driven nightly fold — the [[graft.etl.Pipeline.runConfig]] /
     * [[graft.ops.Maintenance.runConfig]] discipline for the durable state
     * family, so the nightly job is a JSON document, not code:
@@ -2264,22 +1713,28 @@ object JsonEtl {
     *
     * One batch read feeds EVERY state (the `derive` block adds computed
     * columns — e.g. the day bucket — as Spark SQL expressions, the
-    * Pipeline rule: no private mini-language). Parameter NAMES are the
-    * `_state_meta` stamp names, so a config document reads as the stamp
-    * it produces — and the stamp FENCE comes free: every fold routes
-    * through the `*At` entry points, so a document whose parameters (or
-    * kind) disagree with an existing state's stamp raises durableFold's
-    * named mismatch error before any plan is built. All state blocks are
-    * validated BEFORE any fold runs (a config typo must not leave the
+    * Pipeline rule: no private mini-language). A state block's `kind` is
+    * any [[StateKind]] registry name (each base kind and its `_windowed`
+    * form), and its other fields are that kind's `_state_meta` stamp
+    * names, parsed by the registry — so a document reads as the stamp it
+    * produces, and every fold routes through [[foldAt]], whose stamp
+    * fence raises on a document whose parameters (or kind) disagree with
+    * an existing state's stamp before any plan is built. All state blocks
+    * are validated BEFORE any fold runs (a config typo must not leave the
     * state set half-folded under one batch id); replayed ids are
     * per-state no-ops by the watermark fence, reported as
-    * `folded = false`. The join kinds follow the same discipline under
-    * THEIR protocol: the document's input is the left delta (`join`
-    * reads the right delta from the block's `right_input`; `join_left`
-    * joins the right side seeded at `path/right`), replay is fenced by
-    * the multi-dir batch marker, and the `_join_protocol` stamp raises
-    * on a document that routes an existing state through the other join
-    * form. Returns (state, kind, batch_id, folded).
+    * `folded = false`.
+    *
+    * Two more kinds route the materialized-join family under ITS
+    * protocol, outside the registry: `join` folds [[joinUpsertAt]] with
+    * the document's input as the LEFT delta and the block's
+    * `right_input` as the right delta; `join_left` folds
+    * [[joinUpsertLeftAt]] against the right side seeded once at
+    * `path/right`. Both take `keys` (required) and `broadcast_deltas`;
+    * replay is fenced by the multi-dir batch marker, and the
+    * `_join_protocol` stamp raises on a document that routes an existing
+    * state through the other join form. Returns (state, kind, batch_id,
+    * folded).
     */
   def foldConfig(s: SparkSession, configJson: String): DataFrame = {
     import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -2294,53 +1749,52 @@ object JsonEtl {
     val batchId = root.get("batchId").asLong
     // validate EVERY state block before any IO (a config typo must fail
     // with the named require, before any read and before any fold —
-    // nothing may be left half-folded under one batch id)
-    val states = root.get("states").elements().asScala.toSeq.map { st =>
+    // nothing may be left half-folded under one batch id). Each block
+    // yields its IO-checking step, which in turn yields its fold.
+    val blocks = root.get("states").elements().asScala.toSeq.map { st =>
       require(st.hasNonNull("kind") && st.hasNonNull("path"),
         "every state needs kind and path")
       val kind = st.get("kind").asText
-      require(FoldKinds.contains(kind),
-        s"unknown state kind '$kind' (expected one of " +
-          s"${FoldKinds.toSeq.sorted.mkString(", ")}): " +
-          st.get("path").asText)
-      // REQUIRED fields (the kinds whose entry points have no defaults)
-      // fail here too — mid-loop would leave earlier states folded
-      val required = kind match {
-        case "agg_n" | "agg_windowed" => Seq("keys", "value_cols")
-        case "join" => Seq("keys", "right_input")
-        case "join_left" => Seq("keys")
-        case _ => Nil
+      val path = st.get("path").asText
+      val name = optField(st, "name").map(_.asText).getOrElse(path)
+      def joinKeys = {
+        require(st.hasNonNull("keys"), s"$kind state at $path needs keys")
+        st.get("keys").asText.split(",").toSeq
       }
-      required.foreach(k => require(st.hasNonNull(k),
-        s"$kind state at ${st.get("path").asText} needs $k"))
-      if (kind == "join") require(st.get("right_input").hasNonNull("path"),
-        s"join state at ${st.get("path").asText} needs right_input.path")
-      st
-    }
-    // the join kinds' SECOND inputs validate with the blocks, before any
-    // fold — a typo'd right_input path or an unseeded join_left right
-    // side must fail the whole document up front, not after earlier
-    // states already folded under this batch id (the same
-    // nothing-half-folded contract the require loop above enforces).
-    // Loading eagerly resolves the schema, so an unreadable path throws
-    // HERE; the frames are reused by the dispatch below.
-    val rightInputs: Map[String, DataFrame] = states.collect {
-      case st if st.get("kind").asText == "join" =>
-        val ri = st.get("right_input")
-        val rFmt = optField(ri, "format").map(_.asText).getOrElse("parquet")
-        st.get("path").asText -> s.read.format(rFmt)
-          .load(ri.get("path").asText)
-    }.toMap
-    states.foreach { st =>
-      if (st.get("kind").asText == "join_left") {
-        val r = new org.apache.hadoop.fs.Path(
-          s"${st.get("path").asText}/right")
-        require(r.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .exists(r),
-          s"join_left state at ${st.get("path").asText} needs its right " +
-            "side seeded at <path>/right before the first fold")
+      val bc = optField(st, "broadcast_deltas").forall(_.asBoolean)
+      val prepare: () => DataFrame => Unit = kind match {
+        case "join" =>
+          val keys = joinKeys
+          require(st.hasNonNull("right_input") &&
+            st.get("right_input").hasNonNull("path"),
+            s"join state at $path needs right_input.path")
+          () => {
+            // the right delta loads (so an unreadable path throws) with
+            // the other blocks' checks, before any state folds
+            val ri = st.get("right_input")
+            val right = s.read
+              .format(optField(ri, "format").map(_.asText).getOrElse("parquet"))
+              .load(ri.get("path").asText)
+            batch => joinUpsertAt(s, path, batch, right, batchId, keys, bc)
+          }
+        case "join_left" =>
+          val keys = joinKeys
+          () => {
+            val r = new org.apache.hadoop.fs.Path(s"$path/right")
+            require(r.getFileSystem(s.sparkContext.hadoopConfiguration)
+                .exists(r),
+              s"join_left state at $path needs its right side seeded at " +
+                "<path>/right before the first fold")
+            batch => joinUpsertLeftAt(s, path, batch, batchId, keys, bc)
+          }
+        case _ =>
+          val sk = StateKind.parse(kind, path,
+            k => optField(st, k).map(_.asText))
+          () => batch => foldAt(s, path, batch, batchId, sk)
       }
+      (name, kind, path, prepare)
     }
+    val folds = blocks.map(_._4())
     val input = root.get("input")
     val format = optField(input, "format").map(_.asText).getOrElse("parquet")
     val batch0 = s.read.format(format).load(input.get("path").asText)
@@ -2348,85 +1802,16 @@ object JsonEtl {
       d.properties().asScala.foldLeft(batch0)((b, e) =>
         b.withColumn(e.getKey, expr(e.getValue.asText)))
     }.getOrElse(batch0)
-    val rows = states.map { st =>
-      val kind = st.get("kind").asText
-      val path = st.get("path").asText
-      val name = optField(st, "name").map(_.asText).getOrElse(path)
-      def str(k: String, dflt: String) =
-        optField(st, k).map(_.asText).getOrElse(dflt)
-      def keysOf(k: String, dflt: Seq[String]) =
-        optField(st, k).map(_.asText.split(",").toSeq).getOrElse(dflt)
-      def keysReq(k: String) = {
-        require(st.hasNonNull(k), s"$kind state '$name' needs $k")
-        st.get(k).asText.split(",").toSeq
-      }
-      def num(k: String, dflt: Int) =
-        optField(st, k).map(_.asInt).getOrElse(dflt)
-      // replay detection per protocol family: the sketch/agg states fence
-      // on the durable-fold watermark, the join states on the multi-dir
-      // batch marker — read BEFORE the fold so the report can say whether
-      // this call did work or replayed
-      val alreadyFolded = kind match {
-        case "join" | "join_left" =>
+    val rows = blocks.zip(folds).map { case ((name, kind, path, _), fold) =>
+      // replay detection per protocol: the registry states fence on the
+      // fold watermark, the join states on the multi-dir batch marker —
+      // read BEFORE the fold so the report says whether this call did
+      // work or replayed
+      val alreadyFolded =
+        if (kind.startsWith("join"))
           graft.streaming.Streams.isBatchCommitted(s, path, batchId)
-        case _ => aggFoldWatermark(s, path) >= batchId
-      }
-      kind match {
-        case "agg" => aggUpsertAt(s, path, batch, batchId,
-          keysOf("keys", Seq("user_id", "event_type")),
-          str("value_col", "value"))
-        case "agg_n" => aggUpsertAtN(s, path, batch, batchId,
-          keysReq("keys"), keysReq("value_cols"))
-        case "agg_windowed" => aggUpsertWindowedAt(s, path, batch, batchId,
-          keysReq("keys"), keysReq("value_cols"),
-          str("day_col", "day"), num("retain_days", 30))
-        case "ewma" => ewmaUpsertAt(s, path, batch, batchId,
-          keysOf("keys", Seq("user_id")), str("order_col", "event_id"),
-          str("value_col", "value"),
-          optField(st, "alpha").map(_.asDouble).getOrElse(0.5))
-        case "distinct" => distinctUpsertAt(s, path, batch, batchId,
-          keysOf("keys", Seq("event_type")), str("value_col", "user_id"),
-          num("lgk", 12))
-        case "distinct_windowed" => distinctUpsertWindowedAt(s, path, batch,
-          batchId, keysOf("keys", Seq("event_type")),
-          str("value_col", "user_id"), num("lgk", 12),
-          str("day_col", "day"), num("retain_days", 30))
-        case "quantile" => quantileUpsertAt(s, path, batch, batchId,
-          str("key", "event_type"), str("value_col", "value"), num("k", 200))
-        case "quantile_windowed" => quantileUpsertWindowedAt(s, path, batch,
-          batchId, str("key", "event_type"), str("value_col", "value"),
-          num("k", 200), str("day_col", "day"), num("retain_days", 30))
-        case "audience" => audienceUpsertAt(s, path, batch, batchId,
-          str("key", "event_type"), str("value_col", "user_id"),
-          num("lgk", 12))
-        case "audience_windowed" => audienceUpsertWindowedAt(s, path, batch,
-          batchId, str("key", "event_type"), str("value_col", "user_id"),
-          num("lgk", 12), str("day_col", "day"), num("retain_days", 30))
-        case "freq" => freqUpsertAt(s, path, batch, batchId,
-          str("key", "event_type"), str("item_col", "user_id"),
-          num("max_map_size", 1024))
-        case "freq_windowed" => freqUpsertWindowedAt(s, path, batch, batchId,
-          str("key", "event_type"), str("item_col", "user_id"),
-          num("max_map_size", 1024), str("day_col", "day"),
-          num("retain_days", 30))
-        case "sample" => sampleUpsertAt(s, path, batch, batchId,
-          keysOf("keys", Seq("event_type")), str("value_col", "user_id"),
-          num("k", 64), str("seed", "bk0"))
-        case "sample_windowed" => sampleUpsertWindowedAt(s, path, batch,
-          batchId, keysOf("keys", Seq("event_type")),
-          str("value_col", "user_id"), num("k", 64), str("seed", "bk0"),
-          str("day_col", "day"), num("retain_days", 30))
-        case "join" =>
-          // the document's input is the LEFT delta; the right delta is
-          // the block's own input ref — loaded (and so validated) with
-          // the blocks above, before any state folded
-          joinUpsertAt(s, path, batch, rightInputs(path), batchId,
-            keysReq("keys"),
-            optField(st, "broadcast_deltas").forall(_.asBoolean))
-        case "join_left" =>
-          joinUpsertLeftAt(s, path, batch, batchId, keysReq("keys"),
-            optField(st, "broadcast_deltas").forall(_.asBoolean))
-      }
+        else aggFoldWatermark(s, path) >= batchId
+      fold(batch)
       (name, kind, batchId, !alreadyFolded)
     }
     import s.implicits._
@@ -2840,29 +2225,4 @@ object JsonEtl {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY window_start, event_type
         |ORDER BY window_start, event_type""".stripMargin)
-}
-
-/** The byte-level sketch merges behind [[JsonEtl.audienceUpsert]] and
-  * [[JsonEtl.freqUpsert]] — a separate Serializable holder because the
-  * merge lambdas ship inside Spark task closures (capturing the JsonEtl
-  * module itself would make every fold's task serialization fail).
-  */
-private[graft] object SketchMerges extends Serializable {
-  def theta(lgK: Int): Iterator[Array[Byte]] => Array[Byte] = { parts =>
-    import org.apache.datasketches.theta.{SetOperation, Sketches}
-    val u = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-    parts.foreach(p => u.union(Sketches.wrapSketch(
-      org.apache.datasketches.memory.Memory.wrap(p))))
-    u.getResult.toByteArray
-  }
-
-  def freq(maxMapSize: Int): Iterator[Array[Byte]] => Array[Byte] = { parts =>
-    import org.apache.datasketches.frequencies.ItemsSketch
-    import org.apache.datasketches.common.ArrayOfStringsSerDe
-    val serde = new ArrayOfStringsSerDe()
-    val merged = new ItemsSketch[String](maxMapSize)
-    parts.foreach(p => merged.merge(ItemsSketch.getInstance(
-      org.apache.datasketches.memory.Memory.wrap(p), serde)))
-    merged.toByteArray(serde)
-  }
 }

@@ -363,7 +363,7 @@ object Fsck {
 
   // ------------------------------------------------------------ agg state
   /** The durable incremental-aggregate state
-    * ([[graft.etl.JsonEtl.aggUpsertAt]]) — the one artifact whose replay
+    * ([[graft.etl.JsonEtl.foldAt]]) — the one artifact whose replay
     * protection lives INSIDE it (the atomically-swapped fold watermark),
     * so the checks are about that: a state without a watermark cannot
     * fence replays (every re-delivered batch would double-count); a
@@ -414,8 +414,8 @@ object Fsck {
         "duplicate key rows — a corrupted merge; reads double-count NOW"),
       if (hasWm) ok("watermark_present")
       else Check("watermark_present", "warn", 1L,
-        "no fold watermark — replays cannot be fenced (not an " +
-          "aggUpsertAt artifact, or the stamp was deleted)"),
+        "no fold watermark — replays cannot be fenced (not a " +
+          "durable fold's artifact, or the stamp was deleted)"),
       warnIf("parked_generation",
         if (exists(s, s"$path.old")) 1L else 0L,
         "a crashed swap's parked generation — the next fold restores it"),
@@ -425,29 +425,20 @@ object Fsck {
   }
 
   // ------------------------------------------------------------ state dir
-  /** The durable-fold state kinds [[graft.etl.JsonEtl]] stamps — the
-    * dispatch table for [[fsckStateDir]]'s kind check (an unknown kind
-    * means a version skew or a hand edit: no fold can safely touch the
-    * state).
-    */
-  private val StateKinds = Set("agg", "agg_n", "agg_windowed", "ewma",
-    "distinct", "distinct_windowed", "quantile", "quantile_windowed",
-    "audience", "audience_windowed", "freq", "freq_windowed", "sample",
-    "sample_windowed")
-
   /** The generalized durable-state validator — [[fsckAggState]]'s
-    * discipline extended to EVERY `durableFold` family (additive,
-    * windowed, ewma, and the four sketch algebras), now that states are
-    * self-describing (`_state_meta`): watermark present AND parsable (an
-    * unparsable watermark reads as "no fence" and every replay would
-    * double-fold), meta present with a kind the fold dispatch knows, no
-    * parked `.old` generation, one row per key — key columns inferred
-    * from the shared state-algebra naming contract (everything except
-    * the declared stat/sketch columns: `n_events`/`n_rows`/`sketch`/
-    * `ewma` and the sum_/sumsq_/min_/max_/last_ prefixes), which covers
-    * all ten kinds because day columns and composite keys are key
-    * components by construction. Cost: one key-count-sized aggregation
-    * over the state plus driver-side file probes — audit tier.
+    * discipline extended to EVERY [[graft.etl.StateKind]], now that
+    * states are self-describing (`_state_meta`): watermark present AND
+    * parsable (an unparsable watermark reads as "no fence" and every
+    * replay would double-fold), meta present with a kind the registry
+    * knows (an unknown kind means a version skew or a hand edit: no fold
+    * can safely touch the state), no parked `.old` generation, one row
+    * per key — the key columns being the stamped kind's
+    * [[graft.etl.StateKind.rowKey]] (day columns of windowed forms and the
+    * sample's rank included); a state whose stamp does not parse falls
+    * back to inferring them from column names ([[inferredRowKey]]), since
+    * those are the states where the check matters most. Cost: one
+    * key-count-sized aggregation over the state plus driver-side file
+    * probes — audit tier.
     */
   def fsckStateDir(s: SparkSession, path: String): DataFrame = {
     if (!hasParquet(s, path)) {
@@ -470,8 +461,8 @@ object Fsck {
     // garbage, which here must become the check's own fail row
     if (!exists(s, s"$path/_fold_watermark"))
       checks += Check("watermark_present", "warn", 1L,
-        "no fold watermark — replays cannot be fenced (not a durableFold " +
-          "artifact, or the stamp was deleted)")
+        "no fold watermark — replays cannot be fenced (not a durable " +
+          "fold's artifact, or the stamp was deleted)")
     else {
       checks += ok("watermark_present")
       checks += (try {
@@ -497,24 +488,15 @@ object Fsck {
       case Right(m) =>
         checks += ok("meta_readable")
         checks += failIf("meta_kind_known",
-          if (m.get("kind").exists(StateKinds)) 0L else 1L,
+          if (m.get("kind").exists(graft.etl.StateKind.names)) 0L else 1L,
           s"stamped kind '${m.getOrElse("kind", "<absent>")}' is not a " +
             "durable-fold family — version skew or hand edit")
     }
     val state = s.read.parquet(path)
-    // the sample family's schema is keys ++ (rank, h, value): its unit of
-    // uniqueness is (keys..., rank) — one reservoir slot per rank. Naive
-    // inference would treat h/value as key components too, and a corrupted
-    // merge producing two rows with the same (key, rank) but different
-    // values would pass. The stamped kind is already in hand — use it.
-    val sampleKind = meta.toOption.flatMap(_.get("kind"))
-      .exists(k => k == "sample" || k == "sample_windowed")
-    val keyCols = state.columns.filterNot(c =>
-      Set("n_events", "n_rows", "sketch", "ewma").contains(c) ||
-        (sampleKind && (c == "h" || c == "value")) ||
-        c.startsWith("sum_") || c.startsWith("sumsq_") ||
-        c.startsWith("min_") || c.startsWith("max_") ||
-        c.startsWith("last_")).toSeq
+    val stamped = meta.toOption.getOrElse(Map.empty[String, String])
+    val keyCols = scala.util.Try(
+      graft.etl.StateKind.fromStamp(stamped, path).rowKey)
+      .getOrElse(inferredRowKey(state.columns.toSeq, stamped.get("kind")))
     checks += failIf("one_row_per_key",
       if (keyCols.isEmpty) 0L
       else state.groupBy(keyCols.map(col): _*)
@@ -527,6 +509,26 @@ object Fsck {
       stagingLeftovers(s, Seq(s"$path.staging", s"$path.compacting")),
       "crashed fold staging dirs present")
     toDf(s, path, "state_dir", checks.toSeq)
+  }
+
+  /** The key columns of a state whose stamp does not parse (pre-meta,
+    * deleted or tampered): every column but the stat and sketch columns
+    * the kinds share (`n_events`/`n_rows`/`sketch`/`ewma` and the
+    * sum_/sumsq_/min_/max_/last_ prefixes), and not a sample's `h`/`value`
+    * when the stamp still names a sample — its unit of uniqueness is
+    * (keys..., rank).
+    */
+  private def inferredRowKey(columns: Seq[String],
+      kind: Option[String]): Seq[String] = {
+    val sample = graft.etl.StateKind.Sample
+    val sampleKind = kind.exists(k =>
+      k == sample.name || sample.windowed.contains(k))
+    columns.filterNot(c =>
+      Set("n_events", "n_rows", "sketch", "ewma").contains(c) ||
+        (sampleKind && (c == "h" || c == "value")) ||
+        c.startsWith("sum_") || c.startsWith("sumsq_") ||
+        c.startsWith("min_") || c.startsWith("max_") ||
+        c.startsWith("last_"))
   }
 
   // ------------------------------------------------------------ shard export
@@ -880,7 +882,7 @@ object Fsck {
 
   /** Fsck validates five kinds beyond [[Maintenance.Kinds]]: the durable
     * aggregate state (and its generalized `state_dir` sibling covering
-    * every durableFold family), the shard export, the PSI baseline and
+    * every registered state kind), the shard export, the PSI baseline and
     * the join view have no standing maintenance action of their own
     * (each fold/export/stamp rewrites wholesale or appends under the
     * marker protocol — a join view's dirs compact as three `sink_dir`

@@ -415,20 +415,16 @@ object Maintenance {
       }
       // durable aggregate state: two watermark-fenced folds
       val ev = Tables(s, dir).events
-      graft.etl.JsonEtl.aggUpsertAt(s, s"$base/agg",
-        ev.filter(col("event_id") % 2 === 0), 0L)
-      graft.etl.JsonEtl.aggUpsertAt(s, s"$base/agg",
-        ev.filter(col("event_id") % 2 === 1), 1L)
+      Seq(0L, 1L).foreach(b => graft.etl.JsonEtl.foldAt(s, s"$base/agg",
+        ev.filter(col("event_id") % 2 === b), b, graft.etl.StateKind.Agg()))
       // durable sketch states (meta-stamped): one per mergeable algebra
       // the generalized state_dir fsck audits — quantile and audience
-      graft.etl.JsonEtl.quantileUpsertAt(s, s"$base/qstate",
-        ev.filter(col("event_id") % 2 === 0), 0L)
-      graft.etl.JsonEtl.quantileUpsertAt(s, s"$base/qstate",
-        ev.filter(col("event_id") % 2 === 1), 1L)
-      graft.etl.JsonEtl.audienceUpsertAt(s, s"$base/astate",
-        ev.filter(col("event_id") % 2 === 0), 0L)
-      graft.etl.JsonEtl.audienceUpsertAt(s, s"$base/astate",
-        ev.filter(col("event_id") % 2 === 1), 1L)
+      Seq("qstate" -> graft.etl.StateKind.Quantile(),
+          "astate" -> graft.etl.StateKind.Audience()).foreach {
+        case (dirName, kind) => Seq(0L, 1L).foreach(b =>
+          graft.etl.JsonEtl.foldAt(s, s"$base/$dirName",
+            ev.filter(col("event_id") % 2 === b), b, kind))
+      }
       // training handoff: one staged shard export with its manifest
       graft.ops.TextAnalysis.exportShards(docs, s"$base/export",
         numShards = 4)

@@ -133,46 +133,14 @@ object Profile {
     * high-cardinality (per-user latency sketches) without an OOM hazard —
     * the hll_union_agg discipline the HLL sibling gets natively.
     *
-    * Output: (group, sketch bytes, n_rows) — save as parquet, reload,
-    * [[valueSketchRollup]] any subset without touching the source table.
+    * Output: (group, sketch bytes, n_rows), ordered by group — the
+    * [[graft.etl.JsonEtl.quantileState]] artifact with the group cast to
+    * string. Save as parquet, reload, [[valueSketchRollup]] any subset
+    * without touching the source table.
     */
   def valueSketches(df: DataFrame, by: String, valueCol: String,
-      k: Int = 200): DataFrame = {
-    import org.apache.datasketches.kll.KllDoublesSketch
-    import org.apache.datasketches.memory.Memory
-    val s2 = df.sparkSession
-    import s2.implicits._
-    df
-      .select(col(by).cast("string").as("g"), col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .as[(String, Double)]
-      .mapPartitions { it =>
-        val sk = scala.collection.mutable.Map[String, KllDoublesSketch]()
-        val n = scala.collection.mutable.Map[String, Long]()
-        it.foreach { case (g, v) =>
-          sk.getOrElseUpdate(g, KllDoublesSketch.newHeapInstance(k)).update(v)
-          n.update(g, n.getOrElse(g, 0L) + 1)
-        }
-        sk.iterator.map { case (g, s) => (g, s.toByteArray, n(g)) }
-      }
-      // the distributed merge: partials shuffle by group (each a few KB —
-      // the exchange carries sketch bytes, never source rows), then fold
-      // into one sketch per group. KLL merge is associative/commutative up
-      // to its randomized-compaction guarantees, which is the accuracy
-      // contract the rows-only gate + envelope spec pin.
-      .groupByKey(_._1)
-      .mapGroups { (g, parts) =>
-        val merged = KllDoublesSketch.newHeapInstance(k)
-        var n = 0L
-        parts.foreach { p =>
-          merged.merge(KllDoublesSketch.heapify(Memory.wrap(p._2)))
-          n += p._3
-        }
-        (g, merged.toByteArray, n)
-      }
-      .toDF(by, "sketch", "n_rows")
-      .orderBy(col(by))
-  }
+      k: Int = 200): DataFrame =
+    graft.etl.JsonEtl.quantileState(df, by, valueCol, k)
 
   def saveValueSketches(df: DataFrame, path: String, by: String,
       valueCol: String, k: Int = 200): Unit =

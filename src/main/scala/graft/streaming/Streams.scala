@@ -984,30 +984,37 @@ object Streams extends Serializable {
         finally { cached.unpersist(); () }
     }
 
-  /** Streaming incremental aggregation — pyetl's rolling keyed aggregate
-    * kept live by the stream itself: each micro-batch folds into the
-    * persisted [[graft.etl.JsonEtl.aggState]] table via
-    * [[graft.etl.JsonEtl.aggUpsertAt]]. Unlike the index ingest sinks
-    * (content-derived rows, replay-duplicates compact away), an aggregate
-    * fold is NOT idempotent — so this sink leans on the state's own
+  /** Streaming incremental state — pyetl's rolling keyed states kept live
+    * by the stream itself: each micro-batch folds into the persisted
+    * state of `kind` (any [[graft.etl.StateKind]], windowed forms
+    * included) via [[graft.etl.JsonEtl.foldAt]]. Unlike the index ingest
+    * sinks (content-derived rows, replay-duplicates compact away), a
+    * state fold is NOT idempotent — so this sink leans on the state's own
     * atomically-swapped fold watermark instead of marker files: a
     * replayed micro-batch is a no-op, a crash mid-swap restores the
     * parked generation, and after N batches the state is EXACTLY the
-    * one-shot aggregate over everything delivered (spec-pinned). Per
-    * batch: one batch-sized agg + one state-sized merge — history is
-    * never rescanned. Checkpoint-lineage rule: resetting `checkpoint`
-    * restarts batch ids at 0, which the fence reads as replays — point
-    * a restarted stream at a fresh `statePath` too (see
-    * [[graft.etl.JsonEtl.aggUpsertAt]]'s fence note).
+    * fold of everything delivered (spec-pinned per kind). Per batch: one
+    * batch-sized build + one state-sized merge — history is never
+    * rescanned. Checkpoint-lineage rule: resetting `checkpoint` restarts
+    * batch ids at 0, which the fence reads as replays — point a
+    * restarted stream at a fresh `statePath` too (see
+    * [[graft.etl.JsonEtl.foldAt]]'s fence note).
     */
+  def stateIngestSink(events: DataFrame, statePath: String,
+      checkpoint: String,
+      kind: graft.etl.StateKind): org.apache.spark.sql.streaming.StreamingQuery =
+    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
+        graft.etl.JsonEtl.foldAt(batch.sparkSession, statePath, batch,
+          batchId, kind)
+    }
+
+  /** [[stateIngestSink]] for the additive aggregate state. */
   def aggIngestSink(events: DataFrame, statePath: String,
       checkpoint: String,
       keys: Seq[String] = Seq("user_id", "event_type"),
       valueCol: String = "value"): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.aggUpsertAt(batch.sparkSession, statePath, batch,
-          batchId, keys, valueCol)
-    }
+    stateIngestSink(events, statePath, checkpoint,
+      graft.etl.StateKind.Agg(keys, valueCol))
 
   /** Seed the dimension side of a streaming join view — the one-time
     * load before [[joinIngestSink]] starts (the star-schema shape: facts
@@ -1037,166 +1044,6 @@ object Streams extends Serializable {
     batchSink(facts, checkpoint) { (batch: DataFrame, batchId: Long) =>
         graft.etl.JsonEtl.joinUpsertLeftAt(batch.sparkSession, root, batch,
           batchId, keys)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.aggUpsertWindowedAt]]: the
-    * day-windowed additive state folded per micro-batch under the
-    * durable fold watermark — the rolling-dashboard state whose size
-    * stays bounded by keys × retention FOREVER (the grow-only
-    * [[aggIngestSink]]'s retention-disciplined sibling). Same
-    * checkpoint-lineage rule.
-    */
-  def windowedAggIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, keys: Seq[String], valueCols: Seq[String],
-      dayCol: String = "day",
-      retainDays: Int = 30): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.aggUpsertWindowedAt(batch.sparkSession, statePath,
-          batch, batchId, keys, valueCols, dayCol, retainDays)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.quantileUpsertAt]]: per-key
-    * KLL quantile state folded per micro-batch under the durable fold
-    * watermark — the live "p99 per segment" dashboard state. Same
-    * checkpoint-lineage rule as [[aggIngestSink]].
-    */
-  def quantileIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, key: String = "event_type",
-      valueCol: String = "value"): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.quantileUpsertAt(batch.sparkSession, statePath,
-          batch, batchId, key, valueCol)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.audienceUpsertAt]]: per-key
-    * Theta set-sketch state folded per micro-batch under the durable
-    * fold watermark — the live audience-overlap matrix (intersections
-    * and differences, the algebra HLL cannot serve). Same
-    * checkpoint-lineage rule as [[aggIngestSink]].
-    */
-  def audienceIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, key: String = "event_type",
-      valueCol: String = "user_id"): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.audienceUpsertAt(batch.sparkSession, statePath,
-          batch, batchId, key, valueCol)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.freqUpsertAt]]: per-key
-    * Misra–Gries frequent-items state folded per micro-batch under the
-    * durable fold watermark — the live "trending items per segment"
-    * dashboard from bounded state. Same checkpoint-lineage rule as
-    * [[aggIngestSink]].
-    */
-  def freqIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, key: String = "event_type",
-      itemCol: String = "user_id"): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.freqUpsertAt(batch.sparkSession, statePath,
-          batch, batchId, key, itemCol)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.distinctUpsertAt]]: per-key
-    * HLL distinct-count state folded per micro-batch under the durable
-    * watermark fence — the live "distinct users per segment" dashboard
-    * state, maintained without ever rescanning history or keeping
-    * per-key exact sets. Same checkpoint-lineage rule as
-    * [[aggIngestSink]].
-    */
-  def distinctIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, keys: Seq[String] = Seq("event_type"),
-      valueCol: String = "user_id"): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.distinctUpsertAt(batch.sparkSession, statePath,
-          batch, batchId, keys, valueCol)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.sampleUpsertAt]]: per-key
-    * deterministic bottom-k sample folded per micro-batch under the
-    * durable watermark fence — live "k example values per segment"
-    * from k-bounded state, reproducible across restarts (the hash
-    * order, not RNG state, decides membership). Same checkpoint-lineage
-    * rule as [[aggIngestSink]].
-    */
-  def sampleIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, keys: Seq[String] = Seq("event_type"),
-      valueCol: String = "user_id", k: Int = 64,
-      seed: String = "bk0"): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.sampleUpsertAt(batch.sparkSession, statePath,
-          batch, batchId, keys, valueCol, k, seed)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.sampleUpsertWindowedAt]] —
-    * the windowed sample under the same fence and retention.
-    */
-  def windowedSampleIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, keys: Seq[String] = Seq("event_type"),
-      valueCol: String = "user_id", k: Int = 64, seed: String = "bk0",
-      dayCol: String = "day",
-      retainDays: Int = 30): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.sampleUpsertWindowedAt(batch.sparkSession,
-          statePath, batch, batchId, keys, valueCol, k, seed, dayCol,
-          retainDays)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.quantileUpsertWindowedAt]] —
-    * the live trailing-window percentile dashboard state.
-    */
-  def windowedQuantileIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, key: String = "event_type",
-      valueCol: String = "value", k: Int = 200, dayCol: String = "day",
-      retainDays: Int = 30): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.quantileUpsertWindowedAt(batch.sparkSession,
-          statePath, batch, batchId, key, valueCol, k, dayCol, retainDays)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.freqUpsertWindowedAt]] — the
-    * live trailing-window trending-items state.
-    */
-  def windowedFreqIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, key: String = "event_type",
-      itemCol: String = "user_id", maxMapSize: Int = 1024,
-      dayCol: String = "day",
-      retainDays: Int = 30): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.freqUpsertWindowedAt(batch.sparkSession,
-          statePath, batch, batchId, key, itemCol, maxMapSize, dayCol,
-          retainDays)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.distinctUpsertWindowedAt]]:
-    * the day-windowed distinct state folded per micro-batch — the live
-    * "trailing-30-day distinct users" dashboard from retention-bounded
-    * state ([[windowedAggIngestSink]]'s sketch sibling). Same
-    * checkpoint-lineage rule as [[aggIngestSink]].
-    */
-  def windowedDistinctIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, keys: Seq[String] = Seq("event_type"),
-      valueCol: String = "user_id", dayCol: String = "day",
-      retainDays: Int = 30): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.distinctUpsertWindowedAt(batch.sparkSession,
-          statePath, batch, batchId, keys, valueCol, dayCol = dayCol,
-          retainDays = retainDays)
-    }
-
-  /** Streaming twin of [[graft.etl.JsonEtl.audienceUpsertWindowedAt]]:
-    * the day-windowed theta set state folded per micro-batch — the live
-    * trailing-window audience-overlap matrix from retention-bounded
-    * per-day sketches. Same checkpoint-lineage rule as
-    * [[aggIngestSink]].
-    */
-  def windowedAudienceIngestSink(events: DataFrame, statePath: String,
-      checkpoint: String, key: String = "event_type",
-      valueCol: String = "user_id", dayCol: String = "day",
-      retainDays: Int = 30): org.apache.spark.sql.streaming.StreamingQuery =
-    batchSink(events, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        graft.etl.JsonEtl.audienceUpsertWindowedAt(batch.sparkSession,
-          statePath, batch, batchId, key, valueCol, dayCol = dayCol,
-          retainDays = retainDays)
     }
 
   /** Continuous DATA-drift monitoring — the streaming twin of

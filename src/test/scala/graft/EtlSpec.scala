@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.etl.{JsonEtl, Sinks}
 import java.nio.file.Files
+import graft.etl.StateKind._
 
 class EtlSpec extends SparkSpec {
 
@@ -58,18 +59,18 @@ class EtlSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
     val direct = s"$base/direct"
-    JsonEtl.aggUpsertAt(spark, s"$direct/agg", slices(0), 0L,
-      Seq("event_type"), "value")
-    JsonEtl.aggUpsertAt(spark, s"$direct/agg", slices(1), 1L,
-      Seq("event_type"), "value")
+    JsonEtl.foldAt(spark, s"$direct/agg", slices(0), 0L,
+      Agg(Seq("event_type"), "value"))
+    JsonEtl.foldAt(spark, s"$direct/agg", slices(1), 1L,
+      Agg(Seq("event_type"), "value"))
     assert(key(spark.read.parquet(s"$base/agg"))
       === key(spark.read.parquet(s"$direct/agg")))
     val withDay = (b: org.apache.spark.sql.DataFrame) => b.withColumn("day",
       expr("CAST(ts DIV 1000000000 DIV 86400 AS BIGINT)"))
-    JsonEtl.sampleUpsertWindowedAt(spark, s"$direct/smp", withDay(slices(0)),
-      0L, Seq("event_type"), "user_id", k = 8, retainDays = 14)
-    JsonEtl.sampleUpsertWindowedAt(spark, s"$direct/smp", withDay(slices(1)),
-      1L, Seq("event_type"), "user_id", k = 8, retainDays = 14)
+    JsonEtl.foldAt(spark, s"$direct/smp", withDay(slices(0)), 0L,
+      Windowed(Sample(Seq("event_type"), "user_id", 8), retainDays = 14))
+    JsonEtl.foldAt(spark, s"$direct/smp", withDay(slices(1)), 1L,
+      Windowed(Sample(Seq("event_type"), "user_id", 8), retainDays = 14))
     assert(key(spark.read.parquet(s"$base/smp"))
       === key(spark.read.parquet(s"$direct/smp")))
     // a replayed document is a per-state no-op, reported as folded=false
@@ -210,12 +211,12 @@ class EtlSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("user_id"), col("event_type")).collect().toSeq
     val slices = (0L to 3L).map(i => events.filter(col("event_id") % 4 === i))
-    JsonEtl.aggUpsertAt(spark, path, slices(0), 0L)
-    JsonEtl.aggUpsertAt(spark, path, slices(1), 1L)
+    JsonEtl.foldAt(spark, path, slices(0), 0L, Agg())
+    JsonEtl.foldAt(spark, path, slices(1), 1L, Agg())
     // a replayed batch must NOT double-count — the non-idempotent-fold
     // hazard the state's own watermark exists to close
-    JsonEtl.aggUpsertAt(spark, path, slices(1), 1L)
-    JsonEtl.aggUpsertAt(spark, path, slices(0), 0L)
+    JsonEtl.foldAt(spark, path, slices(1), 1L, Agg())
+    JsonEtl.foldAt(spark, path, slices(0), 0L, Agg())
     assert(JsonEtl.aggFoldWatermark(spark, path) === 1L)
     val twoIn = events.filter(col("event_id") % 4 <= 1)
     assert(key(spark.read.parquet(path)) === key(JsonEtl.aggState(twoIn)))
@@ -225,8 +226,8 @@ class EtlSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(path),
       new org.apache.hadoop.fs.Path(path + ".old")))
-    JsonEtl.aggUpsertAt(spark, path, slices(2), 2L)
-    JsonEtl.aggUpsertAt(spark, path, slices(3), 3L)
+    JsonEtl.foldAt(spark, path, slices(2), 2L, Agg())
+    JsonEtl.foldAt(spark, path, slices(3), 3L, Agg())
     assert(key(spark.read.parquet(path)) === key(JsonEtl.aggState(events)))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".old")))
   }
@@ -277,14 +278,13 @@ class EtlSpec extends SparkSpec {
     // durable: replay fenced, meta stamped, mismatched seed raises
     val path = Files.createTempDirectory("graft_bk").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.sampleUpsertAt(spark, path, b, i.toLong, k = 8) }
-    JsonEtl.sampleUpsertAt(spark, path, slices(2), 2L, k = 8) // replay
+      JsonEtl.foldAt(spark, path, b, i.toLong, Sample(k = 8)) }
+    JsonEtl.foldAt(spark, path, slices(2), 2L, Sample(k = 8)) // replay
     assert(key(spark.read.parquet(path)) === key(oneShot))
     assert(JsonEtl.stateMeta(spark, path)("kind") === "sample")
     assert(JsonEtl.stateMeta(spark, path)("k") === "8")
     val e = intercept[IllegalArgumentException](
-      JsonEtl.sampleUpsertAt(spark, path, slices(0), 9L, k = 8,
-        seed = "bk1"))
+      JsonEtl.foldAt(spark, path, slices(0), 9L, Sample(k = 8, seed = "bk1")))
     assert(e.getMessage.contains("different parameters"))
   }
 
@@ -295,35 +295,35 @@ class EtlSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("event_type"), col("day"), col("rank")).collect().toSeq
     val folded = slices.tail.foldLeft(
-      JsonEtl.sampleStateWindowed(slices.head, k = 8, retainDays = 14))(
-      (st, b) => JsonEtl.sampleUpsertWindowed(st, b, k = 8, retainDays = 14))
-    val oneShot = JsonEtl.sampleStateWindowed(events, k = 8, retainDays = 14)
+      Windowed(Sample(k = 8), retainDays = 14).state(slices.head))(
+      (st, b) => Windowed(Sample(k = 8), retainDays = 14).fold(st, b))
+    val oneShot = Windowed(Sample(k = 8), retainDays = 14).state(events)
     assert(key(folded) === key(oneShot))
     assert(folded.select(col("day")).distinct().count() <= 14L)
     // stale-beyond-horizon batch is a no-op
     val horizon = events.agg(max(col("day"))).head.getLong(0) - 14
     val stale = events.filter(col("day") <= horizon - 2)
     assert(stale.count() > 0)
-    assert(key(JsonEtl.sampleUpsertWindowed(folded, stale, k = 8,
-      retainDays = 14)) === key(oneShot))
+    assert(key(Windowed(Sample(k = 8), retainDays = 14).fold(folded,
+      stale)) === key(oneShot))
     // the view's re-truncation IS the window's exact bottom-k (the
     // windowed-member argument): compare against a direct one-shot
     // bottom-k over only the trailing 7 days
     def vkey(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("event_type"), col("rank")).collect().toSeq
-    assert(vkey(JsonEtl.sampleWindowView(folded, lastNDays = 7, k = 8))
+    assert(vkey(Windowed(Sample(k = 8)).view(folded, 7))
       === vkey(JsonEtl.sampleState(
         events.filter(col("day") > horizon + 7), k = 8)))
     // durable: meta stamped, mismatched retention raises
     val path = Files.createTempDirectory("graft_wbk").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.sampleUpsertWindowedAt(spark, path, b, i.toLong, k = 8,
-        retainDays = 14) }
+      JsonEtl.foldAt(spark, path, b, i.toLong,
+        Windowed(Sample(k = 8), retainDays = 14)) }
     assert(key(spark.read.parquet(path)) === key(oneShot))
     assert(JsonEtl.stateMeta(spark, path)("kind") === "sample_windowed")
     val e2 = intercept[IllegalArgumentException](
-      JsonEtl.sampleUpsertWindowedAt(spark, path, slices(0), 9L, k = 8,
-        retainDays = 30))
+      JsonEtl.foldAt(spark, path, slices(0), 9L,
+        Windowed(Sample(k = 8), retainDays = 30)))
     assert(e2.getMessage.contains("different parameters"))
   }
 
@@ -332,8 +332,8 @@ class EtlSpec extends SparkSpec {
       .withColumn("day", floor(col("ts") / 1000000000L / 86400L))
     val slices = (0L to 3L).map(i => events.filter(col("event_id") % 4 === i))
     val folded = slices.tail.foldLeft(
-      JsonEtl.quantileStateWindowed(slices.head, retainDays = 14))(
-      (st, b) => JsonEtl.quantileUpsertWindowed(st, b, retainDays = 14))
+      Windowed(Quantile(), retainDays = 14).state(slices.head))(
+      (st, b) => Windowed(Quantile(), retainDays = 14).fold(st, b))
     assert(folded.select(col("day")).distinct().count() <= 14L)
     val horizon = events.agg(max(col("day"))).head.getLong(0) - 14
     // n_rows is additive-exact: the folded counts equal the windowed
@@ -348,13 +348,13 @@ class EtlSpec extends SparkSpec {
     // stale-beyond-horizon no-op on the deterministic half
     val stale = events.filter(col("day") <= horizon - 2)
     assert(stale.count() > 0)
-    assert(JsonEtl.quantileUpsertWindowed(folded, stale, retainDays = 14)
+    assert(Windowed(Quantile(), retainDays = 14).fold(folded, stale)
       .select(col("event_type"), col("day"), col("n_rows"))
       .orderBy(col("event_type"), col("day")).collect().toSeq === nExact)
     // view: trailing-7-day estimates inside the KLL rank-error envelope
     // of the window's exact order statistics (4% true-rank slack)
     val win = events.filter(col("day") > horizon + 7)
-    val view = JsonEtl.quantileWindowView(folded, lastNDays = 7).collect()
+    val view = Windowed(Quantile()).view(folded, 7).collect()
       .map(r => r.getString(0) ->
         (r.getAs[Long]("n_rows"), r.getAs[Double]("p50"),
           r.getAs[Double]("p99"))).toMap
@@ -370,15 +370,15 @@ class EtlSpec extends SparkSpec {
     // durable: meta stamped, mismatched k raises
     val path = Files.createTempDirectory("graft_wq").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.quantileUpsertWindowedAt(spark, path, b, i.toLong,
-        retainDays = 14) }
+      JsonEtl.foldAt(spark, path, b, i.toLong,
+        Windowed(Quantile(), retainDays = 14)) }
     assert(JsonEtl.stateMeta(spark, path)("kind") === "quantile_windowed")
     assert(spark.read.parquet(path)
       .select(col("event_type"), col("day"), col("n_rows"))
       .orderBy(col("event_type"), col("day")).collect().toSeq === nExact)
     val e2 = intercept[IllegalArgumentException](
-      JsonEtl.quantileUpsertWindowedAt(spark, path, slices(0), 9L, k = 100,
-        retainDays = 14))
+      JsonEtl.foldAt(spark, path, slices(0), 9L,
+        Windowed(Quantile(k = 100), retainDays = 14)))
     assert(e2.getMessage.contains("different parameters"))
   }
 
@@ -389,21 +389,21 @@ class EtlSpec extends SparkSpec {
     def vkey(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("event_type"), col("rank")).collect().toSeq
     val folded = slices.tail.foldLeft(
-      JsonEtl.freqStateWindowed(slices.head, retainDays = 14))(
-      (st, b) => JsonEtl.freqUpsertWindowed(st, b, retainDays = 14))
+      Windowed(Freq(), retainDays = 14).state(slices.head))(
+      (st, b) => Windowed(Freq(), retainDays = 14).fold(st, b))
     assert(folded.select(col("day")).distinct().count() <= 14L)
     // fold ≡ one-shot windowed recompute through the ranked view (exact
     // regime: counters never purge at this cardinality)
-    val oneShot = JsonEtl.freqStateWindowed(events, retainDays = 14)
-    assert(vkey(JsonEtl.freqWindowView(folded))
-      === vkey(JsonEtl.freqWindowView(oneShot)))
+    val oneShot = Windowed(Freq(), retainDays = 14).state(events)
+    assert(vkey(Windowed(Freq()).view(folded))
+      === vkey(Windowed(Freq()).view(oneShot)))
     // stale-beyond-horizon no-op
     val horizon = events.agg(max(col("day"))).head.getLong(0) - 14
     val stale = events.filter(col("day") <= horizon - 2)
     assert(stale.count() > 0)
-    assert(vkey(JsonEtl.freqWindowView(
-      JsonEtl.freqUpsertWindowed(folded, stale, retainDays = 14)))
-      === vkey(JsonEtl.freqWindowView(oneShot)))
+    assert(vkey(Windowed(Freq()).view(
+      Windowed(Freq(), retainDays = 14).fold(folded, stale)))
+      === vkey(Windowed(Freq()).view(oneShot)))
     // the view equals the exact windowed count-then-rank
     val exact = events.filter(col("day") > horizon + 7)
       .groupBy(col("event_type"), col("user_id"))
@@ -415,20 +415,20 @@ class EtlSpec extends SparkSpec {
           .map { case ((tt, item, est), i) => (tt, (i + 1).toLong, item, est) }
           .toSeq
       }.sortBy(x => (x._1, x._2))
-    assert(vkey(JsonEtl.freqWindowView(folded))
+    assert(vkey(Windowed(Freq()).view(folded))
       .map(r => (r.getString(0), r.getLong(1), r.getString(2),
         r.getAs[Long]("est"))) === exact)
     // durable: meta stamped, mismatched map size raises
     val path = Files.createTempDirectory("graft_wf").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.freqUpsertWindowedAt(spark, path, b, i.toLong,
-        retainDays = 14) }
+      JsonEtl.foldAt(spark, path, b, i.toLong,
+        Windowed(Freq(), retainDays = 14)) }
     assert(JsonEtl.stateMeta(spark, path)("kind") === "freq_windowed")
-    assert(vkey(JsonEtl.freqWindowView(spark.read.parquet(path)))
-      === vkey(JsonEtl.freqWindowView(oneShot)))
+    assert(vkey(Windowed(Freq()).view(spark.read.parquet(path)))
+      === vkey(Windowed(Freq()).view(oneShot)))
     val e2 = intercept[IllegalArgumentException](
-      JsonEtl.freqUpsertWindowedAt(spark, path, slices(0), 9L,
-        maxMapSize = 64, retainDays = 14))
+      JsonEtl.foldAt(spark, path, slices(0), 9L,
+        Windowed(Freq(maxMapSize = 64), retainDays = 14)))
     assert(e2.getMessage.contains("different parameters"))
   }
 
@@ -440,13 +440,13 @@ class EtlSpec extends SparkSpec {
     val events = spark.read.parquet(s"$sf/events.parquet")
     def thetaState(flushKeys: Int) =
       JsonEtl.mergeSketchFrames(
-        JsonEtl.audiencePartials(events, "event_type", "user_id", 12,
-          flushKeys), "event_type", graft.etl.SketchMerges.theta(12))
+        JsonEtl.audiencePartials(events, Seq("event_type"), "user_id", 12,
+          flushKeys), Seq("event_type"), graft.etl.SketchMerges.theta(12))
     val never = thetaState(JsonEtl.SketchPartialFlushKeys)
     val always = thetaState(2) // 5 event types per partition >> 2
     // the guard actually fired: more partial rows than keys
-    assert(JsonEtl.audiencePartials(events, "event_type", "user_id", 12, 2)
-      .count() > JsonEtl.audiencePartials(events, "event_type", "user_id", 12)
+    assert(JsonEtl.audiencePartials(events, Seq("event_type"), "user_id", 12, 2)
+      .count() > JsonEtl.audiencePartials(events, Seq("event_type"), "user_id", 12)
       .count())
     def estimates(df: org.apache.spark.sql.DataFrame) =
       JsonEtl.audienceOverlap(df).orderBy(col("a"), col("b"))
@@ -455,8 +455,8 @@ class EtlSpec extends SparkSpec {
     // Misra-Gries: same guard, same invariance (exact regime — counts add)
     def freqTop(flushKeys: Int) =
       JsonEtl.freqTopItems(JsonEtl.mergeSketchFrames(
-        JsonEtl.freqPartials(events, "event_type", "user_id", 1024,
-          flushKeys), "event_type", graft.etl.SketchMerges.freq(1024)))
+        JsonEtl.freqPartials(events, Seq("event_type"), "user_id", 1024,
+          flushKeys), Seq("event_type"), graft.etl.SketchMerges.freq(1024)))
         .orderBy(col("event_type"), col("rank")).collect().toSeq
     assert(freqTop(2) === freqTop(JsonEtl.SketchPartialFlushKeys))
   }
@@ -479,34 +479,35 @@ class EtlSpec extends SparkSpec {
         (String, org.apache.spark.sql.DataFrame, Long) => Unit)] = Seq(
       ("agg", Map("kind" -> "agg", "keys" -> "user_id,event_type",
         "value_col" -> "value"),
-        (p, d, i) => JsonEtl.aggUpsertAt(spark, p, d, i),
-        (p, d, i) => JsonEtl.aggUpsertAt(spark, p, d, i, valueCol = "event_id")),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Agg()),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i,
+          Agg(valueCol = "event_id"))),
       ("agg_windowed", Map("kind" -> "agg_windowed", "keys" -> "event_type",
         "value_cols" -> "value", "day_col" -> "day", "retain_days" -> "14"),
-        (p, d, i) => JsonEtl.aggUpsertWindowedAt(spark, p, d, i,
-          Seq("event_type"), Seq("value"), retainDays = 14),
-        (p, d, i) => JsonEtl.aggUpsertWindowedAt(spark, p, d, i,
-          Seq("event_type"), Seq("value"), retainDays = 30)),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i,
+          Windowed(AggN(Seq("event_type"), Seq("value")), retainDays = 14)),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i,
+          Windowed(AggN(Seq("event_type"), Seq("value")), retainDays = 30))),
       ("ewma", Map("kind" -> "ewma", "keys" -> "user_id",
         "order_col" -> "event_id", "value_col" -> "value", "alpha" -> "0.5"),
-        (p, d, i) => JsonEtl.ewmaUpsertAt(spark, p, d, i),
-        (p, d, i) => JsonEtl.ewmaUpsertAt(spark, p, d, i, alpha = 0.25)),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Ewma()),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Ewma(alpha = 0.25))),
       ("distinct", Map("kind" -> "distinct", "keys" -> "event_type",
         "value_col" -> "user_id", "lgk" -> "12"),
-        (p, d, i) => JsonEtl.distinctUpsertAt(spark, p, d, i),
-        (p, d, i) => JsonEtl.distinctUpsertAt(spark, p, d, i, lgK = 10)),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Distinct()),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Distinct(lgK = 10))),
       ("quantile", Map("kind" -> "quantile", "key" -> "event_type",
         "value_col" -> "value", "k" -> "200"),
         (p, d, i) => JsonEtl.quantileUpsertAt(spark, p, d, i),
         (p, d, i) => JsonEtl.quantileUpsertAt(spark, p, d, i, k = 100)),
       ("audience", Map("kind" -> "audience", "key" -> "event_type",
         "value_col" -> "user_id", "lgk" -> "12"),
-        (p, d, i) => JsonEtl.audienceUpsertAt(spark, p, d, i),
-        (p, d, i) => JsonEtl.audienceUpsertAt(spark, p, d, i, lgK = 10)),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Audience()),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Audience(lgK = 10))),
       ("freq", Map("kind" -> "freq", "key" -> "event_type",
         "item_col" -> "user_id", "max_map_size" -> "1024"),
-        (p, d, i) => JsonEtl.freqUpsertAt(spark, p, d, i),
-        (p, d, i) => JsonEtl.freqUpsertAt(spark, p, d, i, maxMapSize = 64)))
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Freq()),
+        (p, d, i) => JsonEtl.foldAt(spark, p, d, i, Freq(maxMapSize = 64))))
     families.foreach { case (name, expectMeta, good, bad) =>
       val p = s"$base/$name"
       good(p, b(0), 0L)
@@ -521,7 +522,7 @@ class EtlSpec extends SparkSpec {
     }
     // a REPLAYED mismatched fold is fenced before the meta check (replay
     // protection stays the outermost guard)
-    JsonEtl.audienceUpsertAt(spark, s"$base/audience", b(1), 1L, lgK = 10)
+    JsonEtl.foldAt(spark, s"$base/audience", b(1), 1L, Audience(lgK = 10))
     // the geometry-sensitive read view answers from the stamp
     val viaStamp = JsonEtl.audienceOverlapAt(spark, s"$base/audience")
       .orderBy(col("a"), col("b")).collect().toSeq
@@ -615,10 +616,10 @@ class EtlSpec extends SparkSpec {
       df.orderBy(col("event_type"), col("day")).collect().toSeq
     val slices = (0L to 3L).map(i => events.filter(col("event_id") % 4 === i))
     val folded = slices.tail.foldLeft(
-      JsonEtl.aggStateWindowed(slices.head, keys, vals, retainDays = 14))(
-      (st, b) => JsonEtl.aggUpsertWindowed(st, b, keys, vals, retainDays = 14))
+      Windowed(AggN(keys, vals), retainDays = 14).state(slices.head))(
+      (st, b) => Windowed(AggN(keys, vals), retainDays = 14).fold(st, b))
     // fold ≡ one-shot recompute over the retained window, schema included
-    val oneShot = JsonEtl.aggStateWindowed(events, keys, vals, retainDays = 14)
+    val oneShot = Windowed(AggN(keys, vals), retainDays = 14).state(events)
     assert(folded.schema === oneShot.schema)
     assert(key(folded) === key(oneShot))
     // the whole point: state bounded by retention (the corpus spans 30 days)
@@ -630,10 +631,10 @@ class EtlSpec extends SparkSpec {
     val horizon = events.agg(max(col("day"))).head.getLong(0) - 14
     val stale = events.filter(col("day") <= horizon - 2)
     assert(stale.count() > 0, "the corpus must have data beyond the horizon")
-    assert(key(JsonEtl.aggUpsertWindowed(folded, stale, keys, vals,
-      retainDays = 14)) === key(oneShot))
+    assert(key(Windowed(AggN(keys, vals), retainDays = 14).fold(folded,
+      stale)) === key(oneShot))
     // rolling view ≡ direct recomputation over the last 7 days
-    val view = JsonEtl.aggWindowView(folded, keys, vals, lastNDays = 7)
+    val view = Windowed(AggN(keys, vals)).view(folded, 7)
     val direct = JsonEtl.aggDerivedN(
       JsonEtl.aggStateN(events.filter(col("day") > horizon + 7), keys, vals),
       vals)
@@ -642,10 +643,10 @@ class EtlSpec extends SparkSpec {
     // durable form: replay is a no-op
     val path = Files.createTempDirectory("graft_wstate").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.aggUpsertWindowedAt(spark, path, b, i.toLong, keys, vals,
-        retainDays = 14) }
-    JsonEtl.aggUpsertWindowedAt(spark, path, slices(1), 1L, keys, vals,
-      retainDays = 14)
+      JsonEtl.foldAt(spark, path, b, i.toLong,
+        Windowed(AggN(keys, vals), retainDays = 14)) }
+    JsonEtl.foldAt(spark, path, slices(1), 1L,
+      Windowed(AggN(keys, vals), retainDays = 14))
     assert(key(spark.read.parquet(path)) === key(oneShot))
   }
 
@@ -663,22 +664,22 @@ class EtlSpec extends SparkSpec {
       JsonEtl.distinctEstimate(df)
         .orderBy(col("event_type"), col("day")).collect().toSeq
     val dFold = slices.tail.foldLeft(
-      JsonEtl.distinctStateWindowed(slices.head, retainDays = 14))(
-      (st, b) => JsonEtl.distinctUpsertWindowed(st, b, retainDays = 14))
-    val dOneShot = JsonEtl.distinctStateWindowed(events, retainDays = 14)
+      Windowed(Distinct(), retainDays = 14).state(slices.head))(
+      (st, b) => Windowed(Distinct(), retainDays = 14).fold(st, b))
+    val dOneShot = Windowed(Distinct(), retainDays = 14).state(events)
     assert(dKey(dFold) === dKey(dOneShot))
     assert(dFold.select(col("day")).distinct().count() <= 14L)
     // stale-beyond-horizon batch is a no-op; in-horizon late data folds
-    assert(dKey(JsonEtl.distinctUpsertWindowed(dFold, stale,
-      retainDays = 14)) === dKey(dOneShot))
-    val dHalf = JsonEtl.distinctStateWindowed(
-      inWindow.filter(col("user_id") % 2 === 0), retainDays = 14)
-    val dLate = JsonEtl.distinctUpsertWindowed(dHalf,
-      inWindow.filter(col("user_id") % 2 === 1), retainDays = 14)
-    assert(dKey(dLate) === dKey(JsonEtl.distinctStateWindowed(inWindow,
-      retainDays = 14)), "late rows for a still-retained day must fold in")
+    assert(dKey(Windowed(Distinct(), retainDays = 14).fold(dFold,
+      stale)) === dKey(dOneShot))
+    val dHalf = Windowed(Distinct(), retainDays = 14).state(
+      inWindow.filter(col("user_id") % 2 === 0))
+    val dLate = Windowed(Distinct(), retainDays = 14).fold(dHalf,
+      inWindow.filter(col("user_id") % 2 === 1))
+    assert(dKey(dLate) === dKey(Windowed(Distinct(), retainDays = 14)
+      .state(inWindow)), "late rows for a still-retained day must fold in")
     // view ≡ windowed exact recompute (coupon regime)
-    val dView = JsonEtl.distinctWindowView(dFold, lastNDays = 7)
+    val dView = Windowed(Distinct()).view(dFold, 7)
       .orderBy(col("event_type")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     val exact = events.filter(col("day") > horizon + 7)
@@ -690,16 +691,16 @@ class EtlSpec extends SparkSpec {
 
     // ---- audience (theta): same contract, sketch bytes compared via view
     def aKey(df: org.apache.spark.sql.DataFrame) =
-      JsonEtl.audienceWindowView(df, lastNDays = 14)
+      Windowed(Audience()).view(df, 14)
         .orderBy(col("a"), col("b")).collect().toSeq
     val aFold = slices.tail.foldLeft(
-      JsonEtl.audienceStateWindowed(slices.head, retainDays = 14))(
-      (st, b) => JsonEtl.audienceUpsertWindowed(st, b, retainDays = 14))
-    val aOneShot = JsonEtl.audienceStateWindowed(events, retainDays = 14)
+      Windowed(Audience(), retainDays = 14).state(slices.head))(
+      (st, b) => Windowed(Audience(), retainDays = 14).fold(st, b))
+    val aOneShot = Windowed(Audience(), retainDays = 14).state(events)
     assert(aFold.select(col("day")).distinct().count() <= 14L)
     assert(aKey(aFold) === aKey(aOneShot))
-    assert(aKey(JsonEtl.audienceUpsertWindowed(aFold, stale,
-      retainDays = 14)) === aKey(aOneShot), "stale batch must be a no-op")
+    assert(aKey(Windowed(Audience(), retainDays = 14).fold(aFold,
+      stale)) === aKey(aOneShot), "stale batch must be a no-op")
     // the (key, day) composite round-trips: schema and exact day values
     assert(aFold.columns.toSeq === Seq("event_type", "day", "sketch"))
     assert(aFold.select(col("day")).distinct().collect().map(_.getLong(0))
@@ -709,20 +710,20 @@ class EtlSpec extends SparkSpec {
     // ---- durable forms: replay fenced, meta stamped, mismatch raises
     val base = Files.createTempDirectory("graft_wsketch").toString
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.distinctUpsertWindowedAt(spark, s"$base/d", b, i.toLong,
-        retainDays = 14)
-      JsonEtl.audienceUpsertWindowedAt(spark, s"$base/a", b, i.toLong,
-        retainDays = 14)
+      JsonEtl.foldAt(spark, s"$base/d", b, i.toLong,
+        Windowed(Distinct(), retainDays = 14))
+      JsonEtl.foldAt(spark, s"$base/a", b, i.toLong,
+        Windowed(Audience(), retainDays = 14))
     }
-    JsonEtl.distinctUpsertWindowedAt(spark, s"$base/d", slices(1), 1L,
-      retainDays = 14) // replay — fenced
+    JsonEtl.foldAt(spark, s"$base/d", slices(1), 1L,
+      Windowed(Distinct(), retainDays = 14)) // replay — fenced
     assert(dKey(spark.read.parquet(s"$base/d")) === dKey(dOneShot))
     assert(aKey(spark.read.parquet(s"$base/a")) === aKey(aOneShot))
     assert(JsonEtl.stateMeta(spark, s"$base/d")("kind") === "distinct_windowed")
     assert(JsonEtl.stateMeta(spark, s"$base/a")("retain_days") === "14")
     val e = intercept[IllegalArgumentException](
-      JsonEtl.audienceUpsertWindowedAt(spark, s"$base/a", slices(0), 9L,
-        retainDays = 30))
+      JsonEtl.foldAt(spark, s"$base/a", slices(0), 9L,
+        Windowed(Audience(), retainDays = 30)))
     assert(e.getMessage.contains("different parameters"))
   }
 
@@ -754,11 +755,11 @@ class EtlSpec extends SparkSpec {
     // NO-OP (skipped before any plan is built), and the final state is
     // the one-shot fold
     val path = Files.createTempDirectory("graft_ewma_state").toString + "/state"
-    JsonEtl.ewmaUpsertAt(spark, path, slices(0), 0L)
-    JsonEtl.ewmaUpsertAt(spark, path, slices(1), 1L)
-    JsonEtl.ewmaUpsertAt(spark, path, slices(1), 1L) // replay — fenced
-    JsonEtl.ewmaUpsertAt(spark, path, slices(2), 2L)
-    JsonEtl.ewmaUpsertAt(spark, path, slices(3), 3L)
+    JsonEtl.foldAt(spark, path, slices(0), 0L, Ewma())
+    JsonEtl.foldAt(spark, path, slices(1), 1L, Ewma())
+    JsonEtl.foldAt(spark, path, slices(1), 1L, Ewma()) // replay — fenced
+    JsonEtl.foldAt(spark, path, slices(2), 2L, Ewma())
+    JsonEtl.foldAt(spark, path, slices(3), 3L, Ewma())
     assert(key(spark.read.parquet(path)) === key(oneShot))
     assert(JsonEtl.aggFoldWatermark(spark, path) === 3L)
   }
@@ -1253,8 +1254,8 @@ class EtlSpec extends SparkSpec {
     // durable form: replay fences, final state equals the in-memory fold
     val path = Files.createTempDirectory("graft_dstate").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.distinctUpsertAt(spark, path, b, i.toLong) }
-    JsonEtl.distinctUpsertAt(spark, path, slices(1), 1L) // replay
+      JsonEtl.foldAt(spark, path, b, i.toLong, Distinct()) }
+    JsonEtl.foldAt(spark, path, slices(1), 1L, Distinct()) // replay
     assert(est(spark.read.parquet(path)) === folded)
   }
 
@@ -1307,8 +1308,8 @@ class EtlSpec extends SparkSpec {
     // durable form: replay is a no-op
     val path = Files.createTempDirectory("graft_astate").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.audienceUpsertAt(spark, path, b, i.toLong) }
-    JsonEtl.audienceUpsertAt(spark, path, slices(0), 0L) // replay
+      JsonEtl.foldAt(spark, path, b, i.toLong, Audience()) }
+    JsonEtl.foldAt(spark, path, slices(0), 0L, Audience()) // replay
     val replayed = JsonEtl.audienceOverlap(spark.read.parquet(path))
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         r.getAs[Double]("est_union")).toMap
@@ -1352,8 +1353,8 @@ class EtlSpec extends SparkSpec {
     // durable form: replay is a no-op
     val path = Files.createTempDirectory("graft_fstate").toString + "/state"
     slices.zipWithIndex.foreach { case (b, i) =>
-      JsonEtl.freqUpsertAt(spark, path, b, i.toLong) }
-    JsonEtl.freqUpsertAt(spark, path, slices(3), 3L) // replay
+      JsonEtl.foldAt(spark, path, b, i.toLong, Freq()) }
+    JsonEtl.foldAt(spark, path, slices(3), 3L, Freq()) // replay
     val replayed = JsonEtl.freqTopItems(spark.read.parquet(path)).collect()
       .map(r => (r.getString(0), r.getAs[Long]("rank"),
         r.getAs[String]("item"), r.getAs[Long]("est")))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Fsck, Similarity}
+import graft.etl.StateKind._
 
 /** The fsck contract: a freshly-built artifact of every family reports all
   * checks ok, and each injected corruption flips EXACTLY its own check —
@@ -253,7 +254,7 @@ class FsckSpec extends SparkSpec {
     val events = (0 until 100).map(i =>
       (i.toLong % 7, if (i % 2 == 0) "view" else "click", i * 0.25))
       .toDF("user_id", "event_type", "value")
-    JsonEtl.aggUpsertAt(spark, path, events, 0L)
+    JsonEtl.foldAt(spark, path, events, 0L, Agg())
     val clean = Fsck.fsckAggState(spark, path)
     assert(clean.filter(col("status") =!= "ok").count() === 0)
 
@@ -516,8 +517,8 @@ class FsckSpec extends SparkSpec {
     val events = spark.read.parquet(s"$sf/events.parquet")
     val b = (0L to 1L).map(i => events.filter(col("event_id") % 2 === i))
     val base = tmp("graft_fsck_state")
-    JsonEtl.audienceUpsertAt(spark, s"$base/aud", b(0), 0L)
-    JsonEtl.audienceUpsertAt(spark, s"$base/aud", b(1), 1L)
+    JsonEtl.foldAt(spark, s"$base/aud", b(0), 0L, Audience())
+    JsonEtl.foldAt(spark, s"$base/aud", b(1), 1L, Audience())
     JsonEtl.quantileUpsertAt(spark, s"$base/q", b(0), 0L)
     JsonEtl.quantileUpsertAt(spark, s"$base/q", b(1), 1L)
     val allChecks = Seq("state_readable", "watermark_present",
@@ -546,13 +547,15 @@ class FsckSpec extends SparkSpec {
     write(s"$base/q/_fold_watermark", "1")
     // tampered meta kind → meta_kind_known fail
     write(s"$base/aud/_state_meta", "kind=mystery\nlgk=12")
-    assert(statusOf(Fsck.fsckStateDir(spark, s"$base/aud"),
-      "meta_kind_known")._1 === "fail")
+    val badKind = Fsck.fsckStateDir(spark, s"$base/aud")
+    assert(statusOf(badKind, "meta_kind_known")._1 === "fail")
+    assert(statusOf(badKind, "one_row_per_key")._1 === "ok")
     // deleted meta → pre-meta warn (self-heals at the next stamping fold)
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/aud/_state_meta"), false)
-    assert(statusOf(Fsck.fsckStateDir(spark, s"$base/aud"),
-      "meta_readable")._1 === "warn")
-    JsonEtl.audienceUpsertAt(spark, s"$base/aud", b(1), 2L) // re-adopts
+    val noMeta = Fsck.fsckStateDir(spark, s"$base/aud")
+    assert(statusOf(noMeta, "meta_readable")._1 === "warn")
+    assert(statusOf(noMeta, "one_row_per_key")._1 === "ok")
+    JsonEtl.foldAt(spark, s"$base/aud", b(1), 2L, Audience()) // re-adopts
     assert(statusOf(Fsck.fsckStateDir(spark, s"$base/aud"),
       "meta_readable")._1 === "ok")
     // duplicate key rows → one_row_per_key fail (copy a data file in)
@@ -563,6 +566,11 @@ class FsckSpec extends SparkSpec {
     org.apache.hadoop.fs.FileUtil.copy(fs, dataFile, fs,
       new org.apache.hadoop.fs.Path(s"$base/q/dup-${dataFile.getName}"),
       false, spark.sparkContext.hadoopConfiguration)
+    assert(statusOf(Fsck.fsckStateDir(spark, s"$base/q"),
+      "one_row_per_key")._1 === "fail")
+    // ... and still fails without a stamp to name the keys: they are
+    // inferred from the column names
+    fs.delete(new org.apache.hadoop.fs.Path(s"$base/q/_state_meta"), false)
     assert(statusOf(Fsck.fsckStateDir(spark, s"$base/q"),
       "one_row_per_key")._1 === "fail")
     // parked generation → warn; missing live + parked → readable warn

@@ -278,7 +278,7 @@ class ProfileSpec extends SparkSpec {
     // null; that was an artifact, not a contract)
     val withNulls = Profile.categoricalDriftOf(
       spark.range(100).select(col("id").as("rid"),
-        when(col("id") % 4 === 0, lit(null).cast("string"))
+        when(col("id") % 3 === 0, lit(null).cast("string"))
           .otherwise(lit("x")).as("cat")),
       col("rid") % 2 === 0, "cat").collect()
     val nullRows = withNulls.filter(_.isNullAt(0))

@@ -6,6 +6,7 @@ import graft.streaming.Streams
 import graft.streaming.Streams.Event
 import java.nio.file.Files
 import java.sql.Timestamp
+import graft.etl.StateKind._
 
 class StreamingSpec extends SparkSpec {
 
@@ -602,9 +603,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_distinct_sink").toString
     val in = MemoryStream[(Long, String, Double)]
-    val q = Streams.distinctIngestSink(
+    val q = Streams.stateIngestSink(
       in.toDF().toDF("user_id", "event_type", "value"),
-      s"$base/state", s"$base/ckpt")
+      s"$base/state", s"$base/ckpt", Distinct())
     val b0 = (0L until 500L).map(i => (i % 37, if (i % 2 == 0) "view" else "click", 1.0))
     val b1 = (0L until 500L).map(i => (i % 61, if (i % 3 == 0) "view" else "buy", 1.0))
     in.addData(b0: _*); q.processAllAvailable()
@@ -627,9 +628,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_sample_sink").toString
     val in = MemoryStream[(Long, String, Double)]
-    val q = Streams.sampleIngestSink(
+    val q = Streams.stateIngestSink(
       in.toDF().toDF("user_id", "event_type", "value"),
-      s"$base/state", s"$base/ckpt", k = 8)
+      s"$base/state", s"$base/ckpt", Sample(k = 8))
     val b0 = (0L until 500L).map(i => (i % 37, if (i % 2 == 0) "view" else "click", 1.0))
     val b1 = (0L until 500L).map(i => (i % 61, if (i % 3 == 0) "view" else "buy", 1.0))
     in.addData(b0: _*); q.processAllAvailable()
@@ -659,16 +660,16 @@ class StreamingSpec extends SparkSpec {
     val all = (b0 ++ b1).toDF("user_id", "event_type", "day")
 
     val in = MemoryStream[(Long, String, Long)]
-    val q = Streams.windowedDistinctIngestSink(
+    val q = Streams.stateIngestSink(
       in.toDF().toDF("user_id", "event_type", "day"),
-      s"$base/d", s"$base/ckptd", retainDays = 14)
+      s"$base/d", s"$base/ckptd", Windowed(Distinct(), retainDays = 14))
     in.addData(b0: _*); q.processAllAvailable()
     in.addData(b1: _*); q.processAllAvailable()
     q.stop()
     val st = spark.read.parquet(s"$base/d")
     assert(st.select(col("day")).distinct().count() <= 14L,
       "retention must bound the streamed state")
-    val got = graft.etl.JsonEtl.distinctWindowView(st, lastNDays = 7)
+    val got = Windowed(Distinct()).view(st, 7)
       .orderBy(col("event_type")).collect()
       .map(r => (r.getString(0), r.getAs[Long]("distinct_est"))).toSeq
     val exact = all.filter(col("day") > lit(29L - 7L))
@@ -682,19 +683,19 @@ class StreamingSpec extends SparkSpec {
       === "distinct_windowed")
 
     val in2 = MemoryStream[(Long, String, Long)]
-    val q2 = Streams.windowedAudienceIngestSink(
+    val q2 = Streams.stateIngestSink(
       in2.toDF().toDF("user_id", "event_type", "day"),
-      s"$base/a", s"$base/ckpta", retainDays = 14)
+      s"$base/a", s"$base/ckpta", Windowed(Audience(), retainDays = 14))
     in2.addData(b0: _*); q2.processAllAvailable()
     in2.addData(b1: _*); q2.processAllAvailable()
     q2.stop()
     val ast = spark.read.parquet(s"$base/a")
     assert(ast.select(col("day")).distinct().count() <= 14L)
     def overlap(df: org.apache.spark.sql.DataFrame) =
-      graft.etl.JsonEtl.audienceWindowView(df, lastNDays = 7)
+      Windowed(Audience()).view(df, 7)
         .orderBy(col("a"), col("b")).collect().toSeq
     assert(overlap(ast) === overlap(
-      graft.etl.JsonEtl.audienceStateWindowed(all, retainDays = 14)),
+      Windowed(Audience(), retainDays = 14).state(all)),
       "stream ≡ batch windowed overlap (both exact below capacity)")
     assert(graft.etl.JsonEtl.stateMeta(spark, s"$base/a")("kind")
       === "audience_windowed")
@@ -718,32 +719,30 @@ class StreamingSpec extends SparkSpec {
       in.addData(b1: _*); q.processAllAvailable()
       q.stop()
     }
-    stream("s", df => Streams.windowedSampleIngestSink(df, s"$base/s",
-      s"$base/cs", k = 8, retainDays = 14))
-    stream("q", df => Streams.windowedQuantileIngestSink(df, s"$base/q",
-      s"$base/cq", retainDays = 14))
-    stream("f", df => Streams.windowedFreqIngestSink(df, s"$base/f",
-      s"$base/cf", retainDays = 14))
+    stream("s", df => Streams.stateIngestSink(df, s"$base/s", s"$base/cs",
+      Windowed(Sample(k = 8), retainDays = 14)))
+    stream("q", df => Streams.stateIngestSink(df, s"$base/q", s"$base/cq",
+      Windowed(Quantile(), retainDays = 14)))
+    stream("f", df => Streams.stateIngestSink(df, s"$base/f", s"$base/cf",
+      Windowed(Freq(), retainDays = 14)))
     // sample: bit-exact vs the batch fold (deterministic algebra)
     def skey(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("event_type"), col("day"), col("rank")).collect().toSeq
     assert(skey(spark.read.parquet(s"$base/s"))
-      === skey(graft.etl.JsonEtl.sampleStateWindowed(all, k = 8,
-        retainDays = 14)))
+      === skey(Windowed(Sample(k = 8), retainDays = 14).state(all)))
     // quantile: exact n_rows per (key, day); estimates by its own family
     val qn = spark.read.parquet(s"$base/q")
       .select(col("event_type"), col("day"), col("n_rows"))
       .orderBy(col("event_type"), col("day")).collect().toSeq
-    assert(qn === graft.etl.JsonEtl.quantileStateWindowed(all,
-        retainDays = 14)
+    assert(qn === Windowed(Quantile(), retainDays = 14).state(all)
       .select(col("event_type"), col("day"), col("n_rows"))
       .orderBy(col("event_type"), col("day")).collect().toSeq)
     // freq: ranked window view equals the batch fold's (exact regime)
     def fkey(df: org.apache.spark.sql.DataFrame) =
-      graft.etl.JsonEtl.freqWindowView(df, lastNDays = 7)
+      Windowed(Freq()).view(df, 7)
         .orderBy(col("event_type"), col("rank")).collect().toSeq
     assert(fkey(spark.read.parquet(s"$base/f"))
-      === fkey(graft.etl.JsonEtl.freqStateWindowed(all, retainDays = 14)))
+      === fkey(Windowed(Freq(), retainDays = 14).state(all)))
     Seq(s"$base/s" -> "sample_windowed", s"$base/q" -> "quantile_windowed",
       s"$base/f" -> "freq_windowed").foreach { case (p, kind) =>
       assert(graft.etl.JsonEtl.stateMeta(spark, p)("kind") === kind) }
@@ -754,9 +753,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_quant_sink").toString
     val in = MemoryStream[(Long, String, Double)]
-    val q = Streams.quantileIngestSink(
+    val q = Streams.stateIngestSink(
       in.toDF().toDF("user_id", "event_type", "value"),
-      s"$base/state", s"$base/ckpt")
+      s"$base/state", s"$base/ckpt", Quantile())
     val b0 = (0 until 1000).map(i => (i.toLong, "view", i.toDouble))
     val b1 = (1000 until 2000).map(i => (i.toLong, "view", i.toDouble))
     in.addData(b0: _*); q.processAllAvailable()
