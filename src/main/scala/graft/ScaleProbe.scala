@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.{AnnModel, AnnSource, AnnSpec}
 
 /** Scale-behavior probe (dev tool): replicate the documents/embeddings
   * corpus N× with perturbed keys, then time the scale-tier operators on it.
@@ -90,7 +91,8 @@ object ScaleProbe {
       pairs.unpersist()
     }
     time("simhash")(graft.ops.Dedup.simhash(spark, out).count())
-    time("ann_lsh_topk")(graft.ops.Similarity.lshTopk(spark, out).count())
+    time("ann_lsh_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Lsh).count())
     // the runtime-geometry story at work: grow LSH bits with log2(N) so
     // E|bucket| stays ~128 and Σ|bucket|² stays linear-ish in N (the
     // default 4 bits would make each bucket N/16 — quadratic blowup at 100×)
@@ -100,12 +102,14 @@ object ScaleProbe {
     println(s"embedding corpus: $nEmb vectors → $bits LSH bits")
     time(s"embedding_lsh(bits=$bits)")(
       graft.ops.Dedup.embeddingLsh(spark, out, 0.4, 4, bits).count())
-    time("ann_ivf_topk")(graft.ops.Similarity.ivfTopk(spark, out).count())
+    time("ann_ivf_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Ivf).count())
     // filtered serving at scale: the label-parity predicate halves the
     // eligible set; wall should track the IVF tier's with the probed-cell
     // scan cut by selectivity (the predicate rides the parquet scan)
     time("ann_filtered_topk")(
-      graft.ops.Similarity.ivfFilteredTopk(spark, out).count())
+      graft.ops.Similarity.topk(spark, out,
+        AnnSpec.Ivf.filtered(AnnSpec.evenLabel)).count())
     // sample-trained Lloyd: training wall must decouple from N. Times the
     // same 2-iteration refinement full-corpus vs on the bounded hash
     // sample (cap forced to 32k here: this replication's 200k vectors sit
@@ -329,59 +333,69 @@ object ScaleProbe {
       graft.ops.Similarity.labelCentroidsPartial(spark, out).count())
     // int8 retrieval: the cheap pass intentionally scans ALL N with the
     // integer-dot kernel — wall should stay ~linear in N and small
-    time("ann_int8_topk")(graft.ops.Similarity.int8Topk(spark, out).count())
+    time("ann_int8_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Int8).count())
     // JL tier: the coarse scan is over 16-dim floats (4× fewer bytes AND
     // multiplies than brute force) — wall should stay ~linear in N with a
     // ~4× lower slope than the 64-dim exact scan; the fed form drops the
     // once-per-corpus projection pass
-    time("ann_jl_topk")(graft.ops.Similarity.jlTopk(spark, out).count())
+    time("ann_jl_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Jl).count())
     if (matched("ann_jl_topk(fed)")) locally {
       val emb = spark.read.parquet(s"$out/embeddings.parquet")
       val pv = graft.ops.Similarity.projectVectors(emb).localCheckpoint()
       val t0 = System.nanoTime()
-      val n = graft.ops.Similarity.jlTopk(spark, out,
-        precomputedProjected = Some(pv)).count()
+      val n = graft.ops.Similarity.topk(spark, out, AnnSpec.Jl,
+        AnnModel(codes = Some(pv))).count()
       println(f"ann_jl_topk(fed): ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
     }
     // PCA tier: same reduced-space scan shape as JL (identical scaffold);
     // the one-shot line additionally pays the covariance pass + 64×64 eig
     // (the train-once cost), the fed line is the serving shape
-    time("ann_pca_topk")(graft.ops.Similarity.pcaTopk(spark, out).count())
+    time("ann_pca_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Pca).count())
     if (matched("ann_pca_topk(fed)")) locally {
       val m = graft.ops.Similarity.trainPca(spark, out).localCheckpoint()
       val t0 = System.nanoTime()
-      val n = graft.ops.Similarity.pcaTopk(spark, out,
-        precomputedComponents = Some(m)).count()
+      val n = graft.ops.Similarity.topk(spark, out, AnnSpec.Pca,
+        AnnModel(transform = Some(m))).count()
       println(f"ann_pca_topk(fed): ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
     }
     time("ann_bruteforce_topk")(
-      graft.ops.Similarity.bruteforceTopk(spark, out).count())
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Exact).count())
     // PQ: codes are 8 bytes/vector, the ADC scan touches N·m code rows +
     // per-query broadcast tables — wall should stay ~linear in N; inline
     // codebook training (two Lloyd passes over N·m subvectors) is most
     // of the cost and amortizes away in the fed-codebook pipeline form
-    time("ann_pq_topk")(graft.ops.Similarity.pqTopk(spark, out).count())
+    time("ann_pq_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Pq).count())
     // OPQ: training touches only the OpqTrainCap sample (wall flat in N);
     // the fed line is serving cost — two MatVec passes over PQ's ADC scan
-    time("ann_opq_topk")(graft.ops.Similarity.opqTopk(spark, out).count())
+    time("ann_opq_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Opq).count())
     if (matched("ann_opq_topk(fed)")) locally {
-      val m = graft.ops.Similarity.trainOpq(spark, out)
+      val (rot, cb) = graft.ops.Similarity.trainOpq(spark, out)
       val t0 = System.nanoTime()
-      val n = graft.ops.Similarity.opqTopk(spark, out, model = Some(m)).count()
+      val n = graft.ops.Similarity.topk(spark, out, AnnSpec.Opq,
+        AnnModel(transform = Some(rot), codebooks = Some(cb))).count()
       println(f"ann_opq_topk(fed): ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
     }
     // the composed tier is the scale path (flat OPQ's ADC scan is N·m by
     // design): first call trains+encodes into the session memo (build),
     // second call times the steady-state indexed serving
     if (matched("ann_opq_ivfpq_topk(indexed)")) locally {
+      def indexed() = graft.ops.Similarity.topk(spark, out, AnnSpec.OpqIvfpq,
+        graft.ops.Similarity.modelFor(spark, out, AnnSpec.OpqIvfpq,
+          AnnSource.Indexed))
       val t0 = System.nanoTime()
-      graft.ops.Similarity.opqIvfpqTopkIndexed(spark, out).count()
+      indexed().count()
       println(f"ann_opq_ivfpq_index_build+serve: ${(System.nanoTime() - t0) / 1e9}%.1f s")
       val t1 = System.nanoTime()
-      val n = graft.ops.Similarity.opqIvfpqTopkIndexed(spark, out).count()
+      val n = indexed().count()
       println(f"ann_opq_ivfpq_topk(indexed): ${(System.nanoTime() - t1) / 1e9}%.1f s ($n rows)")
     }
-    time("ann_ivfpq_topk")(graft.ops.Similarity.ivfpqTopk(spark, out).count())
+    time("ann_ivfpq_topk")(
+      graft.ops.Similarity.topk(spark, out, AnnSpec.Ivfpq).count())
     // the train-once split the one-shot line above hides: build + persist
     // the index (the once-per-corpus-build cost), then run the retrieval
     // (a) with FED MODELS (encode still inline) and (b) with the FULL
@@ -399,13 +413,12 @@ object ScaleProbe {
       println(f"ann_index_build_save: ${(System.nanoTime() - t0) / 1e9}%.1f s")
       val (lc, lcb, lcodes) = graft.ops.Similarity.loadIndex(spark, mp)
       val t1 = System.nanoTime()
-      val n1 = graft.ops.Similarity.ivfpqTopk(spark, out,
-        codebooks = Some(lcb), precomputedCents = Some(lc)).count()
+      val n1 = graft.ops.Similarity.topk(spark, out, AnnSpec.Ivfpq,
+        AnnModel(centroids = Some(lc), codebooks = Some(lcb))).count()
       println(f"ann_ivfpq_topk(fed): ${(System.nanoTime() - t1) / 1e9}%.1f s ($n1 rows)")
       val t2 = System.nanoTime()
-      val n2 = graft.ops.Similarity.ivfpqTopk(spark, out,
-        codebooks = Some(lcb), precomputedCents = Some(lc),
-        precomputedCodes = Some(lcodes)).count()
+      val n2 = graft.ops.Similarity.topk(spark, out, AnnSpec.Ivfpq,
+        AnnModel(None, Some(lc), Some(lcb), Some(lcodes))).count()
       println(f"ann_ivfpq_topk(indexed): ${(System.nanoTime() - t2) / 1e9}%.1f s ($n2 rows)")
       // residual build is the expensive one (the residual chain re-enters
       // training and encode) — which is exactly why it, too, is a corpus-
@@ -419,9 +432,8 @@ object ScaleProbe {
       println(f"ann_residual_index_build_save: ${(System.nanoTime() - t3) / 1e9}%.1f s")
       val (rc, rcb2, rcodes) = graft.ops.Similarity.loadIndex(spark, s"$out/_ann_index_res")
       val t4 = System.nanoTime()
-      val n3 = graft.ops.Similarity.ivfpqResidualTopk(spark, out,
-        codebooks = Some(rcb2), precomputedCents = Some(rc),
-        precomputedCodes = Some(rcodes)).count()
+      val n3 = graft.ops.Similarity.topk(spark, out, AnnSpec.IvfpqResidual,
+        AnnModel(None, Some(rc), Some(rcb2), Some(rcodes))).count()
       println(f"ann_ivfpq_residual_topk(indexed): ${(System.nanoTime() - t4) / 1e9}%.1f s ($n3 rows)")
       // filtered serving from the SAME residual artifact (the round-10
       // rung, here on the raw-space residual index — the composed form
@@ -430,15 +442,13 @@ object ScaleProbe {
       // should run at-or-under the unfiltered indexed line above (half
       // the eligible set ⇒ less ADC work), never above it
       val t5 = System.nanoTime()
-      val eligible = emb.filter(col("label") % 2 === 0).select(col("vec_id"))
-      val n4 = graft.ops.Similarity.ivfpqResidualTopk(spark, out,
-        codebooks = Some(rcb2), precomputedCents = Some(rc),
-        precomputedCodes = Some(
-          rcodes.join(eligible, Seq("vec_id"), "left_semi"))).count()
+      val n4 = graft.ops.Similarity.topk(spark, out,
+        AnnSpec.IvfpqResidual.filtered(AnnSpec.evenLabel),
+        AnnModel(None, Some(rc), Some(rcb2), Some(rcodes))).count()
       println(f"ann_filtered_residual(indexed serve): ${(System.nanoTime() - t5) / 1e9}%.1f s ($n4 rows)")
     }
     time("ann_ivfpq_residual_topk")(
-      graft.ops.Similarity.ivfpqResidualTopk(spark, out).count())
+      graft.ops.Similarity.topk(spark, out, AnnSpec.IvfpqResidual).count())
     time("text_mixture_sample")(
       graft.ops.Curation.mixtureSampleDocs(spark, out).count())
     time("text_select_budget_threshold")(

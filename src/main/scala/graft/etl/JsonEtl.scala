@@ -1832,7 +1832,7 @@ object JsonEtl {
     * exactly what the report should say.
     */
   def stateFoldConfig(s: SparkSession, dir: String): DataFrame = {
-    val base = graft.ops.Similarity.sessionScratchPath(s, "graft_statecfg", dir)
+    val base = graft.ops.SessionMemo.scratchPath(s, "graft_statecfg", dir)
     val done = new org.apache.hadoop.fs.Path(s"$base/batch1/_SUCCESS")
     if (!done.getFileSystem(s.sparkContext.hadoopConfiguration).exists(done)) {
       val e = Tables(s, dir).events

@@ -119,25 +119,12 @@ object Curation {
   def prepareCorpusPipelined(s: SparkSession, dir: String): DataFrame =
     prepareCorpus(s, dir, pairs = Some(materializedPairs(s, dir)))
 
-  // keyed by (context, dir): a checkpointed frame is only valid within
-  // the SparkContext that built it — a dir-only key would hand a later
-  // session in the same JVM blocks of a stopped context. Entries are
-  // bounded by live (context, dir) combinations; stale-context entries
-  // are dropped on first miss against a new context. The memoized frame
-  // is additionally BOUND to the SparkSession that built it — this module
-  // assumes one session per context (true of every entry point here); a
-  // newSession()-per-tenant deployment should key on the session instead,
-  // since conf/extension divergence between sessions sharing a context
-  // would surprise.
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  // a checkpointed frame is only valid within the SparkContext that built
+  // it — SessionMemo keys and reaps by context
+  private val pairsMemo = new SessionMemo[String, DataFrame]
 
-  private def materializedPairs(s: SparkSession, dir: String): DataFrame = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    pairsMemo.keySet.removeIf(_._1 != ctx) // reap frames of dead contexts
-    pairsMemo.computeIfAbsent((ctx, dir),
-      _ => Dedup.minhashPairs(s, dir).localCheckpoint())
-  }
+  private def materializedPairs(s: SparkSession, dir: String): DataFrame =
+    pairsMemo(s, dir)(Dedup.minhashPairs(s, dir).localCheckpoint())
 
   // ------------------------------------------------------------ resumable
   /** Resumable form of [[prepareCorpus]] — the operational shape of a long

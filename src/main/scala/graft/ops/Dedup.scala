@@ -34,24 +34,7 @@ object Dedup {
   private def norm(c: Column): Column =
     lower(trim(regexp_replace(c, "\\s+", " ")))
 
-  private def words(c: Column): Column = split(trim(c), "\\s+")
-
-  /** Distinct word-bigram shingles ("w1 w2"), as zip_with over two shifted
-    * slices. The indexed formulation — transform(sequence(1, n-1),
-    * i -> concat(element_at(w, i), element_at(w, i+1))) — produces the same
-    * set but measured 10-100× slower: variable-index element_at inside an
-    * interpreted lambda allocates per access, where zip_with walks both
-    * slices linearly. Guarded for 1-word docs (empty slice lengths would be
-    * negative).
-    */
-  private def shingles(c: Column): Column = {
-    val w = words(c)
-    when(size(w) >= 2,
-      array_distinct(zip_with(
-        slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (a, b) => concat(a, lit(" "), b))))
-      .otherwise(array().cast("array<string>"))
-  }
+  import TextAnalysis.{bigrams, words}
 
   /** doc_id → (hash, canonical doc, group size) under a key expression. */
   private def hashDedup(df: DataFrame, key: Column): DataFrame = {
@@ -115,11 +98,11 @@ object Dedup {
     * step both exact-similarity scorers consume.
     */
   private def shinglePairCounts(s: SparkSession, dir: String): DataFrame = {
-    // repartition BEFORE shingling: a small parquet lands as one partition,
-    // and the HOF shingle pipeline is interpreted — spread it first
+    // repartition BEFORE shingling: a small parquet lands as one partition
+    // — spread it first
     val docs = Tables(s, dir).documents
       .repartition(spread(s), col("doc_id"))
-      .select(col("doc_id"), shingles(col("text")).as("sh"))
+      .select(col("doc_id"), bigrams(col("text"), distinct = true).as("sh"))
       // barrier above the shingle projection: the two consumers below share
       // one ReusedExchange instead of re-shingling per branch
       .repartition(spread(s), col("doc_id"))
@@ -842,7 +825,6 @@ object Dedup {
   def semantic(s: SparkSession, dir: String, tau: Double = 0.4,
       targetCluster: Int = 128, iters: Int = 2, nprobe: Int = 2,
       coarseProbe: Int = -1, autoTwoLevelK: Int = AutoTwoLevelK): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables(s, dir).embeddings.select(col("vec_id"), col("embedding"))
     val k = math.max(2, (e.count() / targetCluster).toInt)
     // k ∝ N here, so the kmeans default cap alone would starve large-k
@@ -862,13 +844,10 @@ object Dedup {
     // P, not the max; N·k rows ranked, id+cell out)
     val member =
       if (cprobe > 0) membershipTwoLevel(e, cents, nprobe, cprobe)
-      else e.join(broadcast(cents))
+      else Similarity.topCells(e.join(broadcast(cents))
         .select(col("vec_id"), col("cell"),
-          nanvl(cosine_sim(col("embedding"), col("centroid")), lit(-1.0)).as("ccos"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cell"))))
-        .filter(col("rk") <= nprobe)
-        .select(col("vec_id"), col("cell"))
+          nanvl(cosine_sim(col("embedding"), col("centroid")), lit(-1.0)).as("ccos")),
+        "vec_id", "cell", nprobe)
     val cand = member.as("a").join(member.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
@@ -917,7 +896,6 @@ object Dedup {
     */
   private[ops] def membershipTwoLevel(e: DataFrame, cents: DataFrame,
       nprobe: Int, cprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val k = cents.count() // cents is a driver-local toDF — counting is free
     val c = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
     // coarse layer: k-means over the fine-centroid table itself, seeded
@@ -929,24 +907,18 @@ object Dedup {
     // partition the fine cells, multi-probing happens on the query side)
     val fineOwner = Similarity.assignCells(centsAsVecs, coarse)
       .select(col("vec_id").as("cell"), col("cell").as("ccell"))
-    val coarseTop = e.join(broadcast(
+    val coarseTop = Similarity.topCells(e.join(broadcast(
         coarse.select(col("cell").as("ccell"), col("centroid").as("ccent"))))
       .select(col("vec_id"), col("ccell"),
-        nanvl(cosine_sim(col("embedding"), col("ccent")), lit(-1.0)).as("ccos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("ccell"))))
-      .filter(col("rk") <= cprobe)
-      .select(col("vec_id"), col("ccell"))
+        nanvl(cosine_sim(col("embedding"), col("ccent")), lit(-1.0)).as("ccos")),
+      "vec_id", "ccell", cprobe)
     // fine cells tagged with their owner: k rows, broadcast
     val fineTagged = broadcast(cents.join(fineOwner, Seq("cell")))
-    e.join(coarseTop, Seq("vec_id"))
+    Similarity.topCells(e.join(coarseTop, Seq("vec_id"))
       .join(fineTagged, Seq("ccell"))
       .select(col("vec_id"), col("cell"),
-        nanvl(cosine_sim(col("embedding"), col("centroid")), lit(-1.0)).as("ccos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("vec_id"), col("cell"))
+        nanvl(cosine_sim(col("embedding"), col("centroid")), lit(-1.0)).as("ccos")),
+      "vec_id", "cell", nprobe)
   }
 
   // ------------------------------------------------------------ components
@@ -1606,13 +1578,10 @@ object Dedup {
       batch.select(col("doc_id")), "doc_id")
   }
 
-  // keyed by (context, dir) — the Curation.pairsMemo discipline, including
-  // its one-session-per-context assumption (the loaded frame is bound to
-  // the session that read it): the corpus index is built + persisted ONCE
-  // per (session, corpus) and every later call reads it back, so the gate/
-  // bench entry times what an incremental ingest actually pays per batch.
-  private val minhashIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
+  // the corpus index is built + persisted ONCE per (session, corpus) and
+  // every later call reads it back, so the gate/bench entry times what an
+  // incremental ingest actually pays per batch
+  private val minhashIndexMemo = new SessionMemo[String, DataFrame]
 
   /** Gate/bench form: the batch is a deterministic 1/4 slice of documents
     * (doc_id % 4 == 0 — the testdata's near-dup twins are uniform over ids,
@@ -1626,22 +1595,19 @@ object Dedup {
   }
 
   private def persistedMinhashIndexPath(s: SparkSession, dir: String): String =
-    Similarity.sessionScratchPath(s, "graft_minhash_index", dir)
+    SessionMemo.scratchPath(s, "graft_minhash_index", dir)
 
   /** The session's persisted 3/4-corpus signature index (built once per
     * (session, corpus), read back after) — shared by the incremental gate
     * entry and the index inventory.
     */
-  private def persistedMinhashIndex(s: SparkSession, dir: String): DataFrame = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    minhashIndexMemo.keySet.removeIf(_._1 != ctx)
-    minhashIndexMemo.computeIfAbsent((ctx, dir), { _ =>
+  private def persistedMinhashIndex(s: SparkSession, dir: String): DataFrame =
+    minhashIndexMemo(s, dir) {
       val path = persistedMinhashIndexPath(s, dir)
       saveMinhashIndex(s,
         Tables(s, dir).documents.filter(col("doc_id") % 4 =!= 0), path)
       loadMinhashIndex(s, path)
-    })
-  }
+    }
 
   // ---------------------------------------------- embedding index / incremental
   /** Persist the EMBEDDING near-dup index: raw vectors plus their
@@ -1861,26 +1827,22 @@ object Dedup {
       .orderBy(col("v1"), col("v2"))
   }
 
-  private val embIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]()
+  private val embIndexMemo = new SessionMemo[String, (DataFrame, DataFrame)]
 
   private def persistedEmbIndexPath(s: SparkSession, dir: String): String =
-    Similarity.sessionScratchPath(s, "graft_emb_index", dir)
+    SessionMemo.scratchPath(s, "graft_emb_index", dir)
 
   /** The session's persisted 3/4-corpus embedding index (built once per
     * (session, corpus), served from disk after) — shared by the
     * incremental gate entry and the bucket audit.
     */
-  private def persistedEmbIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    embIndexMemo.keySet.removeIf(_._1 != ctx)
-    embIndexMemo.computeIfAbsent((ctx, dir), { _ =>
+  private def persistedEmbIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    embIndexMemo(s, dir) {
       val path = persistedEmbIndexPath(s, dir)
       saveEmbeddingIndex(s,
         Tables(s, dir).embeddings.filter(col("vec_id") % 4 =!= 0), path)
       loadEmbeddingIndex(s, path)
-    })
-  }
+    }
 
   /** Gate/bench form — the [[minhashIncremental]] slice discipline on
     * vectors: batch = vec_id % 4 == 0, index = the persisted other 3/4.

@@ -1033,7 +1033,7 @@ object Layout {
     * corpus) like the other skipping gates.
     */
   def bloomLookup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.ops.Similarity.sessionScratchPath(
+    val tmp = graft.ops.SessionMemo.scratchPath(
       s, "graft_bloomm", dir) + "/documents"
     val mp = new org.apache.hadoop.fs.Path(s"$tmp/$BloomManifestDir")
     if (!mp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(mp)) {
@@ -1056,12 +1056,12 @@ object Layout {
     * whole table (ORACLE-EXACT: pruning moves file-open work, never
     * rows; the kept-files < total assertion lives in LayoutSpec). The
     * clustered copy + manifest build once per (session, corpus) — the
-    * indexMemo discipline — so the bench's best-of-N times the PRUNED
+    * SessionMemo discipline — so the bench's best-of-N times the PRUNED
     * READ, not the one-time layout job, and repeat runs don't leak a
     * temp dir each.
     */
   def skippingRead(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.ops.Similarity.sessionScratchPath(
+    val tmp = graft.ops.SessionMemo.scratchPath(
       s, "graft_skip", dir) + "/lineitem"
     // memoize through the same FS abstraction the writes use — a
     // java.io.File probe always misses on any non-local default FS, and
@@ -1098,7 +1098,7 @@ object Layout {
     * grid (unequal raw widths — the scaladoc's measured pruning loss).
     */
   def skippingReadMulti(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.ops.Similarity.sessionScratchPath(
+    val tmp = graft.ops.SessionMemo.scratchPath(
       s, "graft_skipz", dir) + "/orders"
     val mp = new org.apache.hadoop.fs.Path(s"$tmp/$ManifestDir")
     if (!mp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(mp)) {
@@ -1139,10 +1139,10 @@ object Layout {
     */
   /** The memoized partitionBy(day) events copy + two-column manifest the
     * partitioned-skipping gates share (one build per session + corpus —
-    * the indexMemo discipline).
+    * the SessionMemo discipline).
     */
   private def partitionedEventsDir(s: SparkSession, dir: String): String = {
-    val tmp = graft.ops.Similarity.sessionScratchPath(
+    val tmp = graft.ops.SessionMemo.scratchPath(
       s, "graft_skipp", dir) + "/events"
     val mp = new org.apache.hadoop.fs.Path(s"$tmp/$ManifestDir")
     if (!mp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(mp)) {
@@ -1227,7 +1227,7 @@ object Layout {
     * LayoutSpec. Built once per (session, corpus).
     */
   def skippingReadZ3(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.ops.Similarity.sessionScratchPath(
+    val tmp = graft.ops.SessionMemo.scratchPath(
       s, "graft_skipz3", dir) + "/lineitem"
     val mp = new org.apache.hadoop.fs.Path(s"$tmp/$ManifestDir")
     if (!mp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(mp)) {

@@ -362,19 +362,16 @@ object Maintenance {
   }
 
   // ------------------------------------------------------------ gate form
-  // the scratch world (one per session+corpus, the indexMemo discipline):
+  // the scratch world (one per session+corpus, the SessionMemo discipline):
   // small deterministic slices of the corpus built into one artifact of
   // every family, each grown past its build by marker-committed appends —
   // so the gate/bench entry times what a nightly maintenance PASS costs
   // over already-built artifacts, not the builds themselves
-  private val worldMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
+  private val worldMemo = new SessionMemo[String, String]
 
   private[ops] def buildWorld(s: SparkSession, dir: String): String = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    worldMemo.keySet.removeIf(_._1 != ctx)
-    worldMemo.computeIfAbsent((ctx, dir), { _ =>
-      val base = Similarity.sessionScratchPath(s, "graft_maint", dir)
+    worldMemo(s, dir) {
+      val base = SessionMemo.scratchPath(s, "graft_maint", dir)
       val emb = Tables(s, dir).embeddings
         .select(col("vec_id"), col("embedding"), col("label"))
       val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
@@ -449,7 +446,7 @@ object Maintenance {
       graft.etl.JsonEtl.joinUpsertLeftAt(s, s"$base/jv",
         orders.filter(col("o_orderkey") % 2 === 1), 1L, Seq("c_custkey"))
       base
-    })
+    }
   }
 
   /** Gate/bench form (rows-only — artifact state is engine-internal): one

@@ -548,11 +548,10 @@ object Profile {
       buckets)
   }
 
-  // one baseline artifact per (session, corpus): the indexMemo discipline —
+  // one baseline artifact per (session, corpus): the SessionMemo discipline —
   // the gate/bench entry times what steady-state monitoring costs (bucket
   // the current snapshot, join two 10-row frames), not the baseline build
-  private val psiBaseMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
+  private val psiBaseMemo = new SessionMemo[String, String]
 
   /** [[distributionDrift]] served from the persisted baseline — the
     * deployment form (baseline stamped at release, every later snapshot
@@ -561,13 +560,11 @@ object Profile {
     * bit of the report.
     */
   def distributionDriftFed(s: SparkSession, dir: String): DataFrame = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    psiBaseMemo.keySet.removeIf(_._1 != ctx)
-    val path = psiBaseMemo.computeIfAbsent((ctx, dir), { _ =>
-      val p = Similarity.sessionScratchPath(s, "graft_psi_base", dir)
+    val path = psiBaseMemo(s, dir) {
+      val p = SessionMemo.scratchPath(s, "graft_psi_base", dir)
       savePsiBaseline(Tables(s, dir).documents.filter(col("doc_id") % 2 === 0), p)
       p
-    })
+    }
     psiAgainstBaseline(s, path,
       Tables(s, dir).documents.filter(col("doc_id") % 2 =!= 0))
   }

@@ -10,21 +10,29 @@ import graft.functions.cosine_sim
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY §2.D).
   *
-  * Three engines, one contract (query_id, rank, neighbor_id, cosine):
-  *  - [[bruteforceTopk]] — exact scorer, O(Q·N); the correctness baseline
-  *    (oracle-checked) and the right choice when Q is small enough to
-  *    broadcast, which is exactly how it's planned here.
-  *  - [[lshTopk]] — random-hyperplane LSH, 4 tables × 8 bits: candidates
-  *    share a bucket in ≥1 table; work is Σ|bucket|² per table. The 100 TB
-  *    path for high-recall near-neighbor retrieval.
-  *  - [[ivfTopk]] — IVF-style coarse quantization: vectors are assigned to
-  *    their nearest centroid cell; queries probe the 3 nearest cells. The
-  *    100 TB path when the corpus is cluster-structured (cells become
-  *    partition-pruned parquet).
+  * One pipeline, one contract (query_id, rank, neighbor_id, cosine): every
+  * index shape is an [[AnnSpec]] served by [[topk]], which runs the same
+  * stages for all of them —
+  *  1. transform: none, the JL ±1 sheet, a learned PCA basis or a learned
+  *     OPQ rotation, applied to corpus and queries alike (one compiled
+  *     [[graft.functions.MatVec]] pass, the matrix a plan literal);
+  *  2. IVF (optional): vectors live in their nearest coarse cell; each
+  *     query probes its `nprobe` nearest cells ([[probeCells]]);
+  *  3. code: candidates are scored by float cosine, LSH bucket equality,
+  *     the exact integer dot over int8 codes, or PQ table lookups (ADC,
+  *     raw or residual); the pre-filter restricts the encoded corpus;
+  *  4. shortlist: the best `shortlist` candidates per query
+  *     ([[shortlisted]]);
+  *  5. rerank: exact float cosine on the original vectors
+  *     ([[rerankExactFor]]).
+  * A flat code with no transform is already exact — brute force, or IVF's
+  * exact scan of the probed cells — so it skips stages 4-5.
   *
-  * Scoring everywhere is the codegen'd [[graft.functions.CosineSim]].
-  * LSH/IVF are rows-only for the driver; SimilaritySpec pins their recall
-  * against [[bruteforceTopk]].
+  * Models (transform, centroids, codebooks) and the encoded corpus are
+  * [[AnnModel]] parts: fed from a build, or trained/encoded inline.
+  * Scoring everywhere is the codegen'd [[graft.functions.CosineSim]]. Only
+  * the exact tiers are oracle-checked; SimilaritySpec pins every other
+  * tier's recall against brute force.
   */
 object Similarity {
 
@@ -42,15 +50,11 @@ object Similarity {
   }
 
   /** Exact float-cosine rerank of an id-only (query_id, neighbor_id)
-    * candidate list — the shared tail of every approximate tier (LSH,
-    * int8, int8+IVF, PQ): broadcast the query vectors, re-join neighbor
-    * embeddings by id, score with the codegen'd cosine, keep top-K. One
-    * copy so a rerank change (tie-break, NaN policy) can never diverge
-    * between tiers.
-    */
-  /** Exact rerank with an explicit (query_id, embedding) query frame —
-    * the seam that lets every retrieval tier serve an ARBITRARY query
-    * batch, not just corpus-resident probes.
+    * candidate list against an explicit (query_id, embedding) query frame
+    * — the shared tail of every approximate tier: broadcast the query
+    * vectors, re-join neighbor embeddings by id, score with the codegen'd
+    * cosine, keep top-K. One copy so a rerank change (tie-break, NaN
+    * policy) can never diverge between tiers.
     */
   private def rerankExactFor(e: DataFrame, cand: DataFrame,
       queries: DataFrame): DataFrame = {
@@ -64,31 +68,352 @@ object Similarity {
         cosine_sim(col("qe"), col("ne")).as("cosine")))
   }
 
-  // ------------------------------------------------------------ brute force
-  /** Exact top-k: the small probe side is broadcast, so the big side streams
-    * through one codegen'd scan — no shuffle except the final per-query
-    * top-k (which AQE keeps tiny).
+  /** The best `n` candidates per query by `order` (ties → lowest `id`),
+    * as (query_id, neighbor_id) — the one shortlist window of every
+    * approximate tier.
     */
-  def bruteforceTopk(s: SparkSession, dir: String): DataFrame =
-    bruteforceTopkForQueries(s, dir,
-      corpusQueries(Tables(s, dir).embeddings))
+  private def shortlisted(scored: DataFrame, order: Column, id: String,
+      n: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order, col(id))))
+      .filter(col("rk") <= n)
+      .select(col("query_id"), col(id).as("neighbor_id"))
 
-  /** [[bruteforceTopk]] over an ARBITRARY (query_id, embedding) batch —
-    * the exact-tier serving form (the right service when Q is small and
-    * recall must be 1.0). Same contract as the other *ForQueries forms:
-    * id-equal pairs excluded, external namespaces untouched.
+  /** Candidate pairs: the corpus codes (alias `v`) × the broadcast query
+    * side (alias `p`), agreeing on every `keys` column (IVF cell, LSH
+    * table + bucket), id-equal pairs excluded.
     */
-  def bruteforceTopkForQueries(s: SparkSession, dir: String,
-      queries: DataFrame): DataFrame = {
+  private def pairs(codes: DataFrame, qside: DataFrame,
+      keys: Seq[String]): DataFrame =
+    codes.as("v").join(broadcast(qside).as("p"),
+      (keys.map(k => col(s"v.$k") === col(s"p.$k")) :+
+        (col("v.vec_id") =!= col("p.query_id"))).reduce(_ && _))
+
+  // ------------------------------------------------------------ the pipeline
+  /** Top-K neighbors per query under one [[AnnSpec]] — the ANN entry
+    * point (stages in the object doc). `model` parts are fed; the rest
+    * train inline ([[train]]) and the corpus encodes inline ([[encode]])
+    * unless `model.codes` is fed — then the spec's pre-filter restricts
+    * the fed codes by an eligible-id semi-join instead.
+    *
+    * @param queries any (query_id, embedding) batch; default the corpus
+    *   probe batch ([[isQuery]]). Id-equal (query, neighbor) pairs are
+    *   excluded, which keeps self-retrieval semantics for corpus-resident
+    *   queries and is a no-op for an external id namespace.
+    */
+  def topk(s: SparkSession, dir: String, spec: AnnSpec,
+      model: AnnModel = AnnModel(),
+      queries: Option[DataFrame] = None): DataFrame = {
     val e = Tables(s, dir).embeddings
-    val q = broadcast(queries
-      .select(col("query_id"), col("embedding").as("qe")))
-    val scored = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-      .join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine_sim(col("qe"), col("ne")).as("cosine"))
-    topkPerQuery(scored)
+    val q = queries.getOrElse(corpusQueries(e))
+    val m = fit(s, dir, e, spec, model)
+    val toCode = transformOf(spec.transform, m.transform)
+    val tq = toCode(q)
+    lazy val tc = toCode(spec.filter.fold(e)(p => e.filter(p)))
+    val codes = m.codes match {
+      case Some(c) => spec.filter.fold(c)(p =>
+        c.join(e.filter(p).select(col("vec_id")), Seq("vec_id"), "left_semi"))
+      case None => encode(tc, spec, m)
+    }
+    lazy val cents = m.centroids.get
+    val cellKey = spec.nprobe.map(_ => "cell").toSeq
+    def flatScored: DataFrame = pairs(codes,
+        spec.nprobe.fold(tq.select(col("query_id"), col("embedding").as("qe")))(
+          probeCells(tq, cents, _)), cellKey)
+      .select(col("p.query_id"), col("v.vec_id").as("neighbor_id"),
+        cosine_sim(col("p.qe"), col("v.embedding")).as("cosine"))
+    if (spec.exact) topkPerQuery(flatScored)
+    else rerankExactFor(e, spec.code match {
+      case AnnCode.Flat =>
+        shortlisted(flatScored, col("cosine").desc, "neighbor_id", spec.shortlist)
+      case AnnCode.Lsh(tables, bits) =>
+        val qb = lshBuckets(tq.select(col("query_id").as("vec_id"),
+            col("embedding")), 64, tables, bits)
+          .select(col("vec_id").as("query_id"), col("tbl"), col("bucket"))
+        pairs(codes, qb, Seq("tbl", "bucket"))
+          .select(col("p.query_id"), col("v.vec_id").as("neighbor_id"))
+          .distinct()
+      case AnnCode.Int8 =>
+        // the query batch quantizes with the corpus codes' per-vector
+        // transform; under IVF both sides carry their cell
+        val qq = quantizeVectors(
+            tq.select(col("query_id").as("vec_id"), col("embedding")))
+          .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
+            col("inorm").as("q_inorm"), col("step").as("q_step"))
+        val (cside, qside) = spec.nprobe.fold((codes, qq)) { n =>
+          (codes.join(assignCells(tc, cents).select(col("vec_id"), col("cell")),
+              Seq("vec_id")),
+            probeCells(tq, cents, n).select(col("query_id"), col("cell"))
+              .join(qq, Seq("query_id")))
+        }
+        shortlisted(pairs(cside, qside, cellKey)
+          .select(col("p.query_id"), col("v.vec_id").as("neighbor_id"),
+            (graft.functions.dot_long(col("v.qv"), col("p.q_qv")).cast(DoubleType)
+              * col("v.step") * col("p.q_step")
+              * col("v.inorm") * col("p.q_inorm")).as("ascore")),
+          col("ascore").desc, "neighbor_id", spec.shortlist)
+      case _ => adcShortlist(tq, codes, m, spec)
+    }, q)
   }
+
+  /** The PQ ADC shortlist: per-query distance TABLES (each query
+    * subvector's L2² to every codebook centroid) are broadcast state, and
+    * a candidate's approximate distance is m table lookups summed — the
+    * corpus enters only through its m-byte codes. Under IVF the codes
+    * first restrict to each query's probed cells (only probed cells'
+    * codes ever meet a table); residual codes get one table per (query,
+    * probed cell), since the query's residual differs per cell. Query
+    * batches above `maxBatchQ` split into hash-chunks ([[adcChunks]]),
+    * each its own bounded-broadcast subplan, whose shortlists union.
+    */
+  private def adcShortlist(tq: DataFrame, codes: DataFrame, m: AnnModel,
+      spec: AnnSpec): DataFrame = {
+    val residual = spec.code == AnnCode.ResidualPq
+    val cbSub = withSub(m.codebooks.get, PqKsub)
+    adcChunks(tq, spec.maxBatchQ).map { chunk =>
+      val qc = tq.filter(chunk)
+      val probes = spec.nprobe.map(n => probeCells(qc, m.centroids.get, n)
+        .select(col("query_id"), col("qe"), col("cell").as("ivf_cell")))
+      val (qsub, keys) = probes match {
+        case Some(p) if residual =>
+          (p.join(broadcast(m.centroids.get.select(col("cell").as("ivf_cell"),
+              col("centroid").as("ccent"))), Seq("ivf_cell"))
+            .select(col("query_id"), col("ivf_cell"),
+              posexplode(subArray(zip_with(col("qe"), col("ccent"), (x, c) => x - c),
+                PqM, 64)).as(Seq("sub", "sv"))),
+            Seq(col("query_id"), col("ivf_cell")))
+        case _ =>
+          (subvectors(qc.select(col("query_id").as("vec_id"), col("embedding")),
+            PqM, 64), Seq(col("vec_id").as("query_id")))
+      }
+      val tables = broadcast(qsub.join(broadcast(cbSub), Seq("sub"))
+        .select(keys :+ col("cell").as("code") :+
+          l2sq(col("sv"), col("centroid")).as("qd"): _*))
+      val cand = probes.fold(codes)(p => codes.join(
+        broadcast(p.select(col("query_id"), col("ivf_cell"))), Seq("ivf_cell")))
+      val on = probes.map(_ => "query_id").toSeq ++
+        (if (residual) Seq("ivf_cell") else Nil) :+ "code"
+      shortlisted(cand.join(tables, on)
+        .filter(col("query_id") =!= col("vec_id"))
+        .groupBy(col("query_id"), col("vec_id"))
+        .agg(sum(col("qd")).as("adc"), count(lit(1)).as("n_subs"))
+        // a (query, neighbor) pair matches exactly m table entries; fewer
+        // would mean a dropped subspace silently shrinking the distance
+        .filter(col("n_subs") === PqM),
+        col("adc").asc, "vec_id", spec.shortlist)
+    }.reduce(_ unionByName _)
+  }
+
+  /** The `nprobe` nearest cells per query, (query_id, qe, cell) — a
+    * serving-time knob (probe more cells → higher recall, proportionally
+    * more scanned codes), which is exactly the dial [[tuneForRecall]]
+    * escalates.
+    */
+  private def probeCells(queries: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    topCells(queries.select(col("query_id"), col("embedding").as("qe"))
+      .join(broadcast(cents))
+      .select(col("query_id"), col("qe"), col("cell"),
+        cosine_sim(col("qe"), col("centroid")).as("ccos")),
+      "query_id", "cell", nprobe)
+
+  /** The cell-probe window: per `id`, keep the `n` rows of highest `ccos`
+    * (ties → lowest `cell`), dropping the score — shared by query probing
+    * here and [[graft.ops.Dedup.semantic]]'s multi-probe membership.
+    */
+  private[ops] def topCells(scored: DataFrame, id: String, cell: String,
+      n: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(
+        Window.partitionBy(col(id)).orderBy(col("ccos").desc, col(cell))))
+      .filter(col("rk") <= n)
+      .drop("rk", "ccos")
+
+  /** Fill the model parts a spec needs and `model` leaves empty, trained
+    * inline on the full corpus (a pre-filter is a serving-time argument,
+    * never a retrain): the PCA basis ([[trainPca]]); the OPQ rotation with
+    * its raw-PQ codebooks ([[trainOpq]]); IVF centroids ([[centroids]]) in
+    * the transformed space; PQ codebooks ([[pqCodebooks]]) — for residual
+    * codes, on the residuals of those centroids ([[residualVectors]]).
+    */
+  def train(s: SparkSession, dir: String, spec: AnnSpec,
+      model: AnnModel = AnnModel()): AnnModel =
+    fit(s, dir, Tables(s, dir).embeddings, spec, model)
+
+  /** [[train]] over the caller's read of the corpus table `e`. */
+  private def fit(s: SparkSession, dir: String, e: DataFrame, spec: AnnSpec,
+      model: AnnModel): AnnModel = {
+    requireComposes(spec)
+    val (rot, rotCb) = spec.transform match {
+      case AnnTransform.Pca => (model.transform.orElse(Some(trainPca(s, dir))), None)
+      case AnnTransform.Opq if model.transform.isEmpty =>
+        val (r, cb) = trainOpq(s, dir)
+        (Some(r), Some(cb))
+      case _ => (model.transform, None)
+    }
+    lazy val te = transformOf(spec.transform, rot)(e)
+    val cents = model.centroids.orElse(spec.nprobe.map(_ => centroids(te)))
+    val cb = model.codebooks.orElse(spec.code match {
+      case AnnCode.Pq => rotCb.orElse(Some(pqCodebooks(te)))
+      case AnnCode.ResidualPq => Some(pqCodebooks(
+        residualVectors(te, cents.get).select(col("vec_id"), col("embedding"))))
+      case _ => None
+    })
+    AnnModel(rot, cents, cb, model.codes)
+  }
+
+  /** The compositions the pipeline serves: LSH buckets and PQ subspaces
+    * are laid out over the 64 original dimensions, so those codes take no
+    * dimension-reducing transform; LSH candidates are not cell-restricted;
+    * residual codes are relative to an IVF cell.
+    */
+  private def requireComposes(spec: AnnSpec): Unit = {
+    val fullDim = spec.transform == AnnTransform.Identity ||
+      spec.transform == AnnTransform.Opq
+    require(spec.code match {
+      case AnnCode.Flat | AnnCode.Int8 => true
+      case _: AnnCode.Lsh => fullDim && spec.nprobe.isEmpty
+      case AnnCode.Pq => fullDim
+      case AnnCode.ResidualPq => fullDim && spec.nprobe.isDefined
+    }, s"AnnSpec does not compose: $spec")
+  }
+
+  /** The spec's transform as a frame map over `embedding` (other columns
+    * pass through): identity, the JL sheet, or a fitted PCA basis / OPQ
+    * rotation collected once into plan literals.
+    */
+  private def transformOf(t: AnnTransform,
+      fitted: Option[DataFrame]): DataFrame => DataFrame = t match {
+    case AnnTransform.Identity => identity
+    case AnnTransform.Jl => _.withColumn("embedding", projArray.cast("array<float>"))
+    case _ =>
+      val r = rotationLiteral(fitted.get)
+      rotateFrame(_, r)
+  }
+
+  /** The corpus encode stage — what [[AnnModel]]`.codes` holds for a spec:
+    * (vec_id, embedding) for flat codes (with the nearest IVF `cell` under
+    * IVF), LSH (vec_id, tbl, bucket) signatures, int8 codes
+    * ([[quantizeVectors]]), or PQ codes — [[buildIvfpqIndex]] under IVF.
+    * `tc` is the transformed corpus.
+    */
+  private def encode(tc: DataFrame, spec: AnnSpec, m: AnnModel): DataFrame =
+    spec.code match {
+      case AnnCode.Flat =>
+        if (spec.nprobe.isDefined) assignCells(tc, m.centroids.get)
+        else tc.select(col("vec_id"), col("embedding"))
+      case AnnCode.Lsh(tables, bits) => lshBuckets(tc, 64, tables, bits)
+      case AnnCode.Int8 => quantizeVectors(tc)
+      case _ if spec.nprobe.isDefined => buildIvfpqIndex(tc, m.centroids.get,
+        m.codebooks.get, residual = spec.code == AnnCode.ResidualPq)
+      case _ => assignCodes(subvectors(tc, PqM, 64), withSub(m.codebooks.get, PqKsub))
+    }
+
+  /** [[topk]] with [[AnnSpec.Ivfpq]] over an arbitrary query batch, under
+    * the parameter names its serving callers use.
+    */
+  def ivfpqTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
+      shortlist: Int = 100,
+      codebooks: Option[DataFrame] = None,
+      precomputedCents: Option[DataFrame] = None,
+      precomputedCodes: Option[DataFrame] = None,
+      maxBatchQ: Int = MaxAdcBatchQ,
+      nprobe: Int = NProbe): DataFrame =
+    topk(s, dir, AnnSpec.Ivfpq.copy(nprobe = Some(nprobe), shortlist = shortlist,
+      maxBatchQ = maxBatchQ), AnnModel(None, precomputedCents, codebooks,
+      precomputedCodes), Some(queries))
+
+  // ------------------------------------------------------------ declared tiers
+  /** Every declared `ann_*` top-k query: its spec and model source. The
+    * filtered tiers pre-filter `label % 2 = 0`; the gate oracle-checks the
+    * two exact ones.
+    */
+  private[graft] val annQueries: Seq[(String, AnnSpec, AnnSource)] = {
+    import AnnSpec._
+    import AnnSource._
+    Seq(
+      ("ann_bruteforce_topk", Exact, Inline),
+      ("ann_filtered_bruteforce", Exact.filtered(evenLabel), Inline),
+      ("ann_lsh_topk", Lsh, Inline),
+      ("ann_ivf_topk", Ivf, Inline),
+      ("ann_filtered_topk", Ivf.filtered(evenLabel), Inline),
+      ("ann_jl_topk", Jl, Inline),
+      ("ann_pca_topk", Pca, Inline),
+      ("ann_int8_topk", Int8, Inline),
+      ("ann_int8_ivf_topk", Int8Ivf, Inline),
+      ("ann_pq_topk", Pq, Inline),
+      ("ann_opq_topk", Opq, Inline),
+      ("ann_opq_topk_fed", Opq, Fed),
+      ("ann_opq_ivfpq_topk", OpqIvfpq, Inline),
+      ("ann_opq_ivfpq_topk_fed", OpqIvfpq, Fed),
+      ("ann_opq_ivfpq_topk_indexed", OpqIvfpq, Indexed),
+      ("ann_opq_ivfpq_residual_topk", OpqIvfpqResidual, Inline),
+      ("ann_opq_ivfpq_residual_topk_fed", OpqIvfpqResidual, Fed),
+      ("ann_opq_ivfpq_residual_topk_indexed", OpqIvfpqResidual, Indexed),
+      ("ann_ivfpq_topk", Ivfpq, Inline),
+      ("ann_ivfpq_topk_fed", Ivfpq, Fed),
+      ("ann_ivfpq_topk_indexed", Ivfpq, Indexed),
+      ("ann_ivfpq_residual_topk", IvfpqResidual, Inline),
+      ("ann_filtered_topk_indexed", Ivfpq.filtered(evenLabel), Indexed),
+      ("ann_filtered_opq_indexed", OpqIvfpq.filtered(evenLabel), Indexed),
+      ("ann_filtered_residual_indexed", OpqIvfpqResidual.filtered(evenLabel),
+        Indexed))
+  }
+
+  /** A declared tier's model: nothing fed (inline), or the session's
+    * persisted index read back as models only (fed — the corpus still
+    * encodes per call) or models plus codes (indexed).
+    */
+  private[graft] def modelFor(s: SparkSession, dir: String, spec: AnnSpec,
+      source: AnnSource): AnnModel = source match {
+    case AnnSource.Inline => AnnModel()
+    case AnnSource.Fed => persistedIndex(s, dir, spec).copy(codes = None)
+    case AnnSource.Indexed => persistedIndex(s, dir, spec)
+  }
+
+  // the full index (models + encoded corpus) of a PQ-coded shape is built
+  // and persisted ONCE per (session, corpus, shape) and every later call
+  // reads it back — so the bench's best-of-N min on the fed/indexed
+  // entries times what an at-scale retrieval job actually pays, not the
+  // build work the one-shot entries deliberately include
+  private val indexMemo = new SessionMemo[(String, String), AnnModel]
+
+  /** The session's persisted index for a PQ-coded spec — raw or OPQ, raw
+    * or residual codes, always with IVF — written through the real
+    * [[saveIndex]] / [[saveOpqIndex]] artifact (models, codes, encoding
+    * flag and rotation under one path, the full maintenance lifecycle),
+    * so every fed and indexed rung serves exactly what a deployment would
+    * load. The flat OPQ rung reads its rotation and codebooks from the
+    * "OPQ,IVF,PQ" artifact: both are [[trainOpq]]'s output.
+    */
+  private def persistedIndex(s: SparkSession, dir: String,
+      spec: AnnSpec): AnnModel = {
+    val shape = AnnSpec(spec.transform, Some(NProbe), spec.code)
+    require(spec.code == AnnCode.Pq || spec.code == AnnCode.ResidualPq,
+      s"persisted indexes hold PQ codes: $spec")
+    val residual = spec.code == AnnCode.ResidualPq
+    val prefix = (if (spec.transform == AnnTransform.Opq) "graft_opq"
+      else "graft_ann") + (if (residual) "res" else "") + "_index"
+    indexMemo(s, (dir, prefix)) {
+      val path = SessionMemo.scratchPath(s, prefix, dir)
+      val e = Tables(s, dir).embeddings
+      val m = fit(s, dir, e, shape, AnnModel())
+      val (cents, cb) = (m.centroids.get, m.codebooks.get)
+      val codes = encode(transformOf(shape.transform, m.transform)(e), shape, m)
+      m.transform match {
+        case Some(rot) =>
+          saveOpqIndex(path, rot, cents, cb, codes, residual)
+          val (r, c, b, x) = loadOpqIndex(s, path)
+          AnnModel(Some(r), Some(c), Some(b), Some(x))
+        case None =>
+          saveIndex(path, cents, cb, codes, residual)
+          val (c, b, x) = loadIndex(s, path)
+          AnnModel(None, Some(c), Some(b), Some(x))
+      }
+    }
+  }
+
+  private def annIndexPath(s: SparkSession, dir: String): String =
+    SessionMemo.scratchPath(s, "graft_ann_index", dir)
 
   // ------------------------------------------------------------ LSH
   /** Default geometry: 4 tables × 4 bits = 16 buckets/table — wider buckets
@@ -98,8 +423,8 @@ object Similarity {
     * parameters (at 100 TB you want 16-20 bits, which must not be a
     * recompile); SimilaritySpec pins measured recall at two geometries.
     */
-  val DefaultTables = 4
-  val DefaultBits = 4
+  final val DefaultTables = 4
+  final val DefaultBits = 4
 
   /** Deterministic pseudo-random hyperplanes via splitmix64 — fixed seed so
     * every run (and the recall spec) sees the same buckets.
@@ -143,40 +468,8 @@ object Similarity {
           numTables, bits, dim)).as(Seq("tbl", "bucket")))
   }
 
-  /** LSH top-k: hash-equi join on (table, bucket) — never all-pairs. Missing
-    * neighbors (no shared bucket) are the recall cost; the spec measures it.
-    * The candidate `distinct()` dedups (query_id, neighbor_id) pairs only —
-    * embeddings re-join after, so the widest exchange carries two longs per
-    * row, not two 64-float vectors.
-    */
-  def lshTopk(s: SparkSession, dir: String,
-      numTables: Int = DefaultTables, bits: Int = DefaultBits): DataFrame =
-    lshTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      numTables, bits)
-
-  /** [[lshTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form: the batch hashes through the SAME hash-derived
-    * hyperplanes (pure per-vector kernel), so corpus-resident queries get
-    * bit-identical buckets (parity spec-pinned). Geometry must match the
-    * corpus side's, as with every LSH artifact here.
-    */
-  def lshTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      numTables: Int = DefaultTables, bits: Int = DefaultBits): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val b = lshBuckets(e, 64, numTables, bits)
-    val qb = lshBuckets(queries.select(col("query_id").as("vec_id"),
-        col("embedding")), 64, numTables, bits)
-      .select(col("vec_id").as("query_id"), col("tbl"), col("bucket"))
-    val candIds = b.as("c").join(broadcast(qb).as("q"),
-        col("c.tbl") === col("q.tbl") && col("c.bucket") === col("q.bucket")
-          && col("c.vec_id") =!= col("q.query_id"))
-      .select(col("q.query_id"), col("c.vec_id").as("neighbor_id"))
-      .distinct()
-    rerankExactFor(e, candIds, queries)
-  }
-
   // ------------------------------------------------------------ IVF
-  private val NProbe = 3
+  private[graft] final val NProbe = 3
 
   /** Per-cell centroids: mean embedding per cell assignment. The initial
     * assignment comes from the `label` column (the corpus's coarse
@@ -540,128 +833,35 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("cell"))
   }
 
-  /** IVF top-k: assign every vector to its nearest centroid (cell), probe
-    * the [[NProbe]] nearest cells per query, score only those cells.
-    *
-    * @param precomputedCents fed [[centroids]] (or [[loadModels]]) output —
-    *   the train-once pipeline form its descendants (int8IvfTopk, pqTopk,
-    *   ivfpqTopk) already had; `None` trains inline.
-    */
-  def ivfTopk(s: SparkSession, dir: String,
-      precomputedCents: Option[DataFrame] = None,
-      nprobe: Int = NProbe): DataFrame =
-    ivfTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      precomputedCents, nprobe)
-
-  /** [[ivfTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form: external queries rank the same broadcast centroid
-    * table to pick their probe cells (parity with the gate form
-    * spec-pinned for corpus-resident queries).
-    */
-  def ivfTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      precomputedCents: Option[DataFrame] = None,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val cents = precomputedCents.getOrElse(centroids(e))
-    val assigned = assignCells(e, cents)
-    // nprobe nearest cells per query — a serving-time knob (probe more
-    // cells → higher recall, proportionally more scanned codes), which is
-    // exactly the dial [[tuneForRecall]] escalates
-    val probes = queries
-      .select(col("query_id"), col("embedding").as("qe"))
-      .join(broadcast(cents))
-      .select(col("query_id"), col("qe"), col("cell"),
-        cosine_sim(col("qe"), col("centroid")).as("ccos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("qe"), col("cell"))
-    val scored = assigned.as("v").join(broadcast(probes).as("p"),
-        col("v.cell") === col("p.cell") && col("v.vec_id") =!= col("p.query_id"))
-      .select(col("p.query_id"), col("v.vec_id").as("neighbor_id"),
-        cosine_sim(col("p.qe"), col("v.embedding")).as("cosine"))
-    topkPerQuery(scored)
-  }
-
   // ------------------------------------------------------------ filtered ANN
-  /** Metadata-FILTERED exact top-k — "filtered vector search", the serving
-    * feature every production vector store ships (only neighbors matching
-    * an attribute predicate are eligible). This is the PRE-filter
-    * formulation: the predicate restricts the corpus side BEFORE scoring,
-    * so k is always filled from the eligible set — post-filtering a
-    * generic top-k under-fills k whenever selectivity < k/N. The predicate
-    * is a plain column filter, so it pushes to the parquet scan
-    * (PushedFilters) and the scored row count is selectivity-proportional.
-    * Exact tier, oracle-checked (the gate form filters `label % 2 = 0`).
-    */
-  def bruteforceFilteredTopk(s: SparkSession, dir: String,
-      pred: Column = col("label") % 2 === 0): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val q = broadcast(corpusQueries(e)
-      .select(col("query_id"), col("embedding").as("qe")))
-    val scored = e.filter(pred)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-      .join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine_sim(col("qe"), col("ne")).as("cosine"))
-    topkPerQuery(scored)
-  }
-
-  /** [[bruteforceFilteredTopk]]'s scale tier: the same pre-filter composed
-    * into the IVF probe — models stay trained on the FULL corpus (the
-    * filter is a serving-time argument; retraining per predicate would be
-    * absurd), only the probed-cell scan restricts to eligible vectors, so
-    * the scan cost is selectivity-proportional on top of IVF's cell
-    * restriction. Rows-only; the spec pins that every neighbor satisfies
-    * the predicate, that k fills whenever the eligible set can fill it,
-    * and recall vs the filtered-exact tier at the usual floor.
-    */
-  /** Serving-time ROUTER for filtered search — the standard vector-store
-    * heuristic: when the predicate is highly selective the eligible set is
-    * small enough that exact scoring is both cheaper than probing AND
-    * returns recall 1.0, so route exact; above [[exactThreshold]] eligible
-    * rows, the IVF pre-filter tier serves. The decision statistic is one
-    * count over the pushed-down predicate (column-pruned scan). Exposed
-    * separately as [[filteredServingTier]] so the decision itself is
-    * spec-pinnable and loggable by a serving layer.
+  /** Serving-time ROUTER for metadata-filtered search ("filtered vector
+    * search": only neighbors matching an attribute predicate are
+    * eligible) — the standard vector-store heuristic: when the predicate
+    * is highly selective the eligible set is small enough that exact
+    * scoring is both cheaper than probing AND returns recall 1.0, so route
+    * exact; above `exactThreshold` eligible rows, the IVF pre-filter tier
+    * serves. Both tiers pre-filter (k always fills from the eligible set;
+    * post-filtering a generic top-k under-fills k whenever selectivity <
+    * k/N). The decision statistic is one count over the pushed-down
+    * predicate (column-pruned scan). Exposed separately as
+    * [[filteredServingTier]] so the decision itself is spec-pinnable and
+    * loggable by a serving layer.
     */
   def filteredTopkAuto(s: SparkSession, dir: String,
-      pred: Column = col("label") % 2 === 0,
+      pred: Column = AnnSpec.evenLabel,
       exactThreshold: Long = 10000L,
       precomputedCents: Option[DataFrame] = None,
-      nprobe: Int = NProbe): DataFrame =
-    if (filteredServingTier(s, dir, pred, exactThreshold) == "exact")
-      bruteforceFilteredTopk(s, dir, pred)
-    else ivfFilteredTopk(s, dir, pred, precomputedCents, nprobe)
+      nprobe: Int = NProbe): DataFrame = {
+    val tier =
+      if (filteredServingTier(s, dir, pred, exactThreshold) == "exact") AnnSpec.Exact
+      else AnnSpec.Ivf.copy(nprobe = Some(nprobe))
+    topk(s, dir, tier.filtered(pred), AnnModel(centroids = precomputedCents))
+  }
 
   def filteredServingTier(s: SparkSession, dir: String, pred: Column,
       exactThreshold: Long = 10000L): String =
     if (Tables(s, dir).embeddings.filter(pred)
       .select(col("vec_id")).count() <= exactThreshold) "exact" else "ivf"
-
-  def ivfFilteredTopk(s: SparkSession, dir: String,
-      pred: Column = col("label") % 2 === 0,
-      precomputedCents: Option[DataFrame] = None,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val cents = precomputedCents.getOrElse(centroids(e))
-    val assigned = assignCells(
-      e.filter(pred).select(col("vec_id"), col("embedding")), cents)
-    val probes = corpusQueries(e)
-      .select(col("query_id"), col("embedding").as("qe"))
-      .join(broadcast(cents))
-      .select(col("query_id"), col("qe"), col("cell"),
-        cosine_sim(col("qe"), col("centroid")).as("ccos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("qe"), col("cell"))
-    val scored = assigned.as("v").join(broadcast(probes).as("p"),
-        col("v.cell") === col("p.cell") && col("v.vec_id") =!= col("p.query_id"))
-      .select(col("p.query_id"), col("v.vec_id").as("neighbor_id"),
-        cosine_sim(col("p.qe"), col("v.embedding")).as("cosine"))
-    topkPerQuery(scored)
-  }
 
   // ------------------------------------------------------------ centroids
   /** Per-label exact centroids — the audit a clustering/IVF pipeline runs
@@ -772,67 +972,15 @@ object Similarity {
       lit(0.0), (a, t) => a + t) / ProjNorm
   }
 
-  /** Array-form projected vectors for retrieval: (vec_id, pv array<float>).
-    * Float is deliberate — the point of the reduced space is a 4× smaller
-    * scan (16 floats = 64 bytes/vector vs 256), and the coarse scorer is
-    * the same compiled [[graft.functions.CosineSim]] kernel the exact tier
-    * uses. Like [[quantizeVectors]], this runs once per corpus build.
+  /** The JL-projected corpus, (vec_id, embedding array<float>) — the
+    * encoded corpus ([[AnnModel]]`.codes`) of [[AnnSpec.Jl]]. Float is
+    * deliberate — the point of the reduced space is a 4× smaller scan (16
+    * floats = 64 bytes/vector vs 256), and the coarse scorer is the same
+    * compiled [[graft.functions.CosineSim]] kernel the exact tier uses.
+    * Like [[quantizeVectors]], this runs once per corpus build.
     */
   private[graft] def projectVectors(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), projArray.cast("array<float>").as("pv"))
-
-  /** JL-reduced two-stage retrieval: coarse cosine in the 16-dim projected
-    * space over ALL vectors (4× fewer bytes and multiplies than the 64-dim
-    * scan — the compiled kernel's cost is linear in dim), keep a
-    * `shortlist` per query, exact 64-dim rerank of the shortlist only.
-    *
-    * vs [[int8Topk]], the other full-scan-but-cheaper tier: int8 compresses
-    * the VALUES (4× fewer bytes, same dim count); JL compresses the
-    * DIMENSIONS (4× fewer of everything, values stay float). They stack —
-    * a production pipeline quantizes the projected vectors — but each is
-    * kept single-trick here so the spec can attribute recall to one
-    * mechanism. Rows-only for the driver (the shortlist boundary is
-    * projection-dependent); recall vs [[bruteforceTopk]] spec-pinned.
-    */
-  def jlTopk(s: SparkSession, dir: String, shortlist: Int = 50,
-      precomputedProjected: Option[DataFrame] = None): DataFrame =
-    jlTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, precomputedProjected)
-
-  /** [[jlTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form: the query batch projects through the SAME literal ±1
-    * sheet (pure map), so corpus-resident queries land on bit-identical
-    * reduced vectors (parity spec-pinned).
-    */
-  def jlTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      shortlist: Int = 50,
-      precomputedProjected: Option[DataFrame] = None): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val pv = precomputedProjected.getOrElse(projectVectors(e))
-    val qpv = projectVectors(
-        queries.select(col("query_id").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("query_id"), col("pv").as("q_pv"))
-    coarseRerankTopk(e, pv, shortlist, queries, qpv)
-  }
-
-  /** The reduced-space two-stage scaffold [[jlTopk]] and [[pcaTopk]]
-    * share: coarse cosine over the (vec_id, pv) reduced vectors, keep
-    * `shortlist` per query, exact full-dim rerank of the shortlist only.
-    * `qpv` is the query batch in the same reduced space.
-    */
-  private def coarseRerankTopk(e: DataFrame, pv: DataFrame,
-      shortlist: Int, queries: DataFrame, qpv: DataFrame): DataFrame = {
-    val q = broadcast(qpv)
-    val cheap = pv.join(q, col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine_sim(col("pv"), col("q_pv")).as("ascore"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("ascore").desc, col("neighbor_id"))
-    val short = cheap.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    rerankExactFor(e, short, queries)
-  }
+    e.select(col("vec_id"), projArray.cast("array<float>").as("embedding"))
 
   /** Train a PCA basis for the corpus: one distributed covariance pass
     * (spark.ml PCA — a treeAggregate Gramian, then a driver-side
@@ -840,7 +988,8 @@ object Similarity {
     * driver step is microseconds) returning (comp, weights,
     * explained_var) — a driver-scale model artifact exactly like the IVF
     * centroid and PQ codebook frames, persistable the same way (plain
-    * parquet) and fed back via [[pcaTopk]]'s `precomputedComponents`.
+    * parquet) and fed back as [[AnnModel]]`.transform` of
+    * [[AnnSpec.Pca]].
     */
   def trainPca(s: SparkSession, dir: String, k: Int = ProjK): DataFrame = {
     import org.apache.spark.ml.feature.PCA
@@ -854,46 +1003,6 @@ object Similarity {
     (0 until k).map(j => (j.toLong,
         Array.tabulate(pc.numRows)(i => pc(i, j)).toSeq, ev(j)))
       .toDF("comp", "weights", "explained_var")
-  }
-
-  /** PCA-reduced two-stage retrieval — the LEARNED sibling of [[jlTopk]]:
-    * same compiled MatVec projection, same coarse-cosine + exact-rerank
-    * scaffold, but the k×dim matrix is the corpus's own top-k variance
-    * directions instead of a random ±1 sheet, so at equal k the coarse
-    * space discards the least-informative directions rather than an
-    * expectation-preserving random mix. Coarse cosine is invariant to the
-    * eigenvector sign ambiguity (a simultaneous sign flip of one reduced
-    * coordinate leaves every pairwise dot term unchanged), so rankings
-    * don't depend on which LAPACK the driver linked.
-    *
-    * The model rides the plan as literals (k·dim doubles, like the JL
-    * sheet); training is one pass, amortized across query batches via
-    * `precomputedComponents` — the same train-once shape as the IVF/PQ
-    * tiers. Rows-only for the driver; SimilaritySpec pins recall vs brute
-    * force, basis orthonormality, variance ordering, and fed-vs-inline
-    * equality.
-    */
-  def pcaTopk(s: SparkSession, dir: String, shortlist: Int = 50,
-      precomputedComponents: Option[DataFrame] = None): DataFrame =
-    pcaTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, precomputedComponents)
-
-  /** [[pcaTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form: queries reduce through the SAME learned basis (fed or
-    * trained inline), the [[jlTopkForQueries]] contract.
-    */
-  def pcaTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      shortlist: Int = 50,
-      precomputedComponents: Option[DataFrame] = None): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val m = rotationLiteral(precomputedComponents.getOrElse(trainPca(s, dir)))
-    val k = m.length
-    def reduce(df: DataFrame): DataFrame = df.select(col("vec_id"),
-      graft.functions.mat_vec(col("embedding"), m.flatten, k, 64, 1.0)
-        .cast("array<float>").as("pv"))
-    val qpv = reduce(queries.select(col("query_id").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("query_id"), col("pv").as("q_pv"))
-    coarseRerankTopk(e, reduce(e), shortlist, queries, qpv)
   }
 
   private[graft] val ProjK = 16
@@ -935,116 +1044,6 @@ object Similarity {
         (col("scale") / 127.0).as("step"))
   }
 
-  /** Two-stage quantized retrieval (the reason [[quantize]] exists): the
-    * cheap pass scores EVERY vector with the exact-integer
-    * [[graft.functions.DotLong]] over int8 codes — approximate cosine =
-    * dotL · step₁ · step₂ · inorm₁ · inorm₂ — keeps a `shortlist` per
-    * query, and only the shortlist pays the exact float cosine rerank.
-    * At 100 TB the int8 corpus is 4× smaller than the float one and the
-    * cheap pass is integer SIMD work; recall vs [[bruteforceTopk]] is
-    * spec-pinned (rows-only for the driver — the shortlist boundary is
-    * quantization-dependent).
-    */
-  /** @param precomputedQuantized fed [[quantizeVectors]] (or
-    *   [[loadInt8Codes]]) output — quantize once per corpus build, scan
-    *   the stored codes per batch.
-    */
-  def int8Topk(s: SparkSession, dir: String, shortlist: Int = 50,
-      precomputedQuantized: Option[DataFrame] = None): DataFrame =
-    int8TopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, precomputedQuantized)
-
-  /** [[int8Topk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form: the query batch quantizes with the SAME per-vector
-    * transform the corpus codes were built with (pure function, so a
-    * corpus-resident query gets bit-identical codes whether fed from the
-    * stored artifact or re-quantized here — parity spec-pinned).
-    */
-  def int8TopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      shortlist: Int = 50,
-      precomputedQuantized: Option[DataFrame] = None): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val qz = precomputedQuantized.getOrElse(quantizeVectors(e))
-    val q = broadcast(quantizeVectors(
-        queries.select(col("query_id").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-        col("inorm").as("q_inorm"), col("step").as("q_step")))
-    val cheap = qz.join(q, col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (graft.functions.dot_long(col("qv"), col("q_qv")).cast(DoubleType)
-          * col("step") * col("q_step") * col("inorm") * col("q_inorm")).as("ascore"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("ascore").desc, col("neighbor_id"))
-    val short = cheap.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    rerankExactFor(e, short, queries)
-  }
-
-  /** [[int8Topk]] composed with IVF cell restriction — the tier for the N
-    * where even the int8 full scan dominates: the cheap integer pass runs
-    * only inside each query's [[NProbe]] nearest cells (the [[ivfTopk]]
-    * candidate set), so per-query work is |probed cells| not N, and the
-    * scanned bytes are the 4×-smaller int8 codes of those cells. Each
-    * vector lives in exactly one cell and probes are distinct cells, so
-    * the cell join yields each (query, neighbor) at most once — no
-    * candidate distinct needed. Recall contract (spec-pinned, rows-only):
-    * the int8 shortlist + exact rerank recovers ≥90% of what full-float
-    * scoring of the SAME cells ([[ivfTopk]]) finds; recall vs brute force
-    * is capped by the cell-probing stage, a property of the IVF family on
-    * this near-random corpus, not of the quantization.
-    */
-  def int8IvfTopk(s: SparkSession, dir: String, shortlist: Int = 50,
-      precomputedCents: Option[DataFrame] = None,
-      precomputedQuantized: Option[DataFrame] = None,
-      nprobe: Int = NProbe): DataFrame =
-    int8IvfTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, precomputedCents, precomputedQuantized, nprobe)
-
-  /** [[int8IvfTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form ([[int8TopkForQueries]]' quantize contract +
-    * [[ivfTopkForQueries]]' probe contract; parity spec-pinned).
-    */
-  def int8IvfTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      shortlist: Int = 50,
-      precomputedCents: Option[DataFrame] = None,
-      precomputedQuantized: Option[DataFrame] = None,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val cents = precomputedCents.getOrElse(centroids(e))
-    val assigned = assignCells(e, cents).select(col("vec_id"), col("cell"))
-    // quantized corpus with its cell: the id-keyed join adds one narrow
-    // column to rows that were already being materialized
-    val qz = precomputedQuantized.getOrElse(quantizeVectors(e))
-      .join(assigned, Seq("vec_id"))
-    val probes = queries
-      .select(col("query_id"), col("embedding").as("qe"))
-      .join(broadcast(cents))
-      .select(col("query_id"), col("cell"),
-        cosine_sim(col("qe"), col("centroid")).as("ccos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("cell"))
-    val qq = quantizeVectors(
-        queries.select(col("query_id").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-        col("inorm").as("q_inorm"), col("step").as("q_step"))
-    val probeSide = broadcast(probes.join(qq, Seq("query_id")))
-    val cheap = qz.as("v").join(probeSide.as("p"),
-        col("v.cell") === col("p.cell") && col("v.vec_id") =!= col("p.query_id"))
-      .select(col("p.query_id"), col("v.vec_id").as("neighbor_id"),
-        (graft.functions.dot_long(col("v.qv"), col("p.q_qv")).cast(DoubleType)
-          * col("v.step") * col("p.q_step")
-          * col("v.inorm") * col("p.q_inorm")).as("ascore"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("ascore").desc, col("neighbor_id"))
-    val short = cheap.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    rerankExactFor(e, short, queries)
-  }
-
   // ------------------------------------------------------------ PQ
   /** Product-quantization codebooks (Jégou et al., IEEE TPAMI 2011 —
     * the FAISS-standard ANN compression): split the vector into `m`
@@ -1072,7 +1071,7 @@ object Similarity {
 
   /** The m subvector slices of a vector column, as an array-of-arrays —
     * shared by [[subvectors]] (corpus side) and the per-(query, cell)
-    * residual slicing in [[ivfpqResidualTopk]].
+    * residual slicing in [[adcShortlist]].
     */
   private def subArray(v: Column, m: Int, dim: Int): Column = {
     require(m > 0 && dim % m == 0,
@@ -1171,8 +1170,8 @@ object Similarity {
   }
 
   /** Per-query ADC distance tables are broadcast state: m·ksub rows/query
-    * raw ([[pqTopk]]/[[ivfpqTopk]]), nprobe·m·ksub rows/query residual
-    * ([[ivfpqResidualTopk]]) — a few KB per query, which at serving-batch
+    * raw, nprobe·m·ksub rows/query residual ([[adcShortlist]]) — a few KB
+    * per query, which at serving-batch
     * Q (100k+) would push one broadcast toward GBs. Batches above this
     * bound split into deterministic hash-chunks of ≤ MaxAdcBatchQ queries;
     * each chunk is its own bounded-broadcast ADC subplan (tables ≤ ~13 MB
@@ -1182,7 +1181,7 @@ object Similarity {
     * no-op below the bound — the count that sizes it is one column-pruned
     * scan of the query predicate.
     */
-  private[graft] val MaxAdcBatchQ = 4096
+  private[graft] final val MaxAdcBatchQ = 4096
 
   /** One predicate per ADC chunk (over the query frame's query_id):
     * `true` when the batch fits the bound, else
@@ -1199,93 +1198,12 @@ object Similarity {
   }
 
   /** The gate/bench query batch as a (query_id, embedding) frame — the 10
-    * lowest vec_ids of the corpus itself ([[isQuery]]). The *ForQueries
-    * serving forms accept any frame with this shape instead.
+    * lowest vec_ids of the corpus itself ([[isQuery]]); [[topk]] takes
+    * any frame with this shape instead.
     */
   private def corpusQueries(e: DataFrame): DataFrame =
     e.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("embedding"))
-
-  /** PQ ADC top-k: the asymmetric-distance scan. Each query precomputes a
-    * distance TABLE (its subvector's L2² to each of the m·ksub codebook
-    * centroids — Q·m·ksub rows, broadcast — Q bounded per subplan by
-    * [[MaxAdcBatchQ]] chunking); a neighbor's approximate
-    * distance is m table lookups summed — the corpus side touches only
-    * the m-byte codes, never the vectors. Shortlist by ADC distance,
-    * exact float-cosine rerank (the [[int8Topk]] discipline). Rows-only:
-    * codebooks are engine-internal float averages; recall vs brute force
-    * is spec-pinned. The ADC scan is N·m·Q lookup rows — when the query
-    * batch outgrows it, restrict the scan to IVF-probed cells exactly as
-    * [[int8IvfTopk]] does for int8 (that composition is FAISS's IVFPQ);
-    * the code path composes the same way via [[assignCells]].
-    */
-  /** @param codebooks precomputed [[pqCodebooks]] output — the pipeline
-    *   form: at scale codebooks train once per corpus build and every
-    *   retrieval reads them; `None` trains inline (the self-contained
-    *   convenience form the gate/bench time, ~2/3 of whose cost is the
-    *   training).
-    */
-  def pqTopk(s: SparkSession, dir: String, shortlist: Int = 100,
-      codebooks: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ): DataFrame =
-    pqTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, codebooks, maxBatchQ)
-
-  /** [[pqTopk]] over an ARBITRARY (query_id, embedding) query batch — the
-    * serving form: a retrieval service's queries arrive from outside the
-    * corpus, not as its 10 lowest vec_ids. Id-equal (query, neighbor)
-    * pairs are excluded, which preserves self-retrieval semantics when
-    * queries ARE corpus rows (the gate form — parity spec-pinned) and is
-    * a no-op for a disjoint external id namespace. The shared-`subs`
-    * staging of the corpus-query form is deliberately given up here: the
-    * query batch is its own frame, so its subvector pass is over Q rows,
-    * not a filter of the corpus scan.
-    */
-  def pqTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      shortlist: Int = 100, codebooks: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val cb = codebooks.getOrElse(pqCodebooks(e))
-    rerankExactFor(e, pqShortlist(e, queries, cb, shortlist, maxBatchQ),
-      queries)
-  }
-
-  /** The PQ ADC shortlist over an explicit corpus frame — the shared body
-    * of [[pqTopkForQueries]] and the OPQ tier (whose corpus/query frames
-    * are the ROTATED vectors while the exact rerank stays in the original
-    * space). Returns (query_id, neighbor_id) candidates.
-    */
-  private def pqShortlist(e: DataFrame, queries: DataFrame, cb: DataFrame,
-      shortlist: Int, maxBatchQ: Int): DataFrame = {
-    val cbSub = withSub(cb, PqKsub)
-    // corpus codes: (vec_id, sub, code) — m rows per vector, the compressed
-    // representation an at-scale run materializes once; the SAME
-    // assignCodes kernel that trained the codebooks
-    val codes = assignCodes(subvectors(e, PqM, 64), cbSub)
-    val qSubs = subvectors(queries.select(col("query_id").as("vec_id"),
-        col("embedding")), PqM, 64)
-      .select(col("vec_id").as("query_id"), col("sub"), col("sv"))
-    adcChunks(queries, maxBatchQ).map { chunk =>
-      // per-query distance tables over the SAME codebook — one broadcast
-      // per ≤ maxBatchQ-query chunk (the MaxAdcBatchQ bound)
-      val qTables = broadcast(qSubs.filter(chunk)
-        .join(broadcast(cbSub), Seq("sub"))
-        .select(col("query_id"), col("cell").as("code"),
-          l2sq(col("sv"), col("centroid")).as("qd")))
-      val cheap = codes.join(qTables, Seq("code"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(sum(col("qd")).as("adc"), count(lit(1)).as("n_subs"))
-        // a (query, neighbor) pair matches exactly m table entries; fewer
-        // would mean a dropped subspace silently shrinking the distance
-        .filter(col("n_subs") === PqM)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc").asc, col("vec_id"))
-      cheap.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= shortlist)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    }.reduce(_ unionByName _)
-  }
 
   // ------------------------------------------------------------ OPQ
   /** OPQ training is a rotation fit, not a corpus statistic — a handful
@@ -1296,16 +1214,17 @@ object Similarity {
   private[graft] val OpqTrainCap = 16384L
   private[graft] val OpqIters = 3
 
-  /** Rotate a frame's `embedding` by a row-major dim×dim matrix — one
-    * compiled [[graft.functions.MatVec]] pass; the matrix rides the plan
-    * as literals exactly like the JL sheet and the PCA basis. Other
-    * columns (vec_id, label) pass through untouched, so the rotated frame
-    * slots into every consumer of the original.
+  /** Map a frame's `embedding` through a row-major k×dim matrix (an OPQ
+    * rotation, or a PCA basis with k < dim) — one compiled
+    * [[graft.functions.MatVec]] pass; the matrix rides the plan as
+    * literals exactly like the JL sheet. Other columns (vec_id, label)
+    * pass through untouched, so the rotated frame slots into every
+    * consumer of the original.
     */
   private[graft] def rotateFrame(df: DataFrame,
       r: Array[Array[Double]], dim: Int = 64): DataFrame =
     df.withColumn("embedding",
-      graft.functions.mat_vec(col("embedding"), r.flatten, dim, dim, 1.0)
+      graft.functions.mat_vec(col("embedding"), r.flatten, r.length, dim, 1.0)
         .cast("array<float>"))
 
   /** Collect a (comp, weights) model frame — an OPQ rotation or a PCA
@@ -1341,8 +1260,8 @@ object Similarity {
     * [[OpqTrainCap]]; the corpus is only ever touched by the final
     * encode, exactly like the other fed-model tiers. Returns
     * (rotation rows (comp, weights) like the PCA basis, codebooks trained
-    * in the final rotated space) — feed both to [[opqTopk]] /
-    * [[saveOpqModel]].
+    * in the final rotated space) — the [[AnnModel]] transform and
+    * codebooks of [[AnnSpec.Opq]]; persist with [[saveOpqModel]].
     */
   def trainOpq(s: SparkSession, dir: String, iters: Int = OpqIters,
       trainCap: Long = OpqTrainCap): (DataFrame, DataFrame) =
@@ -1477,312 +1396,6 @@ object Similarity {
       .agg(sum(l2sq(col("sv"), col("centroid")))).head.getDouble(0)
   }
 
-  private val opqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]()
-  private val opqCentsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-
-  /** Session-memoized OPQ (rotation, codebooks) persisted to parquet —
-    * the [[persistedIndex]] discipline for the OPQ tiers: train once per
-    * (session, corpus), save via [[saveOpqModel]], serve every later call
-    * from the loaded frames. The bench delta between the one-shot and fed
-    * entries is the training cost a train-once deployment amortizes away.
-    * The IVF coarse quantizer is memoized SEPARATELY
-    * ([[persistedOpqCents]]) so a deployment serving only the flat OPQ
-    * tier never pays the rotated-corpus Lloyd pass it doesn't use.
-    */
-  private def persistedOpqModel(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    opqMemo.keySet.removeIf(_._1 != ctx)
-    opqMemo.computeIfAbsent((ctx, dir), { _ =>
-      val path = sessionScratchPath(s, "graft_opq_model", dir)
-      val (rot, cb) = trainOpq(s, dir)
-      saveOpqModel(path, rot, cb)
-      loadOpqModel(s, path)
-    })
-  }
-
-  private def persistedOpqCents(s: SparkSession, dir: String): DataFrame = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    opqCentsMemo.keySet.removeIf(_._1 != ctx)
-    opqCentsMemo.computeIfAbsent((ctx, dir), { _ =>
-      val path = sessionScratchPath(s, "graft_opq_cents", dir)
-      val (rot, _) = persistedOpqModel(s, dir)
-      val r = rotationLiteral(rot)
-      centroids(rotateFrame(Tables(s, dir).embeddings, r))
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-    })
-  }
-
-  /** [[opqTopk]] with the model fed from parquet (train-once form);
-    * output identical to the one-shot entry (spec-pinned).
-    */
-  def opqTopkFed(s: SparkSession, dir: String): DataFrame = {
-    val (rot, cb) = persistedOpqModel(s, dir)
-    opqTopk(s, dir, model = Some((rot, cb)))
-  }
-
-  /** [[opqIvfpqTopk]] with the model triple fed from parquet; corpus
-    * encode stays inline (the rotated-frame [[buildIvfpqIndex]] pass) —
-    * at scale the encoded index is itself a build artifact via
-    * `precomputedCodes`, exactly as in the raw IVFPQ ladder.
-    */
-  def opqIvfpqTopkFed(s: SparkSession, dir: String): DataFrame = {
-    val (rot, cb) = persistedOpqModel(s, dir)
-    opqIvfpqTopk(s, dir, model = Some((rot, persistedOpqCents(s, dir), cb)))
-  }
-
-  private val opqCodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-
-  /** [[opqIvfpqTopk]] with models AND the encoded rotated corpus fed from
-    * parquet — the steady-state serving shape of the composed tier
-    * ([[ivfpqTopkIndexed]]'s rung on the OPQ ladder): per query batch the
-    * job pays the query rotation (one MatVec over Q rows), cell probing,
-    * the ADC scan over probed cells' codes, and the exact rerank. The
-    * rotated corpus is encoded ONCE per (session, corpus) by the same
-    * [[buildIvfpqIndex]] pass the one-shot form runs inline.
-    */
-  /** The session's persisted raw-OPQ composed codes — built ONCE per
-    * (session, corpus) through the REAL composed-index artifact
-    * ([[saveOpqIndex]] — rotation + models + codes under one path with
-    * the full maintenance lifecycle), so the serving rungs serve exactly
-    * what a deployment would load, tombstone filtering included. Shared
-    * by the unfiltered and filtered indexed rungs.
-    */
-  private def persistedOpqCodes(s: SparkSession, dir: String): DataFrame = {
-    val (rot, cb) = persistedOpqModel(s, dir)
-    val cents = persistedOpqCents(s, dir)
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    opqCodesMemo.keySet.removeIf(_._1 != ctx)
-    opqCodesMemo.computeIfAbsent((ctx, dir), { _ =>
-      val path = sessionScratchPath(s, "graft_opq_index", dir)
-      val r = rotationLiteral(rot)
-      saveOpqIndex(path, rot, cents, cb,
-        buildIvfpqIndex(rotateFrame(Tables(s, dir).embeddings, r), cents, cb))
-      loadOpqIndex(s, path)._4
-    })
-  }
-
-  def opqIvfpqTopkIndexed(s: SparkSession, dir: String): DataFrame = {
-    val (rot, cb) = persistedOpqModel(s, dir)
-    opqIvfpqTopk(s, dir, model = Some((rot, persistedOpqCents(s, dir), cb)),
-      precomputedCodes = Some(persistedOpqCodes(s, dir)))
-  }
-
-  /** Metadata-filtered serving from the raw-OPQ composed index — the
-    * pre-filter eligible-id semi-join of [[ivfpqFilteredTopkIndexed]]
-    * applied to the rotated-space codes of the "OPQ,IVF,PQ" (raw-code)
-    * artifact; `pred = lit(true)` ≡ [[opqIvfpqTopkIndexed]] row-for-row
-    * (spec-pinned). The flagship residual twin is
-    * [[opqIvfpqResidualFilteredTopkIndexed]], where the full rationale
-    * lives.
-    */
-  def opqIvfpqFilteredTopkIndexed(s: SparkSession, dir: String,
-      pred: Column = col("label") % 2 === 0,
-      shortlist: Int = 100,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val eligible = e.filter(pred).select(col("vec_id"))
-    val (rot, cb) = persistedOpqModel(s, dir)
-    opqIvfpqTopk(s, dir, shortlist,
-      model = Some((rot, persistedOpqCents(s, dir), cb)),
-      precomputedCodes = Some(persistedOpqCodes(s, dir)
-        .join(eligible, Seq("vec_id"), "left_semi")),
-      nprobe = nprobe)
-  }
-
-  /** [[pqTopk]] with the OPQ rotation in front: corpus and queries rotate
-    * through the SAME learned R (one compiled MatVec each), the ADC
-    * shortlist runs in rotated space over the rotated-space codebooks, and
-    * the exact rerank stays in the ORIGINAL space (R is orthogonal, so
-    * rotated-space cosine equals original-space cosine up to float
-    * rounding — reranking on the originals avoids even that). Rows-only:
-    * the rotation is an engine-internal learned model; recall and the
-    * reconstruction-error win are spec-pinned.
-    */
-  def opqTopk(s: SparkSession, dir: String, shortlist: Int = 100,
-      model: Option[(DataFrame, DataFrame)] = None,
-      maxBatchQ: Int = MaxAdcBatchQ): DataFrame =
-    opqTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, model, maxBatchQ)
-
-  /** [[opqTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form ([[pqTopkForQueries]]' contract); feed
-    * `model = Some(loadOpqModel(...))` so serving pays only the two
-    * MatVec passes and the ADC scan.
-    */
-  def opqTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      shortlist: Int = 100,
-      model: Option[(DataFrame, DataFrame)] = None,
-      maxBatchQ: Int = MaxAdcBatchQ): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val (rotDf, cb) = model.getOrElse(trainOpq(s, dir))
-    val r = rotationLiteral(rotDf)
-    val rotE = rotateFrame(e, r)
-    val rotQ = rotateFrame(
-        queries.select(col("query_id").as("vec_id"), col("embedding")), r)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    rerankExactFor(e, pqShortlist(rotE, rotQ, cb, shortlist, maxBatchQ),
-      queries)
-  }
-
-  /** [[pqTopk]] composed with IVF cell restriction — IVFPQ, FAISS's
-    * flagship index shape: the ADC scan touches only the m-byte codes of
-    * each query's [[NProbe]] nearest cells, so per-query lookup work is
-    * Σ|probed cells|·m instead of N·m — the tier for when both N and the
-    * query batch are large. This variant encodes RAW vectors, not
-    * residuals (x − centroid): residual encoding buys finer per-cell
-    * quantization at the cost of per-cell code spaces; the restriction
-    * machinery is identical either way and raw codes keep ONE global
-    * codebook that trains once. Recall contract mirrors [[int8IvfTopk]]:
-    * the cell-probing stage caps recall vs brute force (an IVF-family
-    * property, spec floor), and the PQ-shortlist-within-cells quality is
-    * pinned against the full-scan [[pqTopk]] tier.
-    */
-  /** @param precomputedCodes fed [[buildIvfpqIndex]] (or [[loadIndex]])
-    *   output — the fully-materialized index form: corpus encode (the
-    *   assignCells + assignCodes passes) is a corpus-build artifact like
-    *   the models, so a retrieval service feeds all three and pays only
-    *   the probe + ADC scan per query batch.
-    */
-  def ivfpqTopk(s: SparkSession, dir: String, shortlist: Int = 100,
-      codebooks: Option[DataFrame] = None,
-      precomputedCents: Option[DataFrame] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame =
-    ivfpqTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, codebooks, precomputedCents, precomputedCodes, maxBatchQ,
-      nprobe)
-
-  /** [[ivfpqTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form ([[pqTopkForQueries]]' contract: id-equal pairs
-    * excluded, so corpus-resident queries keep self-retrieval semantics
-    * and external namespaces are untouched; parity spec-pinned). Combined
-    * with `precomputedCents`/`precomputedCodes` from [[loadIndex]], this
-    * is the full retrieval-service entry point: frozen index, external
-    * query traffic, chunk-bounded broadcasts.
-    */
-  def ivfpqTopkForQueries(s: SparkSession, dir: String, queries: DataFrame,
-      shortlist: Int = 100,
-      codebooks: Option[DataFrame] = None,
-      precomputedCents: Option[DataFrame] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val cents = precomputedCents.getOrElse(centroids(e))
-    val cb = codebooks.getOrElse(pqCodebooks(e))
-    val cbSub = withSub(cb, PqKsub)
-    val codes = precomputedCodes.getOrElse(
-      buildIvfpqIndex(e, cents, cb, residual = false))
-    rerankExactFor(e,
-      ivfpqShortlist(queries, cents, cbSub, codes, shortlist, maxBatchQ,
-        nprobe),
-      queries)
-  }
-
-  /** The IVFPQ cell-restricted ADC shortlist — the shared body of
-    * [[ivfpqTopkForQueries]] and the OPQ-composed tier (whose query frame
-    * and codes live in ROTATED space). The corpus enters only through the
-    * materialized `codes`; returns (query_id, neighbor_id).
-    */
-  private def ivfpqShortlist(queries: DataFrame, cents: DataFrame,
-      cbSub: DataFrame, codes: DataFrame, shortlist: Int,
-      maxBatchQ: Int, nprobe: Int = NProbe): DataFrame =
-    // per-chunk ADC subplans (≤ maxBatchQ queries each — the MaxAdcBatchQ
-    // broadcast bound): probes + distance tables broadcast per chunk, the
-    // shortlists union into one exact rerank
-    adcChunks(queries, maxBatchQ).map { chunk =>
-      val probes = queries.filter(chunk)
-        .select(col("query_id"), col("embedding").as("qe"))
-        .join(broadcast(cents))
-        .select(col("query_id"), col("cell"),
-          cosine_sim(col("qe"), col("centroid")).as("ccos"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-        .filter(col("rk") <= nprobe)
-        .select(col("query_id"), col("cell").as("ivf_cell"))
-      val qTables = broadcast(
-        subvectors(queries.filter(chunk)
-          .select(col("query_id").as("vec_id"), col("embedding")), PqM, 64)
-        .join(broadcast(cbSub), Seq("sub"))
-        .select(col("vec_id").as("query_id"), col("cell").as("code"),
-          l2sq(col("sv"), col("centroid")).as("qd")))
-      // cell restriction FIRST (codes ⋈ probes on ivf_cell), then the table
-      // lookup (⋈ on query_id + code) — only probed cells' codes ever meet
-      // a distance table
-      val cheap = codes.join(broadcast(probes), Seq("ivf_cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .join(qTables, Seq("query_id", "code"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(sum(col("qd")).as("adc"), count(lit(1)).as("n_subs"))
-        .filter(col("n_subs") === PqM)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc").asc, col("vec_id"))
-      cheap.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= shortlist)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    }.reduce(_ unionByName _)
-
-  /** OPQ composed with IVFPQ — FAISS's "OPQ,IVF,PQ" flagship recipe: the
-    * learned rotation runs in front of BOTH the coarse quantizer and the
-    * code space, so cell restriction and ADC happen entirely in rotated
-    * coordinates (rotation is orthogonal — cosine cell-ranking in rotated
-    * space equals original-space ranking up to float rounding) while the
-    * exact rerank stays on the original vectors. Training:
-    * [[trainOpq]]'s rotation + codebooks, then IVF centroids fit on the
-    * ROTATED corpus; corpus encode is one [[buildIvfpqIndex]] pass over
-    * the rotated frame. All three models feed in via `model` (see
-    * [[saveOpqIvfModel]]), leaving probe + ADC + rerank as the only
-    * per-batch work — the same amortization ladder as the raw IVFPQ tier.
-    */
-  def opqIvfpqTopk(s: SparkSession, dir: String, shortlist: Int = 100,
-      model: Option[(DataFrame, DataFrame, DataFrame)] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame =
-    opqIvfpqTopkForQueries(s, dir, corpusQueries(Tables(s, dir).embeddings),
-      shortlist, model, precomputedCodes, maxBatchQ, nprobe)
-
-  /** [[opqIvfpqTopk]] over an ARBITRARY (query_id, embedding) batch — the
-    * serving form; queries rotate through the same learned R.
-    */
-  def opqIvfpqTopkForQueries(s: SparkSession, dir: String,
-      queries: DataFrame, shortlist: Int = 100,
-      model: Option[(DataFrame, DataFrame, DataFrame)] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val (rotDf, cents, cb) = model.getOrElse(trainOpqIvf(s, dir))
-    val r = rotationLiteral(rotDf)
-    val rotQ = rotateFrame(
-        queries.select(col("query_id").as("vec_id"), col("embedding")), r)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val codes = precomputedCodes.getOrElse(
-      buildIvfpqIndex(rotateFrame(e, r), cents, cb, residual = false))
-    rerankExactFor(e,
-      ivfpqShortlist(rotQ, cents, withSub(cb, PqKsub), codes, shortlist,
-        maxBatchQ, nprobe),
-      queries)
-  }
-
-  /** (rotation, rotated-space IVF centroids, rotated-space PQ codebooks)
-    * — the "OPQ,IVF,PQ" model triple. Rotation + codebooks come from
-    * [[trainOpq]] (sample-bounded); the coarse quantizer trains on the
-    * rotated corpus with the same label-seeded Lloyd as the raw tier.
-    */
-  def trainOpqIvf(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val (rot, cb) = trainOpq(s, dir)
-    val r = rotationLiteral(rot)
-    val cents = centroids(rotateFrame(Tables(s, dir).embeddings, r))
-    (rot, cents, cb)
-  }
-
   def saveOpqIvfModel(path: String, rotation: DataFrame, cents: DataFrame,
       codebooks: DataFrame): Unit = {
     saveOpqModel(path, rotation, codebooks)
@@ -1836,9 +1449,9 @@ object Similarity {
     * is what "32× compression" is FOR at 100 TB: the codes table (a few
     * bytes/vector) is materialized once per corpus build next to the
     * models, and every retrieval batch scans IT, never re-encoding the
-    * corpus. Feed the result to `precomputedCodes` on [[ivfpqTopk]] /
-    * [[ivfpqResidualTopk]] (with `residual` matching, and the SAME cents/
-    * codebooks — codes encode against a specific model pair).
+    * corpus. Feed the result as [[AnnModel]]`.codes` of an IVF-PQ spec
+    * (with `residual` matching, and the SAME cents/codebooks — codes
+    * encode against a specific model pair).
     */
   def buildIvfpqIndex(e: DataFrame, cents: DataFrame, codebooks: DataFrame,
       residual: Boolean = false): DataFrame = {
@@ -1919,9 +1532,8 @@ object Similarity {
     * [[compactIndex]], the drift monitor, [[retrainIndex]]) applies to
     * the flagship tier unchanged: those paths detect the rotation
     * artifact and rotate batches before encoding. `cents`, `codebooks`
-    * and `codes` must all live in the ROTATED space (what
-    * [[trainOpqIvf]] / [[trainOpqIvfResidual]] and a rotated-frame
-    * [[buildIvfpqIndex]] produce).
+    * and `codes` must all live in the ROTATED space (what [[train]] of an
+    * OPQ spec and a rotated-frame [[buildIvfpqIndex]] produce).
     */
   def saveOpqIndex(path: String, rotation: DataFrame, cents: DataFrame,
       codebooks: DataFrame, codes: DataFrame,
@@ -1931,9 +1543,8 @@ object Similarity {
   }
 
   /** (rotation, coarse centroids, codebooks, live codes) back from
-    * [[saveOpqIndex]] — tombstones applied; feed the tail three plus the
-    * rotation to [[opqIvfpqTopkForQueries]] (`model` + `precomputedCodes`)
-    * for steady-state serving of the composed tier.
+    * [[saveOpqIndex]] — tombstones applied; as an [[AnnModel]] they are
+    * the steady-state serving model of [[AnnSpec.OpqIvfpq]].
     */
   def loadOpqIndex(s: SparkSession, path: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -2525,7 +2136,7 @@ object Similarity {
     * IVFPQ index.
     */
   def annIndexReport(s: SparkSession, dir: String): DataFrame = {
-    persistedIndex(s, dir)
+    persistedIndex(s, dir, AnnSpec.Ivfpq)
     describeIndex(s, annIndexPath(s, dir))
   }
 
@@ -2541,11 +2152,11 @@ object Similarity {
     * signal). Each call rewrites the table from its baseline (idempotent
     * under bench best-of-N).
     */
-  private val driftBaseMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.lang.Boolean]()
+  private val driftBaseMemo = new SessionMemo[String, Unit]
 
   def annDriftReport(s: SparkSession, dir: String): DataFrame = {
-    val (cents, cb, _) = persistedIndex(s, dir)
+    val m = persistedIndex(s, dir, AnnSpec.Ivfpq)
+    val (cents, cb) = (m.centroids.get, m.codebooks.get)
     val path = annIndexPath(s, dir)
     val e = Tables(s, dir).embeddings
     // the baseline is a CORPUS-BUILD artifact (one full-corpus encode,
@@ -2553,11 +2164,7 @@ object Similarity {
     // so the bench entry times what steady-state monitoring costs: the
     // per-append batch statistics. Batch rows from earlier calls are
     // cleared so the report stays 3 rows (idempotent under best-of-N).
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    driftBaseMemo.keySet.removeIf(_._1 != ctx)
-    driftBaseMemo.computeIfAbsent((ctx, dir), { _ =>
-      recordDriftBaseline(s, path, e, cb, Some(cents)); java.lang.Boolean.TRUE
-    })
+    driftBaseMemo(s, dir)(recordDriftBaseline(s, path, e, cb, Some(cents)))
     val keepBase = s.read.parquet(driftTablePath(path))
       .filter(col("batch_id") === -1L)
     graft.ops.Layout.rewriteInPlace(s, driftTablePath(path)) { staging =>
@@ -2756,8 +2363,7 @@ object Similarity {
   // (session, corpus); each later call re-reads the drift tables and
   // re-decides — so the gate/bench entry times what the steady-state
   // monitor→action DECISION costs, not the corpus builds it guards
-  private val retrainMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Long, Long)]()
+  private val retrainMemo = new SessionMemo[String, (Long, Long)]
 
   /** Gate/bench form of the monitor→action loop (rows-only — k-means/PQ
     * state is engine-internal): a "world moved" scenario against a
@@ -2779,10 +2385,8 @@ object Similarity {
     val past = e.filter(col("vec_id") % 2 === 0)
     val shifted = e.filter(col("vec_id") % 2 === 1)
       .withColumn("embedding", transform(col("embedding"), x => x * lit(3.0f)))
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    retrainMemo.keySet.removeIf(_._1 != ctx)
     val (beforeBatches, beforeTripped) =
-      retrainMemo.computeIfAbsent((ctx, dir), { _ =>
+      retrainMemo(s, dir) {
         val cents = centroids(past)
         val cb = pqCodebooks(past)
         saveIndex(path, cents, cb, buildIvfpqIndex(past, cents, cb))
@@ -2799,7 +2403,7 @@ object Similarity {
         appendToIndexAt(s, path, shifted.filter(col("vec_id") % 4 === 1)
           .withColumn("vec_id", col("vec_id") + 10000000L), 2L)
         (before.getLong(0), before.getLong(1))
-      })
+      }
     // steady state, every call: read the post-retrain time series and
     // re-decide (declines — the new world is in-band now)
     val after = driftReport(s, path)
@@ -2814,377 +2418,6 @@ object Similarity {
       .orderBy(col("phase"))
   }
 
-  // keyed by (context, dir), the Curation.pairsMemo discipline (including
-  // its one-session-per-context assumption — the loaded frames are bound
-  // to the session that read them): the full index (models + encoded
-  // corpus) is built + persisted ONCE per (session, corpus) and every
-  // later call reads it back — so the bench's best-of-N min on the fed/
-  // indexed entries times what an at-scale retrieval job actually pays,
-  // not the build work the one-shot ann_ivfpq_topk entry deliberately
-  // includes.
-  private val indexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame, DataFrame)]()
-
-  /** tmpdir scratch path unique to (session, prefix, corpus dir) — the
-    * one scheme behind every session-memoized on-disk artifact here and
-    * in [[graft.ops.Dedup]]; fix path hygiene (cleanup, isolation,
-    * collision policy) HERE, not at six call sites.
-    */
-  private[graft] def sessionScratchPath(s: SparkSession, prefix: String,
-      dir: String): String = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    System.getProperty("java.io.tmpdir") + "/" + prefix + "_" +
-      java.lang.Integer.toHexString((ctx + "|" + dir).hashCode)
-  }
-
-  private def annIndexPath(s: SparkSession, dir: String): String =
-    sessionScratchPath(s, "graft_ann_index", dir)
-
-  private def persistedIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    indexMemo.keySet.removeIf(_._1 != ctx) // reap entries of dead contexts
-    indexMemo.computeIfAbsent((ctx, dir), { _ =>
-      val e = Tables(s, dir).embeddings
-      val path = annIndexPath(s, dir)
-      val (cents, cb) = (centroids(e), pqCodebooks(e))
-      saveIndex(path, cents, cb, buildIvfpqIndex(e, cents, cb))
-      loadIndex(s, path)
-    })
-  }
-
-  /** [[ivfpqTopk]] with BOTH models fed from parquet — the train-once
-    * pipeline form as a first-class gate/bench entry. Output is identical
-    * to the one-shot entry (training is deterministic and floats
-    * round-trip); the bench delta between the two entries is the training
-    * cost a train-once deployment amortizes away. Corpus encode stays
-    * inline here — [[ivfpqTopkIndexed]] amortizes that too.
-    */
-  def ivfpqTopkFed(s: SparkSession, dir: String): DataFrame = {
-    val (cents, cb, _) = persistedIndex(s, dir)
-    ivfpqTopk(s, dir, codebooks = Some(cb), precomputedCents = Some(cents))
-  }
-
-  /** [[ivfpqTopk]] with the FULL index fed from parquet (models + encoded
-    * corpus) — the steady-state serving shape: per query batch the job
-    * pays cell probing, the ADC scan over the m-byte codes of the probed
-    * cells, and the exact rerank. Nothing about the corpus is recomputed.
-    * Output identical to the one-shot entry (spec-pinned).
-    */
-  def ivfpqTopkIndexed(s: SparkSession, dir: String): DataFrame = {
-    val (cents, cb, codes) = persistedIndex(s, dir)
-    ivfpqTopk(s, dir, codebooks = Some(cb), precomputedCents = Some(cents),
-      precomputedCodes = Some(codes))
-  }
-
-  /** Metadata-filtered serving from the PERSISTED index — the missing rung
-    * between [[ivfFilteredTopk]] (filtered, but recomputes cell
-    * assignments per call) and [[ivfpqTopkIndexed]] (amortized, but
-    * unfiltered): the production shape where a vector store serves
-    * "neighbors of q WHERE label % 2 = 0" against an index built once.
-    * The predicate restricts the CODES table — a semi-join against the
-    * pushed-down, column-pruned eligible id list from the metadata scan —
-    * BEFORE cell restriction and ADC, so shortlist cost is
-    * selectivity-proportional on top of the probed-cell restriction, and
-    * k fills from the eligible set (the pre-filter formulation; the
-    * post-filter would under-fill whenever selectivity < k/N). The exact
-    * rerank reranks only shortlisted (hence eligible) candidates.
-    *
-    * Scale shape: eligible ids are one value per qualifying vector (a few
-    * bytes); at selective predicates the list broadcasts, at broad ones
-    * the semi-join shuffles on vec_id — both standard. Models stay
-    * trained on the FULL corpus: the filter is a serving-time argument
-    * (per-predicate retraining would be absurd), exactly as in
-    * [[ivfFilteredTopk]]. With `pred = lit(true)` the restriction is the
-    * identity and the output matches [[ivfpqTopkIndexed]] row-for-row
-    * (spec-pinned), so the filtered path cannot drift from the unfiltered
-    * serving tier.
-    */
-  def ivfpqFilteredTopkIndexed(s: SparkSession, dir: String,
-      pred: Column = col("label") % 2 === 0,
-      shortlist: Int = 100,
-      nprobe: Int = NProbe): DataFrame = {
-    val (cents, cb, codes) = persistedIndex(s, dir)
-    val e = Tables(s, dir).embeddings
-    val eligible = e.filter(pred).select(col("vec_id"))
-    val restricted = codes.join(eligible, Seq("vec_id"), "left_semi")
-    val queries = corpusQueries(e)
-    rerankExactFor(e,
-      ivfpqShortlist(queries, cents, withSub(cb, PqKsub), restricted,
-        shortlist, MaxAdcBatchQ, nprobe),
-      queries)
-  }
-
-  /** [[ivfpqTopk]] with RESIDUAL encoding — the FAISS-default IVFPQ form:
-    * PQ codes quantize x − centroid(cell) instead of x. Residuals
-    * concentrate near zero (the coarse quantizer explains the
-    * between-cell variance), so the same m·ksub code budget spends its
-    * resolution on the within-cell detail that actually ranks neighbors —
-    * recall ≥ the raw-code tier at the same geometry (spec-pinned). The
-    * price: distance tables become per-(query, probed cell) — Q·nprobe·
-    * m·ksub rows instead of Q·m·ksub, broadcast-bounded per subplan by
-    * the [[MaxAdcBatchQ]] chunking — and fed
-    * codebooks must have been trained on residuals of the SAME centroid
-    * table (feed both from one [[saveModels]] build or neither).
-    *
-    * Plan shape mirrors [[ivfpqTopk]]: cell restriction FIRST, then the
-    * (query, cell, code) table lookup — per-query work stays
-    * Σ|probed cells|·m.
-    */
-  def ivfpqResidualTopk(s: SparkSession, dir: String, shortlist: Int = 100,
-      codebooks: Option[DataFrame] = None,
-      precomputedCents: Option[DataFrame] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame =
-    ivfpqResidualTopkForQueries(s, dir,
-      corpusQueries(Tables(s, dir).embeddings),
-      shortlist, codebooks, precomputedCents, precomputedCodes, maxBatchQ,
-      nprobe)
-
-  /** [[ivfpqResidualTopk]] over an ARBITRARY (query_id, embedding) batch
-    * — the serving form ([[ivfpqTopkForQueries]]' contract).
-    */
-  def ivfpqResidualTopkForQueries(s: SparkSession, dir: String,
-      queries: DataFrame, shortlist: Int = 100,
-      codebooks: Option[DataFrame] = None,
-      precomputedCents: Option[DataFrame] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val cents = precomputedCents.getOrElse(centroids(e))
-    val cb = codebooks.getOrElse(pqCodebooks(
-      residualVectors(e, cents).select(col("vec_id"), col("embedding"))))
-    val cbSub = withSub(cb, PqKsub)
-    // the inline convenience form recomputes the residual chain per
-    // consumer (training iterations + encode) — at scale, feed codes
-    // from buildIvfpqIndex/loadIndex and none of that runs per batch
-    val codes = precomputedCodes.getOrElse(
-      buildIvfpqIndex(e, cents, cb, residual = true))
-    rerankExactFor(e,
-      ivfpqResidualShortlist(queries, cents, cbSub, codes, shortlist,
-        maxBatchQ, nprobe),
-      queries)
-  }
-
-  /** The residual-encoded cell-restricted ADC shortlist — the shared body
-    * of [[ivfpqResidualTopkForQueries]] and the residual OPQ composition
-    * (whose query frame and codes live in ROTATED space; the restriction
-    * machinery is one body either way, the [[ivfpqShortlist]] discipline).
-    * The corpus enters only through the materialized `codes`; returns
-    * (query_id, neighbor_id).
-    */
-  private def ivfpqResidualShortlist(queries: DataFrame, cents: DataFrame,
-      cbSub: DataFrame, codes: DataFrame, shortlist: Int,
-      maxBatchQ: Int, nprobe: Int = NProbe): DataFrame =
-    // per-chunk subplans: the residual tables are the HEAVIEST ADC
-    // broadcast (nprobe tables per query), so the MaxAdcBatchQ chunk
-    // bound matters most here — ≤ maxBatchQ·nprobe·m·ksub rows per chunk
-    adcChunks(queries, maxBatchQ).map { chunk =>
-      val probes = queries.filter(chunk)
-        .select(col("query_id"), col("embedding").as("qe"))
-        .join(broadcast(cents))
-        .select(col("query_id"), col("qe"), col("cell"),
-          cosine_sim(col("qe"), col("centroid")).as("ccos"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-        .filter(col("rk") <= nprobe)
-        .select(col("query_id"), col("qe"), col("cell").as("ivf_cell"))
-      // per-(query, probed cell) residual distance tables: the query's
-      // residual DIFFERS per probed cell, so each (query, cell) pair gets
-      // its own m·ksub table — chunkQ·nprobe·m·ksub rows, broadcast
-      val qTables = broadcast(probes
-        .join(broadcast(cents.select(col("cell").as("ivf_cell"),
-          col("centroid").as("ccent"))), Seq("ivf_cell"))
-        .select(col("query_id"), col("ivf_cell"),
-          posexplode(subArray(zip_with(col("qe"), col("ccent"), (x, c) => x - c),
-            PqM, 64)).as(Seq("sub", "sv")))
-        .join(broadcast(cbSub), Seq("sub"))
-        .select(col("query_id"), col("ivf_cell"), col("cell").as("code"),
-          l2sq(col("sv"), col("centroid")).as("qd")))
-      val cheap = codes
-        .join(broadcast(probes.select(col("query_id"), col("ivf_cell"))), Seq("ivf_cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .join(qTables, Seq("query_id", "ivf_cell", "code"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(sum(col("qd")).as("adc"), count(lit(1)).as("n_subs"))
-        .filter(col("n_subs") === PqM)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc").asc, col("vec_id"))
-      cheap.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= shortlist)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    }.reduce(_ unionByName _)
-
-  /** Residual-encoded "OPQ,IVF,PQ" — the ACTUAL FAISS default composed
-    * recipe ([[opqIvfpqTopk]] quantizes raw rotated vectors; this one
-    * quantizes rotated residuals x' − centroid(cell(x')), spending the
-    * code budget on within-cell detail — [[ivfpqResidualTopk]]'s
-    * argument, now under the learned rotation): rotation in front of the
-    * coarse quantizer AND the residual code space, shortlist via the
-    * SAME [[ivfpqResidualShortlist]] body as the raw-space residual
-    * tier, exact rerank on the original vectors. Model triple =
-    * (rotation, rotated-space centroids, rotated-RESIDUAL codebooks) —
-    * [[trainOpqIvfResidual]] / the [[saveOpqIvfModel]] shape.
-    */
-  def opqIvfpqResidualTopk(s: SparkSession, dir: String, shortlist: Int = 100,
-      model: Option[(DataFrame, DataFrame, DataFrame)] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame =
-    opqIvfpqResidualTopkForQueries(s, dir,
-      corpusQueries(Tables(s, dir).embeddings),
-      shortlist, model, precomputedCodes, maxBatchQ, nprobe)
-
-  /** [[opqIvfpqResidualTopk]] over an ARBITRARY (query_id, embedding)
-    * batch — the serving form; queries rotate through the same learned R.
-    */
-  def opqIvfpqResidualTopkForQueries(s: SparkSession, dir: String,
-      queries: DataFrame, shortlist: Int = 100,
-      model: Option[(DataFrame, DataFrame, DataFrame)] = None,
-      precomputedCodes: Option[DataFrame] = None,
-      maxBatchQ: Int = MaxAdcBatchQ,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val (rotDf, cents, cb) = model.getOrElse(trainOpqIvfResidual(s, dir))
-    val r = rotationLiteral(rotDf)
-    val rotQ = rotateFrame(
-        queries.select(col("query_id").as("vec_id"), col("embedding")), r)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val codes = precomputedCodes.getOrElse(
-      buildIvfpqIndex(rotateFrame(e, r), cents, cb, residual = true))
-    rerankExactFor(e,
-      ivfpqResidualShortlist(rotQ, cents, withSub(cb, PqKsub), codes,
-        shortlist, maxBatchQ, nprobe),
-      queries)
-  }
-
-  /** (rotation, rotated-space IVF centroids, rotated-RESIDUAL PQ
-    * codebooks) — the residual composed model triple: rotation from
-    * [[trainOpq]] (sample-bounded), coarse quantizer on the rotated
-    * corpus, codebooks retrained on the rotated corpus's cell residuals
-    * (codes must quantize what serving decodes — residuals of THESE
-    * centroids; [[residualVectors]] is the one shared definition).
-    */
-  def trainOpqIvfResidual(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (rot, _) = trainOpq(s, dir)
-    val r = rotationLiteral(rot)
-    val rotE = rotateFrame(Tables(s, dir).embeddings, r)
-    val cents = centroids(rotE)
-    val cb = pqCodebooks(
-      residualVectors(rotE, cents).select(col("vec_id"), col("embedding")))
-    (rot, cents, cb)
-  }
-
-  private val opqResidMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame, DataFrame)]()
-
-  /** The session's trained+persisted residual-OPQ model triple (built
-    * once per (session, corpus), read back after) — shared by the fed and
-    * indexed rungs so the two can never train divergent models.
-    */
-  private def persistedOpqResidModel(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    opqResidMemo.keySet.removeIf(_._1 != ctx)
-    opqResidMemo.computeIfAbsent((ctx, dir), { _ =>
-      val path = sessionScratchPath(s, "graft_opqres_model", dir)
-      val (rot, cents, cb) = trainOpqIvfResidual(s, dir)
-      saveOpqIvfModel(path, rot, cents, cb)
-      loadOpqIvfModel(s, path)
-    })
-  }
-
-  /** [[opqIvfpqResidualTopk]] with the model triple fed from parquet —
-    * the train-once serving form (identical output, spec-pinned); the
-    * bench delta vs the one-shot entry is the rotation + residual-Lloyd
-    * training a deployment pays once per corpus build.
-    */
-  def opqIvfpqResidualTopkFed(s: SparkSession, dir: String): DataFrame =
-    opqIvfpqResidualTopk(s, dir, model = Some(persistedOpqResidModel(s, dir)))
-
-  private val opqResidCodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-
-  /** [[opqIvfpqResidualTopk]] with models AND the encoded corpus fed —
-    * the steady-state serving rung of the full FAISS-default recipe
-    * ("OPQ,IVF,PQ" with residual codes): per query batch the job pays
-    * the query rotation, cell probing, the per-(query, probed cell)
-    * residual ADC tables, and the exact rerank. The corpus persists
-    * through the REAL composed-index artifact — [[saveOpqIndex]] with
-    * `residual = true`, so the artifact records BOTH properties and the
-    * whole maintenance lifecycle (rotated+residual appends, tombstones,
-    * compaction, a rotation-refitting residual retrain) applies to this
-    * flagship tier unchanged.
-    */
-  /** The session's persisted residual-composed codes — built ONCE per
-    * (session, corpus) through the REAL `saveOpqIndex(residual = true)`
-    * artifact and read back after; shared by the unfiltered indexed rung
-    * and the filtered serving rung so both serve the SAME artifact.
-    */
-  private def persistedOpqResidCodes(s: SparkSession, dir: String): DataFrame = {
-    val ctx = s.sparkContext.applicationId + "/" + s.sparkContext.startTime
-    opqResidCodesMemo.keySet.removeIf(_._1 != ctx)
-    opqResidCodesMemo.computeIfAbsent((ctx, dir), { _ =>
-      val path = sessionScratchPath(s, "graft_opqres_index", dir)
-      val (rot, cents, cb) = persistedOpqResidModel(s, dir)
-      val r = rotationLiteral(rot)
-      saveOpqIndex(path, rot, cents, cb,
-        buildIvfpqIndex(rotateFrame(Tables(s, dir).embeddings, r), cents, cb,
-          residual = true),
-        residual = true)
-      loadOpqIndex(s, path)._4
-    })
-  }
-
-  def opqIvfpqResidualTopkIndexed(s: SparkSession, dir: String): DataFrame =
-    opqIvfpqResidualTopk(s, dir,
-      model = Some(persistedOpqResidModel(s, dir)),
-      precomputedCodes = Some(persistedOpqResidCodes(s, dir)))
-
-  /** Metadata-filtered serving from the FLAGSHIP composed-residual index —
-    * [[ivfpqFilteredTopkIndexed]]'s pre-filter formulation lifted to the
-    * best artifact the store has ("OPQ,IVF,PQ" residual codes), so
-    * "neighbors of q WHERE pred" is answered at flagship recall instead of
-    * raw-IVFPQ recall. Order of operations is the part that matters:
-    * (1) the predicate runs on the METADATA table — pushed-down,
-    * column-pruned scan producing eligible vec_ids (a few bytes each;
-    * broadcast at selective predicates, vec_id-shuffled at broad ones);
-    * (2) the eligible set restricts the ROTATED-SPACE codes by semi-join
-    * BEFORE cell restriction and ADC — shortlist cost stays
-    * selectivity-proportional and k fills from the eligible set (the
-    * pre-filter formulation; post-filtering would under-fill whenever
-    * selectivity < k/N); (3) queries rotate through the index's own R;
-    * (4) the exact rerank runs in ORIGINAL space over shortlisted (hence
-    * eligible) candidates only. Models stay trained on the FULL corpus —
-    * the filter is a serving-time argument, never a retrain.
-    *
-    * With `pred = lit(true)` the restriction is the identity and the
-    * output matches [[opqIvfpqResidualTopkIndexed]] row-for-row
-    * (spec-pinned), so the filtered path cannot drift from the flagship
-    * serving tier.
-    */
-  def opqIvfpqResidualFilteredTopkIndexed(s: SparkSession, dir: String,
-      pred: Column = col("label") % 2 === 0,
-      shortlist: Int = 100,
-      nprobe: Int = NProbe): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val eligible = e.filter(pred).select(col("vec_id"))
-    val restricted = persistedOpqResidCodes(s, dir)
-      .join(eligible, Seq("vec_id"), "left_semi")
-    val (rot, cents, cb) = persistedOpqResidModel(s, dir)
-    val queries = corpusQueries(e)
-    val rotQ = rotateFrame(
-        queries.select(col("query_id").as("vec_id"), col("embedding")),
-        rotationLiteral(rot))
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    rerankExactFor(e,
-      ivfpqResidualShortlist(rotQ, cents, withSub(cb, PqKsub), restricted,
-        shortlist, MaxAdcBatchQ, nprobe),
-      queries)
-  }
-
   // ------------------------------------------------------------ evaluation
   /** Recall@k evaluation report — the retrieval-QA harness a serving team
     * runs before switching tiers: score each approximate tier's
@@ -3193,7 +2426,7 @@ object Similarity {
     * row per tier — evaluation cost is the tiers' own retrieval cost, the
     * scoring is noise. At 100 TB you evaluate on a sampled query batch,
     * which is exactly what the probe-batch contract already is; any
-    * *ForQueries output slots in unchanged.
+    * [[topk]] output over it slots in unchanged.
     */
   /** Above this many exact-top-k rows, [[recallReport]] keeps the exact
     * frame distributed (persist + count) instead of collecting it into a
@@ -3272,8 +2505,8 @@ object Similarity {
     * candidates CHEAPEST-FIRST on the probe batch and stop at the first
     * one meeting the target (candidates past it never run — escalation
     * is the point, so neither is paying for tiers you won't pick). Each
-    * `run` thunk is lazy; `exact` is the ground-truth frame (any
-    * *TopkForQueries output over the same probe batch slots in).
+    * `run` thunk is lazy; `exact` is the ground-truth frame (any exact
+    * [[topk]] output over the same probe batch slots in).
     *
     * Returns (config name, measured mean recall, target met). When no
     * candidate meets the target, the highest-recall one evaluated comes
@@ -3316,12 +2549,14 @@ object Similarity {
     * the winner never execute.
     */
   def annAutotune(s: SparkSession, dir: String, target: Double = 0.45): DataFrame = {
-    val (cents, _, _) = persistedIndex(s, dir)
-    val ex = bruteforceTopk(s, dir)
+    val cents = persistedIndex(s, dir, AnnSpec.Ivfpq).centroids
+    val ex = topk(s, dir, AnnSpec.Exact)
+    def ivf(n: Int) = () =>
+      topk(s, dir, AnnSpec.Ivf.copy(nprobe = Some(n)), AnnModel(centroids = cents))
     val (tier, recall, met) = tuneForRecall(ex, Seq(
-      ("ivf_nprobe1", 1.0, () => ivfTopk(s, dir, Some(cents), nprobe = 1)),
-      ("ivf_nprobe2", 2.0, () => ivfTopk(s, dir, Some(cents), nprobe = 2)),
-      ("ivf_nprobe3", 3.0, () => ivfTopk(s, dir, Some(cents), nprobe = 3)),
+      ("ivf_nprobe1", 1.0, ivf(1)),
+      ("ivf_nprobe2", 2.0, ivf(2)),
+      ("ivf_nprobe3", 3.0, ivf(3)),
       ("exact", 1e9, () => ex)), target)
     import s.implicits._
     Seq((tier, recall, met, target))
@@ -3333,54 +2568,29 @@ object Similarity {
     * and agreement with its own recall computation).
     */
   def annRecallReport(s: SparkSession, dir: String): DataFrame = {
-    val ex = bruteforceTopk(s, dir)
+    val ex = topk(s, dir, AnnSpec.Exact)
     recallReport(ex, Seq(
       "exact" -> ex,
-      "int8" -> int8Topk(s, dir),
-      "ivf" -> ivfTopk(s, dir),
-      "lsh" -> lshTopk(s, dir)))
+      "int8" -> topk(s, dir, AnnSpec.Int8),
+      "ivf" -> topk(s, dir, AnnSpec.Ivf),
+      "lsh" -> topk(s, dir, AnnSpec.Lsh)))
   }
 
   // =================================================================
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_recall_report" -> (annRecallReport _),
-    "ann_drift_report" -> (annDriftReport _),
-    "ann_index_report" -> (annIndexReport _),
-    "ann_retrain_report" -> (annRetrainReport _),
-    "ann_autotune" -> ((s: SparkSession, dir: String) => annAutotune(s, dir)),
-    "emb_quantize" -> (quantize _),
-    "emb_project"  -> (project _),
-    "ann_jl_topk" -> ((s: SparkSession, dir: String) => jlTopk(s, dir)),
-    "ann_pca_topk" -> ((s: SparkSession, dir: String) => pcaTopk(s, dir)),
-    "ann_int8_topk" -> ((s: SparkSession, dir: String) => int8Topk(s, dir)),
-    "ann_int8_ivf_topk" -> ((s: SparkSession, dir: String) => int8IvfTopk(s, dir)),
-    "ann_pq_topk" -> ((s: SparkSession, dir: String) => pqTopk(s, dir)),
-    "ann_opq_topk" -> ((s: SparkSession, dir: String) => opqTopk(s, dir)),
-    "ann_opq_topk_fed" -> (opqTopkFed _),
-    "ann_opq_ivfpq_topk" -> ((s: SparkSession, dir: String) => opqIvfpqTopk(s, dir)),
-    "ann_opq_ivfpq_topk_fed" -> (opqIvfpqTopkFed _),
-    "ann_opq_ivfpq_topk_indexed" -> (opqIvfpqTopkIndexed _),
-    "ann_opq_ivfpq_residual_topk" -> ((s: SparkSession, dir: String) => opqIvfpqResidualTopk(s, dir)),
-    "ann_opq_ivfpq_residual_topk_fed" -> (opqIvfpqResidualTopkFed _),
-    "ann_opq_ivfpq_residual_topk_indexed" -> (opqIvfpqResidualTopkIndexed _),
-    "ann_ivfpq_topk" -> ((s: SparkSession, dir: String) => ivfpqTopk(s, dir)),
-    "ann_ivfpq_topk_fed" -> (ivfpqTopkFed _),
-    "ann_ivfpq_topk_indexed" -> (ivfpqTopkIndexed _),
-    "ann_ivfpq_residual_topk" -> ((s: SparkSession, dir: String) => ivfpqResidualTopk(s, dir)),
-    "emb_label_centroids" -> ((s: SparkSession, dir: String) => labelCentroids(s, dir)),
-    "ann_bruteforce_topk" -> (bruteforceTopk _),
-    "ann_filtered_bruteforce" ->
-      ((s: SparkSession, dir: String) => bruteforceFilteredTopk(s, dir)),
-    "ann_filtered_topk" ->
-      ((s: SparkSession, dir: String) => ivfFilteredTopk(s, dir)),
-    "ann_filtered_topk_indexed" ->
-      ((s: SparkSession, dir: String) => ivfpqFilteredTopkIndexed(s, dir)),
-    "ann_filtered_opq_indexed" ->
-      ((s: SparkSession, dir: String) => opqIvfpqFilteredTopkIndexed(s, dir)),
-    "ann_filtered_residual_indexed" ->
-      ((s: SparkSession, dir: String) => opqIvfpqResidualFilteredTopkIndexed(s, dir)),
-    "ann_lsh_topk"        -> ((s: SparkSession, dir: String) => lshTopk(s, dir)),
-    "ann_ivf_topk"        -> ((s: SparkSession, dir: String) => ivfTopk(s, dir)))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    annQueries.map { case (name, spec, source) =>
+      name -> ((s: SparkSession, dir: String) =>
+        topk(s, dir, spec, modelFor(s, dir, spec, source)))
+    }.toMap ++ Map(
+      "ann_recall_report" -> (annRecallReport _),
+      "ann_drift_report" -> (annDriftReport _),
+      "ann_index_report" -> (annIndexReport _),
+      "ann_retrain_report" -> (annRetrainReport _),
+      "ann_autotune" -> ((s: SparkSession, dir: String) => annAutotune(s, dir)),
+      "emb_quantize" -> (quantize _),
+      "emb_project" -> (project _),
+      "emb_label_centroids" ->
+        ((s: SparkSession, dir: String) => labelCentroids(s, dir)))
 
   /** LSH/IVF are rows-only (bucketing is engine-internal); SimilaritySpec
     * asserts recall@5 vs brute force.

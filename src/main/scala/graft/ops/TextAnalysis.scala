@@ -34,6 +34,14 @@ object TextAnalysis {
   /** Whitespace tokens of the trimmed text. */
   private[graft] def words(c: Column): Column = split(trim(c), "\\s+")
 
+  /** Word bigrams ("w1 w2") via the compiled [[graft.functions.StringNgrams]]
+    * kernel, optionally first-occurrence distinct; empty (not null) for
+    * null and one-word texts.
+    */
+  private[graft] def bigrams(c: Column, distinct: Boolean = false): Column =
+    coalesce(graft.functions.string_ngrams(words(c), 2, distinct),
+      array().cast("array<string>"))
+
   private[graft] val stopEn = Seq("the", "a", "of", "and", "to", "in", "is")
   private val stopFr = Seq("le", "la", "de", "et", "un", "est", "dans")
   private val stopEs = Seq("el", "los", "de", "y", "un", "es", "en")
@@ -193,19 +201,13 @@ object TextAnalysis {
     * tiny shuffle → TakeOrdered; at 100 TB the partial aggregation absorbs
     * the explosion.
     */
-  def ngramFreq(s: SparkSession, dir: String): DataFrame = {
-    val w = words(col("text"))
-    val bigrams = zip_with(
-      slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-      (a, b) => concat(a, lit(" "), b))
+  def ngramFreq(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
-      .select(explode(when(size(w) >= 2, bigrams)
-        .otherwise(array().cast("array<string>"))).as("bigram"))
+      .select(explode(bigrams(col("text"))).as("bigram"))
       .groupBy(col("bigram"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram"))
       .limit(25)
-  }
 
   // ------------------------------------------------------------ tf-idf
   /** Top-3 characteristic terms per document by tf·N/df (rational idf —

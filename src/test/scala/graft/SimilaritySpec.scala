@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.ops.Similarity
+import graft.ops.{AnnCode, AnnModel, AnnSource, AnnSpec, Similarity}
 
 class SimilaritySpec extends SparkSpec {
 
@@ -10,12 +10,18 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"), r.getAs[Long]("neighbor_id")))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
 
-  private lazy val exact = topk(Similarity.bruteforceTopk(spark, sf))
+  private lazy val exact = topk(Similarity.topk(spark, sf, AnnSpec.Exact))
+
+  /** A declared tier's model read back from the session's persisted index. */
+  private def fedModel(spec: AnnSpec): AnnModel =
+    Similarity.modelFor(spark, sf, spec, AnnSource.Fed)
+  private def indexedModel(spec: AnnSpec): AnnModel =
+    Similarity.modelFor(spark, sf, spec, AnnSource.Indexed)
 
   test("brute force returns a full top-5 per query, ranked by cosine") {
     assert(exact.size === 10)
     exact.values.foreach(ns => assert(ns.size === 5))
-    val df = Similarity.bruteforceTopk(spark, sf).collect()
+    val df = Similarity.topk(spark, sf, AnnSpec.Exact).collect()
     df.groupBy(_.getAs[Long]("query_id")).values.foreach { rows =>
       val byRank = rows.sortBy(_.getAs[Long]("rank")).map(_.getAs[Double]("cosine"))
       assert(byRank.zip(byRank.tail).forall { case (a, b) => a >= b })
@@ -34,8 +40,8 @@ class SimilaritySpec extends SparkSpec {
     val evenIds = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("label") % 2 === 0)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val fExact = topk(Similarity.bruteforceFilteredTopk(spark, sf))
-    val fIvf = topk(Similarity.ivfFilteredTopk(spark, sf))
+    val fExact = topk(Similarity.topk(spark, sf, AnnSpec.Exact.filtered(AnnSpec.evenLabel)))
+    val fIvf = topk(Similarity.topk(spark, sf, AnnSpec.Ivf.filtered(AnnSpec.evenLabel)))
     // every neighbor in BOTH tiers satisfies the predicate
     (fExact.values ++ fIvf.values).flatten.foreach(n =>
       assert(evenIds.contains(n), s"neighbor $n fails the predicate"))
@@ -69,14 +75,15 @@ class SimilaritySpec extends SparkSpec {
     val evenIds = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("label") % 2 === 0)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val fIdx = topk(Similarity.ivfpqFilteredTopkIndexed(spark, sf))
+    val fIdx = topk(Similarity.topk(spark, sf,
+      AnnSpec.Ivfpq.filtered(AnnSpec.evenLabel), indexedModel(AnnSpec.Ivfpq)))
     // every neighbor satisfies the predicate and k fills (pre-filter)
     fIdx.values.flatten.foreach(n =>
       assert(evenIds.contains(n), s"neighbor $n fails the predicate"))
     assert(fIdx.size === 10)
     fIdx.values.foreach(ns => assert(ns.size === 5, "indexed tier must fill k"))
     // recall vs the filtered-exact tier at the PQ family's floor
-    val fExact = topk(Similarity.bruteforceFilteredTopk(spark, sf))
+    val fExact = topk(Similarity.topk(spark, sf, AnnSpec.Exact.filtered(AnnSpec.evenLabel)))
     val hits = fExact.map { case (q, ns) =>
       fIdx.getOrElse(q, Seq.empty).count(ns.toSet.contains) }.sum
     val r = hits.toDouble / (fExact.size * 5)
@@ -84,8 +91,9 @@ class SimilaritySpec extends SparkSpec {
     // pred = true makes the restriction the identity: the filtered path
     // must reproduce the unfiltered indexed serving tier row-for-row, so
     // the two can never drift
-    assert(topk(Similarity.ivfpqFilteredTopkIndexed(spark, sf, lit(true)))
-      === topk(Similarity.ivfpqTopkIndexed(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq.filtered(lit(true)),
+        indexedModel(AnnSpec.Ivfpq)))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq, indexedModel(AnnSpec.Ivfpq))))
   }
 
   test("filtered serving from the composed indexes (OPQ raw + flagship residual)") {
@@ -93,22 +101,21 @@ class SimilaritySpec extends SparkSpec {
     val evenIds = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("label") % 2 === 0)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val fExact = topk(Similarity.bruteforceFilteredTopk(spark, sf))
+    val fExact = topk(Similarity.topk(spark, sf, AnnSpec.Exact.filtered(AnnSpec.evenLabel)))
     // both composed rungs serve predicates from THEIR persisted artifact;
     // the same pre-filter contract as the raw-IVFPQ rung: predicate
     // honored, k fills from the eligible set, recall at the family floor,
     // and the trivial predicate reproduces the unfiltered serving tier
     // row-for-row — the filtered path can never drift from the flagship
+    def rung(spec: AnnSpec) = (
+      topk(Similarity.topk(spark, sf, spec.filtered(AnnSpec.evenLabel),
+        indexedModel(spec))),
+      topk(Similarity.topk(spark, sf, spec.filtered(lit(true)), indexedModel(spec))),
+      topk(Similarity.topk(spark, sf, spec, indexedModel(spec))))
     val rungs = Seq(
-      ("opq_raw",
-        topk(Similarity.opqIvfpqFilteredTopkIndexed(spark, sf)),
-        topk(Similarity.opqIvfpqFilteredTopkIndexed(spark, sf, lit(true))),
-        topk(Similarity.opqIvfpqTopkIndexed(spark, sf))),
-      ("residual_flagship",
-        topk(Similarity.opqIvfpqResidualFilteredTopkIndexed(spark, sf)),
-        topk(Similarity.opqIvfpqResidualFilteredTopkIndexed(spark, sf, lit(true))),
-        topk(Similarity.opqIvfpqResidualTopkIndexed(spark, sf))))
-    for ((name, filtered, trivial, unfiltered) <- rungs) {
+      ("opq_raw", rung(AnnSpec.OpqIvfpq)),
+      ("residual_flagship", rung(AnnSpec.OpqIvfpqResidual)))
+    for ((name, (filtered, trivial, unfiltered)) <- rungs) {
       filtered.values.flatten.foreach(n =>
         assert(evenIds.contains(n), s"$name: neighbor $n fails the predicate"))
       assert(filtered.size === 10, s"$name: all 10 queries answered")
@@ -124,19 +131,19 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH top-k achieves useful recall vs brute force") {
-    val r = recallAt5(topk(Similarity.lshTopk(spark, sf)))
+    val r = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Lsh)))
     // embeddings are near-random (max cosine ~0.5), the hardest case for
     // LSH; the bound pins the deterministic measured value with headroom.
     assert(r >= 0.15, s"recall@5=$r")
   }
 
   test("IVF top-k achieves useful recall vs brute force") {
-    val r = recallAt5(topk(Similarity.ivfTopk(spark, sf)))
+    val r = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Ivf)))
     assert(r >= 0.15, s"recall@5=$r")
   }
 
   test("IVF probes limit the searched fraction (it is not brute force)") {
-    val n = Similarity.ivfTopk(spark, sf).count()
+    val n = Similarity.topk(spark, sf, AnnSpec.Ivf).count()
     assert(n === 50) // still a full top-5 per query
   }
 
@@ -153,8 +160,9 @@ class SimilaritySpec extends SparkSpec {
     val (wide, narrow) = (candidatePairs(4), candidatePairs(8))
     assert(narrow < wide, s"8-bit buckets ($narrow pairs) must prune vs 4-bit ($wide)")
     // the narrow geometry still produces a valid (if lower-recall) result
-    val r8 = recallAt5(topk(Similarity.lshTopk(spark, sf, 4, 8)))
-    val r4 = recallAt5(topk(Similarity.lshTopk(spark, sf)))
+    val r8 = recallAt5(topk(Similarity.topk(spark, sf,
+      AnnSpec(code = AnnCode.Lsh(4, 8)))))
+    val r4 = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Lsh)))
     assert(r8 <= r4, s"narrower buckets cannot increase recall (r8=$r8 r4=$r4)")
   }
 
@@ -162,7 +170,7 @@ class SimilaritySpec extends SparkSpec {
     // the id→embedding re-join must broadcast for this plan shape to hold;
     // pin the threshold so the assertion tests the code, not session drift
     withConf("spark.sql.autoBroadcastJoinThreshold", "10485760b") {
-    val fmt = Similarity.lshTopk(spark, sf).queryExecution
+    val fmt = Similarity.topk(spark, sf, AnnSpec.Lsh).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val shuffleBlocks = fmt.split("\n\n").filter(b =>
       b.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*"""))
@@ -209,17 +217,17 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("int8 two-stage retrieval recovers the exact top-k almost everywhere") {
-    val exact = Similarity.bruteforceTopk(spark, sf).collect()
+    val exact = Similarity.topk(spark, sf, AnnSpec.Exact).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got = Similarity.int8Topk(spark, sf).collect()
+    val got = Similarity.topk(spark, sf, AnnSpec.Int8).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = (exact & got).size.toDouble / exact.size
     assert(recall >= 0.9,
       s"shortlist-50 + exact rerank should recover >=90% of true top-5, got $recall")
     // reranked scores are the EXACT cosine, so overlapping pairs agree
-    val exactScores = Similarity.bruteforceTopk(spark, sf).collect()
+    val exactScores = Similarity.topk(spark, sf, AnnSpec.Exact).collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
-    Similarity.int8Topk(spark, sf).collect().foreach { r =>
+    Similarity.topk(spark, sf, AnnSpec.Int8).collect().foreach { r =>
       val k = (r.getLong(0), r.getLong(2))
       exactScores.get(k).foreach(e => assert(e === r.getDouble(3)))
     }
@@ -227,12 +235,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("int8+IVF recovers what full-float scoring of the same cells finds") {
     // The composed tier's own contract: within the probed cells, the int8
-    // shortlist + exact rerank must recover >=90% of what ivfTopk's full-
+    // shortlist + exact rerank must recover >=90% of what the IVF tier's full-
     // precision scan of the SAME cells finds. Recall vs brute force is
     // capped by the cell-probing stage (a property of the IVF family on
     // this near-random corpus), so that gets the family floor, not 0.9.
-    val ivf = topk(Similarity.ivfTopk(spark, sf))
-    val got = topk(Similarity.int8IvfTopk(spark, sf))
+    val ivf = topk(Similarity.topk(spark, sf, AnnSpec.Ivf))
+    val got = topk(Similarity.topk(spark, sf, AnnSpec.Int8Ivf))
     val hits = ivf.map { case (q, ns) =>
       got.getOrElse(q, Seq.empty).count(ns.toSet.contains) }.sum
     val vsIvf = hits.toDouble / ivf.values.map(_.size).sum
@@ -253,7 +261,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("PQ ADC retrieval: table-lookup shortlist + exact rerank recovers useful recall") {
-    val got = topk(Similarity.pqTopk(spark, sf))
+    val got = topk(Similarity.topk(spark, sf, AnnSpec.Pq))
     assert(got.size === 10)
     got.values.foreach(ns => assert(ns.size === 5))
     val r = recallAt5(got)
@@ -284,66 +292,75 @@ class SimilaritySpec extends SparkSpec {
     val errOpq = Similarity.quantizationError(Similarity.rotateFrame(e, r), cb)
     assert(errOpq <= errPq * 1.05,
       s"OPQ reconstruction error $errOpq vs PQ $errPq")
-    val fed = topk(Similarity.opqTopk(spark, sf, model = Some((rot, cb))))
+    val fed = topk(Similarity.topk(spark, sf, AnnSpec.Opq,
+      AnnModel(transform = Some(rot), codebooks = Some(cb))))
     assert(fed.size === 10)
     fed.values.foreach(ns => assert(ns.size === 5))
     assert(recallAt5(fed) >= 0.6, s"OPQ recall@5=${recallAt5(fed)}")
     // training is deterministic, so the inline convenience form and a
     // parquet-round-tripped model must reproduce the fed output exactly
-    assert(topk(Similarity.opqTopk(spark, sf)) === fed)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Opq)) === fed)
     val dir = java.nio.file.Files.createTempDirectory("graft_opq").toString
     Similarity.saveOpqModel(dir, rot, cb)
     val (rot2, cb2) = Similarity.loadOpqModel(spark, dir)
-    assert(topk(Similarity.opqTopk(spark, sf, model = Some((rot2, cb2)))) === fed)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Opq,
+      AnnModel(transform = Some(rot2), codebooks = Some(cb2)))) === fed)
   }
 
   test("OPQ+IVFPQ: family floor holds, fed = inline = saved model triple") {
-    val m = Similarity.trainOpqIvf(spark, sf)
-    val fed = topk(Similarity.opqIvfpqTopk(spark, sf, model = Some(m)))
+    val m = Similarity.train(spark, sf, AnnSpec.OpqIvfpq)
+    val fed = topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq, m))
     assert(fed.size === 10)
     fed.values.foreach(ns => assert(ns.size === 5))
-    // IVF-family floor: cell probing caps recall (the int8IvfTopk band)
+    // IVF-family floor: cell probing caps recall (the Int8Ivf band)
     assert(recallAt5(fed) >= 0.15, s"OPQ+IVFPQ recall@5=${recallAt5(fed)}")
     // deterministic training → inline equals fed; model round-trips
-    assert(topk(Similarity.opqIvfpqTopk(spark, sf)) === fed)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq)) === fed)
     val dir = java.nio.file.Files.createTempDirectory("graft_opqivf").toString
-    Similarity.saveOpqIvfModel(dir, m._1, m._2, m._3)
+    Similarity.saveOpqIvfModel(dir, m.transform.get, m.centroids.get,
+      m.codebooks.get)
     val (r2, c2, cb2) = Similarity.loadOpqIvfModel(spark, dir)
-    assert(topk(Similarity.opqIvfpqTopk(spark, sf,
-      model = Some((r2, c2, cb2)))) === fed)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq,
+      AnnModel(Some(r2), Some(c2), Some(cb2)))) === fed)
     // the session-memoized fed/indexed gate entries equal their one-shot twins
-    assert(topk(Similarity.opqIvfpqTopkFed(spark, sf)) === fed)
-    assert(topk(Similarity.opqIvfpqTopkIndexed(spark, sf)) === fed)
-    assert(topk(Similarity.opqTopkFed(spark, sf))
-      === topk(Similarity.opqTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq,
+      fedModel(AnnSpec.OpqIvfpq))) === fed)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq,
+      indexedModel(AnnSpec.OpqIvfpq))) === fed)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Opq, fedModel(AnnSpec.Opq)))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Opq)))
   }
 
   test("residual OPQ+IVFPQ: recall holds the composed raw-code tier, fed = inline = loaded") {
-    val m = Similarity.trainOpqIvfResidual(spark, sf)
-    val res = topk(Similarity.opqIvfpqResidualTopk(spark, sf, model = Some(m)))
+    val m = Similarity.train(spark, sf, AnnSpec.OpqIvfpqResidual)
+    val res = topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual, m))
     assert(res.size === 10)
     res.values.foreach(ns => assert(ns.size === 5))
     // the residual composition must not trail the raw-code composition at
-    // the same geometry — the ivfpqResidualTopk argument carried under
+    // the same geometry — the IvfpqResidual argument carried under
     // the learned rotation (residuals concentrate near zero, the code
     // budget buys within-cell detail)
-    val raw = recallAt5(topk(Similarity.opqIvfpqTopk(spark, sf)))
+    val raw = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq)))
     val r = recallAt5(res)
     assert(r >= raw,
       s"residual OPQ+IVFPQ recall@5=$r must not trail raw composed=$raw")
     assert(r >= 0.15, s"IVF-family floor: $r")
     // deterministic training → inline ≡ fed; the triple round-trips disk
-    assert(topk(Similarity.opqIvfpqResidualTopk(spark, sf)) === res)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual)) === res)
     val dir = java.nio.file.Files.createTempDirectory("graft_opqres").toString
-    Similarity.saveOpqIvfModel(dir, m._1, m._2, m._3)
-    assert(topk(Similarity.opqIvfpqResidualTopk(spark, sf,
-      model = Some(Similarity.loadOpqIvfModel(spark, dir)))) === res)
+    Similarity.saveOpqIvfModel(dir, m.transform.get, m.centroids.get,
+      m.codebooks.get)
+    val (r2, c2, cb2) = Similarity.loadOpqIvfModel(spark, dir)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual,
+      AnnModel(Some(r2), Some(c2), Some(cb2)))) === res)
     // the memoized fed gate entry equals the one-shot twin, and the
     // indexed rung (serving from the saveOpqIndex(residual=true)
     // artifact — rotation, residual flag, models and codes all read
     // back from disk) reproduces it too
-    assert(topk(Similarity.opqIvfpqResidualTopkFed(spark, sf)) === res)
-    assert(topk(Similarity.opqIvfpqResidualTopkIndexed(spark, sf)) === res)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual,
+      fedModel(AnnSpec.OpqIvfpqResidual))) === res)
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual,
+      indexedModel(AnnSpec.OpqIvfpqResidual))) === res)
   }
 
   test("OPQ beats PQ where PQ is weakest: variance concentrated inside one subspace") {
@@ -399,24 +416,24 @@ class SimilaritySpec extends SparkSpec {
     assert(rows("exact")._2 === 1.0 && rows("exact")._3 === 1.0)
     // the report must compute the same number this suite computes
     assert(math.abs(rows("lsh")._2
-      - recallAt5(topk(Similarity.lshTopk(spark, sf)))) < 1e-12)
+      - recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Lsh)))) < 1e-12)
     assert(math.abs(rows("ivf")._2
-      - recallAt5(topk(Similarity.ivfTopk(spark, sf)))) < 1e-12)
+      - recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Ivf)))) < 1e-12)
   }
 
   test("IVFPQ: cell-restricted ADC keeps the family floor and tracks full-scan PQ") {
-    val got = topk(Similarity.ivfpqTopk(spark, sf))
+    val got = topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq))
     assert(got.size === 10)
     got.values.foreach(ns => assert(ns.size === 5))
     // the cell stage caps recall vs brute force (IVF family property) —
-    // family floor, same as ivfTopk/int8IvfTopk; measured 0.50 here
+    // family floor, same as Ivf/Int8Ivf; measured 0.50 here
     val vsBf = recallAt5(got)
     assert(vsBf >= 0.15, s"IVFPQ vs brute-force recall=$vsBf")
     // the PQ-stage loss in isolation: against exact float scoring of the
-    // SAME probed cells (ivfTopk), the shortlist-100 ADC + exact rerank
-    // must recover the within-cell top-5 almost whole (the int8IvfTopk
+    // SAME probed cells (Ivf), the shortlist-100 ADC + exact rerank
+    // must recover the within-cell top-5 almost whole (the Int8Ivf
     // contract shape) — measured 0.98, pinned with headroom
-    val ivf = topk(Similarity.ivfTopk(spark, sf))
+    val ivf = topk(Similarity.topk(spark, sf, AnnSpec.Ivf))
     val hits = ivf.map { case (q, ns) =>
       got.getOrElse(q, Seq.empty).count(ns.toSet.contains) }.sum
     val vsIvf = hits.toDouble / ivf.values.map(_.size).sum
@@ -431,11 +448,12 @@ class SimilaritySpec extends SparkSpec {
         org.apache.spark.sql.functions.col("embedding"),
         org.apache.spark.sql.functions.col("label"))
     val cb = Similarity.pqCodebooks(e)
-    assert(topk(Similarity.pqTopk(spark, sf, codebooks = Some(cb)))
-      === topk(Similarity.pqTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Pq, AnnModel(codebooks = Some(cb))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Pq)))
     val cents = Similarity.centroids(e)
-    assert(topk(Similarity.int8IvfTopk(spark, sf, precomputedCents = Some(cents)))
-      === topk(Similarity.int8IvfTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Int8Ivf,
+        AnnModel(centroids = Some(cents))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Int8Ivf)))
   }
 
   test("saved ANN models round-trip parquet bit-exactly and feed retrieval identically") {
@@ -453,34 +471,34 @@ class SimilaritySpec extends SparkSpec {
       df.collect().map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
     assert(asMap(lc) === asMap(cents))
     assert(asMap(lcb) === asMap(cb))
-    assert(topk(Similarity.ivfpqTopk(spark, sf,
-        codebooks = Some(lcb), precomputedCents = Some(lc)))
-      === topk(Similarity.ivfpqTopk(spark, sf)))
-    // ivfTopk joins the family: fed centroids = inline training
-    assert(topk(Similarity.ivfTopk(spark, sf, Some(lc)))
-      === topk(Similarity.ivfTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq,
+        AnnModel(centroids = Some(lc), codebooks = Some(lcb))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq)))
+    // IVF joins the family: fed centroids = inline training
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivf, AnnModel(centroids = Some(lc))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Ivf)))
     // the FULL index (models + corpus codes): codes round-trip parquet
     // and index-fed retrieval — nothing about the corpus recomputed —
     // is still identical, raw and residual alike
     val ipath = java.nio.file.Files.createTempDirectory("graft_ann_index").toString
     Similarity.saveIndex(ipath, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
     val (ic, icb, icodes) = Similarity.loadIndex(spark, ipath)
-    assert(topk(Similarity.ivfpqTopk(spark, sf, codebooks = Some(icb),
-        precomputedCents = Some(ic), precomputedCodes = Some(icodes)))
-      === topk(Similarity.ivfpqTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq,
+        AnnModel(None, Some(ic), Some(icb), Some(icodes))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq)))
     val rcb = Similarity.pqCodebooks(
       Similarity.residualVectors(e, cents).select(col("vec_id"), col("embedding")))
     val rcodes = Similarity.buildIvfpqIndex(e, cents, rcb, residual = true)
-    assert(topk(Similarity.ivfpqResidualTopk(spark, sf, codebooks = Some(rcb),
-        precomputedCents = Some(cents), precomputedCodes = Some(rcodes)))
-      === topk(Similarity.ivfpqResidualTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.IvfpqResidual,
+        AnnModel(None, Some(cents), Some(rcb), Some(rcodes))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.IvfpqResidual)))
   }
 
   test("the fed and indexed gate entries (build-save-load once per session) equal the one-shot entry") {
-    assert(topk(Similarity.ivfpqTopkFed(spark, sf))
-      === topk(Similarity.ivfpqTopk(spark, sf)))
-    assert(topk(Similarity.ivfpqTopkIndexed(spark, sf))
-      === topk(Similarity.ivfpqTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq, fedModel(AnnSpec.Ivfpq)))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq, indexedModel(AnnSpec.Ivfpq)))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq)))
   }
 
   test("int8 codes persist and feed retrieval identically; index append equals full rebuild") {
@@ -492,10 +510,10 @@ class SimilaritySpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft_int8").toString
     Similarity.saveInt8Codes(path, Similarity.quantizeVectors(e))
     val qz = Similarity.loadInt8Codes(spark, path)
-    assert(topk(Similarity.int8Topk(spark, sf, precomputedQuantized = Some(qz)))
-      === topk(Similarity.int8Topk(spark, sf)))
-    assert(topk(Similarity.int8IvfTopk(spark, sf, precomputedQuantized = Some(qz)))
-      === topk(Similarity.int8IvfTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Int8, AnnModel(codes = Some(qz))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Int8)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Int8Ivf, AnnModel(codes = Some(qz))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Int8Ivf)))
     // append: encode a new batch against FROZEN models — identical to
     // rebuilding the whole index with those models (codes are per-vector)
     val cents = Similarity.centroids(e)
@@ -511,19 +529,19 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("residual IVFPQ: recall at least matches the raw-code tier at the same geometry") {
-    val res = topk(Similarity.ivfpqResidualTopk(spark, sf))
+    val res = topk(Similarity.topk(spark, sf, AnnSpec.IvfpqResidual))
     assert(res.size === 10)
     res.values.foreach(ns => assert(ns.size === 5))
     // residuals concentrate near zero, so the same 8×16 code budget buys
     // finer within-cell resolution — measured 0.52 vs raw 0.50 here (both
     // capped by the shared cell-probing stage); everything is
     // deterministic, so >= is a stable pin, not a flaky one
-    val raw = recallAt5(topk(Similarity.ivfpqTopk(spark, sf)))
+    val raw = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq)))
     val r = recallAt5(res)
     assert(r >= raw, s"residual recall@5=$r must not trail raw-code ivfpq=$raw")
     // and the within-cell contract holds like the raw tier: vs exact float
     // scoring of the SAME probed cells — measured 0.98
-    val ivf = topk(Similarity.ivfTopk(spark, sf))
+    val ivf = topk(Similarity.topk(spark, sf, AnnSpec.Ivf))
     val hits = ivf.map { case (q, ns) =>
       res.getOrElse(q, Seq.empty).count(ns.toSet.contains) }.sum
     val vsIvf = hits.toDouble / ivf.values.map(_.size).sum
@@ -556,15 +574,15 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_structured").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val exactS = topk(Similarity.bruteforceTopk(spark, dir))
+    val exactS = topk(Similarity.topk(spark, dir, AnnSpec.Exact))
     def recallS(m: Map[Long, Seq[Long]]): Double = {
       val hits = exactS.map { case (q, ns) =>
         m.getOrElse(q, Seq.empty).count(ns.toSet.contains) }.sum
       hits.toDouble / (exactS.size * 5)
     }
-    val pq = recallS(topk(Similarity.pqTopk(spark, dir)))
-    val ivfpq = recallS(topk(Similarity.ivfpqTopk(spark, dir)))
-    val res = recallS(topk(Similarity.ivfpqResidualTopk(spark, dir)))
+    val pq = recallS(topk(Similarity.topk(spark, dir, AnnSpec.Pq)))
+    val ivfpq = recallS(topk(Similarity.topk(spark, dir, AnnSpec.Ivfpq)))
+    val res = recallS(topk(Similarity.topk(spark, dir, AnnSpec.IvfpqResidual)))
     // measured 1.0 / 1.0 / 1.0 — every tier recovers the exact top-5
     // whole when the corpus has the structure the tiers exploit; the
     // near-random-corpus floors (0.6 / 0.15) are the corpus's fault, not
@@ -581,10 +599,12 @@ class SimilaritySpec extends SparkSpec {
     locally {
       import org.apache.spark.sql.functions.col
       val eS = spark.read.parquet(s"$dir/embeddings.parquet")
-      val fullIvf = recallS(topk(Similarity.ivfTopk(spark, dir,
-        Some(Similarity.kmeans(eS, col("label"), 2, trainCap = Long.MaxValue)))))
-      val sampIvf = recallS(topk(Similarity.ivfTopk(spark, dir,
-        Some(Similarity.kmeans(eS, col("label"), 2, trainCap = 500)))))
+      val fullIvf = recallS(topk(Similarity.topk(spark, dir, AnnSpec.Ivf,
+        AnnModel(centroids = Some(
+          Similarity.kmeans(eS, col("label"), 2, trainCap = Long.MaxValue))))))
+      val sampIvf = recallS(topk(Similarity.topk(spark, dir, AnnSpec.Ivf,
+        AnnModel(centroids = Some(
+          Similarity.kmeans(eS, col("label"), 2, trainCap = 500))))))
       assert(sampIvf >= fullIvf - 0.05,
         s"structured sample-trained IVF recall@5=$sampIvf vs full $fullIvf")
     }
@@ -634,8 +654,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("JL two-stage retrieval recovers most of the exact top-k; fed form is identical") {
-    val r50 = recallAt5(topk(Similarity.jlTopk(spark, sf)))
-    val r150 = recallAt5(topk(Similarity.jlTopk(spark, sf, shortlist = 150)))
+    val r50 = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Jl)))
+    val r150 = recallAt5(topk(Similarity.topk(spark, sf,
+      AnnSpec.Jl.copy(shortlist = 150))))
     // near-random 64-dim corpus squeezed to 16 dims — the hardest case for
     // a JL coarse scorer (all cosines are near 0, so the projected ordering
     // is noisy); measured 0.50 at shortlist-50, the IVFPQ family floor.
@@ -646,9 +667,9 @@ class SimilaritySpec extends SparkSpec {
     assert(r150 >= r50, s"wider shortlist lost recall: $r150 < $r50")
     assert(r150 >= 0.6, s"JL recall@5 $r150 below floor at shortlist 150")
     // fed-projection form (project once per corpus build) is plan-identical
-    val fed = Similarity.jlTopk(spark, sf, precomputedProjected =
-      Some(Similarity.projectVectors(graft.Tables(spark, sf).embeddings)))
-    assert(topk(fed) === topk(Similarity.jlTopk(spark, sf)))
+    val fed = Similarity.topk(spark, sf, AnnSpec.Jl, AnnModel(codes =
+      Some(Similarity.projectVectors(graft.Tables(spark, sf).embeddings))))
+    assert(topk(fed) === topk(Similarity.topk(spark, sf, AnnSpec.Jl)))
   }
 
   test("PCA basis: orthonormal, variance-ordered; retrieval ≥ JL; fed form identical") {
@@ -669,14 +690,14 @@ class SimilaritySpec extends SparkSpec {
       s"variance not sorted: ${ev.toSeq}")
     // learned basis beats (or ties) the random JL sheet at the same k —
     // the point of paying the training pass
-    val rPca = recallAt5(topk(Similarity.pcaTopk(spark, sf)))
-    val rJl = recallAt5(topk(Similarity.jlTopk(spark, sf)))
+    val rPca = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Pca)))
+    val rJl = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Jl)))
     assert(rPca >= rJl - 0.05, s"PCA recall $rPca far below JL $rJl at equal k")
     assert(rPca >= 0.45, s"PCA recall@5 $rPca below floor")
     // fed-components form (train once per corpus build) is output-identical
-    val fed = Similarity.pcaTopk(spark, sf,
-      precomputedComponents = Some(Similarity.trainPca(spark, sf)))
-    assert(topk(fed) === topk(Similarity.pcaTopk(spark, sf)))
+    val fed = Similarity.topk(spark, sf, AnnSpec.Pca,
+      AnnModel(transform = Some(Similarity.trainPca(spark, sf))))
+    assert(topk(fed) === topk(Similarity.topk(spark, sf, AnnSpec.Pca)))
   }
 
   test("PCA model round-trips through parquet with identical retrieval") {
@@ -686,8 +707,9 @@ class SimilaritySpec extends SparkSpec {
     // parquet doubles round-trip bit-exactly, so fed-from-disk retrieval
     // is identical to inline — the same train-once contract as the
     // IVF/PQ model artifacts
-    assert(topk(Similarity.pcaTopk(spark, sf, precomputedComponents = Some(loaded)))
-      === topk(Similarity.pcaTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Pca,
+        AnnModel(transform = Some(loaded))))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Pca)))
   }
 
   test("int8 quantization: bounded reconstruction error, near-unit cosine") {
@@ -717,42 +739,20 @@ class SimilaritySpec extends SparkSpec {
     // the single-broadcast form because queries are independent through
     // the shortlist. This is the serving-batch contract: a 100k-query
     // batch never rides one GB-scale broadcast
-    assert(topk(Similarity.pqTopk(spark, sf, maxBatchQ = 3))
-      === topk(Similarity.pqTopk(spark, sf)))
-    assert(topk(Similarity.ivfpqTopk(spark, sf, maxBatchQ = 3))
-      === topk(Similarity.ivfpqTopk(spark, sf)))
-    assert(topk(Similarity.ivfpqResidualTopk(spark, sf, maxBatchQ = 3))
-      === topk(Similarity.ivfpqResidualTopk(spark, sf)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Pq.copy(maxBatchQ = 3)))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Pq)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq.copy(maxBatchQ = 3)))
+      === topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq)))
+    assert(topk(Similarity.topk(spark, sf, AnnSpec.IvfpqResidual.copy(maxBatchQ = 3)))
+      === topk(Similarity.topk(spark, sf, AnnSpec.IvfpqResidual)))
   }
 
   test("serving forms answer arbitrary query batches; corpus-query parity is exact") {
     import org.apache.spark.sql.functions.col
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    // fed with the SAME batch the gate form derives internally, the
-    // serving forms must return identical results — same ADC tables,
-    // probes, chunks, rerank
-    val self = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    assert(topk(Similarity.pqTopkForQueries(spark, sf, self))
-      === topk(Similarity.pqTopk(spark, sf)))
-    assert(topk(Similarity.ivfpqTopkForQueries(spark, sf, self))
-      === topk(Similarity.ivfpqTopk(spark, sf)))
-    assert(topk(Similarity.ivfpqResidualTopkForQueries(spark, sf, self))
-      === topk(Similarity.ivfpqResidualTopk(spark, sf)))
-    assert(topk(Similarity.bruteforceTopkForQueries(spark, sf, self)) === exact)
-    assert(topk(Similarity.int8TopkForQueries(spark, sf, self))
-      === topk(Similarity.int8Topk(spark, sf)))
-    assert(topk(Similarity.jlTopkForQueries(spark, sf, self))
-      === topk(Similarity.jlTopk(spark, sf)))
-    assert(topk(Similarity.pcaTopkForQueries(spark, sf, self))
-      === topk(Similarity.pcaTopk(spark, sf)))
-    assert(topk(Similarity.lshTopkForQueries(spark, sf, self))
-      === topk(Similarity.lshTopk(spark, sf)))
-    assert(topk(Similarity.ivfTopkForQueries(spark, sf, self))
-      === topk(Similarity.ivfTopk(spark, sf)))
-    assert(topk(Similarity.int8IvfTopkForQueries(spark, sf, self))
-      === topk(Similarity.int8IvfTopk(spark, sf)))
-    // an EXTERNAL batch (disjoint id namespace, vectors copied from
+    // corpus-query parity (the serving form fed the SAME batch the gate
+    // form derives internally) is pinned for every declared spec by the
+    // declared-spec loop below; an EXTERNAL batch (disjoint id namespace, vectors copied from
     // corpus rows): the nearest neighbor of a corpus vector's copy is
     // the vector itself — rank 1, cosine ≈ 1 — because no id-equality
     // exclusion applies across namespaces
@@ -780,8 +780,8 @@ class SimilaritySpec extends SparkSpec {
     Similarity.saveIndex(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
     val (lc, lcb, lcodes) = Similarity.loadIndex(spark, path)
     def served(codes: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
-      topk(Similarity.ivfpqTopk(spark, sf, codebooks = Some(lcb),
-        precomputedCents = Some(lc), precomputedCodes = Some(codes)))
+      topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq,
+        AnnModel(None, Some(lc), Some(lcb), Some(codes))))
     // victim: a vector the index currently SERVES as a neighbor — deletion
     // must change a real answer, not a bystander's codes
     val victim = served(lcodes).values.flatten.filter(_ >= 10).min
@@ -858,12 +858,14 @@ class SimilaritySpec extends SparkSpec {
     // noise of it — the centroids differ, but both are valid quantizations
     // of the same distribution, so the cell-probing recall cap moves only
     // marginally
-    val full = recallAt5(topk(Similarity.ivfTopk(spark, sf,
-      Some(Similarity.kmeans(e, col("label"), 2, trainCap = Long.MaxValue)))))
+    def ivf(cents: DataFrame) = topk(Similarity.topk(spark, sf, AnnSpec.Ivf,
+      AnnModel(centroids = Some(cents))))
+    val full = recallAt5(ivf(
+      Similarity.kmeans(e, col("label"), 2, trainCap = Long.MaxValue)))
     // cap=250 keeps ~25 points/cell: measured 0.52 vs full 0.52 — within
     // the 0.1 parity band
-    val rHalf = recallAt5(topk(Similarity.ivfTopk(spark, sf,
-      Some(Similarity.kmeans(e, col("label"), 2, trainCap = 250)))))
+    val rHalf = recallAt5(ivf(
+      Similarity.kmeans(e, col("label"), 2, trainCap = 250)))
     assert(rHalf >= full - 0.1,
       s"sample-trained (cap=250) recall@5=$rHalf vs full-trained $full")
     // cap=125 starves cells (~12 points each — far under the
@@ -871,16 +873,16 @@ class SimilaritySpec extends SparkSpec {
     // measured 0.38 vs 0.52, a real degradation that is exactly WHY the
     // per-cell floor exists. Still a valid quantization — pinned at the
     // family's recall floor, not at parity
-    val rQuarter = recallAt5(topk(Similarity.ivfTopk(spark, sf,
-      Some(Similarity.kmeans(e, col("label"), 2, trainCap = 125)))))
+    val rQuarter = recallAt5(ivf(
+      Similarity.kmeans(e, col("label"), 2, trainCap = 125)))
     assert(rQuarter >= 0.15,
       s"sample-trained (cap=125) recall@5=$rQuarter below floor")
     // PQ side: codebooks fit on the sample, corpus still encodes in full —
     // ADC retrieval keeps useful recall at a halved training corpus
-    val fullPq = recallAt5(topk(Similarity.pqTopk(spark, sf,
-      codebooks = Some(Similarity.pqCodebooks(e, trainCap = Long.MaxValue)))))
-    val sampPq = recallAt5(topk(Similarity.pqTopk(spark, sf,
-      codebooks = Some(Similarity.pqCodebooks(e, trainCap = 250)))))
+    val fullPq = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Pq, AnnModel(
+      codebooks = Some(Similarity.pqCodebooks(e, trainCap = Long.MaxValue))))))
+    val sampPq = recallAt5(topk(Similarity.topk(spark, sf, AnnSpec.Pq, AnnModel(
+      codebooks = Some(Similarity.pqCodebooks(e, trainCap = 250))))))
     assert(sampPq >= fullPq - 0.1,
       s"sample-trained PQ recall@5=$sampPq vs full-trained $fullPq")
   }
@@ -914,10 +916,13 @@ class SimilaritySpec extends SparkSpec {
     val ran = scala.collection.mutable.Set[String]()
     def cand(name: String, cost: Double, mk: () => org.apache.spark.sql.DataFrame) =
       (name, cost, () => { ran += name; mk() })
-    val exS = Similarity.bruteforceTopk(spark, dir)
+    def ivf(d: String, c: org.apache.spark.sql.DataFrame, n: Int) = () =>
+      Similarity.topk(spark, d, AnnSpec.Ivf.copy(nprobe = Some(n)),
+        AnnModel(centroids = Some(c)))
+    val exS = Similarity.topk(spark, dir, AnnSpec.Exact)
     val (tierS, recallS, metS) = Similarity.tuneForRecall(exS, Seq(
-      cand("ivf_nprobe1", 1.0, () => Similarity.ivfTopk(spark, dir, Some(cents), nprobe = 1)),
-      cand("ivf_nprobe2", 2.0, () => Similarity.ivfTopk(spark, dir, Some(cents), nprobe = 2)),
+      cand("ivf_nprobe1", 1.0, ivf(dir, cents, 1)),
+      cand("ivf_nprobe2", 2.0, ivf(dir, cents, 2)),
       cand("exact", 1e9, () => exS)), target = 0.8)
     assert(tierS === "ivf_nprobe1" && metS && recallS >= 0.8,
       s"structured corpus: cheapest config must win ($tierS, $recallS)")
@@ -930,24 +935,24 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqCodebooks(e)
     val codes = Similarity.buildIvfpqIndex(e, cents, cb)
     val (tierP, recallP, metP) = Similarity.tuneForRecall(exS, Seq(
-      cand("ivfpq_nprobe1", 1.0, () => Similarity.ivfpqTopk(spark, dir,
-        codebooks = Some(cb), precomputedCents = Some(cents),
-        precomputedCodes = Some(codes), nprobe = 1)),
-      cand("ivfpq_nprobe3", 3.0, () => Similarity.ivfpqTopk(spark, dir,
-        codebooks = Some(cb), precomputedCents = Some(cents),
-        precomputedCodes = Some(codes), nprobe = 3))), target = 0.8)
+      cand("ivfpq_nprobe1", 1.0, () => Similarity.topk(spark, dir,
+        AnnSpec.Ivfpq.copy(nprobe = Some(1)),
+        AnnModel(None, Some(cents), Some(cb), Some(codes)))),
+      cand("ivfpq_nprobe3", 3.0, () => Similarity.topk(spark, dir,
+        AnnSpec.Ivfpq.copy(nprobe = Some(3)),
+        AnnModel(None, Some(cents), Some(cb), Some(codes))))), target = 0.8)
     assert(tierP === "ivfpq_nprobe1" && metP && recallP >= 0.8,
       s"frozen-index ivfpq tuning must pick nprobe=1 ($tierP, $recallP)")
     assert(ran.toSet === Set("ivfpq_nprobe1"), s"early exit held: $ran")
     // the near-random driver corpus: no nprobe in the ladder reaches 0.9
     // — the tuner must escalate through the ladder to the exact tier
     ran.clear()
-    val exR = Similarity.bruteforceTopk(spark, sf)
+    val exR = Similarity.topk(spark, sf, AnnSpec.Exact)
     val centsR = Similarity.centroids(
       spark.read.parquet(s"$sf/embeddings.parquet"))
     val (tierR, recallR, metR) = Similarity.tuneForRecall(exR, Seq(
-      cand("ivf_nprobe1", 1.0, () => Similarity.ivfTopk(spark, sf, Some(centsR), nprobe = 1)),
-      cand("ivf_nprobe3", 3.0, () => Similarity.ivfTopk(spark, sf, Some(centsR), nprobe = 3)),
+      cand("ivf_nprobe1", 1.0, ivf(sf, centsR, 1)),
+      cand("ivf_nprobe3", 3.0, ivf(sf, centsR, 3)),
       cand("exact", 1e9, () => exR)), target = 0.9)
     assert(tierR === "exact" && metR && recallR === 1.0,
       s"near-random corpus must escalate to exact ($tierR, $recallR)")
@@ -1199,11 +1204,12 @@ class SimilaritySpec extends SparkSpec {
     // model-fed inline form
     val queries = e.limit(5)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val served = Similarity.opqIvfpqTopkForQueries(spark, sf01, queries,
-      model = Some((rotL, centsL, cbL)), precomputedCodes = Some(codesL))
+    val served = Similarity.topk(spark, sf01, AnnSpec.OpqIvfpq,
+      AnnModel(Some(rotL), Some(centsL), Some(cbL), Some(codesL)), Some(queries))
       .collect().map(_.toString).sorted.toSeq
-    val inline = Similarity.opqIvfpqTopkForQueries(spark, sf01, queries,
-      model = Some((rot, cents, cb))).collect().map(_.toString).sorted.toSeq
+    val inline = Similarity.topk(spark, sf01, AnnSpec.OpqIvfpq,
+      AnnModel(Some(rot), Some(cents), Some(cb)), Some(queries))
+      .collect().map(_.toString).sorted.toSeq
     assert(served === inline,
       "serving from the loaded artifact must equal the inline-encode form")
     // the world moves: two shifted batches trip, the retrain fires, and
@@ -1583,5 +1589,34 @@ class SimilaritySpec extends SparkSpec {
       "rebuild must clear markers + watermark")
     assert(Similarity.appendToIndexAt(spark, ip, fresh, 0L),
       "post-rebuild batch 0 must apply, not read as already committed")
+  }
+
+  test("every declared ANN spec: probe batch ≡ explicit batch, inline ≡ fed ≡ indexed, lit(true) ≡ no filter") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val probe = spark.read.parquet(s"$sf/embeddings.parquet")
+      .filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val sources = Seq(AnnSource.Inline, AnnSource.Fed, AnnSource.Indexed)
+    val crossChecked = scala.collection.mutable.Set[AnnSpec]()
+    for ((name, spec, source) <- Similarity.annQueries) {
+      val model = Similarity.modelFor(spark, sf, spec, source)
+      val declared = topk(Similarity.topk(spark, sf, spec, model))
+      // the corpus form IS the serving form fed the same batch: same
+      // tables, probes, chunks, rerank
+      assert(topk(Similarity.topk(spark, sf, spec, model, Some(probe)))
+        === declared, s"$name: probe batch vs the same batch passed explicitly")
+      // PQ shapes persist: every model source serves the same answer
+      // (training is deterministic and the artifacts round-trip exactly)
+      if ((spec.code == AnnCode.Pq || spec.code == AnnCode.ResidualPq) &&
+          crossChecked.add(spec))
+        for (other <- sources if other != source)
+          assert(topk(Similarity.topk(spark, sf, spec,
+            Similarity.modelFor(spark, sf, spec, other))) === declared,
+            s"$name: $source vs $other")
+      // the trivial pre-filter is the identity, inline or fed
+      if (spec.filter.isEmpty)
+        assert(topk(Similarity.topk(spark, sf, spec.filtered(lit(true)), model))
+          === declared, s"$name: lit(true) filter vs unfiltered")
+    }
   }
 }

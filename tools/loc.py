@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
-"""Line counts of the library's main sources: total lines and code lines
+"""Line counts of the library's main sources: total lines, code lines
 (non-blank, outside // line comments and /* */ block comments, scaladoc
-included), per file and summed. With --against REV, each count is printed
-next to its delta from the same files at that git revision (files added or
-deleted since count against zero).
+included) and public defs (`def` declarations of top-level objects' and
+classes' members without a private/protected modifier; local defs, indented
+deeper, do not count), per file and summed. With --against REV, each count
+is printed next to its delta from the same files at that git revision
+(files added or deleted since count against zero).
 
 Usage:
   python3 tools/loc.py                  # counts of the working tree
@@ -12,17 +14,21 @@ Usage:
 """
 import argparse
 import os
+import re
 import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "src/main"
 EXTS = (".scala", ".java")
+# a member def: two-space indent, then modifiers (possibly qualified, like
+# private[graft]), then `def`
+MEMBER_DEF = re.compile(r"^  ((?:[a-z]+(?:\[[\w.]+\])?\s+)*)def\s")
 
 
 def count(text):
-    """(total lines, code lines) of one source text."""
-    total = code = 0
+    """(total lines, code lines, public defs) of one source text."""
+    total = code = defs = 0
     in_block = False
     for raw in text.splitlines():
         total += 1
@@ -39,7 +45,10 @@ def count(text):
             in_block = "*/" not in line[2:]
             continue
         code += 1
-    return total, code
+        m = MEMBER_DEF.match(raw)
+        if m and not re.search(r"\b(private|protected)\b", m.group(1)):
+            defs += 1
+    return total, code, defs
 
 
 def worktree():
@@ -77,23 +86,25 @@ def main():
     base = at_rev(a.against) if a.against else None
     paths = sorted(set(now) | set(base or {}))
     rows = []
+    cols = (0, 1, 2)
     for p in paths + ["TOTAL"]:
         if p == "TOTAL":
-            cur = tuple(sum(v[i] for v in now.values()) for i in (0, 1))
-            old = (tuple(sum(v[i] for v in base.values()) for i in (0, 1))
+            cur = tuple(sum(v[i] for v in now.values()) for i in cols)
+            old = (tuple(sum(v[i] for v in base.values()) for i in cols)
                    if base is not None else None)
         else:
-            cur = now.get(p, (0, 0))
-            old = base.get(p, (0, 0)) if base is not None else None
+            cur = now.get(p, (0, 0, 0))
+            old = base.get(p, (0, 0, 0)) if base is not None else None
             if old is not None and cur == old:
                 continue
-        row = [p, str(cur[0]), str(cur[1])]
+        row = [p] + [str(c) for c in cur]
         if old is not None:
-            row += [f"{cur[0] - old[0]:+d}", f"{cur[1] - old[1]:+d}"]
+            row += [f"{c - o:+d}" for c, o in zip(cur, old)]
         rows.append(row)
     if a.totals:
         rows = rows[-1:]
-    head = ["file", "lines", "code"] + (["d_lines", "d_code"] if base else [])
+    head = (["file", "lines", "code", "pub_defs"] +
+            (["d_lines", "d_code", "d_pub_defs"] if base else []))
     widths = [max(len(r[i]) for r in rows + [head]) for i in range(len(head))]
     for r in [head] + rows:
         print("  ".join(c.ljust(widths[0]) if i == 0 else c.rjust(widths[i])
