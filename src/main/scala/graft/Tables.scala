@@ -6,12 +6,17 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Typed access to the driver's parquet tables under one sf directory.
   *
-  * Reads are plain `spark.read.parquet` so Catalyst keeps full pushdown and
-  * pruning freedom — no caching, no forced schemas. At 100 TB these are
-  * partitioned parquet lakes; the same accessors work unchanged.
+  * Every read is [[Inputs.parquet]]: the frame `spark.read.parquet` would
+  * plan, so Catalyst keeps full pushdown and pruning freedom, and no data
+  * is cached. Only the inferred schema is memoized, per session, keyed on
+  * the table's qualified path and a stamp of its file listing (file count,
+  * newest mtime, total length, a hash of the file names), so a table read
+  * again pays no schema-inference job and a rewritten one is re-inferred.
+  * At 100 TB these are partitioned parquet lakes; the same accessors work
+  * unchanged.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Inputs.parquet(spark, s"$dir/$name.parquet")
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
   def customer: DataFrame   = t("customer")

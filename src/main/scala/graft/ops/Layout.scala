@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, TimestampType}
-import graft.Tables
+import graft.{Inputs, Tables}
 
 /** Z-order (Morton-curve) data layout — the multi-dimensional clustering
   * step a 100 TB table needs for data skipping on MORE THAN ONE column
@@ -378,23 +378,24 @@ object Layout {
     * same file enumeration any Spark scan of the dir already performs.
     */
   private[graft] def listDataFiles(s: SparkSession,
-      dir: String): IndexedSeq[String] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
+      dir: String): IndexedSeq[String] = dataFilesOf(s, dir, listed(s, dir))
+
+  /** The one walk of `dir` a pruned read or refresh takes: it yields the
+    * data files ([[dataFilesOf]]) and keys the dir's memoized schema.
+    */
+  private def listed(s: SparkSession, dir: String): Inputs.Listing =
+    Inputs.listing(s, dir).getOrElse(
+      throw new java.io.FileNotFoundException(s"File $dir does not exist"))
+
+  /** [[listDataFiles]] of a listing already taken: its `.parquet` leaves
+    * none of whose dir-relative segments is `_`- or `.`-prefixed.
+    */
+  private def dataFilesOf(s: SparkSession, dir: String,
+      l: Inputs.Listing): IndexedSeq[String] = {
     val pre = enginePrefix(s, dir)
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
-    def walk(p: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath)
-          else if (n.endsWith(".parquet"))
-            buf += st.getPath.toUri.toString.stripPrefix(pre)
-        }
-      }
-    walk(root)
-    buf.toIndexedSeq
+    l.leaves.map(_.getPath.toUri.toString.stripPrefix(pre)).filter(rel =>
+      rel.endsWith(".parquet") &&
+        rel.split('/').forall(n => !n.startsWith("_") && !n.startsWith(".")))
   }
 
   /** A relative manifest key turned back into a readable absolute path:
@@ -487,7 +488,7 @@ object Layout {
     require(cols.nonEmpty, "statsManifest needs at least one column")
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    s.read.parquet(dir)
+    Inputs.parquet(s, dir)
       .groupBy(relFileCol(s, dir).as("file"))
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
   }
@@ -508,13 +509,9 @@ object Layout {
   /** The columns a persisted manifest covers (from its min_/max_ schema),
     * empty when no manifest exists.
     */
-  def manifestCols(s: SparkSession, dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$ManifestDir")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else s.read.parquet(p.toString).schema.fieldNames.toSeq
+  def manifestCols(s: SparkSession, dir: String): Seq[String] =
+    Inputs.schemaOf(s, s"$dir/$ManifestDir").toSeq.flatMap(_.fieldNames)
       .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-  }
 
   /** Rebuild a dir's manifest over the columns it already declares — the
     * maintenance hook appends and compactions call so stats never go
@@ -544,9 +541,9 @@ object Layout {
     val cols = manifestCols(s, dir)
     if (cols.isEmpty) return (0L, 0L, 0L)
     val mDir = s"$dir/$ManifestDir"
-    val m = s.read.parquet(mDir)
+    val m = Inputs.parquet(s, mDir)
     val dataFiles = listDataFiles(s, dir)
-    val covered = m.select(col("file")).collect().map(_.getString(0)).toSet
+    val covered = fileSet(m)
     val newFiles = dataFiles.filterNot(covered)
     val phantoms = (covered -- dataFiles).size.toLong
     if (newFiles.isEmpty && phantoms == 0L)
@@ -604,25 +601,25 @@ object Layout {
     * requested column's [min, max] intersects its range. No-op without a
     * manifest.
     */
-  private def statsPruneRanges(s: SparkSession, dir: String,
+  private def statsPruneRanges(stats: Option[DataFrame],
       files: IndexedSeq[String],
-      ranges: Seq[(String, Column, Column)]): IndexedSeq[String] = {
-    val mPath = new org.apache.hadoop.fs.Path(s"$dir/$ManifestDir")
-    val fs = mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mPath)) return files
-    val m = s.read.parquet(mPath.toString)
-    val coveredCols = m.schema.fieldNames
-      .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSet
-    val covered = m.select(col("file")).collect().map(_.getString(0)).toSet
-    val conds = ranges.collect { case (c, lo, hi) if coveredCols(c) =>
-      col(s"max_$c") >= lo && col(s"min_$c") <= hi
+      ranges: Seq[(String, Column, Column)]): IndexedSeq[String] =
+    stats.fold(files) { m =>
+      val coveredCols = m.schema.fieldNames
+        .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSet
+      val covered = fileSet(m)
+      val conds = ranges.collect { case (c, lo, hi) if coveredCols(c) =>
+        col(s"max_$c") >= lo && col(s"min_$c") <= hi
+      }
+      val keep =
+        if (conds.isEmpty) covered // no requested column covered: keep all
+        else fileSet(m.filter(conds.reduce(_ && _)))
+      files.filter(f => !covered(f) || keep(f))
     }
-    val keep =
-      if (conds.isEmpty) covered // no requested column covered: keep all
-      else m.filter(conds.reduce(_ && _))
-        .select(col("file")).collect().map(_.getString(0)).toSet
-    files.filter(f => !covered(f) || keep(f))
-  }
+
+  /** The `file` column of a manifest frame, as a set. */
+  private def fileSet(m: DataFrame): Set[String] =
+    m.select(col("file")).collect().map(_.getString(0)).toSet
 
   def readPrunedMulti(s: SparkSession, dir: String,
       ranges: Seq[(String, Column, Column)]): DataFrame = {
@@ -647,10 +644,10 @@ object Layout {
   def pruneReport(s: SparkSession, dir: String,
       ranges: Seq[(String, Column, Column)]): DataFrame = {
     require(ranges.nonEmpty, "pruneReport needs at least one range")
-    lazy val fullSchema = s.read.parquet(dir).schema
-    val all = listDataFiles(s, dir)
-    val (afterPart, afterStats, _) = pruneWhereTiers(s, dir, fullSchema,
-      all, ranges.map { case (c, lo, hi) => ColPred.Range(c, lo, hi) })
+    val l = listed(s, dir)
+    val all = dataFilesOf(s, dir, l)
+    val (afterPart, afterStats, _) = pruneWhereTiers(s, dir,
+      Inputs.schemaOf(s, l), all, ranges.map { case (c, lo, hi) => ColPred.Range(c, lo, hi) })
     import s.implicits._
     Seq(
       ("total", all.size.toLong, all.size.toLong),
@@ -678,7 +675,7 @@ object Layout {
     */
   def writeBloomManifest(s: SparkSession, dir: String, c: String,
       expectedPerFile: Long = 4096L, numBits: Long = 1L << 16): Unit = {
-    val m = s.read.parquet(dir)
+    val m = Inputs.parquet(s, dir)
       .groupBy(relFileCol(s, dir).as("file"))
       .agg(count(lit(1)).as("n_rows"),
         graft.functions.bloom_agg(xxhash64(col(c)), expectedPerFile, numBits)
@@ -698,13 +695,10 @@ object Layout {
   /** The column a persisted Bloom manifest covers (from its `bloom_<c>`
     * schema), None when no manifest exists.
     */
-  def bloomManifestCol(s: SparkSession, dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$BloomManifestDir")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else s.read.parquet(p.toString).schema.fieldNames
-      .find(_.startsWith("bloom_")).map(_.stripPrefix("bloom_"))
-  }
+  def bloomManifestCol(s: SparkSession, dir: String): Option[String] =
+    Inputs.schemaOf(s, s"$dir/$BloomManifestDir")
+      .flatMap(_.fieldNames.find(_.startsWith("bloom_")))
+      .map(_.stripPrefix("bloom_"))
 
   /** Rebuild a dir's Bloom manifest over the column it already declares —
     * the [[refreshManifest]] discipline, PRESERVING the manifest's own
@@ -724,7 +718,7 @@ object Layout {
     */
   private def bloomGeometry(s: SparkSession, dir: String,
       c: String): (Long, Long) = {
-    val m = s.read.parquet(s"$dir/$BloomManifestDir")
+    val m = Inputs.parquet(s, s"$dir/$BloomManifestDir")
     val hasGeom = m.schema.fieldNames.contains("expected_per_file")
     val row = m.limit(1)
       .select((col(s"bloom_$c") +:
@@ -765,7 +759,7 @@ object Layout {
     val cOpt = bloomManifestCol(s, dir)
     if (cOpt.isEmpty) return (false, 0L)
     val c = cOpt.get
-    val m = s.read.parquet(s"$dir/$BloomManifestDir")
+    val m = Inputs.parquet(s, s"$dir/$BloomManifestDir")
     val sampled = m.orderBy(col("file")).limit(sampleFiles)
       .select(col(s"bloom_$c")).collect()
     if (sampled.isEmpty) return (false, 0L)
@@ -805,9 +799,9 @@ object Layout {
     if (cOpt.isEmpty) return (0L, 0L, 0L)
     val c = cOpt.get
     val mDir = s"$dir/$BloomManifestDir"
-    val m = s.read.parquet(mDir)
+    val m = Inputs.parquet(s, mDir)
     val dataFiles = listDataFiles(s, dir)
-    val covered = m.select(col("file")).collect().map(_.getString(0)).toSet
+    val covered = fileSet(m)
     val newFiles = dataFiles.filterNot(covered)
     val phantoms = (covered -- dataFiles).size.toLong
     if (newFiles.isEmpty && phantoms == 0L)
@@ -861,42 +855,44 @@ object Layout {
     * clustered key prunes here even when no Bloom manifest exists; typed
     * literals go through the engine like the row filter.
     */
-  private def statsPrunePoint(s: SparkSession, dir: String,
+  private def statsPrunePoint(stats: Option[DataFrame],
       files: IndexedSeq[String], c: String,
       colType: => org.apache.spark.sql.types.DataType,
-      values: Seq[Any]): IndexedSeq[String] = {
-    val sPath = new org.apache.hadoop.fs.Path(s"$dir/$ManifestDir")
-    val fs = sPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sPath)) return files
-    val m = s.read.parquet(sPath.toString)
-    if (!m.schema.fieldNames.contains(s"min_$c")) return files
-    val covered = m.select(col("file")).collect().map(_.getString(0)).toSet
-    val anyIn = values.map(v => col(s"min_$c") <= lit(v).cast(colType)
-      && col(s"max_$c") >= lit(v).cast(colType)).reduce(_ || _)
-    val keep = m.filter(anyIn)
-      .select(col("file")).collect().map(_.getString(0)).toSet
-    files.filter(f => !covered(f) || keep(f))
-  }
+      values: Seq[Any]): IndexedSeq[String] =
+    stats.filter(_.schema.fieldNames.contains(s"min_$c")).fold(files) { m =>
+        val covered = fileSet(m)
+        val anyIn = values.map(v => col(s"min_$c") <= lit(v).cast(colType)
+          && col(s"max_$c") >= lit(v).cast(colType)).reduce(_ || _)
+        val keep = fileSet(m.filter(anyIn))
+        files.filter(f => !covered(f) || keep(f))
+      }
 
-  /** Tier 3 of the point route: the distributed Bloom probe. */
-  private def bloomPrunePoint(s: SparkSession, dir: String,
+  /** Tier 3 of the point route: the distributed Bloom probe, one job —
+    * each manifest row answers (file, might-contain), so the one pass
+    * yields both the covered files and the kept ones. The manifest stays
+    * distributed (KBs per file); the value hashes are evaluated on a
+    * driver-local row.
+    */
+  private def bloomPrunePoint(s: SparkSession, bloom: Option[Inputs.Listing],
       files: IndexedSeq[String], c: String,
       colType: => org.apache.spark.sql.types.DataType,
-      values: Seq[Any]): IndexedSeq[String] = {
-    val mPath = new org.apache.hadoop.fs.Path(s"$dir/$BloomManifestDir")
-    val fs = mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mPath)) return files
-    val m = s.read.parquet(mPath.toString)
-    if (!m.schema.fieldNames.contains(s"bloom_$c")) return files
-    val hashes = s.range(1)
-      .select(values.map(v => xxhash64(lit(v).cast(colType))): _*)
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    val covered = m.select(col("file")).collect().map(_.getString(0)).toSet
-    val keep = m
-      .filter(graft.functions.bloom_any_of(col(s"bloom_$c"), hashes))
-      .select(col("file")).collect().map(_.getString(0)).toSet
-    files.filter(f => !covered(f) || keep(f))
-  }
+      values: Seq[Any]): IndexedSeq[String] =
+    bloom.map(Inputs.parquet(s, _))
+      .filter(_.schema.fieldNames.contains(s"bloom_$c")).fold(files) { m =>
+        val hashes = s.createDataFrame(
+            java.util.List.of(org.apache.spark.sql.Row.empty),
+            new org.apache.spark.sql.types.StructType())
+          .select(values.map(v => xxhash64(lit(v).cast(colType))): _*)
+          .head().toSeq.map(_.asInstanceOf[Long]).toArray
+        val probed = m.select(col("file"),
+            graft.functions.bloom_any_of(col(s"bloom_$c"), hashes))
+          .collect()
+        val covered = probed.map(_.getString(0)).toSet
+        val keep = probed.filter(r => !r.isNullAt(1) && r.getBoolean(1))
+          .map(_.getString(0)).toSet
+        files.filter(f => !covered(f) || keep(f))
+      }
+
 
   def readPrunedPoint(s: SparkSession, dir: String, c: String,
       values: Seq[Any]): DataFrame =
@@ -946,6 +942,9 @@ object Layout {
       schema: => org.apache.spark.sql.types.StructType,
       all: IndexedSeq[String], preds: Seq[ColPred])
       : (IndexedSeq[String], IndexedSeq[String], IndexedSeq[String]) = {
+    // each manifest is listed once per read, and only by a tier that needs it
+    lazy val stats = Inputs.local(s, s"$dir/$ManifestDir")
+    lazy val bloom = Inputs.listing(s, s"$dir/$BloomManifestDir")
     val afterPart = partitionPrune(s, all, schema, preds.map {
       case ColPred.Range(c, lo, hi) => (c, (v: Column) => v >= lo && v <= hi)
       case ColPred.In(c, vs) => (c, (v: Column) => v.isin(vs: _*))
@@ -954,11 +953,11 @@ object Layout {
     val points = preds.collect { case p: ColPred.In => p }
     val afterStats = points.foldLeft(
         if (ranges.isEmpty) afterPart
-        else statsPruneRanges(s, dir, afterPart, ranges)) { (files, p) =>
-      statsPrunePoint(s, dir, files, p.c, schema(p.c).dataType, p.values)
+        else statsPruneRanges(stats, afterPart, ranges)) { (files, p) =>
+      statsPrunePoint(stats, files, p.c, schema(p.c).dataType, p.values)
     }
     val afterBloom = points.foldLeft(afterStats) { (files, p) =>
-      bloomPrunePoint(s, dir, files, p.c, schema(p.c).dataType, p.values)
+      bloomPrunePoint(s, bloom, files, p.c, schema(p.c).dataType, p.values)
     }
     (afterPart, afterStats, afterBloom)
   }
@@ -983,14 +982,12 @@ object Layout {
         s"readPrunedWhere: IN predicate on '$c' needs at least one value")
       case _ => ()
     }
-    val full = () => s.read.parquet(dir)
-    lazy val fullSchema = full().schema
-    val (_, _, pruned) = pruneWhereTiers(s, dir, fullSchema,
-      listDataFiles(s, dir), preds)
+    val l = listed(s, dir)
+    val (_, _, pruned) = pruneWhereTiers(s, dir, Inputs.schemaOf(s, l),
+      dataFilesOf(s, dir, l), preds)
     val base =
-      if (pruned.isEmpty) full().filter(lit(false))
-      else s.read.option("basePath", dir)
-        .parquet(pruned.map(absDataPath(dir, _)): _*)
+      if (pruned.isEmpty) Inputs.parquet(s, l).filter(lit(false))
+      else Inputs.parquetFiles(s, l, pruned.map(absDataPath(dir, _)))
     base.filter(preds.map {
       case ColPred.Range(c, lo, hi) => col(c) >= lo && col(c) <= hi
       case ColPred.In(c, vs) => col(c).isin(vs: _*)
@@ -1010,10 +1007,10 @@ object Layout {
         s"pruneReportWhere: IN predicate on '$c' needs at least one value")
       case _ => ()
     }
-    lazy val fullSchema = s.read.parquet(dir).schema
-    val all = listDataFiles(s, dir)
+    val l = listed(s, dir)
+    val all = dataFilesOf(s, dir, l)
     val (afterPart, afterStats, afterBloom) =
-      pruneWhereTiers(s, dir, fullSchema, all, preds)
+      pruneWhereTiers(s, dir, Inputs.schemaOf(s, l), all, preds)
     import s.implicits._
     Seq(
       ("total", all.size.toLong, all.size.toLong),

@@ -20,6 +20,17 @@ private[graft] final class SessionMemo[K, V] {
     memo.keySet.removeIf(_._1 != ctx)
     memo.computeIfAbsent((ctx, key), _ => build)
   }
+
+  /** [[apply]] for a value whose source can change under its key: a held
+    * value that `valid` rejects is rebuilt in place, so the key keeps one
+    * generation at a time. A build that throws leaves the held value.
+    */
+  def fresh(s: SparkSession, key: K)(valid: V => Boolean)(build: => V): V = {
+    val ctx = SessionMemo.contextId(s)
+    memo.keySet.removeIf(_._1 != ctx)
+    memo.compute((ctx, key), (_, held) =>
+      if (held != null && valid(held)) held else build)
+  }
 }
 
 private[graft] object SessionMemo {
