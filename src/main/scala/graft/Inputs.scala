@@ -71,6 +71,25 @@ private[graft] object Inputs {
         .sum), leaves.toIndexedSeq))
   }
 
+  /** `spark.read.parquet(l.path)`, optionally under a known schema. A path
+    * whose own name Spark's listing filter drops (graft's `_`-prefixed
+    * manifest dirs) reads from its listed leaves rooted at the path: the
+    * same files, without Spark's warning that all paths were ignored.
+    */
+  private def read(s: SparkSession, l: Listing,
+      schema: Option[StructType]): DataFrame = {
+    val r = schema.fold(s.read)(s.read.schema)
+    if (listed(new Path(l.path).getName) || l.leaves.isEmpty) r.parquet(l.path)
+    else r.option("basePath", l.path)
+      .parquet(l.leaves.map(_.getPath.toString): _*)
+  }
+
+  /** `spark.read.parquet(path)` with no memo — a read that must infer
+    * afresh, such as an audit of a graft metadata dir.
+    */
+  def plain(s: SparkSession, path: String): DataFrame =
+    listing(s, path).fold(s.read.parquet(path))(read(s, _, None))
+
   /** The memoized schema of `l`, or — on a miss — the inferred frame,
     * whose schema is stored for the next read of the same listing.
     */
@@ -78,7 +97,7 @@ private[graft] object Inputs {
       l: Listing): Either[StructType, DataFrame] = {
     var inferred: Option[DataFrame] = None
     val held = schemas.fresh(s, l.key)(_._1 == l.stamp) {
-      val df = s.read.parquet(l.path)
+      val df = read(s, l, None)
       inferred = Some(df)
       (l.stamp, df.schema)
     }._2
@@ -99,7 +118,7 @@ private[graft] object Inputs {
     * job once the listing has been seen.
     */
   def parquet(s: SparkSession, l: Listing): DataFrame =
-    memoized(s, l).fold(s.read.schema(_).parquet(l.path), identity)
+    memoized(s, l).fold(schema => read(s, l, Some(schema)), identity)
 
   /** [[parquet]] of `path`. A missing path reads plainly, so it fails with
     * Spark's own error.
@@ -132,4 +151,44 @@ private[graft] object Inputs {
           s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
       }._2
     }
+
+  // ------------------------------------------------------------ stamps
+  /** The text of a graft-owned stamp: a small `_`-prefixed file beside the
+    * data it describes (`_state_meta`, `_ann_spec`, `_geometry`, ...),
+    * invisible to parquet readers. None when absent.
+    */
+  def readStamp(s: SparkSession, file: String): Option[String] = {
+    val p = new Path(file)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    }
+  }
+
+  /** Write `text` as the stamp `file`, replacing any previous one. */
+  def writeStamp(s: SparkSession, file: String, text: String): Unit = {
+    val p = new Path(file)
+    val out = p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** A stamp in the sorted `key=value` line form; empty when absent. */
+  def readKeyValues(s: SparkSession, file: String): Map[String, String] =
+    readStamp(s, file).fold(Map.empty[String, String]) {
+      _.linesIterator.filter(_.contains("=")).map { l =>
+        val i = l.indexOf('=')
+        l.substring(0, i) -> l.substring(i + 1)
+      }.toMap
+    }
+
+  /** Write `kv` as a sorted `key=value` stamp (a repeated key keeps its
+    * last value).
+    */
+  def writeKeyValues(s: SparkSession, file: String,
+      kv: Iterable[(String, String)]): Unit =
+    writeStamp(s, file, kv.toMap.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"$k=$v" }.mkString("\n"))
 }

@@ -238,8 +238,9 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       val cents = graft.ops.Similarity.centroids(emb)
       val cb = graft.ops.Similarity.pqCodebooks(emb)
-      graft.ops.Similarity.saveIndex(mp, cents, cb,
-        graft.ops.Similarity.buildIvfpqIndex(emb, cents, cb))
+      graft.ops.Similarity.saveIndex(mp, AnnSpec.Ivfpq, AnnModel(None,
+        Some(cents), Some(cb),
+        Some(graft.ops.Similarity.buildIvfpqIndex(emb, cents, cb))))
       graft.ops.Similarity.recordDriftBaseline(spark, mp, emb, cb, Some(cents))
       println(f"retrain_initial_build($nEmb vecs): ${(System.nanoTime() - t0) / 1e9}%.1f s")
       // one in-band nightly append so the decision has a series to read
@@ -408,10 +409,13 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       val cents = graft.ops.Similarity.centroids(emb)
       val cb = graft.ops.Similarity.pqCodebooks(emb)
-      graft.ops.Similarity.saveIndex(mp, cents, cb,
-        graft.ops.Similarity.buildIvfpqIndex(emb, cents, cb))
+      graft.ops.Similarity.saveIndex(mp, AnnSpec.Ivfpq, AnnModel(None,
+        Some(cents), Some(cb),
+        Some(graft.ops.Similarity.buildIvfpqIndex(emb, cents, cb))))
       println(f"ann_index_build_save: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      val (lc, lcb, lcodes) = graft.ops.Similarity.loadIndex(spark, mp)
+      val (_, loaded) = graft.ops.Similarity.openIndex(spark, mp)
+      val (lc, lcb, lcodes) = (loaded.centroids.get, loaded.codebooks.get,
+        loaded.codes.get)
       val t1 = System.nanoTime()
       val n1 = graft.ops.Similarity.topk(spark, out, AnnSpec.Ivfpq,
         AnnModel(centroids = Some(lc), codebooks = Some(lcb))).count()
@@ -426,11 +430,12 @@ object ScaleProbe {
       val t3 = System.nanoTime()
       val rcb = graft.ops.Similarity.pqCodebooks(graft.ops.Similarity
         .residualVectors(emb, cents).select(col("vec_id"), col("embedding")))
-      graft.ops.Similarity.saveIndex(s"$out/_ann_index_res", cents, rcb,
-        graft.ops.Similarity.buildIvfpqIndex(emb, cents, rcb, residual = true),
-        residual = true)
+      graft.ops.Similarity.saveIndex(s"$out/_ann_index_res", AnnSpec.IvfpqResidual,
+        AnnModel(None, Some(cents), Some(rcb), Some(graft.ops.Similarity
+          .buildIvfpqIndex(emb, cents, rcb, residual = true))))
       println(f"ann_residual_index_build_save: ${(System.nanoTime() - t3) / 1e9}%.1f s")
-      val (rc, rcb2, rcodes) = graft.ops.Similarity.loadIndex(spark, s"$out/_ann_index_res")
+      val (_, res) = graft.ops.Similarity.openIndex(spark, s"$out/_ann_index_res")
+      val (rc, rcb2, rcodes) = (res.centroids.get, res.codebooks.get, res.codes.get)
       val t4 = System.nanoTime()
       val n3 = graft.ops.Similarity.topk(spark, out, AnnSpec.IvfpqResidual,
         AnnModel(None, Some(rc), Some(rcb2), Some(rcodes))).count()

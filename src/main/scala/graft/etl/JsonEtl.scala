@@ -468,7 +468,7 @@ object JsonEtl {
     */
   private[graft] def expireFold(merged: DataFrame, dayCol: String,
       retainDays: Int): DataFrame =
-    expireDays(merged.localCheckpoint(), dayCol, retainDays)
+    expireDays(graft.ops.Materialize(merged), dayCol, retainDays)
 
   /** The gate entries' day bucket: floor epoch-days of the event time. */
   private def withDay(events: DataFrame): DataFrame =
@@ -586,21 +586,6 @@ object JsonEtl {
   }
 
   // ------------------------------------------ durable incremental state
-  /** A `_`-prefixed small file inside a state dir (invisible to parquet
-    * readers, swapped atomically WITH the state it describes); None when
-    * absent.
-    */
-  private def readSmall(s: SparkSession, file: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
   /** The stamped fold parameters of a durable state — `_state_meta`, a
     * sorted `key=value` file inside the state dir. Empty when the state
     * predates the protocol or doesn't exist. The protocol exists because
@@ -616,19 +601,14 @@ object JsonEtl {
     * durable-state family.
     */
   def stateMeta(s: SparkSession, path: String): Map[String, String] =
-    readSmall(s, s"$path/_state_meta").fold(Map.empty[String, String]) {
-      _.linesIterator.filter(_.contains("=")).map { l =>
-        val i = l.indexOf('=')
-        l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
-    }
+    graft.Inputs.readKeyValues(s, s"$path/_state_meta")
 
   /** The state table's own fold watermark: the highest batch id already
     * folded in (`_fold_watermark` inside the state dir). −1 when the
     * state doesn't exist yet.
     */
   def aggFoldWatermark(s: SparkSession, path: String): Long =
-    readSmall(s, s"$path/_fold_watermark").fold(-1L)(_.trim.toLong)
+    graft.Inputs.readStamp(s, s"$path/_fold_watermark").fold(-1L)(_.trim.toLong)
 
   /** Durable, replay-safe fold of `batch` into the `kind` state at `path`
     * — the one fence every kind shares, and the discipline the fold needs
@@ -690,18 +670,13 @@ object JsonEtl {
             "fold with the stamped parameters or rebuild at a fresh path)")
       }
     }
-    def write(file: String, txt: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(file), true)
-      out.write(txt.getBytes("UTF-8")); out.close()
-    }
     graft.ops.Layout.writeStaged(s, path) { staging =>
       val folded =
         if (fresh) kind.state(batch)
         else kind.fold(s.read.parquet(path), batch)
       folded.write.parquet(staging)
-      write(s"$staging/_fold_watermark", batchId.toString)
-      write(s"$staging/_state_meta", meta.toMap.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"$k=$v" }.mkString("\n"))
+      graft.Inputs.writeStamp(s, s"$staging/_fold_watermark", batchId.toString)
+      graft.Inputs.writeKeyValues(s, s"$staging/_state_meta", meta)
     }
   }
 
@@ -819,7 +794,7 @@ object JsonEtl {
 
   /** The stamped protocol, None for a pre-protocol state. */
   def joinProtocol(s: SparkSession, root: String): Option[String] =
-    readSmall(s, joinProtocolPath(root)).map(_.trim)
+    graft.Inputs.readStamp(s, joinProtocolPath(root)).map(_.trim)
 
   private def stampJoinProtocol(s: SparkSession, root: String,
       protocol: String): Unit = joinProtocol(s, root) match {
@@ -829,12 +804,7 @@ object JsonEtl {
           s"but this fold declares '$protocol' — mixing joinUpsertAt and " +
           "joinUpsertLeftAt on one state makes batch parity undefined; " +
           "use the original entry point or rebuild at a fresh path")
-    case None =>
-      val p = new org.apache.hadoop.fs.Path(joinProtocolPath(root))
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      out.write(protocol.getBytes("UTF-8"))
-      out.close()
+    case None => graft.Inputs.writeStamp(s, joinProtocolPath(root), protocol)
   }
 
   /** Durable, replay-safe [[joinViewUpsert]] over `root/{view,left,right}`.

@@ -60,6 +60,21 @@ final case class AnnSpec(
   def exact: Boolean = code == AnnCode.Flat && transform == AnnTransform.Identity
 
   def filtered(pred: Column): AnnSpec = copy(filter = Some(pred))
+
+  /** The index shape as `key=value` pairs — transform, `nprobe` (absent
+    * without IVF) and code, LSH geometry included; the serving knobs
+    * (`shortlist`, `filter`, `maxBatchQ`) are not part of a shape.
+    */
+  def stamp: Seq[(String, String)] = {
+    val code = this.code match {
+      case AnnCode.Lsh(tables, bits) =>
+        Seq("code" -> "lsh", "lsh_tables" -> tables.toString,
+          "lsh_bits" -> bits.toString)
+      case c => Seq("code" -> AnnSpec.name(c))
+    }
+    (("transform" -> AnnSpec.name(transform)) +: code) ++
+      nprobe.map(n => "nprobe" -> n.toString)
+  }
 }
 
 /** The index shapes graft serves — every declared `ann_*` top-k query is
@@ -81,6 +96,28 @@ object AnnSpec {
   val IvfpqResidual = AnnSpec(nprobe = Probe, code = AnnCode.ResidualPq)
   val OpqIvfpq = Opq.copy(nprobe = Probe)
   val OpqIvfpqResidual = IvfpqResidual.copy(transform = AnnTransform.Opq)
+
+  // a stage's stamp name: its case-object name in snake case
+  private def name(stage: Any): String =
+    stage.toString.replaceAll("([a-z])([A-Z])", "$1_$2").toLowerCase
+
+  /** The shape [[AnnSpec.stamp]] wrote, with default serving knobs. */
+  def fromStamp(kv: Map[String, String]): AnnSpec = {
+    def field(k: String) = kv.getOrElse(k,
+      throw new IllegalArgumentException(s"ANN spec stamp without '$k': $kv"))
+    def named[T](k: String, all: Seq[T]): T = {
+      val v = field(k)
+      all.find(name(_) == v).getOrElse(
+        throw new IllegalArgumentException(s"ANN spec stamp: unknown $k '$v'"))
+    }
+    val code = if (field("code") == "lsh")
+        AnnCode.Lsh(field("lsh_tables").toInt, field("lsh_bits").toInt)
+      else named[AnnCode]("code",
+        Seq(AnnCode.Flat, AnnCode.Int8, AnnCode.Pq, AnnCode.ResidualPq))
+    AnnSpec(named[AnnTransform]("transform", Seq(AnnTransform.Identity,
+        AnnTransform.Jl, AnnTransform.Pca, AnnTransform.Opq)),
+      kv.get("nprobe").map(_.toInt), code)
+  }
 
   /** The gate's metadata predicate: even labels. */
   def evenLabel: Column = col("label") % 2 === 0

@@ -30,66 +30,87 @@ object Curation {
     *   computed once and every consumer (groups, survivors, this funnel)
     *   reads them; `None` recomputes MinHash+LSH inline, which is the
     *   one-shot convenience form, not the pipeline form.
-    */
-  /** @param classifierWeights when set, the fed-weights linear quality
+    * @param classifierWeights when set, the fed-weights linear quality
     *   classifier ([[TextAnalysis.qualityClassifier]] — the CCNet/fastText
     *   model-scoring stage) gates the funnel IN ADDITION to the heuristic
     *   curate gate: only docs the model keeps survive. Like
     *   `fuzzyDecontaminate` it composes as one more broadcast id-list
     *   semi-join and only ever NARROWS the corpus (spec-pinned); the
     *   weights are a fed model artifact, so reruns are deterministic.
+    * @param workDir the resumable form — the operational shape of a long
+    *   corpus run: each stage's id list (`curated_ids`, `clean_ids`,
+    *   `dropped_ids`) is written as parquet under `workDir`, and a rerun
+    *   SKIPS every stage whose `_SUCCESS` marker exists, so an interrupted
+    *   run resumes at the first missing stage instead of re-paying the
+    *   funnel (the LSH+components stage is ~all of its cost). The lists
+    *   are tiny next to the corpus; the check goes through the Hadoop
+    *   FileSystem API (HDFS/S3/local alike); assembly and packing are
+    *   recomputed per call. `None` materializes the stages in the session
+    *   ([[Materialize]]).
     */
   def prepareCorpus(s: SparkSession, dir: String,
       numBuckets: Int = 8, budget: Long = 256,
       isBenchmark: org.apache.spark.sql.Column = col("doc_id") % 11 === 0,
       pairs: Option[DataFrame] = None,
       fuzzyDecontaminate: Boolean = false,
-      classifierWeights: Option[TextAnalysis.QualityWeights] = None): DataFrame = {
+      classifierWeights: Option[TextAnalysis.QualityWeights] = None,
+      workDir: Option[String] = None): DataFrame = {
+    // One stage's id list, materialized once: a session barrier, or under
+    // `workDir` a parquet dir that a rerun reads back instead of
+    // recomputing. `ids` yields the list and any cache it pins, released
+    // once the list is stored. A barrier keeps the list's pre-checkpoint
+    // size estimate, so the assembly's semi/anti joins still broadcast.
+    def stage(name: String)(ids: => (DataFrame, Option[DataFrame])): DataFrame = {
+      def stored(store: DataFrame => DataFrame): DataFrame = {
+        val (df, pinned) = ids
+        try store(df) finally pinned.foreach(_.unpersist())
+      }
+      workDir.fold(stored(Materialize(_))) { w =>
+        val out = new org.apache.hadoop.fs.Path(w, name)
+        val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
+        if (!fs.exists(new org.apache.hadoop.fs.Path(out, "_SUCCESS")))
+          stored { df => df.write.mode("overwrite").parquet(out.toString); df }
+        s.read.parquet(out.toString)
+      }
+    }
     // The three gate stages (quality/language, decontamination, near-dup
     // components) are INDEPENDENT corpus passes that each reduce to a tiny
     // id list — evaluate them eagerly on a small pool (guide §2.6) so the
     // LSH+propagation stage's many small sequential jobs are back-filled
     // by the other stages' scans, instead of the funnel paying the three
-    // stages end to end. localCheckpoint keeps each list's pre-checkpoint
-    // size estimate, so the assembly's semi/anti joins still broadcast.
-    def curatedIds(): DataFrame = {
+    // stages end to end.
+    def curatedIds(): DataFrame = stage("curated_ids") {
       val curated0 = TextAnalysis.curateCorpus(s, dir).select(col("doc_id"))
-      classifierWeights.fold(curated0)(w =>
+      (classifierWeights.fold(curated0)(w =>
         curated0.join(
           TextAnalysis.qualityClassifier(s, dir, w)
             .filter(col("keep") === 1L).select(col("doc_id")),
-          Seq("doc_id"), "left_semi"))
-        .localCheckpoint()
+          Seq("doc_id"), "left_semi")), None)
     }
     // fuzzy decon COMPLEMENTS the exact gate (paraphrased contamination
     // shares few exact 5-grams but keeps high shingle Jaccard) — so it
     // subtracts from, never replaces, the exact-clean set. An anti-join
     // against the flagged ids (a small frame: contaminated docs only)
     // composes with the funnel's other id-list joins for free.
-    def cleanIds(): DataFrame = {
+    def cleanIds(): DataFrame = stage("clean_ids") {
       val clean0 = TextAnalysis.decontaminate(Tables(s, dir).documents, isBenchmark)
         .filter(col("contaminated") === 0L).select(col("doc_id"))
       (if (!fuzzyDecontaminate) clean0
        else clean0.join(
          Dedup.decontaminateFuzzy(s, Tables(s, dir).documents, isBenchmark)
            .select(col("train_id").as("doc_id")),
-         Seq("doc_id"), "left_anti"))
-        .localCheckpoint()
+         Seq("doc_id"), "left_anti"), None)
     }
     // propagateMinLabels returns its labels CACHED and assigns unpersist
-    // ownership to the caller (Dedup.scala contract) — so pin only the
-    // tiny dropped-id list (non-canonical members of dup clusters, stored
-    // once via eager localCheckpoint and reaped by the ContextCleaner when
-    // the frame is GC'd) and release the full labels cache immediately.
-    // Labels stay UNSORTED — the only consumer is this filter.
-    def droppedIds(): DataFrame = {
+    // ownership to the caller (Dedup.scala contract) — so store only the
+    // tiny dropped-id list (non-canonical members of dup clusters) and
+    // release the full labels cache as soon as it is stored. Labels stay
+    // UNSORTED — the only consumer is this filter.
+    def droppedIds(): DataFrame = stage("dropped_ids") {
       val (labels, _) = Dedup.propagateMinLabels(
         pairs.getOrElse(Dedup.minhashPairs(s, dir)), sorted = false)
-      val dropped = labels
-        .filter(col("canonical_id") =!= col("doc_id")).select(col("doc_id"))
-        .localCheckpoint()
-      labels.unpersist()
-      dropped
+      (labels.filter(col("canonical_id") =!= col("doc_id")).select(col("doc_id")),
+        Some(labels))
     }
     // overlap gated on the session's cores (Par.gate): the fixed 3-way
     // overlap was tuned on the 32-core rig and THRASHED small hosts — the
@@ -111,7 +132,7 @@ object Curation {
     * subsequent call feeds them through the `pairs` parameter — the shape
     * a real 100 TB run has, where the LSH edge list is computed once and
     * read by every consumer. The memo stands in for the parquet the pairs
-    * would live in at scale (localCheckpoint = eager materialization);
+    * would live in at scale ([[Materialize]] = eager materialization);
     * the first call pays MinHash+LSH, later calls pay only assembly +
     * packing, so the bench's best-of-N min reports the composed cost the
     * one-shot `text_prepare_corpus` entry cannot show.
@@ -124,54 +145,7 @@ object Curation {
   private val pairsMemo = new SessionMemo[String, DataFrame]
 
   private def materializedPairs(s: SparkSession, dir: String): DataFrame =
-    pairsMemo(s, dir)(Dedup.minhashPairs(s, dir).localCheckpoint())
-
-  // ------------------------------------------------------------ resumable
-  /** Resumable form of [[prepareCorpus]] — the operational shape of a long
-    * corpus run: each funnel stage's id list is materialized under
-    * `workDir` and a rerun SKIPS stages whose `_SUCCESS` marker exists, so
-    * an interrupted run resumes at the first missing stage instead of
-    * re-paying the whole funnel (the LSH+components stage is ~all of its
-    * cost). pyetl's restartable loop, corpus-scale. Stage outputs are id
-    * lists — tiny relative to the corpus — so the storage cost is noise,
-    * and the check goes through the Hadoop FileSystem API so `workDir`
-    * can be HDFS/S3/local alike. The final assembly+packing is pure
-    * projection over the materialized lists and is recomputed per call.
-    */
-  def prepareCorpusResumable(s: SparkSession, dir: String, workDir: String,
-      numBuckets: Int = 8, budget: Long = 256,
-      isBenchmark: org.apache.spark.sql.Column = col("doc_id") % 11 === 0,
-      pairs: Option[DataFrame] = None): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(workDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    def donePath(name: String) = new Path(new Path(workDir, name), "_SUCCESS")
-    def stage(name: String)(f: => DataFrame): DataFrame = {
-      val out = new Path(workDir, name).toString
-      if (!fs.exists(donePath(name)))
-        f.write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
-    }
-    val curated = stage("curated_ids")(
-      TextAnalysis.curateCorpus(s, dir).select(col("doc_id")))
-    val clean = stage("clean_ids")(
-      TextAnalysis.decontaminate(Tables(s, dir).documents, isBenchmark)
-        .filter(col("contaminated") === 0L).select(col("doc_id")))
-    // the dropped stage owns the labels cache for exactly as long as the
-    // write that drains it (same ownership contract as prepareCorpus)
-    if (!fs.exists(donePath("dropped_ids"))) {
-      val (labels, _) = Dedup.propagateMinLabels(
-        pairs.getOrElse(Dedup.minhashPairs(s, dir)), sorted = false)
-      labels.filter(col("canonical_id") =!= col("doc_id")).select(col("doc_id"))
-        .write.mode("overwrite").parquet(new Path(workDir, "dropped_ids").toString)
-      labels.unpersist()
-    }
-    val dropped = s.read.parquet(new Path(workDir, "dropped_ids").toString)
-    val kept = Tables(s, dir).documents
-      .join(curated, Seq("doc_id"), "left_semi")
-      .join(clean, Seq("doc_id"), "left_semi")
-      .join(dropped, Seq("doc_id"), "left_anti")
-    TextAnalysis.packSequences(kept, numBuckets, budget)
-  }
+    pairsMemo(s, dir)(Materialize(Dedup.minhashPairs(s, dir)))
 
   // ------------------------------------------------------------ mixture
   /** Deterministic source-mixture sampling — the "data mixing" stage that
@@ -311,11 +285,11 @@ object Curation {
     */
   def splitAssignLeakageSafeDocs(s: SparkSession, dir: String): DataFrame = {
     val groups = Dedup.nearDupGroups(s, dir)
-    // materialize (localCheckpoint — GC-owned blocks, not a cache-registry
+    // materialize (Materialize — GC-owned blocks, not a cache-registry
     // entry repeated gate runs would leak) BEFORE dropping the propagation
     // cache the groups frame carries (the caller-owns-unpersist contract)
-    val out = splitAssignLeakageSafe(Tables(s, dir).documents, groups)
-      .localCheckpoint()
+    val out = Materialize(
+      splitAssignLeakageSafe(Tables(s, dir).documents, groups))
     groups.unpersist()
     out
   }

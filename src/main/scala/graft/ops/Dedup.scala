@@ -993,9 +993,8 @@ object Dedup {
     // seam. In a real pipeline the labeling would round-trip through the
     // component table on disk anyway — this keeps the in-session
     // composition equivalent to that.
-    val input = labelEdges
-      .unionByName(newPairs.select(col("d1"), col("d2")))
-      .localCheckpoint()
+    val input = Materialize(labelEdges
+      .unionByName(newPairs.select(col("d1"), col("d2"))))
     nearDupGroups(input, maxIter)
   }
 
@@ -1017,21 +1016,9 @@ object Dedup {
     * the protocol or doesn't exist.
     */
   def componentLabelsMeta(s: SparkSession,
-      indexPath: String): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(
+      indexPath: String): Map[String, String] =
+    graft.Inputs.readKeyValues(s,
       s"${componentLabelsPath(indexPath)}/_labels_meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.linesIterator.filter(_.contains("=")).map { l =>
-        val i = l.indexOf('=')
-        l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
-    }
-  }
 
   /** Rebuild and persist the component labeling over the LIVE signature
     * index (tombstones applied): pairs come from the stored (doc_id, hs)
@@ -1050,17 +1037,14 @@ object Dedup {
     val labels = nearDupGroups(
       minhashPairsFromHs(s, live.select(col("doc_id"), col("hs")),
         numHashes, bands, tau), maxIter)
-    val conf = s.sparkContext.hadoopConfiguration
     graft.ops.Layout.writeStaged(s, componentLabelsPath(indexPath)) { st =>
       labels.write.parquet(st)
       // stamp the pair-generating geometry IN the staged dir, so labeling
       // + stamp promote in one rename and a rebuild can never read a stamp
       // describing the previous generation
-      val m = new org.apache.hadoop.fs.Path(s"$st/_labels_meta")
-      val out = m.getFileSystem(conf).create(m, true)
-      out.write(Seq(s"bands=$bands", s"max_iter=$maxIter", s"tau=$tau")
-        .mkString("\n").getBytes("UTF-8"))
-      out.close()
+      graft.Inputs.writeKeyValues(s, s"$st/_labels_meta", Seq(
+        "bands" -> bands.toString, "max_iter" -> maxIter.toString,
+        "tau" -> tau.toString))
     }
     labels.unpersist()
     ()
@@ -1156,9 +1140,9 @@ object Dedup {
       () => propagateMinLabels(
         minhashPairsOf(s, docs.filter(col("doc_id") % 4 =!= 0),
           DefaultNumHashes, DefaultBands, tau = 0.7), 10, sorted = false)._1,
-      () => minhashIncrementalPairs(s,
+      () => Materialize(minhashIncrementalPairs(s,
         docs.filter(col("doc_id") % 4 === 0),
-        persistedMinhashIndex(s, dir)).localCheckpoint()),
+        persistedMinhashIndex(s, dir)))),
       inFlight = Par.gate(s.sparkContext.defaultParallelism, cap = 2))(_())
     val (base, incPairs) = (parts(0), parts(1))
     // returned AS the cached frame (orderBy(doc_id) inside the fold's
@@ -1340,7 +1324,7 @@ object Dedup {
     // leaves behind is at least as good (guide §1.1: the "ideal" plan
     // lost to the measured one).
     val groups = nearDupGroups(s, dir)
-    val out = nearDupSurvivorsWeighted(docs, groups).localCheckpoint()
+    val out = Materialize(nearDupSurvivorsWeighted(docs, groups))
     groups.unpersist()
     out
   }
@@ -1529,13 +1513,12 @@ object Dedup {
     // consumer instead (the broadcast build sides re-derive the chain
     // independently), 18.8 s task-CPU in the candidate/verify join job of
     // dedup_components_incremental for work whose single pass costs ~3 s.
-    val prepared = batch
+    val prepared = Materialize(batch
       .filter(size(words(col("text"))) >= 2)
       .repartition(spread(s), col("doc_id"))
       .select(col("doc_id"),
         hashed_ngrams(words(col("text")), 2, P, distinct = true).as("hs"))
-      .withColumn("sig", minhash_sig(col("hs"), numHashes, P))
-      .localCheckpoint()
+      .withColumn("sig", minhash_sig(col("hs"), numHashes, P)))
     val newBand = bandBuckets(
       prepared.select(col("doc_id"), col("sig")), numHashes, bands)
     // batch ⋈ (index ∪ batch): every candidate pair touches ≥1 batch doc by
@@ -1630,7 +1613,7 @@ object Dedup {
     // from here instead of trusting a caller parameter (a mistyped append
     // would otherwise write foreign-geometry buckets into the candidate
     // join: same schema, silently missing candidates — the failure class
-    // the ANN _residual flag closed)
+    // the ANN index's _ann_spec stamp closed)
     writeEmbeddingGeometry(s, path, numTables, bits)
     val conf = s.sparkContext.hadoopConfiguration
     // rebuild = clean slate: tombstones belong to the previous build
@@ -1650,30 +1633,20 @@ object Dedup {
   private def embGeometryPath(path: String) = s"$path/_geometry"
 
   private def writeEmbeddingGeometry(s: SparkSession, path: String,
-      numTables: Int, bits: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(embGeometryPath(path))
-    val out = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .create(p, true)
-    out.write(s"$numTables $bits".getBytes("UTF-8")); out.close()
-  }
+      numTables: Int, bits: Int): Unit =
+    graft.Inputs.writeStamp(s, embGeometryPath(path), s"$numTables $bits")
 
   /** The embedding index's declared (numTables, bits) — absent file (an
     * artifact predating the flag, or a streaming bootstrap that has only
     * ever appended) reads as the library defaults, which is what those
     * artifacts were built with.
     */
-  def embeddingIndexGeometry(s: SparkSession, path: String): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(embGeometryPath(path))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) (Similarity.DefaultTables, Similarity.DefaultBits)
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+  def embeddingIndexGeometry(s: SparkSession, path: String): (Int, Int) =
+    graft.Inputs.readStamp(s, embGeometryPath(path)).fold(
+        (Similarity.DefaultTables, Similarity.DefaultBits)) { txt =>
       val Array(t, b) = txt.trim.split("\\s+")
       (t.toInt, b.toInt)
     }
-  }
 
   /** Zero-row (vectors, buckets) with the persisted schemas — what batch
     * 0 of a streaming ingest bootstraps on ([[emptyMinhashIndex]]'s twin);

@@ -146,18 +146,29 @@ object Fsck {
         "crashed maintenance staging/parked dirs present")))
 
   // ------------------------------------------------------------ ANN index
+  /** An ANN index ([[Similarity.saveIndex]]): the parts its `_ann_spec`
+    * stamp requires must be readable, then codes, cells, the int8
+    * sibling, the batch protocol and the drift monitor are audited.
+    */
   def fsckAnnIndex(s: SparkSession, path: String): DataFrame = {
-    val codesDir = s"$path/pq_codes.parquet"
+    import Similarity.{CentroidsPart, CodesPart, partPath}
+    val codesDir = partPath(path, CodesPart)
     val ts = s"$path/tombstones.parquet"
-    val centsDir = s"$path/ivf_centroids.parquet"
     val annStaging = Seq(
       s"${path}_retrain_staging", s"${path}_retrain_old",
       s"${codesDir}_staging", s"$path/drift.parquet_staging",
       s"$codesDir.compacting", s"$path/drift.parquet.compacting")
-    if (!hasParquet(s, codesDir))
-      return unreadable(s, path, "ann_index", codesDir, annStaging)
-    if (!hasParquet(s, centsDir))
-      return unreadable(s, path, "ann_index", centsDir, annStaging)
+    // the required parts follow the stamped shape; a missing or
+    // unparseable stamp is itself an unreadable index
+    val spec = scala.util.Try(Similarity.indexSpec(s, path)) match {
+      case scala.util.Success(sp) => sp
+      case scala.util.Failure(_) =>
+        return unreadable(s, path, "ann_index", s"$path/_ann_spec", annStaging)
+    }
+    val missing = (Similarity.modelParts(spec) :+ CodesPart)
+      .map(partPath(path, _)).find(!hasParquet(s, _))
+    if (missing.isDefined)
+      return unreadable(s, path, "ann_index", missing.get, annStaging)
     // the codes table feeds every check below — persist the
     // tombstone-anti-joined view once so the audit pays ONE codes scan,
     // not one per count() action (the advertised audit pricing)
@@ -176,10 +187,12 @@ object Fsck {
     // every code row's cell must exist in the centroid table — a foreign
     // cell is a mixed model generation (codes from one build, centroids
     // from another): those rows can never be probed, or probe wrongly
-    val cents = s.read.parquet(s"$path/ivf_centroids.parquet")
-    val foreignCells = live.select(col("ivf_cell").as("cell")).distinct()
-      .join(cents.select(col("cell")).distinct(), Seq("cell"), "left_anti")
-      .count()
+    val foreignCells = spec.nprobe.fold(0L) { _ =>
+      val cents = s.read.parquet(partPath(path, CentroidsPart))
+      live.select(col("ivf_cell").as("cell")).distinct()
+        .join(cents.select(col("cell")).distinct(), Seq("cell"), "left_anti")
+        .count()
+    }
 
     val tombOrphans =
       if (!hasParquet(s, ts)) 0L
@@ -554,7 +567,7 @@ object Fsck {
             s"$path.old")),
           "crashed export staging dirs present")))
     else {
-      val manifest = s.read.parquet(manifestDir)
+      val manifest = graft.Inputs.plain(s, manifestDir)
         .select(col("shard").cast("long").as("shard"), col("n_docs"))
       val actual = s.read.parquet(path)
         .groupBy(col("shard").cast("long").as("shard"))
@@ -705,7 +718,7 @@ object Fsck {
           s"no ${Layout.ManifestDir} — pruned reads degrade to full scans"),
         warnIf("staging_leftovers", stagingLeftovers(s, staging),
           "crashed manifest staging dirs present")))
-    val m = s.read.parquet(mDir)
+    val m = graft.Inputs.plain(s, mDir)
     val covered = m.select(col("file")).collect().map(_.getString(0)).toSet
     val dataFiles = Layout.listDataFiles(s, path)
     val uncovered = dataFiles.filterNot(covered).length.toLong
@@ -742,7 +755,7 @@ object Fsck {
         case None => Seq(Check("bloom_readable", "fail", 1L,
           "bloom manifest dir without a bloom_<col> column"))
         case Some(c) =>
-          val bm = s.read.parquet(bloomDir)
+          val bm = graft.Inputs.plain(s, bloomDir)
           val bCovered = bm.select(col("file")).collect()
             .map(_.getString(0)).toSet
           val bUncovered = dataFiles.filterNot(bCovered).length.toLong

@@ -174,9 +174,8 @@ object Layout {
     // the audit's input-side frames materialize BEFORE the rewrite: rows
     // is a lazy scan of inDir, and deferring it past a (mis)configured
     // rewrite is how an audit ends up reading what the rewrite left behind
-    val rows = df.groupBy(col(partitionCol).cast("string").as("partition"))
-      .agg(count(lit(1)).as("rows"))
-      .localCheckpoint()
+    val rows = Materialize(df.groupBy(col(partitionCol).cast("string").as("partition"))
+      .agg(count(lit(1)).as("rows")))
     import spark.implicits._
     def filesPerPartition(dir: String): DataFrame = {
       val fs = new org.apache.hadoop.fs.Path(dir)
@@ -189,8 +188,8 @@ object Layout {
           (unescape(st.getPath.getName.split("=", 2)(1)), n.toLong)
         }.toSeq.toDF("partition", "files")
     }
-    val before = filesPerPartition(inDir).withColumnRenamed("files", "files_before")
-      .localCheckpoint()
+    val before = Materialize(
+      filesPerPartition(inDir).withColumnRenamed("files", "files_before"))
     df.repartitionByRange(nTasks, col(partitionCol), orderCol)
       .write.mode("overwrite").partitionBy(partitionCol)
       .option("maxRecordsPerFile", maxRecordsPerFile).parquet(outDir)
@@ -551,8 +550,7 @@ object Layout {
     // carried rows materialize BEFORE the staged swap replaces their
     // source; the added rows scan ONLY the new files (basePath keeps the
     // discovered partition columns of a partitioned layout in scope)
-    val kept = m.filter(col("file").isInCollection(dataFiles))
-      .localCheckpoint()
+    val kept = Materialize(m.filter(col("file").isInCollection(dataFiles)))
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     val added =
@@ -806,8 +804,7 @@ object Layout {
     val phantoms = (covered -- dataFiles).size.toLong
     if (newFiles.isEmpty && phantoms == 0L)
       return (covered.size.toLong, 0L, 0L)
-    val kept = m.filter(col("file").isInCollection(dataFiles))
-      .localCheckpoint()
+    val kept = Materialize(m.filter(col("file").isInCollection(dataFiles)))
     // the geometry the manifest was BUILT with (persisted by
     // writeBloomManifest; default-ratio fallback for pre-geometry
     // manifests), so new files can never drift from the designed fp rate

@@ -381,8 +381,8 @@ object Maintenance {
       val annBase = emb.filter(col("vec_id") % 8 === 0)
       val cents = Similarity.centroids(annBase)
       val cb = Similarity.pqCodebooks(annBase)
-      Similarity.saveIndex(s"$base/ann", cents, cb,
-        Similarity.buildIvfpqIndex(annBase, cents, cb))
+      Similarity.saveIndex(s"$base/ann", AnnSpec.Ivfpq, AnnModel(None,
+        Some(cents), Some(cb), Some(Similarity.buildIvfpqIndex(annBase, cents, cb))))
       Similarity.recordDriftBaseline(s, s"$base/ann", annBase, cb, Some(cents))
       // nightlies = re-id'd halves of the baseline corpus: in-distribution
       // by construction (the decision below must decline), and the re-id

@@ -475,7 +475,7 @@ object Profile {
     * array, baseline bucket counts, and a one-row meta table naming the
     * value column and bucket count — so a later monitor (batch or the
     * streaming [[graft.streaming.Streams.psiDriftSink]]) cannot bucket a
-    * different column or geometry against it (the `_residual`/`_geometry`
+    * different column or geometry against it (the `_ann_spec`/`_geometry`
     * self-description discipline). The artifact is a few KB at any corpus
     * size; recording it is one percentile aggregate + one bucketing scan
     * over the baseline snapshot, paid once per baseline release.

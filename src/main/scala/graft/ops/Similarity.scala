@@ -29,7 +29,9 @@ import graft.functions.cosine_sim
   * exact scan of the probed cells — so it skips stages 4-5.
   *
   * Models (transform, centroids, codebooks) and the encoded corpus are
-  * [[AnnModel]] parts: fed from a build, or trained/encoded inline.
+  * [[AnnModel]] parts: fed from a build, or trained/encoded inline. A
+  * build persists as one artifact stamped with its shape ([[saveIndex]],
+  * [[openIndex]]), and the index lifecycle reads the shape from the stamp.
   * Scoring everywhere is the codegen'd [[graft.functions.CosineSim]]. Only
   * the exact tiers are oracle-checked; SimilaritySpec pins every other
   * tier's recall against brute force.
@@ -106,7 +108,7 @@ object Similarity {
       queries: Option[DataFrame] = None): DataFrame = {
     val e = Tables(s, dir).embeddings
     val q = queries.getOrElse(corpusQueries(e))
-    val m = fit(s, dir, e, spec, model)
+    val m = fit(s, e, spec, model)
     val toCode = transformOf(spec.transform, m.transform)
     val tq = toCode(q)
     lazy val tc = toCode(spec.filter.fold(e)(p => e.filter(p)))
@@ -237,16 +239,18 @@ object Similarity {
     */
   def train(s: SparkSession, dir: String, spec: AnnSpec,
       model: AnnModel = AnnModel()): AnnModel =
-    fit(s, dir, Tables(s, dir).embeddings, spec, model)
+    fit(s, Tables(s, dir).embeddings, spec, model)
 
-  /** [[train]] over the caller's read of the corpus table `e`. */
-  private def fit(s: SparkSession, dir: String, e: DataFrame, spec: AnnSpec,
+  /** [[train]] on the (vec_id, embedding, label) frame `e` — the caller's
+    * read of the corpus table, or [[retrainIndex]]'s training window.
+    */
+  private def fit(s: SparkSession, e: DataFrame, spec: AnnSpec,
       model: AnnModel): AnnModel = {
     requireComposes(spec)
     val (rot, rotCb) = spec.transform match {
-      case AnnTransform.Pca => (model.transform.orElse(Some(trainPca(s, dir))), None)
+      case AnnTransform.Pca => (model.transform.orElse(Some(pcaOn(e, ProjK))), None)
       case AnnTransform.Opq if model.transform.isEmpty =>
-        val (r, cb) = trainOpq(s, dir)
+        val (r, cb) = trainOpqOn(s, e)
         (Some(r), Some(cb))
       case _ => (model.transform, None)
     }
@@ -378,10 +382,9 @@ object Similarity {
   private val indexMemo = new SessionMemo[(String, String), AnnModel]
 
   /** The session's persisted index for a PQ-coded spec — raw or OPQ, raw
-    * or residual codes, always with IVF — written through the real
-    * [[saveIndex]] / [[saveOpqIndex]] artifact (models, codes, encoding
-    * flag and rotation under one path, the full maintenance lifecycle),
-    * so every fed and indexed rung serves exactly what a deployment would
+    * or residual codes, always with IVF — built, written by [[saveIndex]]
+    * and read back by [[openIndex]] (the full maintenance artifact), so
+    * every fed and indexed rung serves exactly what a deployment would
     * load. The flat OPQ rung reads its rotation and codebooks from the
     * "OPQ,IVF,PQ" artifact: both are [[trainOpq]]'s output.
     */
@@ -390,25 +393,16 @@ object Similarity {
     val shape = AnnSpec(spec.transform, Some(NProbe), spec.code)
     require(spec.code == AnnCode.Pq || spec.code == AnnCode.ResidualPq,
       s"persisted indexes hold PQ codes: $spec")
-    val residual = spec.code == AnnCode.ResidualPq
     val prefix = (if (spec.transform == AnnTransform.Opq) "graft_opq"
-      else "graft_ann") + (if (residual) "res" else "") + "_index"
+      else "graft_ann") + (if (spec.code == AnnCode.ResidualPq) "res" else "") +
+      "_index"
     indexMemo(s, (dir, prefix)) {
       val path = SessionMemo.scratchPath(s, prefix, dir)
       val e = Tables(s, dir).embeddings
-      val m = fit(s, dir, e, shape, AnnModel())
-      val (cents, cb) = (m.centroids.get, m.codebooks.get)
-      val codes = encode(transformOf(shape.transform, m.transform)(e), shape, m)
-      m.transform match {
-        case Some(rot) =>
-          saveOpqIndex(path, rot, cents, cb, codes, residual)
-          val (r, c, b, x) = loadOpqIndex(s, path)
-          AnnModel(Some(r), Some(c), Some(b), Some(x))
-        case None =>
-          saveIndex(path, cents, cb, codes, residual)
-          val (c, b, x) = loadIndex(s, path)
-          AnnModel(None, Some(c), Some(b), Some(x))
-      }
+      val m = fit(s, e, shape, AnnModel())
+      saveIndex(path, shape, m.copy(codes =
+        Some(encode(transformOf(shape.transform, m.transform)(e), shape, m))))
+      openIndex(s, path)._2
     }
   }
 
@@ -991,14 +985,18 @@ object Similarity {
     * parquet) and fed back as [[AnnModel]]`.transform` of
     * [[AnnSpec.Pca]].
     */
-  def trainPca(s: SparkSession, dir: String, k: Int = ProjK): DataFrame = {
+  def trainPca(s: SparkSession, dir: String, k: Int = ProjK): DataFrame =
+    pcaOn(Tables(s, dir).embeddings, k)
+
+  /** [[trainPca]] on the corpus frame `e`. */
+  private def pcaOn(e: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.ml.feature.PCA
     import org.apache.spark.ml.functions.array_to_vector
     val model = new PCA().setK(k).setInputCol("features").setOutputCol("pc")
-      .fit(Tables(s, dir).embeddings
-        .select(array_to_vector(col("embedding")).as("features")))
+      .fit(e.select(array_to_vector(col("embedding")).as("features")))
     val pc = model.pc // dim × k, column-major
     val ev = model.explainedVariance.toArray
+    val s = e.sparkSession
     import s.implicits._
     (0 until k).map(j => (j.toLong,
         Array.tabulate(pc.numRows)(i => pc(i, j)).toSeq, ev(j)))
@@ -1261,7 +1259,7 @@ object Similarity {
     * encode, exactly like the other fed-model tiers. Returns
     * (rotation rows (comp, weights) like the PCA basis, codebooks trained
     * in the final rotated space) — the [[AnnModel]] transform and
-    * codebooks of [[AnnSpec.Opq]]; persist with [[saveOpqModel]].
+    * codebooks of [[AnnSpec.Opq]]; persist with [[saveIndex]].
     */
   def trainOpq(s: SparkSession, dir: String, iters: Int = OpqIters,
       trainCap: Long = OpqTrainCap): (DataFrame, DataFrame) =
@@ -1373,16 +1371,6 @@ object Similarity {
     (rotDf, cbF)
   }
 
-  def saveOpqModel(path: String, rotation: DataFrame,
-      codebooks: DataFrame): Unit = {
-    rotation.write.mode("overwrite").parquet(s"$path/opq_rotation.parquet")
-    codebooks.write.mode("overwrite").parquet(s"$path/opq_codebooks.parquet")
-  }
-
-  def loadOpqModel(s: SparkSession, path: String): (DataFrame, DataFrame) =
-    (s.read.parquet(s"$path/opq_rotation.parquet"),
-      s.read.parquet(s"$path/opq_codebooks.parquet"))
-
   /** Total PQ reconstruction error Σ‖x − decode(code(x))‖² of a frame
     * under a codebook — the quantity OPQ minimizes; SimilaritySpec pins
     * the OPQ-rotated error under (≤) the raw-PQ error.
@@ -1396,42 +1384,7 @@ object Similarity {
       .agg(sum(l2sq(col("sv"), col("centroid")))).head.getDouble(0)
   }
 
-  def saveOpqIvfModel(path: String, rotation: DataFrame, cents: DataFrame,
-      codebooks: DataFrame): Unit = {
-    saveOpqModel(path, rotation, codebooks)
-    cents.write.mode("overwrite").parquet(s"$path/opq_ivf_centroids.parquet")
-  }
-
-  def loadOpqIvfModel(s: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (rot, cb) = loadOpqModel(s, path)
-    (rot, s.read.parquet(s"$path/opq_ivf_centroids.parquet"), cb)
-  }
-
   // ------------------------------------------------------------ persistence
-  /** Persist trained ANN models — IVF centroids ([[centroids]]/[[kmeans]])
-    * and PQ codebooks ([[pqCodebooks]]) — as parquet under `path`. This is
-    * the missing half of the train-once story: the Option[DataFrame] params
-    * on the retrieval tiers share a model within one session; save/load
-    * shares it across jobs, which is what "train once per corpus build,
-    * read per retrieval" means at 100 TB. Both tables are driver-scale
-    * (cells·dim and m·ksub rows), so the write is trivially cheap; float
-    * centroids round-trip parquet bit-exactly, so fed-from-disk retrieval
-    * is IDENTICAL to fed-in-memory (SimilaritySpec pins the round trip).
-    */
-  def saveModels(path: String, cents: DataFrame, codebooks: DataFrame): Unit = {
-    cents.write.mode("overwrite").parquet(s"$path/ivf_centroids.parquet")
-    codebooks.write.mode("overwrite").parquet(s"$path/pq_codebooks.parquet")
-  }
-
-  /** (IVF centroids, PQ codebooks) back from [[saveModels]] output. The
-    * frames read lazily — each consumer re-scans two tiny parquet files,
-    * exactly what a retrieval service does per job.
-    */
-  def loadModels(s: SparkSession, path: String): (DataFrame, DataFrame) =
-    (s.read.parquet(s"$path/ivf_centroids.parquet"),
-      s.read.parquet(s"$path/pq_codebooks.parquet"))
-
   /** Residual corpus: x − centroid(assigned cell), with the cell riding
     * along as `ivf_cell` — the encode input for residual PQ (training and
     * [[buildIvfpqIndex]] share it so the two can never disagree on what a
@@ -1467,39 +1420,55 @@ object Similarity {
     }
   }
 
-  /** [[saveModels]] plus the encoded corpus ([[buildIvfpqIndex]]) — the
-    * full on-disk index, FAISS-shaped: models + codes persist at corpus
-    * build; a retrieval job loads all three and pays only probe + ADC.
-    * `residual` records the codes' ENCODING in the artifact (a
-    * `_residual` flag file): codes quantizing x − centroid(cell) are
-    * meaningless under the raw ADC tables and vice versa, so the
-    * maintenance paths ([[appendToIndexAt]], [[retrainIndex]]) read the
-    * encoding from disk rather than trusting every later caller to
-    * repeat a boolean correctly — a mismatched append would poison the
-    * codes table silently (same schema, wrong geometry), the exact
-    * failure shape the rotation artifact already guards against.
+  /** The on-disk index — FAISS-shaped: the models and the encoded corpus
+    * persist once per corpus build, and a retrieval job reads them back
+    * and pays only probe + ADC. One layout under `path`, one parquet dir
+    * per [[AnnModel]] part — `opq_rotation`, `ivf_centroids`,
+    * `pq_codebooks`, `pq_codes` — and the `_ann_spec` stamp naming the
+    * index's shape ([[AnnSpec.stamp]]). Every lifecycle operation
+    * ([[openIndex]], [[appendToIndexAt]], the drift monitor,
+    * [[retrainIndex]], [[describeIndex]], `Fsck.fsckAnnIndex`) reads
+    * the shape from the stamp rather than trusting a caller to repeat it:
+    * codes encoded raw are meaningless under residual ADC tables (and
+    * vice versa), and a batch appended unrotated to an OPQ index is
+    * poisoned silently — same schema, wrong geometry.
+    *
+    * Persists PQ codes under the identity or OPQ transform, with or
+    * without IVF, and requires the parts the spec needs (the rotation
+    * under OPQ, centroids under IVF, codebooks always); `codes` is
+    * optional, and a models-only save drops the previous build's codes.
+    * Centroids, codebooks and codes must all live in the transformed
+    * space ([[train]]/[[encode]] output); float parts round-trip parquet
+    * bit-exactly, so serving from disk is identical to serving fed
+    * frames. Crash order: the old stamp goes first and the new one last,
+    * so a crash in between leaves a path [[openIndex]] and fsck refuse,
+    * never one whose stamp describes parts of another build.
     */
-  def saveIndex(path: String, cents: DataFrame, codebooks: DataFrame,
-      codes: DataFrame, residual: Boolean = false): Unit = {
-    saveModels(path, cents, codebooks)
-    codes.write.mode("overwrite").parquet(s"$path/pq_codes.parquet")
-    val conf = codes.sparkSession.sparkContext.hadoopConfiguration
+  def saveIndex(path: String, spec: AnnSpec, model: AnnModel): Unit = {
+    requireComposes(spec)
+    require((spec.transform == AnnTransform.Identity ||
+        spec.transform == AnnTransform.Opq) &&
+      (spec.code == AnnCode.Pq || spec.code == AnnCode.ResidualPq),
+      s"saveIndex persists PQ codes under the identity or OPQ transform: $spec")
+    val parts = modelParts(spec).map { name =>
+      name -> partOf(model, name).getOrElse(throw new IllegalArgumentException(
+        s"saveIndex: $spec needs its $name part"))
+    }
+    val s = parts.head._2.sparkSession
+    val conf = s.sparkContext.hadoopConfiguration
+    def delete(p: String): Unit = {
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(conf).delete(hp, true)
+      ()
+    }
+    delete(stampPath(path))
+    (parts ++ model.codes.map(CodesPart -> _)).foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(partPath(path, name))
+    }
+    if (model.codes.isEmpty) delete(partPath(path, CodesPart))
     // a rebuilt index starts with a clean slate — tombstones belong to the
     // PREVIOUS corpus build and must not filter the new one
-    val ts = new org.apache.hadoop.fs.Path(tombstonePath(path))
-    ts.getFileSystem(conf).delete(ts, true)
-    // ...and a RAW rebuild over a previously-OPQ path demotes it: a stale
-    // rotation artifact would make every later append/drift/serving pass
-    // rotate batches the new codes were never encoded with
-    // ([[saveOpqIndex]] rewrites the rotation AFTER this runs)
-    val rp = new org.apache.hadoop.fs.Path(s"$path/opq_rotation.parquet")
-    rp.getFileSystem(conf).delete(rp, true)
-    // the encoding flag follows the same overwrite discipline: a raw
-    // rebuild over a residual path demotes it
-    val rf = new org.apache.hadoop.fs.Path(residualFlagPath(path))
-    val rffs = rf.getFileSystem(conf)
-    if (residual) rffs.create(rf, true).close()
-    else rffs.delete(rf, false)
+    delete(tombstonePath(path))
     // the replay-protocol state (markers + watermark) belongs to the
     // previous build too: a stale watermark would silently fence out a
     // fresh checkpoint's batch ids 0..N ("already committed" answered
@@ -1508,73 +1477,68 @@ object Similarity {
     // protocol state (it fences explicitly — its stream continues on the
     // old checkpoint's monotone ids); it builds through a staging path,
     // so this clean-slate rule never touches it.
-    val mb = new org.apache.hadoop.fs.Path(s"${path}_batches")
-    mb.getFileSystem(conf).delete(mb, true)
-    ()
+    delete(s"${path}_batches")
+    graft.Inputs.writeKeyValues(s, stampPath(path), spec.stamp)
   }
 
-  private def residualFlagPath(path: String): String = s"$path/_residual"
-
-  /** Whether the index at `path` stores RESIDUAL-encoded codes — read
-    * from the artifact ([[saveIndex]]'s `_residual` flag), the way the
-    * rotation is detected: the encoding is a property of the index, not
-    * an argument.
+  /** The index at `path` ([[saveIndex]]): its stamped shape (default
+    * serving knobs — `copy` them per query) and its parts, the codes (when
+    * saved) with [[removeFromIndex]] tombstones applied, so every consumer
+    * (serving, compaction, further appends) sees only live vectors
+    * without having to know deletes exist. Fails, naming the path, when
+    * the stamp is missing.
     */
-  private[ops] def indexResidual(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(residualFlagPath(path))
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  def openIndex(s: SparkSession, path: String): (AnnSpec, AnnModel) = {
+    val spec = indexSpec(s, path)
+    val m = indexModel(s, path, spec)
+    val codes = partPath(path, CodesPart)
+    val hp = new org.apache.hadoop.fs.Path(codes)
+    (spec, m.copy(codes =
+      if (!hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)) None
+      else Some(applyTombstones(s, s.read.parquet(codes), tombstonePath(path),
+        "vec_id"))))
   }
 
-  /** The composed-OPQ ("OPQ,IVF,PQ") index as ONE on-disk artifact, under
-    * the SAME layout as the raw index (coarse centroids + codebooks +
-    * codes at the standard filenames) plus the rotation — so the entire
-    * maintenance lifecycle ([[appendToIndexAt]], [[removeFromIndex]],
-    * [[compactIndex]], the drift monitor, [[retrainIndex]]) applies to
-    * the flagship tier unchanged: those paths detect the rotation
-    * artifact and rotate batches before encoding. `cents`, `codebooks`
-    * and `codes` must all live in the ROTATED space (what [[train]] of an
-    * OPQ spec and a rotated-frame [[buildIvfpqIndex]] produce).
-    */
-  def saveOpqIndex(path: String, rotation: DataFrame, cents: DataFrame,
-      codebooks: DataFrame, codes: DataFrame,
-      residual: Boolean = false): Unit = {
-    saveIndex(path, cents, codebooks, codes, residual)
-    rotation.write.mode("overwrite").parquet(s"$path/opq_rotation.parquet")
+  private val RotationPart = "opq_rotation"
+  private[ops] val CentroidsPart = "ivf_centroids"
+  private val CodebooksPart = "pq_codebooks"
+  private[ops] val CodesPart = "pq_codes"
+
+  private[ops] def partPath(path: String, part: String): String =
+    s"$path/$part.parquet"
+
+  private def stampPath(path: String): String = s"$path/_ann_spec"
+
+  /** The model parts a persisted spec needs. */
+  private[ops] def modelParts(spec: AnnSpec): Seq[String] =
+    (if (spec.transform == AnnTransform.Opq) Seq(RotationPart) else Nil) ++
+      spec.nprobe.map(_ => CentroidsPart) :+ CodebooksPart
+
+  private def partOf(m: AnnModel, part: String): Option[DataFrame] = part match {
+    case RotationPart => m.transform
+    case CentroidsPart => m.centroids
+    case CodebooksPart => m.codebooks
+    case CodesPart => m.codes
   }
 
-  /** (rotation, coarse centroids, codebooks, live codes) back from
-    * [[saveOpqIndex]] — tombstones applied; as an [[AnnModel]] they are
-    * the steady-state serving model of [[AnnSpec.OpqIvfpq]].
-    */
-  def loadOpqIndex(s: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (cents, cb, codes) = loadIndex(s, path)
-    (s.read.parquet(s"$path/opq_rotation.parquet"), cents, cb, codes)
-  }
+  /** The shape stamped at `path`, None without a stamp. */
+  private def stampedSpec(s: SparkSession, path: String): Option[AnnSpec] =
+    Some(graft.Inputs.readKeyValues(s, stampPath(path)))
+      .filter(_.nonEmpty).map(AnnSpec.fromStamp)
 
-  /** The index's rotation as a driver-side matrix when the path is a
-    * composed-OPQ index ([[saveOpqIndex]]), None for a raw index — how
-    * the shared maintenance paths decide whether a batch rotates before
-    * encode. 64×64 doubles: reading it per append is as cheap as the
-    * models read beside it.
-    */
-  private def indexRotation(s: SparkSession,
-      path: String): Option[Array[Array[Double]]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/opq_rotation.parquet")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(rotationLiteral(
-      s.read.parquet(s"$path/opq_rotation.parquet")))
-  }
+  /** The shape stamped at `path`; fails, naming the path, without one. */
+  private[ops] def indexSpec(s: SparkSession, path: String): AnnSpec =
+    stampedSpec(s, path).getOrElse(throw new IllegalArgumentException(
+      s"no ANN index at $path: its _ann_spec stamp is missing (not an " +
+        "index, or a saveIndex that did not finish)"))
 
-  /** (IVF centroids, PQ codebooks, corpus codes) from [[saveIndex]] —
-    * with any [[removeFromIndex]] tombstones already applied, so every
-    * consumer (serving, compaction, further appends) sees only live
-    * vectors without having to know deletes exist.
-    */
-  def loadIndex(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) = {
-    val (cents, cb) = loadModels(s, path)
-    val codes = s.read.parquet(s"$path/pq_codes.parquet")
-    (cents, cb, applyTombstones(s, codes, tombstonePath(path), "vec_id"))
+  /** The model parts of the index at `path`, without its codes. */
+  private def indexModel(s: SparkSession, path: String,
+      spec: AnnSpec): AnnModel = {
+    val read = modelParts(spec)
+      .map(p => p -> s.read.parquet(partPath(path, p))).toMap
+    AnnModel(read.get(RotationPart), read.get(CentroidsPart),
+      read.get(CodebooksPart))
   }
 
   private def tombstonePath(path: String): String = s"$path/tombstones.parquet"
@@ -1613,7 +1577,7 @@ object Similarity {
   }
 
   /** Delete vectors from a persisted index WITHOUT rewriting it: append
-    * their ids to a tombstone file that [[loadIndex]] anti-joins away on
+    * their ids to a tombstone file that [[openIndex]] anti-joins away on
     * every read — the takedown/GDPR-delete shape (dedup survivors being
     * dropped, redaction takedowns). O(|removed|) per delete regardless of
     * index size; the physical rows leave at the next [[compactIndex]].
@@ -1783,26 +1747,27 @@ object Similarity {
         .as("top_cell_share"))
 
   /** The (error-input, occupancy-input) views of a RAW batch under the
-    * index artifact's properties — the single place the drift statistics
-    * learn what space they measure in, so the baseline and every later
-    * batch row can never disagree: a composed-OPQ index rotates the batch
+    * index's stamped shape — the single place the drift statistics learn
+    * what space they measure in, so the baseline and every later batch
+    * row can never disagree: a composed-OPQ index rotates the batch
     * first (its models live in rotated space), and a residual-encoded
     * index measures error on x' − centroid(cell(x')) — the quantity its
     * codebooks were actually trained to minimize (raw vectors against
     * residual codebooks would let a pure translation trip the error
     * signal that residual encoding absorbs per cell). Occupancy always
     * reads the (rotated) vectors themselves — cells are assigned before
-    * residualizing.
+    * residualizing. A drift table kept apart from any index (no stamp at
+    * `path`) measures the batch as given, against raw codebooks.
     */
   private def driftViews(s: SparkSession, path: String, batch: DataFrame,
       cents: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val vecs = batch.select(col("vec_id"), col("embedding"))
-    val rotated = indexRotation(s, path) match {
-      case Some(r) => rotateFrame(vecs, r)
-      case None => vecs
-    }
+    val spec = stampedSpec(s, path).getOrElse(AnnSpec.Pq)
+    val rotated = transformOf(spec.transform,
+      Option.when(spec.transform == AnnTransform.Opq)(
+        s.read.parquet(partPath(path, RotationPart))))(
+      batch.select(col("vec_id"), col("embedding")))
     val errInput =
-      if (!indexResidual(s, path)) rotated
+      if (spec.code != AnnCode.ResidualPq) rotated
       else {
         val c = cents.getOrElse(sys.error(
           s"drift statistics on the residual-encoded index at $path need " +
@@ -1839,8 +1804,8 @@ object Similarity {
   def recordDriftBaseline(s: SparkSession, path: String, vectors: DataFrame,
       codebooks: DataFrame, cents: Option[DataFrame] = None): Unit = {
     // `vectors` is RAW original-space — the index's rotation and residual
-    // encoding are read from the artifact ([[driftViews]]), so run this
-    // AFTER saveIndex/saveOpqIndex has written those properties
+    // encoding are read from its stamp ([[driftViews]]), so run this
+    // AFTER saveIndex
     val (errInput, occInput) = driftViews(s, path, vectors, cents)
     val (n, err) = quantStats(errInput, codebooks)
     require(n > 0, "drift baseline needs a non-empty corpus")
@@ -1881,7 +1846,7 @@ object Similarity {
   /** The one-row drift frame [[recordDrift]] appends — exposed so the
     * append path can route it through the exactly-once batch commit
     * instead of a bare append. `batch` is RAW original-space; the index's
-    * rotation/residual properties are read from the artifact at `path`
+    * rotation/residual shape is read from its stamp at `path`
     * ([[driftViews]]) so these rows measure the same quantity the
     * baseline did.
     */
@@ -1918,7 +1883,7 @@ object Similarity {
     * Re-added vec_ids clear their tombstones. Returns true when the
     * batch applied, false when its marker already existed (a replay).
     * Per batch the work is one assignCells + one assignCodes + the two
-    * drift statistics over BATCH rows only. [[loadIndex]] serves the
+    * drift statistics over BATCH rows only. [[openIndex]] serves the
     * base + every applied batch; fold file growth periodically with
     * [[compactIndex]]. `graft.streaming.Streams.annIngestSink` is this
     * call per micro-batch.
@@ -1938,21 +1903,16 @@ object Similarity {
         // empty batch's drift statistics and then replay it forever
         if (cached.isEmpty) { fs.create(marker, true).close(); true }
         else {
-        val (cents, cb) = loadModels(s, path)
-        // the encoding is the INDEX's property, read from the artifact —
-        // a caller-repeated boolean here would let one mistyped append
-        // poison a residual index with raw-encoded codes (same schema,
-        // silently wrong ADC distances)
-        val residual = indexResidual(s, path)
-        // a composed-OPQ index ([[saveOpqIndex]]) keeps its models and
-        // codes in ROTATED space — the batch rotates first (one MatVec
-        // over batch rows), then the encode runs against the
-        // rotated-space models exactly as the raw path does
-        val enc = indexRotation(s, path) match {
-          case Some(r) =>
-            rotateFrame(cached.select(col("vec_id"), col("embedding")), r)
-          case None => cached
-        }
+        // the shape is the INDEX's property, read from its stamp — a
+        // caller-repeated flag here would let one mistyped append poison
+        // a residual index with raw-encoded codes (same schema, silently
+        // wrong ADC distances). A composed-OPQ index keeps its models and
+        // codes in ROTATED space: the batch rotates first (one MatVec
+        // over batch rows), then encodes against the rotated-space models
+        val spec = indexSpec(s, path)
+        val m = indexModel(s, path, spec)
+        val enc = transformOf(spec.transform, m.transform)(
+          cached.select(col("vec_id"), col("embedding")))
         // ids already PHYSICALLY in the codes table must not write again:
         // under the frozen models their rows are content-derived
         // (identical), and a second copy would break the ADC `n_subs = m`
@@ -1990,7 +1950,7 @@ object Similarity {
             .distinct(), Seq("vec_id"), "left_anti")
         graft.streaming.Streams.replaceBatchFiles(s, codesDir, batchId) {
           staging =>
-          buildIvfpqIndex(newOnly, cents, cb, residual).write.parquet(staging)
+          encode(newOnly, spec, m).write.parquet(staging)
         }
         // the int8 sibling artifact stays current too (when present): the
         // int8 tiers serve from it, so an append that only grew the PQ
@@ -2009,11 +1969,11 @@ object Similarity {
         }
         // the drift row measures the WHOLE arriving batch (distribution
         // monitoring wants every arrival, re-ingested or not), from the
-        // raw frame — driftRow reads the rotation/residual properties
-        // from the artifact itself
+        // raw frame — driftRow reads the rotation/residual shape from the
+        // stamp itself
         graft.streaming.Streams.replaceBatchFiles(s,
           s"$path/drift.parquet", batchId) { staging =>
-          driftRow(s, path, cached, cb, batchId, Some(cents))
+          driftRow(s, path, cached, m.codebooks.get, batchId, m.centroids)
             .write.parquet(staging)
         }
         clearIndexTombstones(s, path, cached.select(col("vec_id")))
@@ -2072,8 +2032,8 @@ object Similarity {
 
   /** The index artifact's one-row operational inventory — what an ops
     * dashboard (or an on-call human) reads before touching a serving
-    * index: its KIND (raw / composed-OPQ — the rotation artifact) and
-    * ENCODING (raw / residual — the `_residual` flag), live vs
+    * index: its KIND (raw / composed-OPQ) and ENCODING (raw / residual),
+    * both from the stamped shape, live vs
     * tombstoned vector counts, physical file count of the codes dir
     * (the compaction signal), whether the int8 sibling artifact exists,
     * the committed-batch watermark and still-open marker count (the
@@ -2087,8 +2047,9 @@ object Similarity {
     val conf = s.sparkContext.hadoopConfiguration
     def hp(sub: String) = new org.apache.hadoop.fs.Path(sub)
     def exists(sub: String) = hp(sub).getFileSystem(conf).exists(hp(sub))
-    val kind = if (exists(s"$path/opq_rotation.parquet")) "opq" else "raw"
-    val encoding = if (indexResidual(s, path)) "residual" else "raw"
+    val spec = indexSpec(s, path)
+    val kind = if (spec.transform == AnnTransform.Opq) "opq" else "raw"
+    val encoding = if (spec.code == AnnCode.ResidualPq) "residual" else "raw"
     val codesDir = s"$path/pq_codes.parquet"
     val fs = hp(codesDir).getFileSystem(conf)
     val codeFiles = fs.listStatus(hp(codesDir))
@@ -2247,7 +2208,7 @@ object Similarity {
     *
     * Single-writer maintenance like [[compactIndex]]; crash-safe via
     * staged promotion: the ENTIRE new generation (models, codes, int8,
-    * encoding flag, rotation, drift baseline) builds under
+    * stamp, rotation, drift baseline) builds under
     * `<path>_retrain_staging` while the live index keeps serving, then
     * swaps in with two renames. A crash anywhere before the swap leaves
     * the old index fully intact (rerun rebuilds staging from scratch); a
@@ -2255,9 +2216,9 @@ object Similarity {
     * `<path>_retrain_old`, which the rerun restores first — the live
     * path is never a mixed generation (new codebooks over old codes
     * would serve silently wrong distances, the worst failure mode a
-    * maintenance job can have). The index's encoding (raw/residual) and
-    * kind (raw/OPQ) are read from the artifact and preserved through the
-    * rebuild.
+    * maintenance job can have). The rebuild is [[train]] of the stamped
+    * spec over `trainOn` plus its encode of `corpus`, so the index's
+    * shape — kind (raw/OPQ), IVF, encoding (raw/residual) — is preserved.
     */
   def retrainIndex(s: SparkSession, path: String, corpus: DataFrame,
       trainOn: Option[DataFrame] = None): Unit = {
@@ -2276,37 +2237,17 @@ object Similarity {
     fs.delete(oldP, true)
     fs.delete(stagingP, true)
     val staging = stagingP.toString
-    val residual = indexResidual(s, path)
+    // the stamped shape is kept through the rebuild: every part it names
+    // (a composed-OPQ index's rotation too — itself a frozen model that
+    // drifts with the codebooks it feeds) refits on the training window,
+    // and the full corpus re-encodes in the NEW space
+    val spec = indexSpec(s, path)
     val train = trainOn.getOrElse(corpus)
-    // a composed-OPQ index stays composed-OPQ through retrain: the
-    // rotation is itself a frozen model that drifts with the codebooks it
-    // feeds, so the alternating minimization reruns on the same training
-    // window and everything downstream (coarse quantizer, codebooks,
-    // codes, drift baseline) rebuilds in the NEW rotated space
-    val maybeRot = indexRotation(s, path).map { _ =>
-      val (rotDf, cbFlat) = trainOpqOn(s, train)
-      (rotDf, rotationLiteral(rotDf), cbFlat)
-    }
-    val trainEnc = maybeRot.map { case (_, r, _) => rotateFrame(train, r) }
-      .getOrElse(train)
-    val cents = centroids(trainEnc)
-    val cb = maybeRot match {
-      case Some((_, _, cbFlat)) if !residual => cbFlat
-      case _ =>
-        if (residual) pqCodebooks(residualVectors(trainEnc, cents)
-          .select(col("vec_id"), col("embedding")))
-        else pqCodebooks(trainEnc)
-    }
-    val corpusEnc = maybeRot.map { case (_, r, _) => rotateFrame(corpus, r) }
-      .getOrElse(corpus)
-    val codes = buildIvfpqIndex(corpusEnc, cents, cb, residual)
+    val m = fit(s, train, spec, AnnModel())
     // build the COMPLETE new generation under staging — the live index
     // serves untouched until the swap
-    maybeRot match {
-      case Some((rotDf, _, _)) =>
-        saveOpqIndex(staging, rotDf, cents, cb, codes, residual)
-      case None => saveIndex(staging, cents, cb, codes, residual)
-    }
+    saveIndex(staging, spec, m.copy(codes =
+      Some(encode(transformOf(spec.transform, m.transform)(corpus), spec, m))))
     // the int8 artifact is raw-space (rotation-free quantization) — it
     // rebuilds from the raw corpus either way
     val int8P = new org.apache.hadoop.fs.Path(s"$path/int8_codes.parquet")
@@ -2318,9 +2259,9 @@ object Similarity {
     // be held against (baselining over a mixed old+new archive would
     // shift the reference toward the world the retrain just left). The
     // RAW window goes in — the staged artifact already carries the new
-    // rotation and encoding, and recordDriftBaseline reads both from it,
+    // rotation and the stamp, and recordDriftBaseline reads both from it,
     // exactly as every later batch row will.
-    recordDriftBaseline(s, staging, train, cb, Some(cents))
+    recordDriftBaseline(s, staging, train, m.codebooks.get, m.centroids)
     // fence, then promote: old batch ids must never re-apply to the new
     // generation (their content is the caller's to include in `corpus`),
     // and the swap itself is two renames — the only window in which the
@@ -2389,7 +2330,8 @@ object Similarity {
       retrainMemo(s, dir) {
         val cents = centroids(past)
         val cb = pqCodebooks(past)
-        saveIndex(path, cents, cb, buildIvfpqIndex(past, cents, cb))
+        saveIndex(path, AnnSpec.Ivfpq, AnnModel(None, Some(cents), Some(cb),
+          Some(buildIvfpqIndex(past, cents, cb))))
         recordDriftBaseline(s, path, past, cb, Some(cents))
         appendToIndexAt(s, path, shifted.filter(col("vec_id") % 4 === 1), 0L)
         appendToIndexAt(s, path, shifted.filter(col("vec_id") % 4 === 3), 1L)

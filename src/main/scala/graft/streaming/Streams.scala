@@ -884,7 +884,7 @@ object Streams extends Serializable {
     * quantization error + top-cell occupancy under the frozen models)
     * append to the drift table, so the retrain signal accumulates as
     * the index grows. Build the index with `saveIndex` +
-    * `recordDriftBaseline` first; serve with `loadIndex` (tombstones
+    * `recordDriftBaseline` first; serve with `openIndex` (tombstones
     * and all appended batches applied).
     *
     * Unlike the dedup ingest sinks — whose crash-window duplicate rows
@@ -899,9 +899,8 @@ object Streams extends Serializable {
   def annIngestSink(vectors: DataFrame, indexPath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     batchSink(vectors, checkpoint) { (batch: DataFrame, batchId: Long) =>
-        // the encoding (raw/residual) and kind (raw/OPQ) are the INDEX's
-        // properties, read from the artifact by the append — one sink
-        // body serves every index flavor
+        // the index's shape (kind, IVF, encoding) is read from its stamp
+        // by the append — one sink body serves every index flavor
         graft.ops.Similarity.appendToIndexAt(batch.sparkSession, indexPath,
           batch, batchId)
         ()

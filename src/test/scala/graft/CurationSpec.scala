@@ -135,7 +135,7 @@ class CurationSpec extends SparkSpec {
 
   test("resumable funnel: equals the one-shot funnel, and resumes, not recomputes") {
     val work = java.nio.file.Files.createTempDirectory("graft-resume").toString
-    val first = Curation.prepareCorpusResumable(spark, sf, work).collect()
+    val first = Curation.prepareCorpus(spark, sf, workDir = Some(work)).collect()
       .map(r => (r.getLong(0), r.getAs[Long]("shard"))).toSet
     assert(first === out.map(r => (r.getLong(0), r.getAs[Long]("shard"))).toSet,
       "materialized stages must not change the result")
@@ -149,7 +149,7 @@ class CurationSpec extends SparkSpec {
     val curatedBefore = mtime("curated_ids")
     val droppedBefore = mtime("dropped_ids")
     assert(new java.io.File(s"$work/clean_ids/_SUCCESS").delete())
-    val second = Curation.prepareCorpusResumable(spark, sf, work).collect()
+    val second = Curation.prepareCorpus(spark, sf, workDir = Some(work)).collect()
       .map(r => (r.getLong(0), r.getAs[Long]("shard"))).toSet
     assert(second === first)
     assert(mtime("curated_ids") === curatedBefore, "curated stage must be skipped")

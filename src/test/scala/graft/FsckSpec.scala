@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Fsck, Similarity}
+import graft.ops.{AnnModel, AnnSpec, Dedup, Fsck, Similarity}
 import graft.etl.StateKind._
 
 /** The fsck contract: a freshly-built artifact of every family reports all
@@ -50,7 +50,8 @@ class FsckSpec extends SparkSpec {
     val e = vectors(400)
     val cents = Similarity.centroids(e)
     val cb = Similarity.pqCodebooks(e)
-    Similarity.saveIndex(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
+    Similarity.saveIndex(path, AnnSpec.Ivfpq, AnnModel(None, Some(cents),
+      Some(cb), Some(Similarity.buildIvfpqIndex(e, cents, cb))))
     Similarity.recordDriftBaseline(spark, path, e, cb, Some(cents))
 
     val clean = Fsck.fsckAnnIndex(spark, path)
@@ -104,7 +105,8 @@ class FsckSpec extends SparkSpec {
     val e = vectors(120)
     val cents = Similarity.centroids(e)
     val cb = Similarity.pqCodebooks(e)
-    Similarity.saveIndex(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
+    Similarity.saveIndex(path, AnnSpec.Ivfpq, AnnModel(None, Some(cents),
+      Some(cb), Some(Similarity.buildIvfpqIndex(e, cents, cb))))
     // replaceBatchFiles mkdirs the target before any rename lands — a
     // crash there leaves empty dirs; the validator must diagnose, not die
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -116,12 +118,42 @@ class FsckSpec extends SparkSpec {
     assert(statusOf(report, "int8_sibling") === ("ok", 0L))
   }
 
+  test("ann fsck: the stamp names the required parts; no stamp or a missing part is index_readable fail") {
+    val path = tmp("graft_fsck_stamp") + "/idx"
+    val e = vectors(120)
+    val cents = Similarity.centroids(e)
+    val cb = Similarity.pqCodebooks(e)
+    def save(): Unit = Similarity.saveIndex(path, AnnSpec.Ivfpq, AnnModel(None,
+      Some(cents), Some(cb), Some(Similarity.buildIvfpqIndex(e, cents, cb))))
+    save()
+    assert(Fsck.fsckAnnIndex(spark, path)
+      .filter(col("check") === "index_readable").count() === 0)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def readable(): (String, String) = {
+      val r = Fsck.fsckAnnIndex(spark, path)
+        .filter(col("check") === "index_readable").collect().head
+      (r.getAs[String]("status"), r.getAs[String]("detail"))
+    }
+    // the crash window between saveIndex's first and last step: every
+    // part present, the stamp not yet written
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_ann_spec"), false)
+    assert(readable()._1 === "fail")
+    assert(readable()._2.contains("_ann_spec"))
+    // a part the stamped spec needs — here the codebooks — missing
+    save()
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/pq_codebooks.parquet"), true)
+    assert(readable()._1 === "fail")
+    assert(readable()._2.contains("pq_codebooks"))
+  }
+
   test("ann fsck: missing drift baseline is fail, absent table is warn") {
     val path = tmp("graft_fsck_drift") + "/idx"
     val e = vectors(200)
     val cents = Similarity.centroids(e)
     val cb = Similarity.pqCodebooks(e)
-    Similarity.saveIndex(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
+    Similarity.saveIndex(path, AnnSpec.Ivfpq, AnnModel(None, Some(cents),
+      Some(cb), Some(Similarity.buildIvfpqIndex(e, cents, cb))))
     assert(statusOf(Fsck.fsckAnnIndex(spark, path),
       "drift_monitored")._1 === "warn") // unmonitored
     // a drift table with batch rows but no baseline = a broken monitor

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Fsck, Maintenance, Similarity}
+import graft.ops.{AnnModel, AnnSpec, Dedup, Fsck, Maintenance, Similarity}
 import graft.ops.Maintenance.Target
 
 class MaintenanceSpec extends SparkSpec {
@@ -50,8 +50,9 @@ class MaintenanceSpec extends SparkSpec {
     val e = vectors(512)
     val cents = Similarity.centroids(e.filter(col("vec_id") % 2 === 0))
     val cb = Similarity.pqCodebooks(e.filter(col("vec_id") % 2 === 0))
-    Similarity.saveIndex(s"$base/ann", cents, cb,
-      Similarity.buildIvfpqIndex(e.filter(col("vec_id") % 2 === 0), cents, cb))
+    Similarity.saveIndex(s"$base/ann", AnnSpec.Ivfpq, AnnModel(None,
+      Some(cents), Some(cb), Some(Similarity.buildIvfpqIndex(
+        e.filter(col("vec_id") % 2 === 0), cents, cb))))
     Similarity.recordDriftBaseline(spark, s"$base/ann",
       e.filter(col("vec_id") % 2 === 0), cb, Some(cents))
     // nightly batches are RE-ID'D copies of baseline vectors — exactly
@@ -172,8 +173,8 @@ class MaintenanceSpec extends SparkSpec {
     val past = e.filter(col("vec_id") % 2 === 0)
     val cents = Similarity.centroids(past)
     val cb = Similarity.pqCodebooks(past)
-    Similarity.saveIndex(s"$base/ann", cents, cb,
-      Similarity.buildIvfpqIndex(past, cents, cb))
+    Similarity.saveIndex(s"$base/ann", AnnSpec.Ivfpq, AnnModel(None,
+      Some(cents), Some(cb), Some(Similarity.buildIvfpqIndex(past, cents, cb))))
     Similarity.recordDriftBaseline(spark, s"$base/ann", past, cb, Some(cents))
     // two in-distribution nightlies (re-id'd copies of baseline vectors —
     // the same world re-arriving): the decision must decline

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Materialize, TextAnalysis}
+import graft.ops.{Curation, Dedup, Materialize, TextAnalysis}
 
 /** The config-switched materialization barrier: the default
   * (localCheckpoint) path and the reliable-checkpoint path must yield
@@ -51,6 +51,33 @@ class MaterializeSpec extends SparkSpec {
     withReliableCheckpoint {
       val reliable = TextAnalysis.tfIdf(spark, sf).collect().map(_.toSeq)
       assert(reliable === local)
+    }
+  }
+
+  test("every barrier in src/main goes through Materialize") {
+    // a raw checkpoint call bypasses spark.graft.reliableCheckpoint; the
+    // scale probe's harness timings are its only sanctioned callers
+    val root = new java.io.File("src/main/scala")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    val allowed = Set("Materialize.scala", "ScaleProbe.scala")
+    val raw = for {
+      f <- files(root) if !allowed(f.getName)
+      src = scala.io.Source.fromFile(f, "UTF-8")
+      (line, i) <- try src.getLines().toVector.zipWithIndex finally src.close()
+      if line.contains(".localCheckpoint(") || line.contains(".checkpoint(")
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(files(root).nonEmpty)
+    assert(raw.isEmpty, raw.mkString("\n"))
+  }
+
+  test("prepareCorpus is identical under both materialization paths") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val local = rows(Curation.prepareCorpus(spark, sf))
+    withReliableCheckpoint {
+      assert(rows(Curation.prepareCorpus(spark, sf)) === local)
     }
   }
 }

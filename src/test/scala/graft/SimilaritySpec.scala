@@ -18,6 +18,16 @@ class SimilaritySpec extends SparkSpec {
   private def indexedModel(spec: AnnSpec): AnnModel =
     Similarity.modelFor(spark, sf, spec, AnnSource.Indexed)
 
+  /** Persist an IVF-PQ index: models `cents`/`cb` and their `codes`. */
+  private def saveIvfpq(path: String, cents: DataFrame, cb: DataFrame,
+      codes: DataFrame, spec: AnnSpec = AnnSpec.Ivfpq): Unit =
+    Similarity.saveIndex(path, spec, AnnModel(None, Some(cents), Some(cb),
+      Some(codes)))
+
+  /** The live codes of the index at `path`. */
+  private def codesAt(path: String): DataFrame =
+    Similarity.openIndex(spark, path)._2.codes.get
+
   test("brute force returns a full top-5 per query, ranked by cosine") {
     assert(exact.size === 10)
     exact.values.foreach(ns => assert(ns.size === 5))
@@ -301,8 +311,10 @@ class SimilaritySpec extends SparkSpec {
     // parquet-round-tripped model must reproduce the fed output exactly
     assert(topk(Similarity.topk(spark, sf, AnnSpec.Opq)) === fed)
     val dir = java.nio.file.Files.createTempDirectory("graft_opq").toString
-    Similarity.saveOpqModel(dir, rot, cb)
-    val (rot2, cb2) = Similarity.loadOpqModel(spark, dir)
+    Similarity.saveIndex(dir, AnnSpec.Opq,
+      AnnModel(transform = Some(rot), codebooks = Some(cb)))
+    val AnnModel(Some(rot2), None, Some(cb2), None) =
+      Similarity.openIndex(spark, dir)._2
     assert(topk(Similarity.topk(spark, sf, AnnSpec.Opq,
       AnnModel(transform = Some(rot2), codebooks = Some(cb2)))) === fed)
   }
@@ -317,9 +329,9 @@ class SimilaritySpec extends SparkSpec {
     // deterministic training → inline equals fed; model round-trips
     assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq)) === fed)
     val dir = java.nio.file.Files.createTempDirectory("graft_opqivf").toString
-    Similarity.saveOpqIvfModel(dir, m.transform.get, m.centroids.get,
-      m.codebooks.get)
-    val (r2, c2, cb2) = Similarity.loadOpqIvfModel(spark, dir)
+    Similarity.saveIndex(dir, AnnSpec.OpqIvfpq, m)
+    val AnnModel(Some(r2), Some(c2), Some(cb2), None) =
+      Similarity.openIndex(spark, dir)._2
     assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpq,
       AnnModel(Some(r2), Some(c2), Some(cb2)))) === fed)
     // the session-memoized fed/indexed gate entries equal their one-shot twins
@@ -348,15 +360,15 @@ class SimilaritySpec extends SparkSpec {
     // deterministic training → inline ≡ fed; the triple round-trips disk
     assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual)) === res)
     val dir = java.nio.file.Files.createTempDirectory("graft_opqres").toString
-    Similarity.saveOpqIvfModel(dir, m.transform.get, m.centroids.get,
-      m.codebooks.get)
-    val (r2, c2, cb2) = Similarity.loadOpqIvfModel(spark, dir)
+    Similarity.saveIndex(dir, AnnSpec.OpqIvfpqResidual, m)
+    val AnnModel(Some(r2), Some(c2), Some(cb2), None) =
+      Similarity.openIndex(spark, dir)._2
     assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual,
       AnnModel(Some(r2), Some(c2), Some(cb2)))) === res)
     // the memoized fed gate entry equals the one-shot twin, and the
-    // indexed rung (serving from the saveOpqIndex(residual=true)
-    // artifact — rotation, residual flag, models and codes all read
-    // back from disk) reproduces it too
+    // indexed rung (serving from the saved OPQ,IVF,residual-PQ artifact
+    // — stamp, rotation, models and codes all read back from disk)
+    // reproduces it too
     assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual,
       fedModel(AnnSpec.OpqIvfpqResidual))) === res)
     assert(topk(Similarity.topk(spark, sf, AnnSpec.OpqIvfpqResidual,
@@ -463,8 +475,10 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.centroids(e)
     val cb = Similarity.pqCodebooks(e)
     val path = java.nio.file.Files.createTempDirectory("graft_ann_models").toString
-    Similarity.saveModels(path, cents, cb)
-    val (lc, lcb) = Similarity.loadModels(spark, path)
+    Similarity.saveIndex(path, AnnSpec.Ivfpq,
+      AnnModel(centroids = Some(cents), codebooks = Some(cb)))
+    val AnnModel(None, Some(lc), Some(lcb), None) =
+      Similarity.openIndex(spark, path)._2
     // float centroids must survive the parquet round trip bit-exactly —
     // that's what makes fed-from-disk retrieval IDENTICAL, not just close
     def asMap(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[Float]] =
@@ -481,8 +495,9 @@ class SimilaritySpec extends SparkSpec {
     // and index-fed retrieval — nothing about the corpus recomputed —
     // is still identical, raw and residual alike
     val ipath = java.nio.file.Files.createTempDirectory("graft_ann_index").toString
-    Similarity.saveIndex(ipath, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
-    val (ic, icb, icodes) = Similarity.loadIndex(spark, ipath)
+    saveIvfpq(ipath, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
+    val AnnModel(_, Some(ic), Some(icb), Some(icodes)) =
+      Similarity.openIndex(spark, ipath)._2
     assert(topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq,
         AnnModel(None, Some(ic), Some(icb), Some(icodes))))
       === topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq)))
@@ -777,8 +792,9 @@ class SimilaritySpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft_ann_del").toString
     val cents = Similarity.centroids(e)
     val cb = Similarity.pqCodebooks(e)
-    Similarity.saveIndex(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
-    val (lc, lcb, lcodes) = Similarity.loadIndex(spark, path)
+    saveIvfpq(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
+    val AnnModel(_, Some(lc), Some(lcb), Some(lcodes)) =
+      Similarity.openIndex(spark, path)._2
     def served(codes: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
       topk(Similarity.topk(spark, sf, AnnSpec.Ivfpq,
         AnnModel(None, Some(lc), Some(lcb), Some(codes))))
@@ -786,7 +802,7 @@ class SimilaritySpec extends SparkSpec {
     // must change a real answer, not a bystander's codes
     val victim = served(lcodes).values.flatten.filter(_ >= 10).min
     Similarity.removeFromIndex(spark, path, Seq(victim).toDF("vec_id"))
-    val (_, _, codes2) = Similarity.loadIndex(spark, path)
+    val codes2 = codesAt(path)
     assert(codes2.filter(col("vec_id") === victim).count() == 0)
     assert(!served(codes2).values.flatten.toSet.contains(victim),
       "deleted vector must never be served again")
@@ -815,13 +831,13 @@ class SimilaritySpec extends SparkSpec {
       "compaction must fold the tombstone into EVERY per-vector artifact")
     assert(!new java.io.File(s"$path/tombstones.parquet").exists())
     assert(fa <= fb && n == rebuilt.count())
-    val (_, _, codes3) = Similarity.loadIndex(spark, path)
+    val codes3 = codesAt(path)
     assert(codeSet(codes3) === codeSet(rebuilt))
     // a REBUILD at the same path starts clean: no stale tombstones filter
     // the new corpus build
     Similarity.removeFromIndex(spark, path, Seq(0L).toDF("vec_id"))
-    Similarity.saveIndex(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
-    val (_, _, fresh) = Similarity.loadIndex(spark, path)
+    saveIvfpq(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
+    val fresh = codesAt(path)
     assert(fresh.filter(col("vec_id") === 0L).count() > 0,
       "rebuild must clear tombstones from the previous build")
   }
@@ -975,13 +991,13 @@ class SimilaritySpec extends SparkSpec {
     val ip = java.nio.file.Files.createTempDirectory("graft_ann_append").toString + "/idx"
     val cents = Similarity.centroids(corpus)
     val cb = Similarity.pqCodebooks(corpus)
-    Similarity.saveIndex(ip, cents, cb,
+    saveIvfpq(ip, cents, cb,
       Similarity.buildIvfpqIndex(corpus, cents, cb))
     Similarity.recordDriftBaseline(spark, ip, corpus, cb, Some(cents))
     val day = e.filter(col("vec_id") % 4 === 0)
     assert(Similarity.appendToIndexAt(spark, ip, day, 0L), "first apply")
     def codeSet(): Set[(Long, Int, Int, Int)] =
-      Similarity.loadIndex(spark, ip)._3.collect()
+      codesAt(ip).collect()
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
           r.getAs[Int]("code"), r.getAs[Int]("ivf_cell"))).toSet
     val expect = Similarity.buildIvfpqIndex(e, cents, cb).collect()
@@ -1041,7 +1057,7 @@ class SimilaritySpec extends SparkSpec {
     val ip = java.nio.file.Files.createTempDirectory("graft_ann_sib").toString + "/idx"
     val cents = Similarity.centroids(corpus)
     val cb = Similarity.pqCodebooks(corpus)
-    Similarity.saveIndex(ip, cents, cb,
+    saveIvfpq(ip, cents, cb,
       Similarity.buildIvfpqIndex(corpus, cents, cb))
     Similarity.recordDriftBaseline(spark, ip, corpus, cb, Some(cents))
     // batch 5 crashed AFTER its code files moved in but BEFORE its marker:
@@ -1056,7 +1072,7 @@ class SimilaritySpec extends SparkSpec {
     // partials) would then erase them from the index for good.
     assert(Similarity.appendToIndexAt(spark, ip, day, 6L))
     def codeSet(): Set[(Long, Int)] =
-      Similarity.loadIndex(spark, ip)._3.collect()
+      codesAt(ip).collect()
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"))).toSet
     val expect = Similarity.buildIvfpqIndex(e, cents, cb).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"))).toSet
@@ -1075,7 +1091,7 @@ class SimilaritySpec extends SparkSpec {
     val ip = java.nio.file.Files.createTempDirectory("graft_ann_dr").toString + "/idx"
     val cents = Similarity.centroids(e)
     val cb = Similarity.pqCodebooks(e)
-    Similarity.saveIndex(ip, cents, cb,
+    saveIvfpq(ip, cents, cb,
       Similarity.buildIvfpqIndex(e, cents, cb))
     Similarity.recordDriftBaseline(spark, ip, e, cb, Some(cents))
     // a nightly job retried after a crash past recordDrift double-appends
@@ -1175,8 +1191,8 @@ class SimilaritySpec extends SparkSpec {
       .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
     val rotPast = Similarity.rotateFrame(past, r)
     val cents = Similarity.centroids(rotPast)
-    Similarity.saveOpqIndex(ip, rot, cents, cb,
-      Similarity.buildIvfpqIndex(rotPast, cents, cb))
+    Similarity.saveIndex(ip, AnnSpec.OpqIvfpq, AnnModel(Some(rot), Some(cents),
+      Some(cb), Some(Similarity.buildIvfpqIndex(rotPast, cents, cb))))
     // the baseline takes the RAW window: recordDriftBaseline reads the
     // rotation from the artifact itself, the same detection the append
     // path uses — baseline and batch rows measure in one space by
@@ -1187,7 +1203,8 @@ class SimilaritySpec extends SparkSpec {
     // codes table is EXACTLY a rotated-space rebuild over the full corpus
     val day = e.filter(col("vec_id") % 4 === 1)
     assert(Similarity.appendToIndexAt(spark, ip, day, 0L))
-    val (rotL, centsL, cbL, codesL) = Similarity.loadOpqIndex(spark, ip)
+    val AnnModel(Some(rotL), Some(centsL), Some(cbL), Some(codesL)) =
+      Similarity.openIndex(spark, ip)._2
     def codeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Int, Int)] =
       df.collect().map(row => (row.getAs[Long]("vec_id"), row.getAs[Int]("sub"),
         row.getAs[Int]("code"), row.getAs[Int]("ivf_cell"))).toSet
@@ -1223,7 +1240,8 @@ class SimilaritySpec extends SparkSpec {
       shifted.filter(col("vec_id") % 4 === 3), 2L))
     assert(Similarity.maybeRetrain(spark, ip,
       corpus = e.unionByName(shifted), trainOn = Some(shifted)))
-    val (rotN, centsN, cbN, codesN) = Similarity.loadOpqIndex(spark, ip)
+    val AnnModel(Some(rotN), Some(centsN), Some(cbN), Some(codesN)) =
+      Similarity.openIndex(spark, ip)._2
     val rN = rotN.select(col("comp"), col("weights")).collect()
       .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
     assert(rN.flatten.toSeq !== r.flatten.toSeq,
@@ -1250,11 +1268,11 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.centroids(corpus)
     val rcb = Similarity.pqCodebooks(Similarity.residualVectors(corpus, cents)
       .select(col("vec_id"), col("embedding")))
-    Similarity.saveIndex(ip, cents, rcb,
+    saveIvfpq(ip, cents, rcb,
       Similarity.buildIvfpqIndex(corpus, cents, rcb, residual = true),
-      residual = true)
+      AnnSpec.IvfpqResidual)
     def codeSet(): Set[(Long, Int, Int, Int)] =
-      Similarity.loadIndex(spark, ip)._3.collect()
+      codesAt(ip).collect()
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
           r.getAs[Int]("code"), r.getAs[Int]("ivf_cell"))).toSet
     def expect(cb: org.apache.spark.sql.DataFrame, residual: Boolean) =
@@ -1262,7 +1280,7 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
           r.getAs[Int]("code"), r.getAs[Int]("ivf_cell"))).toSet
     // the nightly append carries NO encoding flag — it reads the
-    // artifact's _residual marker; with a caller-repeated boolean the
+    // artifact's _ann_spec stamp; with a caller-repeated boolean the
     // default (raw) would have silently poisoned the residual codes table
     val day = e.filter(col("vec_id") % 4 === 0)
     assert(Similarity.appendToIndexAt(spark, ip, day, 0L))
@@ -1271,16 +1289,88 @@ class SimilaritySpec extends SparkSpec {
     val d0 = Similarity.describeIndex(spark, ip).collect().head
     assert(d0.getAs[String]("encoding") === "residual")
     assert(d0.getAs[String]("kind") === "raw")
-    // a raw rebuild over the same path DEMOTES the encoding (saveIndex's
-    // overwrite discipline, like the stale-rotation delete)
+    // a raw rebuild over the same path DEMOTES the encoding (the new
+    // stamp replaces the old one)
     val cb = Similarity.pqCodebooks(corpus)
-    Similarity.saveIndex(ip, cents, cb,
+    saveIvfpq(ip, cents, cb,
       Similarity.buildIvfpqIndex(corpus, cents, cb))
     assert(Similarity.describeIndex(spark, ip).collect().head
       .getAs[String]("encoding") === "raw")
     assert(Similarity.appendToIndexAt(spark, ip, day, 1L))
     assert(codeSet() === expect(cb, residual = false),
       "post-demotion appends must encode raw")
+  }
+
+  test("index artifact: openIndex ≡ the fed model bit for bit for every persisted shape; no stamp, no index") {
+    import org.apache.spark.sql.functions.col
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"), col("label"))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    Seq(AnnSpec.Pq, AnnSpec.Opq, AnnSpec.Ivfpq, AnnSpec.IvfpqResidual,
+        AnnSpec.OpqIvfpq, AnnSpec.OpqIvfpqResidual).foreach { spec =>
+      val m = Similarity.train(spark, sf, spec)
+      val enc = m.transform.fold(e)(r =>
+        Similarity.rotateFrame(e, Similarity.rotationLiteral(r)))
+      // flat shapes persist models only; IVF shapes their codes too
+      val fed = spec.nprobe.fold(m)(_ => m.copy(codes = Some(
+        Similarity.buildIvfpqIndex(enc, m.centroids.get, m.codebooks.get,
+          residual = spec.code == AnnCode.ResidualPq))))
+      val path = java.nio.file.Files.createTempDirectory("graft_shape").toString
+      Similarity.saveIndex(path, spec, fed)
+      val (stamped, opened) = Similarity.openIndex(spark, path)
+      assert(stamped === spec)
+      Seq[AnnModel => Option[DataFrame]](_.transform, _.centroids, _.codebooks,
+        _.codes).foreach { part =>
+        assert(part(opened).map(rows) === part(fed).map(rows), spec)
+      }
+      assert(topk(Similarity.topk(spark, sf, spec, opened))
+        === topk(Similarity.topk(spark, sf, spec, fed)), spec)
+    }
+    // saveIndex's crash window: every part written, the stamp not yet —
+    // the path is refused by name, never served as a guessed shape
+    val path = java.nio.file.Files.createTempDirectory("graft_nostamp").toString
+    val cents = Similarity.centroids(e)
+    val cb = Similarity.pqCodebooks(e)
+    saveIvfpq(path, cents, cb, Similarity.buildIvfpqIndex(e, cents, cb))
+    assert(new java.io.File(s"$path/_ann_spec").delete())
+    val err = intercept[IllegalArgumentException](Similarity.openIndex(spark, path))
+    assert(err.getMessage.contains(path))
+  }
+
+  test("a raw saveIndex over an OPQ residual index serves, appends and describes as raw") {
+    import org.apache.spark.sql.functions.col
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"), col("label"))
+    val corpus = e.filter(col("vec_id") % 4 =!= 0)
+    val ip = java.nio.file.Files.createTempDirectory("graft_demote").toString + "/idx"
+    val m = Similarity.train(spark, sf, AnnSpec.OpqIvfpqResidual)
+    Similarity.saveIndex(ip, AnnSpec.OpqIvfpqResidual, m.copy(codes = Some(
+      Similarity.buildIvfpqIndex(Similarity.rotateFrame(corpus,
+        Similarity.rotationLiteral(m.transform.get)), m.centroids.get,
+        m.codebooks.get, residual = true))))
+    val d0 = Similarity.describeIndex(spark, ip).collect().head
+    assert(d0.getAs[String]("kind") === "opq")
+    assert(d0.getAs[String]("encoding") === "residual")
+    val cents = Similarity.centroids(corpus)
+    val cb = Similarity.pqCodebooks(corpus)
+    val codes = Similarity.buildIvfpqIndex(corpus, cents, cb)
+    saveIvfpq(ip, cents, cb, codes)
+    // the previous build's rotation is still on disk: the stamp alone
+    // decides what the index is
+    assert(new java.io.File(s"$ip/opq_rotation.parquet").exists())
+    val d = Similarity.describeIndex(spark, ip).collect().head
+    assert(d.getAs[String]("kind") === "raw")
+    assert(d.getAs[String]("encoding") === "raw")
+    val (spec, opened) = Similarity.openIndex(spark, ip)
+    assert(spec === AnnSpec.Ivfpq && opened.transform.isEmpty)
+    assert(topk(Similarity.topk(spark, sf, spec, opened)) === topk(Similarity.topk(
+      spark, sf, AnnSpec.Ivfpq, AnnModel(None, Some(cents), Some(cb), Some(codes)))))
+    def codeSet(df: DataFrame): Set[(Long, Int, Int, Int)] =
+      df.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
+        r.getAs[Int]("code"), r.getAs[Int]("ivf_cell"))).toSet
+    assert(Similarity.appendToIndexAt(spark, ip, e.filter(col("vec_id") % 4 === 0), 0L))
+    assert(codeSet(codesAt(ip)) === codeSet(Similarity.buildIvfpqIndex(e, cents, cb)),
+      "post-demotion appends must encode raw, unrotated")
   }
 
   test("composed-residual index: appends auto-detect rotation AND residual, retrain preserves both") {
@@ -1296,9 +1386,9 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.centroids(rotC)
     val rcb = Similarity.pqCodebooks(Similarity.residualVectors(rotC, cents)
       .select(col("vec_id"), col("embedding")))
-    Similarity.saveOpqIndex(ip, rot, cents, rcb,
-      Similarity.buildIvfpqIndex(rotC, cents, rcb, residual = true),
-      residual = true)
+    Similarity.saveIndex(ip, AnnSpec.OpqIvfpqResidual, AnnModel(Some(rot),
+      Some(cents), Some(rcb),
+      Some(Similarity.buildIvfpqIndex(rotC, cents, rcb, residual = true))))
     // baseline over the RAW corpus: rotation AND residual encoding are
     // read from the artifact, so the baseline measures rotated RESIDUAL
     // reconstruction — the quantity these codebooks minimize
@@ -1334,7 +1424,7 @@ class SimilaritySpec extends SparkSpec {
         s"err_ratio=${dr.head.getAs[Double]("err_ratio")}")
     assert(dr.head.getAs[Double]("err_ratio") < 1.5
       && dr.head.getAs[Double]("err_ratio") > 0.7)
-    assert(codeSet(Similarity.loadIndex(spark, ip)._3) === codeSet(
+    assert(codeSet(codesAt(ip)) === codeSet(
       Similarity.buildIvfpqIndex(Similarity.rotateFrame(e, r), cents, rcb,
         residual = true)),
       "append ≡ rotated residual-encoded rebuild under the same models")
@@ -1348,7 +1438,8 @@ class SimilaritySpec extends SparkSpec {
     val d2 = Similarity.describeIndex(spark, ip).collect().head
     assert(d2.getAs[String]("kind") === "opq")
     assert(d2.getAs[String]("encoding") === "residual")
-    val (rotN, centsN, cbN, codesN) = Similarity.loadOpqIndex(spark, ip)
+    val AnnModel(Some(rotN), Some(centsN), Some(cbN), Some(codesN)) =
+      Similarity.openIndex(spark, ip)._2
     val rN = rotN.select(col("comp"), col("weights")).collect()
       .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
     assert(codeSet(codesN) === codeSet(Similarity.buildIvfpqIndex(
@@ -1370,7 +1461,7 @@ class SimilaritySpec extends SparkSpec {
     val oldP = new org.apache.hadoop.fs.Path(s"${ip}_retrain_old")
     val cents0 = Similarity.centroids(past)
     val cb0 = Similarity.pqCodebooks(past)
-    Similarity.saveIndex(ip, cents0, cb0,
+    saveIvfpq(ip, cents0, cb0,
       Similarity.buildIvfpqIndex(past, cents0, cb0))
     Similarity.recordDriftBaseline(spark, ip, past, cb0, Some(cents0))
     // a stale staging dir from a crashed earlier retrain must neither
@@ -1379,7 +1470,7 @@ class SimilaritySpec extends SparkSpec {
       .write.parquet(s"${ip}_retrain_staging/garbage.parquet")
     Similarity.retrainIndex(spark, ip, e)
     def codeSet(): Set[(Long, Int, Int, Int)] =
-      Similarity.loadIndex(spark, ip)._3.collect()
+      codesAt(ip).collect()
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
           r.getAs[Int]("code"), r.getAs[Int]("ivf_cell"))).toSet
     val centsN = Similarity.centroids(e)
@@ -1410,7 +1501,7 @@ class SimilaritySpec extends SparkSpec {
     val ip = java.nio.file.Files.createTempDirectory("graft_describe").toString + "/idx"
     val cents = Similarity.centroids(corpus)
     val cb = Similarity.pqCodebooks(corpus)
-    Similarity.saveIndex(ip, cents, cb,
+    saveIvfpq(ip, cents, cb,
       Similarity.buildIvfpqIndex(corpus, cents, cb))
     Similarity.recordDriftBaseline(spark, ip, corpus, cb, Some(cents))
     val nCorpus = corpus.count()
@@ -1446,7 +1537,7 @@ class SimilaritySpec extends SparkSpec {
     val past = e.filter(col("vec_id") % 2 === 0)
     val cents0 = Similarity.centroids(past)
     val cb0 = Similarity.pqCodebooks(past)
-    Similarity.saveIndex(ip, cents0, cb0,
+    saveIvfpq(ip, cents0, cb0,
       Similarity.buildIvfpqIndex(past, cents0, cb0))
     Similarity.recordDriftBaseline(spark, ip, past, cb0, Some(cents0))
     // one clean nightly batch (new ids — an arrival, not a re-add):
@@ -1482,7 +1573,8 @@ class SimilaritySpec extends SparkSpec {
     // the rebuild re-encoded the FULL corpus against the new models —
     // codes are exactly a fresh build's (content equality, the
     // append ≡ rebuild discipline carried through retrain)
-    val (centsN, cbN, codesN) = Similarity.loadIndex(spark, ip)
+    val AnnModel(_, Some(centsN), Some(cbN), Some(codesN)) =
+      Similarity.openIndex(spark, ip)._2
     val expect = Similarity.buildIvfpqIndex(corpus, centsN, cbN).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
         r.getAs[Int]("code"), r.getAs[Int]("ivf_cell"))).toSet
@@ -1530,7 +1622,7 @@ class SimilaritySpec extends SparkSpec {
     val ip = java.nio.file.Files.createTempDirectory("graft_readd_idx").toString + "/idx"
     val cents = Similarity.centroids(corpus)
     val cb = Similarity.pqCodebooks(corpus)
-    Similarity.saveIndex(ip, cents, cb,
+    saveIvfpq(ip, cents, cb,
       Similarity.buildIvfpqIndex(corpus, cents, cb))
     Similarity.saveInt8Codes(ip, Similarity.quantizeVectors(corpus))
     Similarity.recordDriftBaseline(spark, ip, corpus, cb, Some(cents))
@@ -1546,10 +1638,10 @@ class SimilaritySpec extends SparkSpec {
     // serve the pre-append corpus on the int8 tiers)
     assert(Similarity.loadInt8Codes(spark, ip).select(col("vec_id"))
       .collect().map(_.getLong(0)).toSet
-      === Similarity.loadIndex(spark, ip)._3.select(col("vec_id"))
+      === codesAt(ip).select(col("vec_id"))
         .distinct().collect().map(_.getLong(0)).toSet,
       "int8 artifact must cover the same ids as the codes table")
-    val codes = Similarity.loadIndex(spark, ip)._3
+    val codes = codesAt(ip)
     val dupCount = codes.groupBy(col("vec_id"), col("sub"))
       .count().filter(col("count") > 1).count()
     assert(dupCount === 0L, s"$dupCount duplicated (vec_id, sub) rows")
@@ -1570,7 +1662,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.appendToIndexAt(spark, ip, e.filter(lit(false)), 1L))
     assert(!Similarity.appendToIndexAt(spark, ip, e.filter(lit(false)), 1L),
       "the empty batch's marker must make its replay skip")
-    assert(Similarity.loadIndex(spark, ip)._3.collect()
+    assert(codesAt(ip).collect()
       .map(_.toString).toSet === before)
     assert(Similarity.driftReport(spark, ip).count() === 1L)
     // compaction bounds the DRIFT table's file growth too
@@ -1583,7 +1675,7 @@ class SimilaritySpec extends SparkSpec {
     // a REBUILD clean-slates the replay-protocol state along with the
     // tombstones: batch ids restart at 0 under a fresh checkpoint, and a
     // stale watermark would silently fence their vectors out
-    Similarity.saveIndex(ip, cents, cb,
+    saveIvfpq(ip, cents, cb,
       Similarity.buildIvfpqIndex(corpus, cents, cb))
     assert(!new java.io.File(s"${ip}_batches").exists(),
       "rebuild must clear markers + watermark")

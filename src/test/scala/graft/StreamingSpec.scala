@@ -921,7 +921,7 @@ class StreamingSpec extends SparkSpec {
   test("ann ingest sink: streamed batches encode against frozen models; index ≡ batch-built; drift rows per batch") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.ops.Similarity
+    import graft.ops.{AnnModel, AnnSpec, Similarity}
     val base = Files.createTempDirectory("graft_ann_ingest").toString
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding"), col("label"))
@@ -931,8 +931,8 @@ class StreamingSpec extends SparkSpec {
     val ip = s"$base/index"
     val cents = Similarity.centroids(corpus)
     val cb = Similarity.pqCodebooks(corpus)
-    Similarity.saveIndex(ip, cents, cb,
-      Similarity.buildIvfpqIndex(corpus, cents, cb))
+    Similarity.saveIndex(ip, AnnSpec.Ivfpq, AnnModel(None, Some(cents), Some(cb),
+      Some(Similarity.buildIvfpqIndex(corpus, cents, cb))))
     Similarity.recordDriftBaseline(spark, ip, corpus, cb, Some(cents))
     // the held-out quarter arrives as two micro-batches
     val day = e.filter(col("vec_id") % 4 === 0)
@@ -950,7 +950,7 @@ class StreamingSpec extends SparkSpec {
     def codeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Int, Int)] =
       df.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("sub"),
         r.getAs[Int]("code"), r.getAs[Int]("ivf_cell"))).toSet
-    val (_, _, streamed) = Similarity.loadIndex(spark, ip)
+    val streamed = Similarity.openIndex(spark, ip)._2.codes.get
     val expect = codeSet(Similarity.buildIvfpqIndex(e, cents, cb))
     assert(codeSet(streamed) === expect)
     // the drift time series accumulated one in-distribution row per batch
@@ -971,7 +971,7 @@ class StreamingSpec extends SparkSpec {
     val q2 = Streams.annIngestSink(in2.toDF().toDF("vec_id", "embedding"),
       ip, s"$base/ckpt2")
     q2.processAllAvailable(); q2.stop()
-    val (_, _, replayed) = Similarity.loadIndex(spark, ip)
+    val replayed = Similarity.openIndex(spark, ip)._2.codes.get
     assert(codeSet(replayed) === expect, "replay must replace, not duplicate")
     assert(Similarity.driftReport(spark, ip).count() === 2,
       "drift rows must not duplicate either")
